@@ -21,70 +21,11 @@ import graft.streaming.Streaming
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // 5 interleaved rounds: the driver's box has shown bursty co-load
     // (r1: 101 s for a run reproducing at ~28 s idle) — a median of 5
     // tolerates two contaminated rounds per query
     val rounds = sys.env.getOrElse("SPARK_GRAFT_ROUNDS", "5").toInt
-    // Bench-session tuning for the measured SF (r3 verdict #1: the
-    // ~0.2 s/query scheduling floor was half the metric). Probed at
-    // sf0.1 over a floor+heavy query sample (FloorProbe):
-    //  - shuffle.partitions=8: a 32-partition exchange of kB-sized
-    //    data is pure task-scheduling latency; 8 keeps all cores busy
-    //    on the heavy queries and costs the floor queries nothing.
-    //  - AQE off: every adaptive stage is a driver round-trip + stage
-    //    re-plan; with 8 static partitions there is nothing left for
-    //    coalescing to win at this SF (heavy sample 5.8→4.6 s,
-    //    floor sample 2.1→1.5 s vs the r3 config).
-    //  - broadcast threshold 64 MB: sf0.1 dimension/derived sides are
-    //    single-digit MB; static planning then broadcasts the joins
-    //    AQE used to convert at runtime.
-    // A 1000-executor 100 TB session inverts all three (thousands of
-    // partitions, AQE on for skew/coalesce/runtime joins — the
-    // library's operators are written for that posture); these are
-    // session settings, not library behavior. Env-overridable to
-    // re-probe: SPARK_GRAFT_SHUFFLE_PARTITIONS / SPARK_GRAFT_AQE /
-    // SPARK_GRAFT_BROADCAST.
-    // r13 (VERDICT r12 #2b): shuffle partitions DERIVE from the cpu
-    // count (cpus/4, floor 2) instead of the former pinned 8, so the
-    // driver's 8-core vs 32-core scaling comparison measures real
-    // exchange parallelism instead of a constant capped at 8 by
-    // construction. The verdict's suggested 2×cpus was A/B-measured
-    // and REJECTED: at 32 cores a 64-way exchange of kB-sized sf0.1
-    // shuffle data inflated an 8-query heavy sample ~3× (pure task-
-    // scheduling latency — the r3 probe conclusion still holds).
-    // cpus/4 keeps the 32-core posture at the probed-optimal 8
-    // (round-over-round comparable) while an 8-core run now gets 2,
-    // so exchange-heavy queries lose parallelism at low core counts
-    // and the scaling ratio stops reading ≈1 by construction. At
-    // 100 TB partitions come from AQE + data size, not this dial.
-    val shufflePartitions = sys.env.getOrElse(
-      "SPARK_GRAFT_SHUFFLE_PARTITIONS",
-      math.max(2, scala.util.Try(cpus.toInt).getOrElse(8) / 4).toString)
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "false")
-    val broadcast =
-      sys.env.getOrElse("SPARK_GRAFT_BROADCAST", (64 * 1024 * 1024).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", broadcast)
-      // the generated-code cache defaults to 100 entries; 122
-      // interleaved queries × several codegen units evict everything
-      // between rounds, so every query pays janino re-compilation
-      // every round (~0.05-0.1 s) — a cost consecutive-run probes
-      // never see. Sized to hold the whole suite.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // single-JVM local mode: every task is process-local, the
-      // delay-scheduling wait is pure per-stage latency here
-      .config("spark.locality.wait", "0")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    SparkEntry.clearCaches() // never serve a stale dir listing across runs
+    val spark = session(cpus)
 
     // load adjudication (r11 verdict #1): the benched box has twice
     // shown multi-x co-load drift between the builder's pair and the
@@ -155,11 +96,7 @@ object Bench {
     val p50 = median(results.map(_._2).toArray)
     val queriesWall = wallSec - warmupWall
     stampLoad()
-    // streaming state store: rocksdb is the benched DEFAULT (the
-    // 100 TB posture — state lives off-heap/SSD, not executor heap);
-    // hdfs selectable via env for comparison (see Streaming.benchJson)
-    val streaming = Streaming.benchJson(spark, sfDir,
-      sys.env.getOrElse("SPARK_GRAFT_STATE_STORE", "rocksdb"))
+    val streaming = Streaming.benchJson(spark, sfDir)
     val streamingWall = wallSec - warmupWall - queriesWall
     val loadEnd = stampLoad()
     val loadJson =
@@ -221,5 +158,56 @@ object Bench {
     }
     spark.stop() // stop FIRST: no stray executor/log line after the metric
     println(line)
+  }
+
+  /** Cores for the bench-posture mains (Bench, Verify, PlanDump). */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(4)
+
+  /** The bench posture — the ONE place it is written. Bench times
+    * plans built under it, Verify gates the same plans against the
+    * DuckDB oracle, and PlanDump dumps them.
+    *
+    * Tuned for the measured SF (a ~0.2 s/query scheduling floor was
+    * once half the metric), probed at sf0.1 over a floor+heavy query
+    * sample:
+    *  - shuffle partitions = cpus/4, floor 2: a many-way exchange of
+    *    kB-sized data is pure task-scheduling latency. 2×cpus was
+    *    A/B-measured and rejected (a 64-way exchange at 32 cores
+    *    inflated an 8-query heavy sample ~3×); cpus/4 keeps the
+    *    32-core posture at the probed-optimal 8 while an 8-core run
+    *    gets 2, so the 8- vs 32-core comparison measures real
+    *    exchange parallelism.
+    *  - AQE off: every adaptive stage is a driver round-trip + stage
+    *    re-plan; with few static partitions there is nothing left
+    *    for coalescing to win at this SF.
+    *  - broadcast threshold 64 MB: sf0.1 dimension/derived sides are
+    *    single-digit MB; static planning then broadcasts the joins
+    *    AQE used to convert at runtime.
+    *  - codegen cache 5000: the default 100 entries are evicted
+    *    between rounds of a 300-query interleaved suite, so every
+    *    query would re-pay janino compilation every round.
+    *  - locality.wait 0: single-JVM local mode, every task is
+    *    process-local; the delay-scheduling wait is pure latency.
+    *  - UTC + nanosAsLong: both events.parquet vintages read the same
+    *    way and agree with DuckDB's epoch arithmetic.
+    * A 1000-executor 100 TB session inverts the first three
+    * (thousands of partitions, AQE on for skew/coalesce/runtime
+    * joins); these are session settings, not library behavior. To A/B
+    * a posture change, edit this method and re-run Bench. */
+  def session(cpus: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", math.max(2, cpus / 4).toString)
+      .config("spark.sql.adaptive.enabled", "false")
+      .config("spark.sql.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
+      .config("spark.sql.codegen.cache.maxEntries", "5000")
+      .config("spark.locality.wait", "0")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    SparkEntry.clearCaches() // never serve a stale dir listing across runs
+    spark
   }
 }

@@ -44,6 +44,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * An EMPTY starts array returns the text byte-for-byte (the caller
   * short-circuits NULL text / NULL starts before the call — this
   * expression keeps the standard null-propagating contract).
+  *
+  * Input contract, enforced rather than assumed: `starts` is
+  * `array<int>` without NULL elements (rejected at analysis), sorted
+  * ascending with every start >= 1 (a violating row raises instead of
+  * silently skipping covered tokens). Dedup's
+  * `sort_array(collect_list(pos))` satisfies both.
   */
 case class StripSpans(left: Expression, right: Expression, n: Int)
     extends BinaryExpression {
@@ -53,12 +59,13 @@ case class StripSpans(left: Expression, right: Expression, n: Int)
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
-      case (StringType, ArrayType(IntegerType, _)) if n >= 1 =>
+      case (StringType, ArrayType(IntegerType, false)) if n >= 1 =>
         TypeCheckResult.TypeCheckSuccess
-      case (StringType, ArrayType(IntegerType, _)) =>
+      case (StringType, ArrayType(IntegerType, false)) =>
         TypeCheckResult.TypeCheckFailure("graft_strip_spans requires n >= 1")
       case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"graft_strip_spans requires (string, array<int>), got ($l, $r)")
+        "graft_strip_spans requires (string, array<int> without NULL " +
+          s"elements), got ($l, $r)")
     }
 
   override def nullSafeEval(t: Any, s: Any): Any =
@@ -83,9 +90,21 @@ object StripSpans {
   /** Rewrites `text` dropping every non-empty token whose 1-based
     * ordinal is covered by an n-token span at one of the sorted
     * `starts`; returns (rewritten text, covered-token count). One
-    * byte pass; output is never longer than the input. */
+    * byte pass; output is never longer than the input. Throws on a
+    * start below 1 or below its predecessor: the monotone pointer
+    * would silently miss covered tokens. */
   def compute(text: UTF8String, starts: ArrayData, n: Int): InternalRow = {
     val ns = starts.numElements()
+    var prev = 1
+    var k = 0
+    while (k < ns) {
+      val s = starts.getInt(k)
+      if (s < prev) throw new IllegalArgumentException(
+        s"graft_strip_spans: starts must be ascending and >= 1, got $s " +
+          s"at position ${k + 1}")
+      prev = s
+      k += 1
+    }
     if (ns == 0) return new GenericInternalRow(Array[Any](text, 0L))
     val bytes = text.getBytes
     val out = new Array[Byte](bytes.length)

@@ -4926,42 +4926,14 @@ final class Translator(catalog: String => DataFrame,
     * post-exclusion frame from ExcludeAgg's collect mode. */
   private def orderedSetPost(a: AggExpr, collected: Column,
                              sep: Option[String]): Column = {
-    val n = a.aggOrder.length
-    def cmp(l: Column, r: Column, i: Int): Column =
-      if (i == n) F.lit(0)
-      else {
-        val oi = a.aggOrder(i)
-        val lk = l.getField(s"__k$i"); val rk = r.getField(s"__k$i")
-        val less = if (oi.asc) -1 else 1
-        val nullsFirst = oi.nullsFirst.getOrElse(oi.asc)
-        val nf = if (nullsFirst) -1 else 1
-        F.when(lk.isNull && rk.isNull, cmp(l, r, i + 1))
-          .when(lk.isNull, F.lit(nf))
-          .when(rk.isNull, F.lit(-nf))
-          .when(lk < rk, F.lit(less))
-          .when(lk > rk, F.lit(-less))
-          .otherwise(cmp(l, r, i + 1))
-      }
-    // comparator dispatch (r11): the interpreted HOF comparator pays
-    // a lambda call per COMPARISON (O(m log m) dispatches per row,
-    // each a nested-CaseWhen evaluation); the native SortStructs
-    // TimSort is one JVM sort per row. The r11 A/B measured native
-    // faster at EVERY probed frame size — 8 (1.0 vs 1.4 s), 16, 32,
-    // 100 (5.2 vs 14.5 s), 1000 (2.0 vs 4.2 s), and the real suite
-    // entries (q_agg_string_exclude 1.03 vs 2.92 s warm solo) — so
-    // native is the default; the r9 "HOF wins small frames" result
-    // belonged to a different design (sorting inside the collect
-    // aggregate), superseded. Both sorts are stable and bit-for-bit
-    // equal (FunctionsSpec pin); env-overridable for probes.
+    // one native TimSort per row (SortStructs): stable, and measured
+    // faster than an interpreted array_sort comparator lambda at every
+    // probed frame size (FunctionsSpec pins the two bit-for-bit equal)
     val sorted =
-      if (n == 0) collected // stable no-op either way
-      else sys.env.getOrElse("SPARK_GRAFT_EXCLUDE_SORT", "native") match {
-        case "hof" => F.array_sort(collected, (l, r) => cmp(l, r, 0))
-        case _ =>
-          org.apache.spark.sql.GraftFn.sortStructs(collected,
-            a.aggOrder.map(_.asc),
-            a.aggOrder.map(oi => oi.nullsFirst.getOrElse(oi.asc)))
-      }
+      if (a.aggOrder.isEmpty) collected
+      else org.apache.spark.sql.GraftFn.sortStructs(collected,
+        a.aggOrder.map(_.asc),
+        a.aggOrder.map(oi => oi.nullsFirst.getOrElse(oi.asc)))
     val vals0 = F.transform(sorted, s => s.getField("__v"))
     // DISTINCT: dedup AFTER the sort — array_distinct keeps first
     // occurrences, so a sorted input stays sorted

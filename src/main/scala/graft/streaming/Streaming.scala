@@ -311,42 +311,27 @@ object Streaming {
     * state grows (watermark-bounded state ⇒ it should be). Returns
     * ONE JSON object string (embedded in Bench's output line);
     * failures degrade to an "error" field rather than killing the
-    * batch bench. */
-  def benchJson(spark: SparkSession, sfDir: String): String =
-    benchJson(spark, sfDir, stateStore = "hdfs")
-
-  /** [[benchJson]] with an explicit state-store backend: "hdfs" (the
-    * default in-memory-map provider backed by checkpoint files) or
-    * "rocksdb" (Spark's RocksDBStateStoreProvider — the 100 TB
-    * streaming posture: state spills to local SSD instead of
-    * executor heap, so watermark-bounded-but-large state — millions
-    * of live sessions/dedup keys — no longer competes with shuffle
-    * memory; changelog checkpointing ships deltas). The provider is
-    * a session conf consumed at stream START, set for the run and
-    * restored after; StreamingSpec pins result parity between the
-    * two providers. */
-  def benchJson(spark: SparkSession, sfDir: String,
-                stateStore: String): String = {
-    import org.apache.spark.sql.streaming.Trigger
-    import java.nio.file.{Files, Path}
+    * batch bench.
+    *
+    * State lives in RocksDB (Spark's RocksDBStateStoreProvider — the
+    * 100 TB streaming posture: state spills to local SSD instead of
+    * executor heap, so watermark-bounded-but-large state no longer
+    * competes with shuffle memory; StreamingSpec pins result parity
+    * with the default provider). The provider is a session conf
+    * consumed at stream START, set for the run and restored after. */
+  def benchJson(spark: SparkSession, sfDir: String): String = {
     val ProviderConf = "spark.sql.streaming.stateStore.providerClass"
     val priorProvider = spark.conf.getOption(ProviderConf)
-    stateStore match {
-      case "rocksdb" => spark.conf.set(ProviderConf,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      case "hdfs" => // provider default
-      case other => throw new IllegalArgumentException(
-        s"unknown state store '$other' (expected hdfs or rocksdb)")
-    }
-    try benchJsonImpl(spark, sfDir, stateStore)
+    spark.conf.set(ProviderConf,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try benchJsonImpl(spark, sfDir)
     finally priorProvider match {
       case Some(p) => spark.conf.set(ProviderConf, p)
       case None    => spark.conf.unset(ProviderConf)
     }
   }
 
-  private def benchJsonImpl(spark: SparkSession, sfDir: String,
-                            stateStore: String): String = {
+  private def benchJsonImpl(spark: SparkSession, sfDir: String): String = {
     import org.apache.spark.sql.streaming.Trigger
     import java.nio.file.{Files, Path}
     def errJson(name: String, e: Throwable): String = {
@@ -410,7 +395,7 @@ object Streaming {
           Right(stage)
         } catch { case e: Throwable => deleteRecursively(stage); Left(e) }
       } catch { case e: Throwable => Left(e) }
-    val store = s""""state_store":"$stateStore""""
+    val store = """"state_store":"rocksdb""""
     staged match {
       case Left(e) =>
         (store +: Seq(errJson("windowed_counts_1x", e), errJson("dedup_1x", e)))

@@ -1,43 +1,26 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.SparkEntry
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.execution.FormattedMode
+import graft.{Bench, SparkEntry}
 
-/** Dev tool: writes `.explain("formatted")` output for named queries
-  * to <outDir>/<name>_<tag>.txt under the SAME session posture as
-  * Bench (shuffle.partitions=8, AQE off, 64 MB broadcast) so the
-  * dumped plan is the one the bench actually runs.
+/** Writes each named SparkEntry query's physical plan — formatted
+  * explain, then the executed-plan tree — to <outDir>/<name>_<tag>.txt
+  * (the plans/rNN format), under the bench posture so the dump is the
+  * plan Bench times.
   * Usage: PlanDump <sfDir> <outDir> <tag> <query...>
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val sfDir = args(0)
-    val outDir = args(1)
-    val tag = args(2)
-    val names = args.drop(3).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "8"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BROADCAST",
-          (64 * 1024 * 1024).toString))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    new java.io.File(outDir).mkdirs()
-    names.foreach { n =>
-      val df = SparkEntry.queries(n)(spark, sfDir)
-      val txt = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      val f = new java.io.PrintWriter(s"$outDir/${n}_$tag.txt")
-      try f.write(txt) finally f.close()
-      println(s"[plandump] wrote $outDir/${n}_$tag.txt")
+    val Array(sfDir, outDir, tag) = args.take(3)
+    val spark = Bench.session(Bench.cpus)
+    Files.createDirectories(Paths.get(outDir))
+    args.drop(3).foreach { n =>
+      val qe = SparkEntry.queries(n)(spark, sfDir).queryExecution
+      val out = Paths.get(outDir, s"${n}_$tag.txt")
+      Files.writeString(out,
+        qe.explainString(FormattedMode) + "\n" + qe.executedPlan.toString)
+      println(s"[plandump] wrote $out")
     }
     spark.stop()
   }

@@ -355,6 +355,22 @@ class FunctionsSpec extends SparkTestBase {
       nb.collect()(0).get(0).toString == nb.collect()(0).get(1).toString)
   }
 
+  /** Runs `body` once codegen'd (factoryMode CODEGEN_ONLY, whole-stage
+    * on) and once interpreted (NO_CODEGEN, whole-stage off). Inputs
+    * must reach the projection through an exchange: a projection over
+    * a LocalRelation is folded at optimization, in interpreted mode. */
+  private def inBothEvalModes(body: String => Unit): Unit =
+    for ((mode, wholeStage) <-
+           Seq("CODEGEN_ONLY" -> "true", "NO_CODEGEN" -> "false")) {
+      spark.conf.set("spark.sql.codegen.factoryMode", mode)
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      try body(mode)
+      finally {
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+      }
+    }
+
   test("graft_strip_spans matches the old HOF interval rewrite (r13)") {
     GraftFunctions.register(spark)
     val n = 3
@@ -370,8 +386,8 @@ class FunctionsSpec extends SparkTestBase {
            ('a b c d e f',     array(4)),
            ('a b c',           array(1)),
            ('  a   b  c d   ', array(2)),
-           ('a b c d',         cast(array() as array<int>)),
-           ('  x   y ',        cast(array() as array<int>)),
+           ('a b c d',         slice(array(0), 1, 0)),
+           ('  x   y ',        slice(array(0), 1, 0)),
            ('a b c d e',       array(1, 2, 3))
          as t(text, __starts)""")
     val old = rows
@@ -392,12 +408,43 @@ class FunctionsSpec extends SparkTestBase {
                (t, i) -> not exists(__iv,
                  v -> v.lo <= i + 1 and i + 1 <= v.hi)), ' ') end as o_text""",
         "aggregate(__iv, 0L, (a, v) -> a + v.hi - v.lo + 1) as o_removed")
-    val both = old.selectExpr("o_text", "o_removed",
-      s"graft_strip_spans(text, __starts, $n) as r")
-    both.collect().foreach { r =>
-      val s = r.getStruct(2)
-      assert(r.getString(0) == s.getString(0), r.toString)
-      assert(r.getLong(1) == s.getLong(1), r.toString)
+    inBothEvalModes { mode =>
+      val both = old.repartition(1).selectExpr("o_text", "o_removed",
+        s"graft_strip_spans(text, __starts, $n) as r")
+      both.collect().foreach { r =>
+        val s = r.getStruct(2)
+        assert(r.getString(0) == s.getString(0), s"$mode: $r")
+        assert(r.getLong(1) == s.getLong(1), s"$mode: $r")
+      }
+    }
+  }
+
+  test("graft_strip_spans rejects NULL-bearing and unsorted starts") {
+    GraftFunctions.register(spark)
+    import spark.implicits._
+    inBothEvalModes { mode =>
+      // a NULL element would read as an arbitrary int: analysis error
+      val e = intercept[Exception](
+        spark.sql("select graft_strip_spans('a b c', array(1, null), 2)"))
+      assert(e.getMessage.contains("without NULL elements"), s"$mode: $e")
+      def strip(starts: Seq[Int]) = Seq(("a b c d e", starts))
+        .toDF("text", "starts").repartition(1)
+        .selectExpr("graft_strip_spans(text, starts, 2) as r")
+      val probe = strip(Seq(1))
+      probe.collect() // the adaptive plan prints its stages once final
+      val plan = probe.queryExecution.executedPlan.toString
+      assert(plan.contains("*(") == (mode == "CODEGEN_ONLY"), s"$mode:\n$plan")
+      // descending, zero, negative, and a late descent after a repeat
+      for (bad <- Seq(Seq(3, 2), Seq(0, 2), Seq(-1), Seq(1, 4, 4, 2))) {
+        val err = intercept[Exception](strip(bad).collect())
+        assert(Iterator.iterate[Throwable](err)(_.getCause)
+          .takeWhile(_ != null)
+          .exists(t => String.valueOf(t.getMessage).contains("must be ascending")),
+          s"$mode $bad: $err")
+      }
+      // ascending with a repeat is valid: tokens 1-2 and 4-5 covered
+      val ok = strip(Seq(1, 1, 4)).collect().head.getStruct(0)
+      assert(ok.getString(0) == "c" && ok.getLong(1) == 4L, s"$mode: $ok")
     }
   }
 

@@ -242,7 +242,7 @@ class OpsSpec extends SparkTestBase {
       assert(got == expected, s"$name: star-contraction != union-find")
       // the propagation reference needs O(diameter) rounds — the very
       // bound the star contraction removes — so give it headroom
-      val ref = Dedup.ccByLabelPropagation(df, maxIters = 200).collect()
+      val ref = CcReference.ccByLabelPropagation(df, maxIters = 200).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == ref, s"$name: star-contraction != propagation loop")
     }
