@@ -1,6 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, functions => F}
+import scala.reflect.ClassTag
+import org.apache.spark.sql.{Column, DataFrame, GraftFn, functions => F}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
+import org.apache.spark.sql.types._
 
 /** Document deduplication operators (SURVEY.md §2.2 rows 37-40).
   *
@@ -237,14 +241,201 @@ object Dedup {
       .selectExpr("id_a", "id_b", "round(jacc, 4) as jacc")
   }
 
-  /** Connected components over an undirected pair list via the
-    * ALTERNATING LARGE-STAR/SMALL-STAR contraction of Kiveris et al.
-    * 2014 ("Connected Components in MapReduce and Beyond", SoCC'14):
-    * O(log² n) rounds instead of min-label propagation's O(diameter)
-    * (r13 — on the sf0.1 semantic-dedup graph the r12 propagation
-    * loop paid 21 barrier rounds for a diameter-20 component, ~90% of
-    * q_dedup_semantic; a long-chain graph at 100 TB makes
-    * diameter-bound rounds the scale-killer). Each round:
+  /** Connected components over an undirected pair list. Output: (id,
+    * label) for every vertex appearing in `pairs`, label = min id of
+    * its component in Spark's ordering for the id type. Deterministic.
+    * A pair with one NULL endpoint is a self-loop of the other
+    * (greatest/least skip NULLs); a (NULL, NULL) pair yields one
+    * (NULL, NULL) row.
+    *
+    * ONE pass over `pairs` (whose lineage may be a whole candidate
+    * pipeline) materializes the canonical edge table. Then one of two
+    * paths labels it, with the same output and schema:
+    *
+    *  - driver finish ([[labelOnDriver]]): when the edge table is
+    *    broadcast-sized — rows × Spark's estimated row size ≤
+    *    `spark.sql.autoBroadcastJoinThreshold`, the bound Spark applies
+    *    to tables it collects to the driver — one job collects it and
+    *    a union-find labels it. Every Spark round costs an action and
+    *    several exchanges whatever the data size, so on small graphs
+    *    the rounds were all overhead (q_dedup_groups, by
+    *    graft.tools.PlanDump: 4 actions / 17 stages / 11 shuffles →
+    *    3 / 8 / 3);
+    *  - star contraction ([[starContraction]]): larger edge tables, or
+    *    any table under a threshold ≤ 0, iterate in Spark in
+    *    O(log² n) rounds.
+    *
+    * Failure-recovery contract: by default the edge table and each
+    * round materialize via eager `localCheckpoint` — blocks live on
+    * executors, so losing an executor mid-iteration severs lineage and
+    * fails the job (fine at test scale; rerun). At 100 TB pass
+    * `checkpointDir` (an HDFS/object-store path): the edge table and
+    * every round then write RELIABLE checkpoints there, and executor
+    * loss only recomputes lost partitions from the last checkpoint —
+    * the durability a multi-hour iteration needs. The driver finish
+    * runs no further job after its collect: once labelled, the result
+    * lives on the driver. OpsSpec differential-fuzzes both paths (and
+    * both checkpoint modes) against a union-find reference and the r12
+    * label-propagation loop (kept test-side as `CcReference`) on
+    * planted chain / star / random graphs. */
+  def connectedComponents(pairs: DataFrame, maxIters: Int = 50,
+                          checkpointDir: Option[String] = None): DataFrame = {
+    require(maxIters >= 1, "maxIters must be >= 1")
+    // checkpointDir is session-global SparkContext state: set it for
+    // the iteration, restore the caller's prior dir after (r6). The
+    // returned plan reads only already-materialized tables (edges0 +
+    // the final round's edges, or the driver's labels), so restoring
+    // on exit is safe.
+    val sc = pairs.sparkSession.sparkContext
+    val prior = sc.getCheckpointDir
+    val ckpt: DataFrame => DataFrame = checkpointDir match {
+      case Some(dir) =>
+        sc.setCheckpointDir(dir)
+        df => df.checkpoint(true)
+      case None => df => df.localCheckpoint(true)
+    }
+    try {
+      // canonical down-edges (src = greater endpoint), self-loops kept
+      // so the vertex set derives from this table without re-scanning
+      // the input
+      val canon = pairs
+        .selectExpr("greatest(id_a, id_b) as src", "least(id_a, id_b) as dst")
+        .distinct()
+      val edges0 = ckpt(canon)
+      if (broadcastSized(canon)) labelOnDriver(edges0)
+      else starContraction(edges0, maxIters, ckpt)
+    } finally {
+      if (checkpointDir.isDefined) prior.foreach(sc.setCheckpointDir)
+    }
+  }
+
+  /** Whether the materialized edge table fits the broadcast bound:
+    * rows × estimated row size ≤ autoBroadcastJoinThreshold, where a
+    * threshold ≤ 0 disables the driver finish as it disables broadcast
+    * joins. The row count is the `numOutputRows` metric the checkpoint
+    * job left on the root operator of `canon`'s plan, so sizing costs
+    * no job; a root that keeps no count stays on the loop. */
+  private def broadcastSized(canon: DataFrame): Boolean = {
+    import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def rows(p: SparkPlan): Option[Long] = p match {
+      case a: AdaptiveSparkPlanExec => rows(a.executedPlan)
+      case q: QueryStageExec => rows(q.plan)
+      case w: WholeStageCodegenExec => rows(w.child)
+      case _ => p.metrics.get("numOutputRows").map(_.value)
+    }
+    val threshold = canon.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val rowBytes = org.apache.spark.sql.catalyst.plans.logical.statsEstimation
+      .EstimationUtils.getSizePerRow(canon.queryExecution.analyzed.output)
+    // every edge's two endpoints must fit one driver array
+    threshold > 0 && rows(canon.queryExecution.executedPlan).exists(n =>
+      n <= Int.MaxValue / 2 && rowBytes * n <= threshold)
+  }
+
+  /** Ids the driver finish carries as primitive longs: how to read one
+    * from a row, and how to turn it back into the internal value. Each
+    * type's internal value is a signed integer whose numeric order is
+    * Spark's order for the type. */
+  private def longCodec(t: DataType)
+      : Option[((InternalRow, Int) => Long, Long => Any)] = t match {
+    case ByteType => Some(((r, i) => r.getByte(i).toLong, _.toByte))
+    case ShortType => Some(((r, i) => r.getShort(i).toLong, _.toShort))
+    case IntegerType | DateType => Some(((r, i) => r.getInt(i).toLong, _.toInt))
+    case LongType | TimestampType | TimestampNTZType => Some((_.getLong(_), v => v))
+    case _ => None
+  }
+
+  /** The driver finish: one job collects the canonical edge table's
+    * endpoints, and union-find labels components over vertex indices
+    * sorted by Spark's ordering for the id type — so each label is
+    * Spark's `min` (UTF-8 byte order for strings, not Scala's UTF-16
+    * order). Integral ids travel and sort as primitive long arrays, so
+    * driver memory stays a small multiple of the broadcast-sized table.
+    * The labels return to executors in slices and become rows there. */
+  private def labelOnDriver(edges0: DataFrame): DataFrame = {
+    val t = edges0.schema("src").dataType
+    longCodec(t) match {
+      case Some((read, write)) => labelOnDriver(edges0, read, write, Ordering.Long)
+      case None => labelOnDriver[AnyRef](edges0,
+        (r, i) => InternalRow.copyValue(r.get(i, t)).asInstanceOf[AnyRef],
+        v => v, PhysicalDataType.ordering(t).asInstanceOf[Ordering[AnyRef]])
+    }
+  }
+
+  private def labelOnDriver[K: ClassTag](edges0: DataFrame,
+      read: (InternalRow, Int) => K, write: K => Any,
+      ord: Ordering[K]): DataFrame = {
+    // per partition: endpoints flattened (src, dst, src, dst, ...), and
+    // whether the (NULL, NULL) edge is there
+    val parts = edges0.queryExecution.toRdd.mapPartitions { it =>
+      val ends = Array.newBuilder[K]
+      var nulls = false
+      it.foreach { r =>
+        if (r.isNullAt(0)) nulls = true
+        else { ends += read(r, 0); ends += read(r, 1) }
+      }
+      Iterator.single((ends.result(), nulls))
+    }.collect()
+    val ends = Array.concat(parts.map(_._1).toIndexedSeq: _*)
+    val hasNull = parts.exists(_._2)
+    // vertex keys in Spark's order, deduplicated in place
+    val keys = ends.clone()
+    (keys: Any) match {
+      case a: Array[Long] => java.util.Arrays.sort(a)
+      case a: Array[AnyRef @unchecked] =>
+        java.util.Arrays.sort(a, ord.asInstanceOf[Ordering[AnyRef]])
+    }
+    var n = 0
+    for (k <- keys) if (n == 0 || !ord.equiv(keys(n - 1), k)) { keys(n) = k; n += 1 }
+    val ids = keys.take(n)
+    val labels = minRoots(n, ends.map(ids.search(_)(ord).insertionPoint)).map(ids(_))
+    // ~64k rows per slice, built on executors
+    val spark = edges0.sparkSession
+    val sc = spark.sparkContext
+    val p = math.max(1, math.min(sc.defaultParallelism, (n + 0xFFFF) >> 16))
+    val cut = (0 to p).map(s => (s.toLong * n / p).toInt)
+    val rows = sc.parallelize((0 until p).map(s =>
+        (ids.slice(cut(s), cut(s + 1)), labels.slice(cut(s), cut(s + 1)))), p)
+      .mapPartitionsWithIndex { (s, it) =>
+        it.flatMap { case (is, ls) =>
+          is.indices.iterator.map(i => InternalRow(write(is(i)), write(ls(i))))
+        } ++ (if (hasNull && s == p - 1) Iterator.single(InternalRow(null, null))
+              else Iterator.empty)
+      }
+    val src = edges0.schema("src")
+    GraftFn.rowsFrame(spark,
+      StructType(Seq("id", "label").map(StructField(_, src.dataType, src.nullable))),
+      rows, n + (if (hasNull) 1L else 0L))
+  }
+
+  /** Each vertex's component-min index, by union-find over dense
+    * indices 0 until n with edges given as consecutive index pairs in
+    * `ends`. The larger root always links under the smaller, so
+    * parent(v) ≤ v holds throughout and one ascending pass resolves
+    * every vertex to its root, the component min. */
+  private def minRoots(n: Int, ends: Array[Int]): Array[Int] = {
+    val parent = Array.range(0, n)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    for (i <- ends.indices by 2) {
+      val (a, b) = (find(ends(i)), find(ends(i + 1)))
+      if (a < b) parent(b) = a else parent(a) = b
+    }
+    for (v <- 0 until n) parent(v) = parent(parent(v))
+    parent
+  }
+
+  /** The Spark path: ALTERNATING LARGE-STAR/SMALL-STAR contraction of
+    * Kiveris et al. 2014 ("Connected Components in MapReduce and
+    * Beyond", SoCC'14), O(log² n) rounds instead of min-label
+    * propagation's O(diameter) (r13 — on the sf0.1 semantic-dedup
+    * graph the r12 propagation loop paid 21 barrier rounds for a
+    * diameter-20 component, ~90% of q_dedup_semantic; a long-chain
+    * graph at 100 TB makes diameter-bound rounds the scale-killer).
+    * Each round:
     *
     *  - large-star: every node connects its strictly-LARGER neighbors
     *    to the minimum of its neighborhood (incl. itself);
@@ -268,105 +459,65 @@ object Dedup {
     * One cheap semi-join `isEmpty` per round checks depth-1 on the
     * just-checkpointed table. `maxIters` caps the rounds as a safety
     * net against pathological inputs; hitting it means under-merged
-    * labels, so it fails loudly. Deterministic; null ids are not
-    * meaningful input (a pair with a NULL endpoint carries no edge).
-    * OpsSpec differential-fuzzes this against both a union-find
-    * reference and the r12 label-propagation loop (kept test-side as
-    * `CcReference`) on planted chain / star / random graphs.
-    *
-    * Failure-recovery contract: by default each round materializes
-    * via eager `localCheckpoint` — blocks live on executors, so
-    * losing an executor mid-iteration severs lineage and fails the
-    * job (fine at test scale; rerun). At 100 TB pass `checkpointDir`
-    * (an HDFS/object-store path): rounds then write RELIABLE
-    * checkpoints there, and executor loss only recomputes lost
-    * partitions from the last checkpoint — the durability a
-    * multi-hour iteration needs. Same plan shape either way (OpsSpec
-    * pins equal output).
-    *
-    * Output: (id, label) for every vertex appearing in `pairs`, label
-    * = min id of its component. */
-  def connectedComponents(pairs: DataFrame, maxIters: Int = 50,
-                          checkpointDir: Option[String] = None): DataFrame = {
+    * labels, so it fails loudly. Each round materializes through
+    * `ckpt` (see the failure-recovery contract above). */
+  private def starContraction(edges0: DataFrame, maxIters: Int,
+                              ckpt: DataFrame => DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    require(maxIters >= 1, "maxIters must be >= 1")
-    // checkpointDir is session-global SparkContext state: set it for
-    // the iteration, restore the caller's prior dir after (r6). The
-    // returned plan reads only already-materialized checkpoint tables
-    // (edges0 + the final round's edges), so restoring on exit is safe.
-    val sc = pairs.sparkSession.sparkContext
-    val prior = sc.getCheckpointDir
-    val ckpt: DataFrame => DataFrame = checkpointDir match {
-      case Some(dir) =>
-        sc.setCheckpointDir(dir)
-        df => df.checkpoint(true)
-      case None => df => df.localCheckpoint(true)
+    val verts = edges0.selectExpr("src as id")
+      .union(edges0.selectExpr("dst as id")).distinct()
+    var edges = edges0.filter(F.col("src") =!= F.col("dst"))
+    var converged = false
+    var round = 0
+    while (!converged && round < maxIters) {
+      round += 1
+      // large-star over the doubled (undirected) view: for grouping
+      // node v with neighborhood N, m = min(N ∪ {v}); every edge to
+      // a LARGER neighbor u re-points (u → m). Each undirected edge
+      // is emitted by exactly its smaller endpoint's group, so the
+      // edge count never grows; duplicates are tolerated by the min
+      // and collapsed by small-star's final distinct.
+      val both = edges.union(
+        edges.select(F.col("dst").as("src"), F.col("src").as("dst")))
+      val ls = both
+        .withColumn("__m",
+          F.least(F.col("src"), F.min("dst").over(Window.partitionBy("src"))))
+        .filter(F.col("dst") > F.col("src"))
+        .select(F.col("dst").as("src"), F.col("__m").as("dst"))
+      // small-star: all edges now point down (dst < src). Group by
+      // the larger endpoint: m = min of its smaller neighbors; each
+      // neighbor re-points (lo → m), the group node itself (hi → m).
+      // Exactly one DISTINCT lo per group equals m, so mapping that
+      // row to (hi → m) emits the group edge without a join.
+      val ss = ls
+        .withColumn("__m", F.min("dst").over(Window.partitionBy("src")))
+        .select(
+          F.when(F.col("dst") === F.col("__m"), F.col("src"))
+            .otherwise(F.col("dst")).as("src"),
+          F.col("__m").as("dst"))
+        .distinct()
+      val next = ckpt(ss)
+      // fixpoint ⟺ star forest ⟺ no dst is also a src
+      converged = next.alias("a")
+        .join(next.alias("b"), F.col("a.dst") === F.col("b.src"),
+          "left_semi")
+        .isEmpty
+      edges = next
     }
-    try {
-      // ONE pass over `pairs` (whose lineage may be a whole candidate
-      // pipeline): canonical down-edges (src = greater endpoint),
-      // self-loops kept so the vertex set derives from this table
-      // without re-scanning the input
-      val edges0 = ckpt(pairs
-        .selectExpr("greatest(id_a, id_b) as src", "least(id_a, id_b) as dst")
-        .distinct())
-      val verts = edges0.selectExpr("src as id")
-        .union(edges0.selectExpr("dst as id")).distinct()
-      var edges = edges0.filter(F.col("src") =!= F.col("dst"))
-      var converged = false
-      var round = 0
-      while (!converged && round < maxIters) {
-        round += 1
-        // large-star over the doubled (undirected) view: for grouping
-        // node v with neighborhood N, m = min(N ∪ {v}); every edge to
-        // a LARGER neighbor u re-points (u → m). Each undirected edge
-        // is emitted by exactly its smaller endpoint's group, so the
-        // edge count never grows; duplicates are tolerated by the min
-        // and collapsed by small-star's final distinct.
-        val both = edges.union(
-          edges.select(F.col("dst").as("src"), F.col("src").as("dst")))
-        val ls = both
-          .withColumn("__m",
-            F.least(F.col("src"), F.min("dst").over(Window.partitionBy("src"))))
-          .filter(F.col("dst") > F.col("src"))
-          .select(F.col("dst").as("src"), F.col("__m").as("dst"))
-        // small-star: all edges now point down (dst < src). Group by
-        // the larger endpoint: m = min of its smaller neighbors; each
-        // neighbor re-points (lo → m), the group node itself (hi → m).
-        // Exactly one DISTINCT lo per group equals m, so mapping that
-        // row to (hi → m) emits the group edge without a join.
-        val ss = ls
-          .withColumn("__m", F.min("dst").over(Window.partitionBy("src")))
-          .select(
-            F.when(F.col("dst") === F.col("__m"), F.col("src"))
-              .otherwise(F.col("dst")).as("src"),
-            F.col("__m").as("dst"))
-          .distinct()
-        val next = ckpt(ss)
-        // fixpoint ⟺ star forest ⟺ no dst is also a src
-        converged = next.alias("a")
-          .join(next.alias("b"), F.col("a.dst") === F.col("b.src"),
-            "left_semi")
-          .isEmpty
-        edges = next
-      }
-      // the cap exists to bound pathological inputs, and hitting it
-      // means labels are under-merged — the silent-split wrong answer
-      // this method exists to prevent, so fail loudly instead
-      if (!converged)
-        throw new IllegalStateException(
-          s"connectedComponents did not converge within $maxIters rounds; " +
-          "raise maxIters")
-      // star edges ARE the labels; roots and isolated vertices (incl.
-      // self-loop-only ones) label themselves
-      verts.join(
-          edges.select(F.col("src").as("id"), F.col("dst").as("__cc_l")),
-          Seq("id"), "left_outer")
-        .select(F.col("id"),
-          F.coalesce(F.col("__cc_l"), F.col("id")).as("label"))
-    } finally {
-      if (checkpointDir.isDefined) prior.foreach(sc.setCheckpointDir)
-    }
+    // the cap exists to bound pathological inputs, and hitting it
+    // means labels are under-merged — the silent-split wrong answer
+    // this method exists to prevent, so fail loudly instead
+    if (!converged)
+      throw new IllegalStateException(
+        s"connectedComponents did not converge within $maxIters rounds; " +
+        "raise maxIters")
+    // star edges ARE the labels; roots and isolated vertices (incl.
+    // self-loop-only ones) label themselves
+    verts.join(
+        edges.select(F.col("src").as("id"), F.col("dst").as("__cc_l")),
+        Seq("id"), "left_outer")
+      .select(F.col("id"),
+        F.coalesce(F.col("__cc_l"), F.col("id")).as("label"))
   }
 
   /** Near-duplicate groups: minhash candidates verified at jaccard >=

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, functions => F}
+import org.apache.spark.sql.{Column, DataFrame, functions => F}
 import graft.functions.GraftFunctions
 
 /** Embedding similarity operators (SURVEY.md §2.2 rows 41-43).
@@ -41,25 +41,28 @@ object Similarity {
 
   /** Deterministic "random" hyperplane: component d of plane j is
     * ((d*31 + j*17) % 7) - 3 — integer arithmetic reproducible in any
-    * engine. Materialized as a double-array literal so the codegen'd
+    * engine. Passed as a typed double-array literal, so the codegen'd
     * graft_dot expression (graft.functions.ArrayDotProduct) computes
-    * the projection in a primitive loop. */
-  private def planeDot(j: Int, emb: String): String = {
-    val plane = (1 to Dim)
-      .map(d => s"${((d * 31 + j * 17) % 7 - 3).toDouble}D").mkString(", ")
-    s"graft_dot($emb, array($plane))"
+    * the projection in a primitive loop and no SQL text is parsed. */
+  private def planeDot(j: Int): Column = {
+    val plane = (1 to Dim).map(d => ((d * 31 + j * 17) % 7 - 3).toDouble).toArray
+    F.call_function("graft_dot", F.col("embedding"), F.typedLit(plane))
   }
+
+  /** Sign bits of planes `first until first + bits` as one int bucket
+    * (bit j set when the projection on plane first + j is >= 0). */
+  private def signBucket(first: Int, bits: Int): Column =
+    (0 until bits).map { j =>
+      F.when(planeDot(first + j) >= 0, F.lit(1 << j)).otherwise(F.lit(0))
+    }.reduce(_ + _).cast("int")
 
   private val norm2Expr = "graft_dot(embedding, embedding)"
 
   /** vec_id, embedding, LSH bucket (Planes sign bits), squared norm. */
   def withBucketAndNorm(emb: DataFrame): DataFrame = {
     GraftFunctions.register(emb.sparkSession)
-    val bucket = (0 until Planes).map { j =>
-      s"(case when ${planeDot(j, "embedding")} >= 0 then 1 else 0 end) * ${1 << j}"
-    }.mkString(" + ")
-    emb.selectExpr("vec_id", "embedding",
-      s"cast($bucket as int) as bucket", s"$norm2Expr as norm2")
+    emb.select(F.col("vec_id"), F.col("embedding"),
+      signBucket(0, Planes).as("bucket"), F.expr(norm2Expr).as("norm2"))
   }
 
   private val pairCos = "graft_dot(ea, eb) / (sqrt(na) * sqrt(nb))"
@@ -68,13 +71,9 @@ object Similarity {
     * DupBandBits sign bits of planes [t*DupBandBits, (t+1)*DupBandBits). */
   def withBandBuckets(emb: DataFrame): DataFrame = {
     GraftFunctions.register(emb.sparkSession)
-    val bucketCols = (0 until DupBands).map { t =>
-      val bits = (0 until DupBandBits).map { j =>
-        s"(case when ${planeDot(t * DupBandBits + j, "embedding")} >= 0 then 1 else 0 end) * ${1 << j}"
-      }.mkString(" + ")
-      s"cast($bits as int) as bucket_$t"
-    }
-    emb.selectExpr(Seq("vec_id", "embedding", s"$norm2Expr as norm2") ++ bucketCols: _*)
+    emb.select(Seq(F.col("vec_id"), F.col("embedding"), F.expr(norm2Expr).as("norm2")) ++
+      (0 until DupBands).map(t =>
+        signBucket(t * DupBandBits, DupBandBits).as(s"bucket_$t")): _*)
   }
 
   /** Near-duplicate pairs by embedding cosine within any band's LSH

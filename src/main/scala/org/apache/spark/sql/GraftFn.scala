@@ -5,7 +5,8 @@ package org.apache.spark.sql
   * Catalyst aggregate, so result types (decimal precision/scale,
   * overflow behavior) match the engine's own `AVG` instead of a
   * hand-assembled sum/count quotient. No execution-path code lives
-  * here — it only constructs an unresolved function Column. */
+  * here — it only constructs unresolved function Columns and, in
+  * [[rowsFrame]], a plan node over rows computed elsewhere. */
 object GraftFn {
   def distinctAgg(name: String, cols: Column*): Column =
     Column.fn(name, isDistinct = true, cols: _*)
@@ -44,4 +45,21 @@ object GraftFn {
     classic.ExpressionUtils.column(graft.functions.ExcludeAgg(
       classic.ExpressionUtils.expression(lst),
       classic.ExpressionUtils.expression(cur), mode, func, distinct))
+
+  /** A DataFrame over already-built internal rows whose row count is
+    * known, carrying that count as its statistics (rows × Spark's
+    * estimated row size), so joins against it plan as they would
+    * against a local table of that size. Used for results computed on
+    * the driver ([[graft.ops.Dedup.connectedComponents]]). */
+  def rowsFrame(spark: SparkSession, schema: types.StructType,
+                rows: org.apache.spark.rdd.RDD[catalyst.InternalRow],
+                numRows: Long): DataFrame = {
+    val s = spark.asInstanceOf[classic.SparkSession]
+    val attrs = catalyst.types.DataTypeUtils.toAttributes(schema)
+    val size = catalyst.plans.logical.statsEstimation.EstimationUtils
+      .getSizePerRow(attrs) * numRows
+    classic.Dataset.ofRows(s, execution.LogicalRDD(attrs, rows)(s,
+      Some(catalyst.plans.logical.Statistics(size, Some(BigInt(numRows)))),
+      None))
+  }
 }

@@ -197,21 +197,47 @@ class OpsSpec extends SparkTestBase {
       verified(Dedup.jaccardPairs(documents, 0.5)))
   }
 
+  private def withBroadcastThreshold[T](v: String)(body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prior = spark.conf.get(key)
+    spark.conf.set(key, v)
+    try body finally spark.conf.set(key, prior)
+  }
+
+  /** Connected components on both paths — the driver finish at the
+    * session's broadcast threshold, star contraction with the
+    * threshold off — asserting one output schema; rows of each. */
+  private def ccBothPaths(pairs: DataFrame): Seq[Array[org.apache.spark.sql.Row]] = {
+    val driver = Dedup.connectedComponents(pairs)
+    val loop = withBroadcastThreshold("-1")(Dedup.connectedComponents(pairs))
+    assert(driver.schema == loop.schema,
+      s"driver ${driver.schema} != loop ${loop.schema}")
+    // the loop labels by a vertex/star-edge join, the driver finish not
+    def joins(df: DataFrame): Int = df.queryExecution.analyzed.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }.size
+    assert(joins(driver) == 0 && joins(loop) == 1, "path not taken")
+    Seq(driver.collect(), loop.collect())
+  }
+  private def longLabels(rows: Array[org.apache.spark.sql.Row]): Map[Long, Long] =
+    rows.map(r => r.getLong(0) -> r.getLong(1)).toMap
+  private def stringLabels(rows: Array[org.apache.spark.sql.Row]): Map[String, String] =
+    rows.map(r => r.getString(0) -> r.getString(1)).toMap
+
   test("connected components converge on chains deeper than any fixed cap") {
     import spark.implicits._
     // a 9-vertex path 1-2-...-9 has diameter 8: the old fixed 3-round
     // propagation under-merged it; fixpoint iteration must label every
     // vertex with the component min (1) regardless of depth
     val chain = (1L until 9L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val labels = Dedup.connectedComponents(chain).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(labels.size == 9 && labels.values.forall(_ == 1L), labels.toString)
-    // disjoint components stay separate
     val two = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
-    val l2 = Dedup.connectedComponents(two).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(l2(1L) == 1L && l2(2L) == 1L && l2(3L) == 1L &&
-      l2(10L) == 10L && l2(11L) == 10L, l2.toString)
+    for (labels <- ccBothPaths(chain).map(longLabels)) {
+      assert(labels.size == 9 && labels.values.forall(_ == 1L), labels.toString)
+    }
+    // disjoint components stay separate
+    for (l2 <- ccBothPaths(two).map(longLabels)) {
+      assert(l2(1L) == 1L && l2(2L) == 1L && l2(3L) == 1L &&
+        l2(10L) == 10L && l2(11L) == 10L, l2.toString)
+    }
   }
 
   test("star-contraction CC matches union-find and the propagation " +
@@ -237,8 +263,8 @@ class OpsSpec extends SparkTestBase {
     def check(name: String, edges: Seq[(Long, Long)]): Unit = {
       val df = edges.toDF("id_a", "id_b")
       val expected = unionFind(edges)
-      val got = Dedup.connectedComponents(df).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val Seq(driver, got) = ccBothPaths(df).map(longLabels)
+      assert(driver == expected, s"$name: driver finish != union-find")
       assert(got == expected, s"$name: star-contraction != union-find")
       // the propagation reference needs O(diameter) rounds — the very
       // bound the star contraction removes — so give it headroom
@@ -265,10 +291,32 @@ class OpsSpec extends SparkTestBase {
     // string ids order lexicographically, same as the min-label rule
     val sdf = Seq(("b", "c"), ("c", "d"), ("x", "a"), ("a", "b"))
       .toDF("id_a", "id_b")
-    val sGot = Dedup.connectedComponents(sdf).collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(sGot == Map("a" -> "a", "b" -> "a", "c" -> "a", "d" -> "a",
-      "x" -> "a"), sGot.toString)
+    for (sGot <- ccBothPaths(sdf).map(stringLabels)) {
+      assert(sGot == Map("a" -> "a", "b" -> "a", "c" -> "a", "d" -> "a",
+        "x" -> "a"), sGot.toString)
+    }
+  }
+
+  test("connected components: both paths agree row for row on NULL " +
+      "endpoints and label strings by Spark's order, not UTF-16's") {
+    import spark.implicits._
+    // (NULL, NULL) is one NULL vertex labelled NULL; (NULL, x) is a
+    // self-loop of x (greatest/least skip NULLs)
+    val nulls = Seq[(java.lang.Long, java.lang.Long)]((null, null),
+      (null, 3L), (1L, 2L), (2L, null), (null, null), (5L, 5L))
+      .toDF("id_a", "id_b")
+    val Seq(driver, loop) = ccBothPaths(nulls).map(_.map(_.toString).sorted.toSeq)
+    assert(driver == loop, s"driver=$driver loop=$loop")
+    assert(driver == Seq("[1,1]", "[2,1]", "[3,3]", "[5,5]", "[null,null]"),
+      driver.toString)
+    // U+FFFF sorts below U+1F600 in UTF-8 (Spark) but above its UTF-16
+    // surrogates (Scala's String order): the label is Spark's min
+    val (ffff, smile) = ("\uFFFF", "\uD83D\uDE00")
+    val lone = Seq((smile, ffff)).toDF("id_a", "id_b")
+    assert(lone.selectExpr("least(id_a, id_b)").head().getString(0) == ffff)
+    for (got <- ccBothPaths(lone).map(stringLabels)) {
+      assert(got == Map(ffff -> ffff, smile -> ffff), got.toString)
+    }
   }
 
   test("connected components reliable-checkpoint path matches local") {
@@ -279,16 +327,23 @@ class OpsSpec extends SparkTestBase {
     val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt").toString
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L), (6L, 7L), (7L, 8L))
       .toDF("id_a", "id_b")
-    val local = Dedup.connectedComponents(pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toSet
-    val reliable = Dedup.connectedComponents(pairs,
-        checkpointDir = Some(dir)).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toSet
+    // on the star-contraction path, which checkpoints every round
+    val (local, reliable) = withBroadcastThreshold("-1") {
+      (Dedup.connectedComponents(pairs).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toSet,
+       Dedup.connectedComponents(pairs, checkpointDir = Some(dir)).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toSet)
+    }
     assert(reliable == local, s"reliable=$reliable local=$local")
     // the reliable run actually wrote checkpoint data
     val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
       .count() > 1
     assert(wrote, "no reliable checkpoint files written")
+    // the driver finish reads the reliably checkpointed edge table
+    val dir2 = java.nio.file.Files.createTempDirectory("graft_cc_ckpt").toString
+    val driver = Dedup.connectedComponents(pairs, checkpointDir = Some(dir2))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
+    assert(driver == local, s"driver=$driver local=$local")
   }
 
   test("as-of join ties on (key, time) resolve deterministically") {
