@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.collection.concurrent.TrieMap
-import graft.sql.{MacroExpander, Macros, Parser, Translator}
+import graft.sql.{MacroExpander, Macros, Parser, Spans, Translator}
+import graft.sql.Lexer.{Num, Op}
 
 /** Session facade — the Spark-native analogue of the reference's
   * public API (register_temp_table / query / remove_temp_table,
@@ -57,8 +58,8 @@ final class Graft(val spark: SparkSession) {
     ("""(?is)^\s*alter\s+table\s+(?:"([^"]+)"|([a-zA-Z_][a-zA-Z0-9_]*))""" +
      """\s+(.*?)\s*;?\s*$""").r
   private val ExplainRe = """(?is)^\s*explain\s+(select.*|with.*)$""".r
-  // CREATE MACRO (r11c): head-matched here, params/body split with the
-  // balanced-paren scanner (defaults may contain parens/commas)
+  // CREATE MACRO (r11c): head-matched here, params/body split with
+  // Spans (defaults may contain parens/commas)
   private val CreateMacroHeadRe =
     """(?is)^\s*create\s+(or\s+replace\s+)?macro\s+(?:"([^"]+)"|([a-zA-Z_][a-zA-Z0-9_]*))\s*\(.*$""".r
   private val DropMacroRe =
@@ -76,18 +77,18 @@ final class Graft(val spark: SparkSession) {
   // `WHEN MATCHED [AND pred]`, column-level `UPDATE SET col = expr,
   // …`, `WHEN NOT MATCHED [BY TARGET] [AND pred] THEN INSERT * /
   // INSERT (cols) VALUES (exprs)`, and `WHEN NOT MATCHED BY SOURCE
-  // [AND pred] THEN UPDATE/DELETE`. ON and the WHEN block split with
-  // the quote/paren-aware keyword scanner, not regexes (r7 ADVICE).
+  // [AND pred] THEN UPDATE/DELETE`. ON and the WHEN block split at
+  // top-level keyword tokens (Spans), not regexes (r7 ADVICE).
   private val MergeRe =
     ("""(?is)^\s*merge\s+into\s+(?:"([^"]+)"|([a-zA-Z_][a-zA-Z0-9_]*))""" +
      """(?:\s+(?:as\s+)?(?!using\b)([a-zA-Z_][a-zA-Z0-9_]*))?""" +
      """\s+using\s+(?:"([^"]+)"|([a-zA-Z_][a-zA-Z0-9_]*))""" +
      """(?:\s+(?:as\s+)?(?!on\b)([a-zA-Z_][a-zA-Z0-9_]*))?""" +
      """\s+on\s+(.*)$""").r
-  // matches only up to USING ( — the balanced subquery is extracted
-  // by the scanner in query(), not a regex
+  // matches only up to USING ( — the subquery is cut out as the
+  // statement's first paren group (Spans.parenGroup), not a regex
   private val MergeUsingSubqueryRe =
-    """(?is)^(\s*merge\s+into\s+(?:"[^"]+"|[a-zA-Z_][a-zA-Z0-9_]*)(?:\s+(?:as\s+)?(?!using\b)[a-zA-Z_][a-zA-Z0-9_]*)?\s+using\s*\().*$""".r
+    """(?is)^\s*merge\s+into\s+(?:"[^"]+"|[a-zA-Z_][a-zA-Z0-9_]*)(?:\s+(?:as\s+)?(?!using\b)[a-zA-Z_][a-zA-Z0-9_]*)?\s+using\s*\(.*$""".r
 
   private def fail(msg: String): Nothing = throw new RuntimeException(msg)
 
@@ -109,16 +110,16 @@ final class Graft(val spark: SparkSession) {
      """\s+using\s+(?:"([^"]+)"|([a-zA-Z_][a-zA-Z0-9_]*))""" +
      """(?:\s+(?:as\s+)?(?!where\b)([a-zA-Z_][a-zA-Z0-9_]*))?""" +
      """\s+where\s+(.*?)\s*;?\s*$""").r
-  // matches only up to USING ( — the balanced subquery is extracted
-  // by the scanner in query(), not a regex
+  // matches only up to USING ( — the subquery is cut out as the
+  // statement's first paren group (Spans.parenGroup), not a regex
   private val DeleteUsingSubRe =
-    ("""(?is)^(\s*delete\s+from\s+(?:"[^"]+"|[a-zA-Z_][a-zA-Z0-9_]*)""" +
+    ("""(?is)^\s*delete\s+from\s+(?:"[^"]+"|[a-zA-Z_][a-zA-Z0-9_]*)""" +
      """(?:\s+(?:as\s+)?(?!using\b)[a-zA-Z_][a-zA-Z0-9_]*)?""" +
-     """\s+using\s*\().*$""").r
+     """\s+using\s*\(.*$""").r
   private val DeleteRe =
     ("""(?is)^\s*delete\s+from\s+(?:"([^"]+)"|([a-zA-Z_][a-zA-Z0-9_]*))""" +
      """\s+where\s+(.*?)\s*;?\s*$""").r
-  // the SET-list / WHERE split happens with the keyword scanner, not
+  // the SET-list / WHERE split happens at a keyword token, not in
   // the regex — a string literal containing ' where ' inside an
   // assignment must not split (r7 ADVICE). A top-level FROM after the
   // SET list routes to the r9 UPDATE ... FROM join form.
@@ -140,9 +141,9 @@ final class Graft(val spark: SparkSession) {
   private val CopyFromRe =
     ("""(?is)^\s*copy\s+(?:"([^"]+)"|([a-zA-Z_][a-zA-Z0-9_]*))""" +
      """\s+from\s+'([^']+)'\s*(?:\(\s*(.*?)\s*\))?\s*;?\s*$""").r
-  // matches only up to COPY ( — the balanced subquery is extracted
-  // by the scanner in query(), not a regex
-  private val CopyQuerySubRe = """(?is)^(\s*copy\s*\().*$""".r
+  // matches only up to COPY ( — the query is cut out as the
+  // statement's first paren group (Spans.parenGroup), not a regex
+  private val CopyQuerySubRe = """(?is)^\s*copy\s*\(.*$""".r
   private val CopyToTailRe =
     """(?is)^\s*to\s+'([^']+)'\s*(?:\(\s*(.*?)\s*\))?\s*;?\s*$""".r
 
@@ -165,10 +166,11 @@ final class Graft(val spark: SparkSession) {
   private val DeallocRe =
     """(?is)^\s*deallocate\s+(?:prepare\s+)?(?:"([^"]+)"|([a-zA-Z_][a-zA-Z0-9_]*))\s*;?\s*$""".r
 
-  /** Substitutes `$n` / `?` placeholders with the argument texts
-    * (parenthesized), skipping string literals and quoted
-    * identifiers. `$n` and `?` may not mix; every argument must be
-    * consumed and every placeholder bound — all loud. */
+  /** Substitutes `$n` / `?` placeholder tokens with the argument
+    * texts (parenthesized); string literals, quoted identifiers and
+    * comments hold no placeholder tokens. `$n` and `?` may not mix;
+    * every argument must be consumed and every placeholder bound —
+    * all loud. */
   private def bindParams(sql: String, args: Seq[String]): String = {
     // simple literals substitute RAW (so LIMIT/OFFSET positions,
     // which take a bare integer, keep parsing); compound expressions
@@ -176,40 +178,24 @@ final class Graft(val spark: SparkSession) {
     val SimpleLit = """(?is)^(\d+(\.\d+)?|'[^']*'|null|true|false)$""".r
     def rendered(a: String): String =
       if (SimpleLit.matches(a)) a else s"($a)"
-    val out = new StringBuilder
-    var i = 0; var inStr = false; var inId = false
     var qmarks = 0; var maxDollar = 0
-    val n = sql.length
-    while (i < n) {
-      val ch = sql.charAt(i)
-      if (inStr) { out += ch; if (ch == '\'') inStr = false; i += 1 }
-      else if (inId) { out += ch; if (ch == '"') inId = false; i += 1 }
-      else ch match {
-        case '\'' => inStr = true; out += ch; i += 1
-        case '"'  => inId = true; out += ch; i += 1
-        // skip -- line comments (mirroring the lexer) so a
-        // placeholder inside a comment neither substitutes nor
-        // counts toward the arity check (r11 ADVICE)
-        case '-' if i + 1 < n && sql.charAt(i + 1) == '-' =>
-          while (i < n && sql.charAt(i) != '\n') { out += sql.charAt(i); i += 1 }
-        case '$' if i + 1 < n && sql.charAt(i + 1).isDigit =>
-          var j = i + 1
-          while (j < n && sql.charAt(j).isDigit) j += 1
-          val idx = sql.substring(i + 1, j).toInt
+    val out = Spans.rewrite(sql) { (ts, i) =>
+      (ts(i), ts.lift(i + 1)) match {
+        case (Op("$", p), Some(n @ Num(d, _)))
+            if n.pos == p + 1 && d.forall(_.isDigit) =>
+          val idx = d.toInt
           if (idx < 1 || idx > args.length)
             fail(s"EXECUTE: placeholder $$$idx but ${args.length} " +
               "argument(s) supplied")
           maxDollar = math.max(maxDollar, idx)
-          out ++= rendered(args(idx - 1))
-          i = j
-        case '?' =>
+          Some((2, rendered(args(idx - 1))))
+        case (Op("?", _), _) =>
           qmarks += 1
           if (qmarks > args.length)
             fail(s"EXECUTE: ${qmarks}th '?' placeholder but only " +
               s"${args.length} argument(s) supplied")
-          out ++= rendered(args(qmarks - 1))
-          i += 1
-        case c => out += c; i += 1
+          Some((1, rendered(args(qmarks - 1))))
+        case _ => None
       }
     }
     if (qmarks > 0 && maxDollar > 0)
@@ -218,7 +204,7 @@ final class Graft(val spark: SparkSession) {
     if (consumed != args.length)
       fail(s"EXECUTE: statement binds $consumed parameter(s) but " +
         s"${args.length} argument(s) supplied")
-    out.toString
+    out
   }
 
   /** (format, Spark reader/writer options) from a COPY option list
@@ -230,8 +216,7 @@ final class Graft(val spark: SparkSession) {
     val DelimRe  = """(?is)^delim(?:iter)?\s+'(.)'$""".r
     var fmt: Option[String] = None
     val extra = scala.collection.mutable.LinkedHashMap[String, String]()
-    Option(optsOrNull).toSeq
-      .flatMap(splitTop(_, ',')).map(_.trim).filter(_.nonEmpty)
+    Option(optsOrNull).toSeq.flatMap(Spans.split(_, ",")).filter(_.nonEmpty)
       .foreach {
         case FormatRe(f) => fmt = Some(f.toLowerCase)
         case HeaderRe(v) =>
@@ -412,76 +397,40 @@ final class Graft(val spark: SparkSession) {
   }
 
   /** Parse + translate SQL to a lazy DataFrame. Besides queries,
-    * accepts `CREATE [OR REPLACE] [TEMP] VIEW name AS select`
-    * (registers the unexecuted plan under the name; without OR
-    * REPLACE an existing name is a loud error), `DROP VIEW
-    * [IF EXISTS] name`, and `EXPLAIN select` (one `plan` row per
-    * formatted-plan line). */
+    * accepts the statement forms (CREATE/DROP VIEW and TABLE, EXPLAIN,
+    * DML, MERGE, COPY, PREPARE/EXECUTE, CREATE MACRO, SET, ...).
+    * Statement text is tokenized by [[graft.sql.Lexer]]: comments may
+    * stand anywhere and one trailing `;` is accepted on every form. */
   def query(sqlText: String): DataFrame = {
+    val sql = Spans.statement(sqlText)
     // RETURNING (r11b, PostgreSQL/DuckDB): a trailing top-level
     // RETURNING clause on INSERT/UPDATE/DELETE returns the affected
-    // rows instead of the status frame. Split here (string/paren-
-    // aware scanner), execute the bare statement, and evaluate the
-    // expressions over the affected-rows frame captured BEFORE the
-    // re-registration (a deleted row must still be returnable).
-    val head = sqlText.trim.toLowerCase
+    // rows instead of the status frame. Split here, execute the bare
+    // statement, and evaluate the expressions over the affected-rows
+    // frame captured BEFORE the re-registration (a deleted row must
+    // still be returnable).
+    val head = sql.toLowerCase
     if (head.startsWith("insert") || head.startsWith("update") ||
         head.startsWith("delete")) {
-      topLevelKeyword(sqlText, "returning") match {
-        case Nil =>
-        case i :: Nil =>
-          val exprs = sqlText.substring(i + "returning".length)
-            .trim.stripSuffix(";").trim
-          return returningStatement(sqlText.substring(0, i).trim, exprs)
+      Spans.around(sql, "returning") match {
+        case Seq() =>
+        case Seq((stmt, exprs)) => return returningStatement(stmt, exprs)
         case _ => fail("multiple top-level RETURNING clauses")
       }
     }
-    queryDispatch(sqlText)
+    queryDispatch(sql)
   }
 
   /** Executes a multi-statement SQL SCRIPT (r11c): statements split
-    * on top-level `;` — string literals, quoted identifiers, parens,
-    * and `--` line comments are respected — run in order through
-    * [[query]], and the LAST statement's frame is returned (the
-    * psql/DuckDB-CLI contract: set up macros/views/tables, end on the
-    * SELECT you want). Empty statements (trailing `;`, comment-only
-    * segments) are skipped; a script with no statements is loud. */
+    * on top-level `;` tokens, run in order through [[query]], and the
+    * LAST statement's frame is returned (the psql/DuckDB-CLI contract:
+    * set up macros/views/tables, end on the SELECT you want). Empty
+    * statements (trailing `;`, comment-only segments) are skipped; a
+    * script with no statements is loud. */
   def runScript(script: String): DataFrame = {
-    val stmts = splitTop(stripLineComments(script), ';')
-      .map(_.trim).filter(_.nonEmpty)
+    val stmts = Spans.split(script, ";").filter(_.nonEmpty)
     if (stmts.isEmpty) fail("script contains no statements")
     stmts.map(query).last
-  }
-
-  /** Blanks `--` line comments outside string literals / quoted
-    * identifiers (shared contract with the lexer and bindParams) so
-    * a `;` inside a comment can never split a statement. */
-  private def stripLineComments(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    var inStr = false
-    var inIdent = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) {
-        sb += c
-        if (c == '\'') {
-          if (i + 1 < s.length && s.charAt(i + 1) == '\'') {
-            sb += '\''; i += 1
-          } else inStr = false
-        }
-      } else if (inIdent) {
-        sb += c
-        if (c == '"') inIdent = false
-      } else if (c == '\'') { inStr = true; sb += c }
-      else if (c == '"') { inIdent = true; sb += c }
-      else if (c == '-' && i + 1 < s.length && s.charAt(i + 1) == '-') {
-        while (i < s.length && s.charAt(i) != '\n') i += 1
-        i -= 1 // the newline (if any) re-appends on the next loop turn
-      } else sb += c
-      i += 1
-    }
-    sb.toString
   }
 
   /** RETURNING lowering (r11b): build the affected-rows frame from
@@ -497,8 +446,7 @@ final class Graft(val spark: SparkSession) {
     if (exprs.isEmpty) fail("RETURNING requires at least one expression")
     stmt match {
       case InsertRe(q, b, colListOrNull, body0) =>
-        if (topLevelKeyword(body0, "on").exists(i =>
-            body0.substring(i + 2).trim.toLowerCase.startsWith("conflict")))
+        if (Spans.around(body0, "on", "conflict").nonEmpty)
           fail("RETURNING is not supported with ON CONFLICT")
         val name = Option(q).getOrElse(b)
         val target = lookup(name)
@@ -506,7 +454,7 @@ final class Graft(val spark: SparkSession) {
           insertSrcSql(body0))
         queryDispatch(stmt)
         returningOver(inserted, name, exprs)
-      case DeleteUsingSubRe(_) =>
+      case DeleteUsingSubRe() =>
         fail("RETURNING is not supported with a (subquery) USING source")
       case DeleteUsingRe(tq, tb, tAl, sq, sb, sAl, cond) =>
         val tName = Option(tq).getOrElse(tb)
@@ -527,25 +475,11 @@ final class Graft(val spark: SparkSession) {
         queryDispatch(stmt)
         returningOver(affected, name, exprs)
       case UpdateRe(q, b, tAl, tail) =>
-        if (topLevelKeyword(tail, "from").nonEmpty)
+        if (Spans.around(tail, "from").nonEmpty)
           fail("RETURNING is not supported with UPDATE ... FROM")
         val name = Option(q).getOrElse(b)
         val target = lookup(name)
-        val (setList, pred) = topLevelKeyword(tail, "where") match {
-          case Nil    => (tail, None)
-          case i :: _ => (tail.substring(0, i),
-                          Some(tail.substring(i + "where".length).trim))
-        }
-        val assigns: Map[String, String] =
-          splitTop(setList, ',').map { a =>
-            val i = a.indexOf('=')
-            if (i < 0) fail(s"UPDATE SET expects col = expr, got: $a")
-            val col = a.substring(0, i).trim
-              .stripPrefix("\"").stripSuffix("\"")
-            val matched = target.columns.find(_.equalsIgnoreCase(col))
-              .getOrElse(fail(s"UPDATE: column '$col' not in $name"))
-            matched.toLowerCase -> a.substring(i + 1).trim
-          }.toMap
+        val (assigns, pred) = updateSet(target, name, tail)
         // POST-update values: unconditional assignments over the rows
         // the predicate selects (the statement's own CASE arms are
         // per-row conditionals; here the filter already decided)
@@ -564,6 +498,37 @@ final class Graft(val spark: SparkSession) {
       case _ => fail("RETURNING is only supported on INSERT INTO, " +
         "UPDATE ... SET, and DELETE FROM statements")
     }
+  }
+
+  /** An UPDATE's `SET` list (target column, lower case -> expression
+    * text), cut at its first top-level WHERE, and that WHERE's
+    * predicate. */
+  private def updateSet(target: DataFrame, name: String,
+                        tail: String): (Map[String, String], Option[String]) = {
+    val (setList, pred) = Spans.around(tail, "where").headOption match {
+      case Some((sl, p)) => (sl, Some(p))
+      case None          => (tail, None)
+    }
+    val assigns = Spans.split(setList, ",").map { a =>
+      val (col, e) = Spans.around(a, "=").headOption
+        .getOrElse(fail(s"UPDATE SET expects col = expr, got: $a"))
+      column(target, name, col, "UPDATE").toLowerCase -> e
+    }.toMap
+    (assigns, pred)
+  }
+
+  /** The column of `df` (registered as `table`) that a column-list
+    * entry names: bare or quoted, any case, qualified only by one of
+    * `quals`. */
+  private def column(df: DataFrame, table: String, ref: String, what: String,
+                     quals: Set[String] = Set.empty): String = {
+    val c = Spans.ref(ref) match {
+      case Some((None, c))                            => c
+      case Some((Some(q), c)) if quals(q.toLowerCase) => c
+      case _ => fail(s"$what: bad column ref '$ref'")
+    }
+    df.columns.find(_.equalsIgnoreCase(c))
+      .getOrElse(fail(s"$what: column '$c' not in $table"))
   }
 
   /** Evaluates RETURNING expressions over the affected-rows frame,
@@ -601,7 +566,7 @@ final class Graft(val spark: SparkSession) {
           s"table '$name' already exists (use CREATE OR REPLACE TABLE)")
       val ColDef =
         """(?is)^\s*(?:"([^"]+)"|(\w+))\s+(\w+(?:\s+\w+)*(?:\s*\(\s*\d+\s*(?:,\s*\d+\s*)?\))?)\s*$""".r
-      val cols = splitTop(defs, ',').map {
+      val cols = Spans.split(defs, ",").map {
         case ColDef(cq, cb, typ) => (Option(cq).getOrElse(cb), typ)
         case other => fail(s"CREATE TABLE column definition must be " +
           s"'name type', got: $other")
@@ -634,18 +599,12 @@ final class Graft(val spark: SparkSession) {
     case InsertRe(q, b, colListOrNull, body0) =>
       val name = Option(q).getOrElse(b)
       val target = lookup(name) // loud on unknown target
-      // ON CONFLICT (r10): split at the LAST top-level ON whose next
-      // word is CONFLICT (an unparenthesized join's ON inside an
-      // INSERT ... SELECT body is followed by its condition, never
-      // by the keyword CONFLICT)
-      val ocAt = topLevelKeyword(body0, "on").reverse.find { i =>
-        body0.substring(i + 2).trim.toLowerCase.startsWith("conflict")
-      }
-      ocAt match {
-        case Some(i) =>
-          val tail = body0.substring(i + 2).trim.substring("conflict".length)
-          insertOnConflict(name, Option(colListOrNull),
-            body0.substring(0, i).trim, tail)
+      // ON CONFLICT (r10): split at the LAST top-level ON CONFLICT
+      // (an unparenthesized join's ON inside an INSERT ... SELECT body
+      // is followed by its condition, never by the keyword CONFLICT)
+      Spans.around(body0, "on", "conflict").lastOption match {
+        case Some((body, tail)) =>
+          insertOnConflict(name, Option(colListOrNull), body, tail)
         case None =>
           val src = insertSrcSql(body0)
           Option(colListOrNull) match {
@@ -689,29 +648,12 @@ final class Graft(val spark: SparkSession) {
       val target = lookup(name)
       // a top-level FROM ends the SET list and routes to the r9
       // join-update form (PostgreSQL UPDATE ... FROM)
-      topLevelKeyword(tail, "from") match {
-        case i :: _ =>
-          return updateFromStatement(name, Option(tAl),
-            tail.substring(0, i).trim,
-            tail.substring(i + "from".length))
-        case Nil =>
+      Spans.around(tail, "from").headOption match {
+        case Some((setList, from)) =>
+          return updateFromStatement(name, Option(tAl), setList, from)
+        case None =>
       }
-      // scanner-based SET/WHERE split: the first top-level WHERE
-      // keyword outside strings/parens ends the assignment list
-      val (setList, pred) = topLevelKeyword(tail, "where") match {
-        case Nil    => (tail, None)
-        case i :: _ => (tail.substring(0, i),
-                        Some(tail.substring(i + "where".length).trim))
-      }
-      val assigns: Map[String, String] =
-        splitTop(setList, ',').map { a =>
-          val i = a.indexOf('=')
-          if (i < 0) fail(s"UPDATE SET expects col = expr, got: $a")
-          val col = a.substring(0, i).trim.stripPrefix("\"").stripSuffix("\"")
-          val matched = target.columns.find(_.equalsIgnoreCase(col))
-            .getOrElse(fail(s"UPDATE: column '$col' not in $name"))
-          matched.toLowerCase -> a.substring(i + 1).trim
-        }.toMap
+      val (assigns, pred) = updateSet(target, name, tail)
       val items = target.columns.map { c =>
         assigns.get(c.toLowerCase) match {
           case Some(e) => pred match {
@@ -731,28 +673,16 @@ final class Graft(val spark: SparkSession) {
       registerTable(name,
         translateOnly(s"select ${items.mkString(", ")} from $fromTxt"))
       status("updated", name.toLowerCase)
-    case MergeUsingSubqueryRe(head) =>
-      // USING (subquery) [AS] alias (r8): extract the balanced-paren
-      // subquery with the scanner, register its LAZY plan under a
+    case MergeUsingSubqueryRe() =>
+      // USING (subquery) [AS] alias (r8): cut out the subquery (the
+      // statement's first paren group), register its LAZY plan under a
       // reserved temp name, and re-enter with the rewritten text —
       // the alias keeps working as the source qualifier
-      val open = sqlText.indexOf('(', head.length - 1)
-      val (subSql, after) = balancedParen(sqlText, open)
-      val tmp = "__merge_using_sub"
-      registerTable(tmp, translateOnly(subSql))
-      try query(sqlText.substring(0, open) + s" $tmp " +
-        sqlText.substring(after))
-      finally removeTable(tmp)
-    case DeleteUsingSubRe(head) =>
-      // DELETE ... USING (subquery) alias (r9): same scanner +
-      // re-enter pattern as MERGE USING (subquery)
-      val open = sqlText.indexOf('(', head.length - 1)
-      val (subSql, after) = balancedParen(sqlText, open)
-      val tmp = "__del_using_sub"
-      registerTable(tmp, translateOnly(subSql))
-      try query(sqlText.substring(0, open) + s" $tmp " +
-        sqlText.substring(after))
-      finally removeTable(tmp)
+      usingSubquery(sqlText, "__merge_using_sub")
+    case DeleteUsingSubRe() =>
+      // DELETE ... USING (subquery) alias (r9): same cut + re-enter
+      // pattern as MERGE USING (subquery)
+      usingSubquery(sqlText, "__del_using_sub")
     case MergeRe(tq, tb, tAl, sq, sb, sAl, rest) =>
       mergeStatement(Option(tq).getOrElse(tb), Option(tAl),
         Option(sq).getOrElse(sb), Option(sAl), rest)
@@ -836,8 +766,8 @@ final class Graft(val spark: SparkSession) {
       val name = Option(q).getOrElse(b)
       val body = preparedStmts.getOrElse(name.toLowerCase,
         fail(s"prepared statement '$name' is not registered"))
-      val args = Option(argsOrNull).toSeq
-        .flatMap(splitTop(_, ',')).map(_.trim).filter(_.nonEmpty)
+      val args =
+        Option(argsOrNull).toSeq.flatMap(Spans.split(_, ",")).filter(_.nonEmpty)
       // self- or mutually-recursive prepared statements (PREPARE a AS
       // EXECUTE a) would re-enter query() unboundedly — fail loudly
       // instead of StackOverflowError (r11 ADVICE); DuckDB rejects
@@ -857,12 +787,11 @@ final class Graft(val spark: SparkSession) {
       copyTo(lookup(Option(q).getOrElse(b)), path, opts)
     case CopyFromRe(q, b, path, opts) =>
       copyFrom(Option(q).getOrElse(b), path, opts)
-    case CopyQuerySubRe(head) =>
-      // COPY (query) TO 'path' [(opts)]: balanced-paren scanner like
+    case CopyQuerySubRe() =>
+      // COPY (query) TO 'path' [(opts)]: the first paren group, like
       // MERGE USING (subquery); the query goes through the dialect
-      val open = sqlText.indexOf('(', head.length - 1)
-      val (subSql, after) = balancedParen(sqlText, open)
-      sqlText.substring(after) match {
+      val (_, subSql, after) = Spans.parenGroup(sqlText)
+      after match {
         case CopyToTailRe(path, opts) =>
           copyTo(translateOnly(subSql), path, opts)
         case other => fail("COPY (query) must be followed by " +
@@ -966,6 +895,16 @@ final class Graft(val spark: SparkSession) {
     case _ => translateOnly(sqlText)
   }
 
+  /** Registers a statement's first paren group — a USING (subquery)
+    * source — under `tmp` and re-enters [[query]] with the group
+    * replaced by that name. */
+  private def usingSubquery(sqlText: String, tmp: String): DataFrame = {
+    val (before, subSql, after) = Spans.parenGroup(sqlText)
+    registerTable(tmp, translateOnly(subSql))
+    try query(s"$before $tmp $after")
+    finally removeTable(tmp)
+  }
+
   // ---- CREATE MACRO (r11c, DuckDB dialect) ---------------------------
   // CREATE [OR REPLACE] MACRO name(p [, q := default]) AS body
   // body = scalar expression, or `TABLE <query>` for a table macro.
@@ -1001,22 +940,18 @@ final class Graft(val spark: SparkSession) {
     if (parserReservedFns.contains(lower) || registryCollision)
       fail(s"macro name '$name' shadows a builtin function " +
         "(DuckDB-compatible restriction: pick a non-colliding name)")
-    // a quoted name containing parens would corrupt the balanced-
-    // paren parameter scan below (and could never be CALLED — call
-    // sites parse names as identifiers)
-    if (name.exists(c => c == '(' || c == ')'))
-      fail(s"macro name '$name' may not contain parentheses")
     if (!orReplace && macros.contains(lower))
       fail(s"macro '$name' already exists (use CREATE OR REPLACE MACRO)")
-    val open = sqlText.indexOf('(', sqlText.toLowerCase.indexOf("macro"))
-    val (paramsTxt, after) = balancedParen(sqlText, open)
+    // the parameter list is the first paren group (a quoted name is
+    // one identifier token, whatever it holds)
+    val (_, paramsTxt, after) = Spans.parenGroup(sqlText)
     val AsTail = """(?is)^\s*as\s+(.*?)\s*;?\s*$""".r
-    val bodyTxt = sqlText.substring(after) match {
+    val bodyTxt = after match {
       case AsTail(b) => b
       case other => fail(s"CREATE MACRO expects AS <body>, got: $other")
     }
     val ParamRe = """(?s)^\s*([a-zA-Z_][a-zA-Z0-9_]*)\s*(?::=\s*(.+?))?\s*$""".r
-    val params = splitTop(paramsTxt, ',').filter(_.trim.nonEmpty).map {
+    val params = Spans.split(paramsTxt, ",").filter(_.nonEmpty).map {
       case ParamRe(p, dflt) =>
         (p.toLowerCase, Option(dflt).map(Parser.parseExpression))
       case other => fail(s"CREATE MACRO parameter must be 'name' or " +
@@ -1055,238 +990,6 @@ final class Graft(val spark: SparkSession) {
     "list_has_all", "list_unique", "starts_with", "ends_with",
     "prefix", "suffix", "regexp_matches", "regexp_full_match")
 
-  /** Splits on `sep` at paren-depth 0 outside string literals and
-    * double-quoted identifiers — assignment lists may carry commas
-    * inside function calls, and a quoted identifier may carry the
-    * separator or an unbalanced paren (`"a;b"`). */
-  private def splitTop(s: String, sep: Char): Seq[String] = {
-    val out = Seq.newBuilder[String]; val sb = new StringBuilder
-    var depth = 0; var inStr = false; var inId = false
-    s.foreach { ch =>
-      if (inStr) { sb += ch; if (ch == '\'') inStr = false }
-      else if (inId) { sb += ch; if (ch == '"') inId = false }
-      else ch match {
-        case '\'' => inStr = true; sb += ch
-        case '"' => inId = true; sb += ch
-        case '(' => depth += 1; sb += ch
-        case ')' => depth -= 1; sb += ch
-        case c if c == sep && depth == 0 =>
-          out += sb.toString; sb.clear()
-        case c => sb += c
-      }
-    }
-    out += sb.toString
-    out.result()
-  }
-
-  private def isIdentChar(c: Char): Boolean = c.isLetterOrDigit || c == '_'
-
-  /** Start offsets where `kw` occurs as a whole word at paren-depth 0
-    * outside single-quoted strings and double-quoted identifiers. */
-  private def topLevelKeyword(s: String, kw: String): List[Int] = {
-    val out = List.newBuilder[Int]
-    var depth = 0; var i = 0; var inStr = false; var inId = false
-    val n = s.length
-    while (i < n) {
-      val ch = s.charAt(i)
-      if (inStr) { if (ch == '\'') inStr = false }
-      else if (inId) { if (ch == '"') inId = false }
-      else ch match {
-        case '\'' => inStr = true
-        case '"'  => inId = true
-        case '('  => depth += 1
-        case ')'  => depth -= 1
-        case _ =>
-          if (depth == 0 && s.regionMatches(true, i, kw, 0, kw.length) &&
-              (i == 0 || !isIdentChar(s.charAt(i - 1))) &&
-              (i + kw.length >= n || !isIdentChar(s.charAt(i + kw.length))))
-            out += i
-      }
-      i += 1
-    }
-    out.result()
-  }
-
-  /** (inner text, index after the closing paren) of the balanced
-    * paren group starting at `open` (string-literal aware). */
-  private def balancedParen(s: String, open: Int): (String, Int) = {
-    var depth = 0; var close = -1; var i = open; var inStr = false
-    while (close < 0 && i < s.length) {
-      val ch = s.charAt(i)
-      if (inStr) { if (ch == '\'') inStr = false }
-      else ch match {
-        case '\'' => inStr = true
-        case '('  => depth += 1
-        case ')'  => depth -= 1; if (depth == 0) close = i
-        case _    =>
-      }
-      i += 1
-    }
-    if (close < 0) fail("unbalanced parentheses in derived-table source")
-    (s.substring(open + 1, close), close + 1)
-  }
-
-  /** Repeatedly strips a balanced outer paren pair: `((a = b))` →
-    * `a = b`; leaves `(a) and (b)` alone. */
-  private def stripParens(s0: String): String = {
-    var s = s0.trim; var go = true
-    while (go && s.startsWith("(") && s.endsWith(")")) {
-      var depth = 0; var whole = true; var inStr = false; var i = 0
-      while (i < s.length - 1) {
-        val ch = s.charAt(i)
-        if (inStr) { if (ch == '\'') inStr = false }
-        else ch match {
-          case '\'' => inStr = true
-          case '('  => depth += 1
-          case ')'  => depth -= 1; if (depth == 0) whole = false
-          case _    =>
-        }
-        i += 1
-      }
-      if (whole) s = s.substring(1, s.length - 1).trim else go = false
-    }
-    s
-  }
-
-  /** Splits `c` at its single top-level '=' (outside strings/parens,
-    * not part of <= >= !=); None when there isn't exactly one. */
-  private def topLevelEq(c: String): Option[(String, String)] = {
-    val out = List.newBuilder[Int]
-    var depth = 0; var inStr = false; var inId = false; var i = 0
-    while (i < c.length) {
-      val ch = c.charAt(i)
-      if (inStr) { if (ch == '\'') inStr = false }
-      else if (inId) { if (ch == '"') inId = false }
-      else ch match {
-        case '\'' => inStr = true
-        case '"'  => inId = true
-        case '('  => depth += 1
-        case ')'  => depth -= 1
-        case '=' if depth == 0 =>
-          val prev = if (i > 0) c.charAt(i - 1) else ' '
-          if (prev != '<' && prev != '>' && prev != '!') out += i
-        case _ =>
-      }
-      i += 1
-    }
-    out.result() match {
-      case p :: Nil => Some((c.substring(0, p).trim, c.substring(p + 1).trim))
-      case _        => None
-    }
-  }
-
-  /** Which join frames does an expression text reference?
-    * (refsTarget, refsSource). Qualified refs decide by qualifier;
-    * bare idents (not function calls) by which frame carries the
-    * column — a bare ref living in both frames must qualify (loud). */
-  private def sidesOfExpr(e: String, tQuals: Set[String],
-                          sQuals: Set[String], tCols: Array[String],
-                          sCols: Array[String]): (Boolean, Boolean) = {
-    var t = false; var s2 = false
-    var i = 0; val n = e.length; var inStr = false
-    while (i < n) {
-      val ch = e.charAt(i)
-      if (inStr) { if (ch == '\'') inStr = false; i += 1 }
-      else if (ch == '\'') { inStr = true; i += 1 }
-      else if (ch.isLetter || ch == '_') {
-        val st = i
-        while (i < n && isIdentChar(e.charAt(i))) i += 1
-        val id = e.substring(st, i)
-        val qualified = i < n && e.charAt(i) == '.' && i + 1 < n &&
-          (e.charAt(i + 1).isLetter || e.charAt(i + 1) == '_')
-        if (qualified && tQuals.contains(id.toLowerCase)) {
-          t = true; i += 1
-          while (i < n && isIdentChar(e.charAt(i))) i += 1
-        } else if (qualified && sQuals.contains(id.toLowerCase)) {
-          s2 = true; i += 1
-          while (i < n && isIdentChar(e.charAt(i))) i += 1
-        } else if (qualified) {
-          // a dot after a non-alias ident: struct-field access on a
-          // bare column classifies by the column's frame; anything
-          // else is a typo'd alias — loud (r9 ADVICE: the silent skip
-          // surfaced as confusing downstream analysis errors)
-          val inT = tCols.exists(_.equalsIgnoreCase(id))
-          val inS = sCols.exists(_.equalsIgnoreCase(id))
-          if (inT && inS)
-            fail(s"bare column '$id' exists in both the target and the " +
-              "source frame — qualify it (t.col / s.col)")
-          if (!inT && !inS)
-            fail(s"unknown alias or column '$id' in: $e (known " +
-              s"qualifiers: ${(tQuals ++ sQuals).toSeq.sorted.mkString(", ")})")
-          if (inT) t = true
-          if (inS) s2 = true
-          i += 1
-          while (i < n && isIdentChar(e.charAt(i))) i += 1
-        } else if (!qualified && !(i < n && e.charAt(i) == '(')) {
-          val inT = tCols.exists(_.equalsIgnoreCase(id))
-          val inS = sCols.exists(_.equalsIgnoreCase(id))
-          if (inT && inS)
-            fail(s"bare column '$id' exists in both the target and the " +
-              "source frame — qualify it (t.col / s.col)")
-          if (inT) t = true
-          if (inS) s2 = true
-        }
-      } else i += 1
-    }
-    (t, s2)
-  }
-
-  /** Split `s` into segments around top-level occurrences of `kw`
-    * (the keyword itself is dropped). */
-  private def splitKeyword(s: String, kw: String): Seq[String] = {
-    val pos = topLevelKeyword(s, kw)
-    if (pos.isEmpty) Seq(s)
-    else {
-      val bounds = -kw.length +: pos
-      bounds.zip(pos :+ s.length).map { case (a, b) =>
-        s.substring(a + kw.length, b)
-      }
-    }
-  }
-
-  /** Rewrites table-qualified column refs in a MERGE expression:
-    * `tQual.col` → the bare (quoted) target column, `sQual.col` →
-    * the `__s_`-prefixed source column of the joined frame. Scans
-    * outside string literals; bare (unqualified) refs pass through
-    * and resolve against the frame's target columns. */
-  private def rewriteRefs(e: String, tQuals: Set[String], sQuals: Set[String],
-                          tCols: Array[String], sCols: Array[String],
-                          tMap: String => String,
-                          sMap: String => String): String = {
-    val sb = new StringBuilder; var i = 0; val n = e.length
-    var inStr = false
-    while (i < n) {
-      val ch = e.charAt(i)
-      if (inStr) { sb += ch; if (ch == '\'') inStr = false; i += 1 }
-      else if (ch == '\'') { inStr = true; sb += ch; i += 1 }
-      else if (ch.isLetter || ch == '_') {
-        val st = i
-        while (i < n && isIdentChar(e.charAt(i))) i += 1
-        val id = e.substring(st, i)
-        val qualified = i < n && e.charAt(i) == '.' && i + 1 < n &&
-          (e.charAt(i + 1).isLetter || e.charAt(i + 1) == '_')
-        if (qualified &&
-            (tQuals.contains(id.toLowerCase) || sQuals.contains(id.toLowerCase))) {
-          var k = i + 1
-          while (k < n && isIdentChar(e.charAt(k))) k += 1
-          val col = e.substring(i + 1, k)
-          if (tQuals.contains(id.toLowerCase)) {
-            val c = tCols.find(_.equalsIgnoreCase(col))
-              .getOrElse(fail(s"MERGE: column '$col' not in target"))
-            sb ++= tMap(c)
-          } else {
-            val c = sCols.find(_.equalsIgnoreCase(col))
-              .getOrElse(fail(s"MERGE: column '$col' not in source"))
-            sb ++= sMap(c)
-          }
-          i = k
-        } else sb ++= id
-      }
-      else { sb += ch; i += 1 }
-    }
-    sb.toString
-  }
-
   private sealed trait MergeAction
   private case object DeleteAct extends MergeAction
   private case object UpdateStar extends MergeAction
@@ -1314,11 +1017,7 @@ final class Graft(val spark: SparkSession) {
                            src: String): DataFrame = {
     import org.apache.spark.sql.{functions => F}
     val cols = colList match {
-      case Some(cl) => splitTop(cl, ',').map { c =>
-        val raw = c.trim.stripPrefix("\"").stripSuffix("\"")
-        target.columns.find(_.equalsIgnoreCase(raw))
-          .getOrElse(fail(s"INSERT: column '$raw' not in $name"))
-      }
+      case Some(cl) => Spans.split(cl, ",").map(column(target, name, _, "INSERT"))
       case None => target.columns.toSeq
     }
     if (cols.distinct.length != cols.length)
@@ -1356,13 +1055,11 @@ final class Graft(val spark: SparkSession) {
       case OcRe(ks, n2, sl) =>
         if (n2 != null) (Option(ks), None) else (Option(ks), Some(sl))
       case _ => fail("ON CONFLICT expects [(key cols)] DO NOTHING or " +
-        s"DO UPDATE SET assignments, got:$tail")
+        s"DO UPDATE SET assignments, got: $tail")
     }
-    val keys = keysTxt.map(ks => splitTop(ks, ',').map { c =>
-      val raw = c.trim.stripPrefix("\"").stripSuffix("\"")
-      target.columns.find(_.equalsIgnoreCase(raw))
-        .getOrElse(fail(s"ON CONFLICT: column '$raw' not in $name"))
-    }).getOrElse(fail("ON CONFLICT requires an explicit conflict " +
+    val keys = keysTxt.map(ks =>
+      Spans.split(ks, ",").map(column(target, name, _, "ON CONFLICT"))
+    ).getOrElse(fail("ON CONFLICT requires an explicit conflict " +
       "target column list — there is no unique-constraint registry " +
       "to infer one from"))
     if (keys.isEmpty) fail("ON CONFLICT key list is empty")
@@ -1385,6 +1082,61 @@ final class Graft(val spark: SparkSession) {
     status("inserted", name.toLowerCase)
   }
 
+  /** The target and source frames of a MERGE (and of the UPDATE ...
+    * FROM and ON CONFLICT forms lowered through it): which frame an
+    * expression text reads, and rewriting its qualified refs. */
+  private final class Frames(tName: String, tAlias: Option[String],
+                             sName: String, sAlias: Option[String]) {
+    val target: DataFrame = lookup(tName)
+    val source: DataFrame = lookup(sName)
+    val tQuals: Set[String] = Set(tName.toLowerCase) ++ tAlias.map(_.toLowerCase)
+    val sQuals: Set[String] = Set(sName.toLowerCase) ++ sAlias.map(_.toLowerCase)
+    def inT(c: String): Boolean = target.columns.exists(_.equalsIgnoreCase(c))
+    def inS(c: String): Boolean = source.columns.exists(_.equalsIgnoreCase(c))
+
+    /** (reads the target, reads the source). Qualified refs decide by
+      * qualifier; bare refs — and struct fields of bare columns,
+      * `col.field` — by the frame carrying the column: a column of
+      * both frames must qualify, an unknown qualifier is a typo'd
+      * alias (both loud; r9 ADVICE: a silent skip surfaced as a
+      * confusing downstream analysis error). */
+    def sides(e: String): (Boolean, Boolean) = {
+      var t = false; var s = false
+      Spans.mapRefs(e) { (q, c) =>
+        q.map(_.toLowerCase) match {
+          case Some(x) if tQuals(x) => t = true
+          case Some(x) if sQuals(x) => s = true
+          case _ =>
+            val id = q.getOrElse(c)
+            if (inT(id) && inS(id))
+              fail(s"bare column '$id' exists in both the target and the " +
+                "source frame — qualify it (t.col / s.col)")
+            if (q.isDefined && !inT(id) && !inS(id))
+              fail(s"unknown alias or column '$id' in: $e (known " +
+                s"qualifiers: ${(tQuals ++ sQuals).toSeq.sorted.mkString(", ")})")
+            t ||= inT(id); s ||= inS(id)
+        }
+        None
+      }
+      (t, s)
+    }
+
+    /** `e` with each qualified ref replaced by `tMap(col)` (target
+      * qualifier) or `sMap(col)` (source qualifier), col spelled as in
+      * its frame; bare refs stay. */
+    def rewrite(e: String, tMap: String => String,
+                sMap: String => String): String =
+      Spans.mapRefs(e) {
+        case (Some(q), c) if tQuals(q.toLowerCase) =>
+          Some(tMap(target.columns.find(_.equalsIgnoreCase(c))
+            .getOrElse(fail(s"MERGE: column '$c' not in target"))))
+        case (Some(q), c) if sQuals(q.toLowerCase) =>
+          Some(sMap(source.columns.find(_.equalsIgnoreCase(c))
+            .getOrElse(fail(s"MERGE: column '$c' not in source"))))
+        case _ => None
+      }
+  }
+
   /** UPDATE ... FROM (r9): the PostgreSQL join-update form, lowered
     * through the MERGE target-leg machinery. WHERE conjuncts are
     * classified: target=source equalities become the MERGE ON keys
@@ -1397,24 +1149,21 @@ final class Graft(val spark: SparkSession) {
   private def updateFromStatement(tName: String, tAlias: Option[String],
                                   setList: String,
                                   fromTail: String): DataFrame = {
-    val target = lookup(tName)
+    lookup(tName) // an unknown target is loud before the source registers
     val FromRe =
       ("""(?is)^\s*(?:"([^"]+)"|([a-zA-Z_][a-zA-Z0-9_]*))""" +
        """(?:\s+(?:as\s+)?([a-zA-Z_][a-zA-Z0-9_]*))?\s*$""").r
-    val (fromPart, cond) = topLevelKeyword(fromTail, "where") match {
-      case Nil => fail("UPDATE ... FROM requires a WHERE with at least " +
-        "one target=source equality conjunct (the join key)")
-      case i :: _ => (fromTail.substring(0, i),
-                      fromTail.substring(i + "where".length).trim)
-    }
+    val (fromPart, cond) = Spans.around(fromTail, "where").headOption
+      .getOrElse(fail("UPDATE ... FROM requires a WHERE with at least " +
+        "one target=source equality conjunct (the join key)"))
     // FROM (subquery) alias (r9): register the derived source's lazy
     // plan under a reserved name — the composed MERGE plan captures
     // the DataFrame, so the name unregisters on exit
-    val (sName, sAlias, tmpSub) = fromPart.trim match {
+    val (sName, sAlias, tmpSub) = fromPart match {
       case fp if fp.startsWith("(") =>
-        val (sub, after) = balancedParen(fp, 0)
+        val (_, sub, after) = Spans.parenGroup(fp)
         val al = """(?is)^\s*(?:as\s+)?([a-zA-Z_][a-zA-Z0-9_]*)\s*$""".r
-          .findFirstMatchIn(fp.substring(after)).map(_.group(1))
+          .findFirstMatchIn(after).map(_.group(1))
           .getOrElse(fail(
             "UPDATE ... FROM (subquery) requires an alias"))
         val tmp = "__upd_from_sub"
@@ -1426,24 +1175,19 @@ final class Graft(val spark: SparkSession) {
         s"(subquery) alias source, got: $other")
     }
     try {
-    val source = lookup(sName)
-    val tQuals = Set(tName.toLowerCase) ++ tAlias.map(_.toLowerCase)
-    val sQuals = Set(sName.toLowerCase) ++ sAlias.map(_.toLowerCase)
+    val fr = new Frames(tName, tAlias, sName, sAlias)
     val onKeys = Seq.newBuilder[String]
     val srcOnly = Seq.newBuilder[String]
     val residual = Seq.newBuilder[String]
-    splitKeyword(cond, "and").map(stripParens).foreach { c =>
-      val isKey = topLevelEq(c).exists { case (l, r) =>
-        val (lt, ls) =
-          sidesOfExpr(l, tQuals, sQuals, target.columns, source.columns)
-        val (rt, rs) =
-          sidesOfExpr(r, tQuals, sQuals, target.columns, source.columns)
+    Spans.split(cond, "and").map(Spans.stripParens).foreach { c =>
+      val isKey = Spans.equality(c).exists { case (l, r) =>
+        val (lt, ls) = fr.sides(l)
+        val (rt, rs) = fr.sides(r)
         (lt && !ls && rs && !rt) || (ls && !lt && rt && !rs)
       }
       if (isKey) onKeys += c
       else {
-        val (t2, s2) =
-          sidesOfExpr(c, tQuals, sQuals, target.columns, source.columns)
+        val (t2, s2) = fr.sides(c)
         if (s2 && !t2) srcOnly += c else residual += c
       }
     }
@@ -1502,13 +1246,11 @@ final class Graft(val spark: SparkSession) {
                              rest: String): DataFrame = {
     import org.apache.spark.sql.{functions => F}
     import org.apache.spark.sql.expressions.Window
-    val target = lookup(tName); val source = lookup(sName)
-    val body = rest.trim.stripSuffix(";")
-    val whenPos = topLevelKeyword(body, "when")
-    if (whenPos.isEmpty) fail("MERGE requires at least one WHEN clause")
-    val onCond = body.substring(0, whenPos.head)
-    val tQuals = Set(tName.toLowerCase) ++ tAlias.map(_.toLowerCase)
-    val sQuals = Set(sName.toLowerCase) ++ sAlias.map(_.toLowerCase)
+    val fr = new Frames(tName, tAlias, sName, sAlias)
+    val target = fr.target; val source = fr.source
+    val segs = Spans.split(rest, "when")
+    if (segs.length < 2) fail("MERGE requires at least one WHEN clause")
+    val onCond = segs.head
 
     // ON: equality conjuncts, each comparing a TARGET-side expression
     // with a SOURCE-side expression (r9: differently-named columns —
@@ -1516,78 +1258,51 @@ final class Graft(val spark: SparkSession) {
     // join through computed key columns; same-named bare keys keep
     // working). Non-equality conjuncts stay loud: the keyed-
     // maintenance lowering needs hash-joinable keys, residual
-    // predicates belong in WHEN ... AND. Split on the keyword
-    // scanner (an AND inside a quoted string cannot mis-split).
-    def qq(c: String) = "\"" + c + "\""
-    def sidesOf(e: String): (Boolean, Boolean) =
-      sidesOfExpr(e, tQuals, sQuals, target.columns, source.columns)
-    val BareId = """(?is)^\s*(\w+)\s*$""".r
+    // predicates belong in WHEN ... AND.
+    def q(c: String) = "\"" + c + "\""
     // ON conjunct classification (r9): two-sided equalities become
-    // the JOIN KEYS; everything else is a RESIDUAL — part of the
-    // match condition (a key-matched row failing the residual is NOT
-    // MATCHED: matched clauses skip it, BY SOURCE sees it, the insert
-    // leg admits its source row). Residuals must qualify every frame
-    // ref — they evaluate in differently-named frames per leg.
-    def requireQualified(c: String): Unit = {
-      var i = 0; val n = c.length; var inStr = false
-      while (i < n) {
-        val ch = c.charAt(i)
-        if (inStr) { if (ch == '\'') inStr = false; i += 1 }
-        else if (ch == '\'') { inStr = true; i += 1 }
-        else if (ch.isLetter || ch == '_') {
-          val st = i
-          while (i < n && isIdentChar(c.charAt(i))) i += 1
-          val id = c.substring(st, i)
-          val qualified = i < n && c.charAt(i) == '.' && i + 1 < n &&
-            (c.charAt(i + 1).isLetter || c.charAt(i + 1) == '_')
-          if (qualified && (tQuals.contains(id.toLowerCase) ||
-              sQuals.contains(id.toLowerCase))) {
-            i += 1
-            while (i < n && isIdentChar(c.charAt(i))) i += 1
-          } else if (!qualified && !(i < n && c.charAt(i) == '(')) {
-            if (target.columns.exists(_.equalsIgnoreCase(id)) ||
-                source.columns.exists(_.equalsIgnoreCase(id)))
-              fail("MERGE ON non-key conjuncts must qualify every " +
-                s"column reference (t.col / s.col); got bare '$id' " +
-                s"in: $c")
-          }
-        } else i += 1
-      }
-    }
+    // the JOIN KEYS; everything else is a RESIDUAL — part of the match condition (a
+    // key-matched row failing the residual is NOT MATCHED: matched
+    // clauses skip it, BY SOURCE sees it, the insert leg admits its
+    // source row). Residuals must qualify every frame ref — they
+    // evaluate in differently-named frames per leg.
     val keyB = Seq.newBuilder[(String, String)]
     val resB = Seq.newBuilder[String]
-    splitKeyword(onCond, "and").map(stripParens).foreach { c =>
+    Spans.split(onCond, "and").map(Spans.stripParens).foreach { c =>
       val asKey: Option[(String, String)] =
-        topLevelEq(c).flatMap { case (lhs, rhs) =>
-          (lhs, rhs) match {
+        Spans.equality(c).flatMap { case (lhs, rhs) =>
+          (Spans.ref(lhs), Spans.ref(rhs)) match {
             // legacy same-named bare key (`ON k = k`): both sides
             // read the like-named column of their own frame
-            case (BareId(a), BareId(b)) if a.equalsIgnoreCase(b) &&
-                target.columns.exists(_.equalsIgnoreCase(a)) &&
-                source.columns.exists(_.equalsIgnoreCase(a)) =>
-              Some((qq(target.columns.find(_.equalsIgnoreCase(a)).get),
-                    qq(source.columns.find(_.equalsIgnoreCase(a)).get)))
+            case (Some((None, a)), Some((None, b))) if a.equalsIgnoreCase(b) &&
+                fr.inT(a) && fr.inS(a) =>
+              Some((q(target.columns.find(_.equalsIgnoreCase(a)).get),
+                    q(source.columns.find(_.equalsIgnoreCase(a)).get)))
             case _ =>
-              val (lt, ls) = sidesOf(lhs)
-              val (rt, rs) = sidesOf(rhs)
+              val (lt, ls) = fr.sides(lhs)
+              val (rt, rs) = fr.sides(rhs)
               val oriented =
                 if (lt && !ls && rs && !rt) Some((lhs, rhs))
                 else if (ls && !lt && rt && !rs) Some((rhs, lhs))
                 else None
               oriented.map { case (tTxt, sTxt) =>
-                (rewriteRefs(tTxt, tQuals, sQuals, target.columns,
-                   source.columns, qq,
+                (fr.rewrite(tTxt, q,
                    _ => fail("MERGE ON: source ref on the target side")),
-                 rewriteRefs(sTxt, tQuals, sQuals, target.columns,
-                   source.columns,
-                   _ => fail("MERGE ON: target ref on the source side"),
-                   qq))
+                 fr.rewrite(sTxt,
+                   _ => fail("MERGE ON: target ref on the source side"), q))
               }
           }
         }
       asKey match {
         case Some(k) => keyB += k
-        case None    => requireQualified(c); resB += c
+        case None =>
+          Spans.mapRefs(c) {
+            case (None, id) if fr.inT(id) || fr.inS(id) =>
+              fail("MERGE ON non-key conjuncts must qualify every " +
+                s"column reference (t.col / s.col); got bare '$id' in: $c")
+            case _ => None
+          }
+          resB += c
       }
     }
     val keys = keyB.result()
@@ -1605,9 +1320,9 @@ final class Graft(val spark: SparkSession) {
       val tmp = s"__merge_keys_$base"
       registerTable(tmp, df)
       try {
-        val cols = df.columns.map(qq).mkString(", ")
+        val cols = df.columns.map(q).mkString(", ")
         val ks = exprs.zip(names)
-          .map { case (e, n2) => s"($e) as ${qq(n2)}" }.mkString(", ")
+          .map { case (e, n2) => s"($e) as ${q(n2)}" }.mkString(", ")
         translateOnly(s"select $cols, $ks from $tmp")
       } finally removeTable(tmp)
     }
@@ -1620,16 +1335,11 @@ final class Graft(val spark: SparkSession) {
       }.reduce(_ && _)
 
     // ---- parse the WHEN clauses
-    val segs = (whenPos :+ body.length).sliding(2).map { w =>
-      body.substring(w(0) + "when".length, w(1))
-    }.toSeq
     val HeadRe =
       """(?is)^\s*(not\s+)?matched(?:\s+by\s+(source|target))?(?:\s+and\s+(.*?))?\s*$""".r
-    val clauses = segs.map { seg =>
-      val thenPos = topLevelKeyword(seg, "then")
-      if (thenPos.isEmpty) fail(s"MERGE WHEN clause missing THEN: $seg")
-      val head = seg.substring(0, thenPos.head)
-      val actTxt = seg.substring(thenPos.head + "then".length).trim
+    val clauses = segs.tail.map { seg =>
+      val (head, actTxt) = Spans.around(seg, "then").headOption
+        .getOrElse(fail(s"MERGE WHEN clause missing THEN: $seg"))
       val (not, by, cond) = head match {
         case HeadRe(n, b2, c) =>
           (n != null, Option(b2).map(_.toLowerCase), Option(c).map(_.trim))
@@ -1658,20 +1368,11 @@ final class Graft(val spark: SparkSession) {
         case a if a.matches("(?is)^update\\s+set\\s+.*$") =>
           if (cat == 1) fail("MERGE: WHEN NOT MATCHED cannot UPDATE")
           val setList = a.replaceFirst("(?is)^update\\s+set\\s+", "")
-          UpdateCols(splitTop(setList, ',').map { asn =>
-            val i = asn.indexOf('=')
-            if (i < 0) fail(s"MERGE UPDATE SET expects col = expr, got: $asn")
-            val raw = asn.substring(0, i).trim
+          UpdateCols(Spans.split(setList, ",").map { asn =>
+            val (lhs, e) = Spans.around(asn, "=").headOption.getOrElse(
+              fail(s"MERGE UPDATE SET expects col = expr, got: $asn"))
             // optionally target-qualified on the left side
-            val colName = raw.split('.') match {
-              case Array(qual, c2) if tQuals.contains(qual.toLowerCase) => c2
-              case Array(c2) => c2
-              case _ => fail(s"MERGE UPDATE SET: bad column ref '$raw'")
-            }
-            val c = target.columns.find(_.equalsIgnoreCase(
-                colName.stripPrefix("\"").stripSuffix("\"")))
-              .getOrElse(fail(s"MERGE UPDATE: column '$colName' not in $tName"))
-            c -> asn.substring(i + 1).trim
+            column(target, tName, lhs, "MERGE UPDATE", fr.tQuals) -> e
           })
         case a if a.matches("(?is)^insert\\s+\\*$") =>
           if (cat == 0) fail("MERGE: WHEN MATCHED cannot INSERT")
@@ -1683,12 +1384,9 @@ final class Graft(val spark: SparkSession) {
           val m = """(?is)^insert\s*\((.*?)\)\s*values\s*\((.*)\)\s*$"""
             .r.findFirstMatchIn(a).getOrElse(
               fail(s"MERGE INSERT expects INSERT (cols) VALUES (exprs): $a"))
-          val cols = splitTop(m.group(1), ',').map { c2 =>
-            val raw = c2.trim.stripPrefix("\"").stripSuffix("\"")
-            target.columns.find(_.equalsIgnoreCase(raw))
-              .getOrElse(fail(s"MERGE INSERT: column '$raw' not in $tName"))
-          }
-          val exprs = splitTop(m.group(2), ',').map(_.trim)
+          val cols = Spans.split(m.group(1), ",")
+            .map(column(target, tName, _, "MERGE INSERT"))
+          val exprs = Spans.split(m.group(2), ",")
           if (cols.length != exprs.length)
             fail("MERGE INSERT: column/value count mismatch")
           InsertCols(cols, exprs)
@@ -1719,11 +1417,8 @@ final class Graft(val spark: SparkSession) {
         "matching target/source schemas")
     }
 
-    val q = (c: String) => "\"" + c + "\""
     val sQ = (c: String) => "\"__s_" + c.toLowerCase + "\""
-    def rw(e: String): String =
-      rewriteRefs(e, tQuals, sQuals, target.columns, source.columns,
-        c => q(c), c => sQ(c))
+    def rw(e: String): String = fr.rewrite(e, q, sQ)
 
     // ---- target-side leg: kept + matched-updated + by-source-updated
     val targetLeg: DataFrame =
@@ -1770,9 +1465,7 @@ final class Graft(val spark: SparkSession) {
               case UpdateCols(as) => as.map(_._2)
               case _              => Seq.empty
             })).foreach { e =>
-              val (_, refsSrc) = sidesOfExpr(e, tQuals, sQuals,
-                target.columns, source.columns)
-              if (refsSrc)
+              if (fr.sides(e)._2)
                 fail("MERGE: a NOT MATCHED BY SOURCE condition or " +
                   s"assignment cannot reference source columns: $e")
             }
@@ -1881,38 +1574,27 @@ final class Graft(val spark: SparkSession) {
                 keyCond, "left_anti")
               .select(source.columns.toSeq.map(F.col): _*)
           else {
-            def qualifyQuoted(txt: String, al: String): String = {
-              val sb = new StringBuilder; var i = 0; var inStr = false
-              while (i < txt.length) {
-                val ch = txt.charAt(i)
-                if (inStr) {
-                  sb += ch; if (ch == '\'') inStr = false; i += 1
-                } else ch match {
-                  case '\'' => inStr = true; sb += ch; i += 1
-                  case '"' =>
-                    val close = txt.indexOf('"', i + 1)
-                    sb ++= al; sb += '.'
-                    sb ++= txt.substring(i, close + 1)
-                    i = close + 1
-                  case c2 => sb += c2; i += 1
-                }
-              }
-              sb.toString
-            }
             val tmpS = "__merge_ins_src"; val tmpT = "__merge_ins_tgt"
             registerTable(tmpS, source); registerTable(tmpT, target)
             try {
+              // key texts hold bare refs of one frame each: qualify
+              // them, or a same-named key would compare t.k with t.k
+              def qualify(e: String, al: String, cols: Array[String]) =
+                "(" + Spans.mapRefs(e) {
+                  case (None, c) =>
+                    cols.find(_.equalsIgnoreCase(c)).map(col => s"$al.${q(col)}")
+                  case _ => None
+                } + ")"
               val keyConds = keys.map { case (t, s2) =>
-                s"(${qualifyQuoted(t, "t")}) = (${qualifyQuoted(s2, "s")})"
+                s"${qualify(t, "t", target.columns)} = " +
+                  qualify(s2, "s", source.columns)
               }
-              val resConds = residuals.map(c2 =>
-                "(" + rewriteRefs(c2, tQuals, sQuals, target.columns,
-                  source.columns,
-                  c3 => "t.\"" + c3 + "\"", c3 => "s.\"" + c3 + "\"") + ")")
+              def inSub(e: String) =
+                "(" + fr.rewrite(e, c => "t." + q(c), c => "s." + q(c)) + ")"
               translateOnly(
                 s"select s.* from $tmpS as s where not exists " +
                 s"(select 1 from $tmpT as t where " +
-                (keyConds ++ resConds).mkString(" and ") + ")")
+                (keyConds ++ residuals.map(inSub)).mkString(" and ") + ")")
             } finally { removeTable(tmpS); removeTable(tmpT) }
           }
         val tmp = s"__merge_src_${sName.toLowerCase}"
@@ -1921,10 +1603,9 @@ final class Graft(val spark: SparkSession) {
           // source-frame rewriting: s-quals → bare source columns;
           // target refs have no row here and fail loudly
           def rwS(e: String): String =
-            rewriteRefs(e, tQuals, sQuals, target.columns, source.columns,
-              _ => fail("MERGE INSERT expressions cannot reference the " +
-                "target (no target row exists for NOT MATCHED)"),
-              c => q(c))
+            fr.rewrite(e, _ => fail("MERGE INSERT expressions cannot " +
+              "reference the target (no target row exists for NOT MATCHED)"),
+              q)
           val conds = insertCls.map(c => c.cond.map(rwS))
           val filt = {
             val ors = conds.map(_.getOrElse("true")).map(c => s"($c)")

@@ -91,9 +91,6 @@ case class ArrayDotProduct(left: Expression, right: Expression)
 /** Session registration for graft's native expressions — makes them
   * callable from selectExpr / SQL as ordinary functions. */
 object GraftFunctions {
-  private[functions] def litIntArg(e: Expression, what: String): Int =
-    litInt(e, what)
-
   private def litInt(e: Expression, what: String): Int = e match {
     case org.apache.spark.sql.catalyst.expressions.Literal(v, _) =>
       v.toString.toInt
@@ -101,12 +98,9 @@ object GraftFunctions {
       throw new IllegalArgumentException(s"$what must be a literal, got $other")
   }
 
-  private[functions] def litStringArrayArg(e: Expression, what: String): Seq[String] =
-    litStringArray(e, what)
-
   /** Evaluates a FOLDABLE array-of-strings argument (an `array('a',
     * 'b', ...)` literal — the engine-replayable vocab contract). */
-  private[functions] def litStringArray(e: Expression, what: String): Seq[String] = {
+  private def litStringArray(e: Expression, what: String): Seq[String] = {
     if (!e.foldable)
       throw new IllegalArgumentException(s"$what must be a foldable array literal")
     e.eval() match {
@@ -121,79 +115,52 @@ object GraftFunctions {
     }
   }
 
+  /** (name, usage, builder) of every native function: the one table
+    * both [[register]] and [[GraftExtensions]] install. */
+  val table: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
+    ("graft_dot", "dot product of two numeric arrays",
+      e => ArrayDotProduct(e(0), e(1))),
+    ("graft_minhash", "one-pass sliced minhash signatures",
+      e => MinHashSlices(e(0), litInt(e(1), "graft_minhash seeds"))),
+    ("graft_fingerprint", "min-md5 rolling fingerprint",
+      e => RollingMinHash(e(0), litInt(e(1), "graft_fingerprint window"))),
+    ("graft_simhash", "one-pass simhash over tokens",
+      e => SimHash(e(0), litInt(e(1), "graft_simhash bits"))),
+    ("graft_textstats", "one-pass text statistics struct",
+      e => TextStats(e(0))),
+    ("graft_topgram_max", "max n-gram multiplicity within a token array",
+      e => TopGramMax(e(0), litInt(e(1), "graft_topgram_max n"))),
+    ("graft_bloom_contains", "Bloom-filter membership probe",
+      e => BloomContains(e(0), e(1), litInt(e(2), "graft_bloom_contains k"))),
+    ("graft_bottom_k", "bottom-k distinct strings (KMV sketch pass)",
+      e => BottomKDistinct(e(0), litInt(e(1), "graft_bottom_k k"))),
+    ("graft_word_ngrams", "word n-gram array (empty tokens filtered)",
+      e => WordNgrams(e(0), litInt(e(1), "graft_word_ngrams n"),
+        filterEmpty = true, distinct = false, padShort = false)),
+    ("graft_word_shingles", "distinct word n-gram shingle array",
+      e => WordNgrams(e(0), litInt(e(1), "graft_word_shingles n"),
+        filterEmpty = false, distinct = true, padShort = true)),
+    ("graft_edit_distance", "banded edit distance, capped at a threshold",
+      e => BandedLevenshtein(e(0), e(1),
+        litInt(e(2), "graft_edit_distance threshold"))),
+    ("graft_del_neighborhood", "FastSS <=k-deletion neighborhood",
+      e => DelNeighborhood(e(0), litInt(e(1), "graft_del_neighborhood k"))),
+    ("graft_bpe_count", "greedy longest-match subword token count",
+      e => BpeCount(e(0), litStringArray(e(1), "graft_bpe_count vocab"))),
+    ("graft_bpe_tokens", "greedy longest-match subword tokens",
+      e => BpeTokenize(e(0), litStringArray(e(1), "graft_bpe_tokens vocab"))),
+    ("graft_pq_encode", "product-quantization codes + error",
+      e => PqEncodeCodes(e(0), e(1), litInt(e(2), "graft_pq_encode m"),
+        litInt(e(3), "graft_pq_encode k"))),
+    ("graft_int8", "int8-lattice quantization of an embedding vector",
+      e => Int8Lattice(e(0))),
+    ("graft_strip_spans", "duplicate-span removal: struct<text, n_removed>",
+      e => StripSpans(e(0), e(1), litInt(e(2), "graft_strip_spans n"))))
+
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    registry.createOrReplaceTempFunction(
-      "graft_dot", exprs => ArrayDotProduct(exprs(0), exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_minhash",
-      exprs => MinHashSlices(exprs(0), litInt(exprs(1), "graft_minhash seeds")),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_fingerprint",
-      exprs => RollingMinHash(exprs(0), litInt(exprs(1), "graft_fingerprint window")),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_simhash",
-      exprs => SimHash(exprs(0), litInt(exprs(1), "graft_simhash bits")),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_textstats", exprs => TextStats(exprs(0)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_topgram_max",
-      exprs => TopGramMax(exprs(0), litInt(exprs(1), "graft_topgram_max n")),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_bloom_contains",
-      exprs => BloomContains(exprs(0), exprs(1),
-        litInt(exprs(2), "graft_bloom_contains k")),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_bottom_k",
-      exprs => BottomKDistinct(exprs(0), litInt(exprs(1), "graft_bottom_k k")),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_word_ngrams",
-      exprs => WordNgrams(exprs(0), litInt(exprs(1), "graft_word_ngrams n"),
-        filterEmpty = true, distinct = false, padShort = false),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_word_shingles",
-      exprs => WordNgrams(exprs(0), litInt(exprs(1), "graft_word_shingles n"),
-        filterEmpty = false, distinct = true, padShort = true),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_edit_distance",
-      exprs => BandedLevenshtein(exprs(0), exprs(1),
-        litInt(exprs(2), "graft_edit_distance threshold")),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_del_neighborhood",
-      exprs => DelNeighborhood(exprs(0),
-        litInt(exprs(1), "graft_del_neighborhood k")),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_bpe_count",
-      exprs => BpeCount(exprs(0),
-        litStringArray(exprs(1), "graft_bpe_count vocab")),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_bpe_tokens",
-      exprs => BpeTokenize(exprs(0),
-        litStringArray(exprs(1), "graft_bpe_tokens vocab")),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_pq_encode",
-      exprs => PqEncodeCodes(exprs(0), exprs(1),
-        litInt(exprs(2), "graft_pq_encode m"),
-        litInt(exprs(3), "graft_pq_encode k")),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_int8", exprs => Int8Lattice(exprs(0)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_strip_spans",
-      exprs => StripSpans(exprs(0), exprs(1),
-        litInt(exprs(2), "graft_strip_spans n")),
-      "built-in")
+    table.foreach { case (name, _, build) =>
+      registry.createOrReplaceTempFunction(name, build, "built-in")
+    }
   }
 }

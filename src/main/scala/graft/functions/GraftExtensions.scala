@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Session-extension entry point: registers graft's native
   * expressions at session build time, so clusters can enable them via
@@ -16,68 +16,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * }}}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def info(name: String, usage: String) =
-    new ExpressionInfo("graft", null, name, usage, "")
-
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((FunctionIdentifier("graft_dot"),
-      info("graft_dot", "dot product of two numeric arrays"),
-      (exprs: Seq[Expression]) => ArrayDotProduct(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("graft_minhash"),
-      info("graft_minhash", "one-pass sliced minhash signatures"),
-      (exprs: Seq[Expression]) =>
-        MinHashSlices(exprs(0), GraftFunctions.litIntArg(exprs(1), "seeds"))))
-    e.injectFunction((FunctionIdentifier("graft_fingerprint"),
-      info("graft_fingerprint", "min-md5 rolling fingerprint"),
-      (exprs: Seq[Expression]) =>
-        RollingMinHash(exprs(0), GraftFunctions.litIntArg(exprs(1), "window"))))
-    e.injectFunction((FunctionIdentifier("graft_simhash"),
-      info("graft_simhash", "one-pass simhash over tokens"),
-      (exprs: Seq[Expression]) =>
-        SimHash(exprs(0), GraftFunctions.litIntArg(exprs(1), "bits"))))
-    e.injectFunction((FunctionIdentifier("graft_topgram_max"),
-      info("graft_topgram_max", "max n-gram multiplicity within a token array"),
-      (exprs: Seq[Expression]) =>
-        TopGramMax(exprs(0), GraftFunctions.litIntArg(exprs(1), "n"))))
-    e.injectFunction((FunctionIdentifier("graft_bloom_contains"),
-      info("graft_bloom_contains", "Bloom-filter membership probe"),
-      (exprs: Seq[Expression]) =>
-        BloomContains(exprs(0), exprs(1),
-          GraftFunctions.litIntArg(exprs(2), "k"))))
-    e.injectFunction((FunctionIdentifier("graft_bottom_k"),
-      info("graft_bottom_k", "bottom-k distinct strings (KMV sketch pass)"),
-      (exprs: Seq[Expression]) =>
-        BottomKDistinct(exprs(0), GraftFunctions.litIntArg(exprs(1), "k"))))
-    e.injectFunction((FunctionIdentifier("graft_word_ngrams"),
-      info("graft_word_ngrams", "word n-gram array (empty tokens filtered)"),
-      (exprs: Seq[Expression]) =>
-        WordNgrams(exprs(0), GraftFunctions.litIntArg(exprs(1), "n"),
-          filterEmpty = true, distinct = false, padShort = false)))
-    e.injectFunction((FunctionIdentifier("graft_word_shingles"),
-      info("graft_word_shingles", "distinct word n-gram shingle array"),
-      (exprs: Seq[Expression]) =>
-        WordNgrams(exprs(0), GraftFunctions.litIntArg(exprs(1), "n"),
-          filterEmpty = false, distinct = true, padShort = true)))
-    e.injectFunction((FunctionIdentifier("graft_del_neighborhood"),
-      info("graft_del_neighborhood", "FastSS <=k-deletion neighborhood"),
-      (exprs: Seq[Expression]) =>
-        DelNeighborhood(exprs(0), GraftFunctions.litIntArg(exprs(1), "k"))))
-    e.injectFunction((FunctionIdentifier("graft_bpe_count"),
-      info("graft_bpe_count", "greedy longest-match subword token count"),
-      (exprs: Seq[Expression]) =>
-        BpeCount(exprs(0),
-          GraftFunctions.litStringArrayArg(exprs(1), "vocab"))))
-    e.injectFunction((FunctionIdentifier("graft_bpe_tokens"),
-      info("graft_bpe_tokens", "greedy longest-match subword tokens"),
-      (exprs: Seq[Expression]) =>
-        BpeTokenize(exprs(0),
-          GraftFunctions.litStringArrayArg(exprs(1), "vocab"))))
-    e.injectFunction((FunctionIdentifier("graft_pq_encode"),
-      info("graft_pq_encode", "product-quantization codes + error"),
-      (exprs: Seq[Expression]) =>
-        PqEncodeCodes(exprs(0), exprs(1),
-          GraftFunctions.litIntArg(exprs(2), "m"),
-          GraftFunctions.litIntArg(exprs(3), "k"))))
-  }
+  override def apply(e: SparkSessionExtensions): Unit =
+    GraftFunctions.table.foreach { case (name, usage, build) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo("graft", null, name, usage, ""), build))
+    }
 }

@@ -1358,6 +1358,135 @@ class StatementsSpec extends SparkTestBase {
     assert(s3.collect().head.getLong(0) == 2L)
   }
 
+  test("statement text is tokenized: comments, quoted refs, quoted parens, final ';'") {
+    val g = new Graft(spark)
+    def reset(): Unit = {
+      g.query("create or replace view t as select * from (values " +
+        "(1, 'a', 10), (2, 'b', 20)) x(id, v, n)")
+      g.query("create or replace view s as select * from (values " +
+        "(2, 'B', 200)) x(id, v, n)")
+    }
+    def rows(sql: String): Seq[String] =
+      g.query(sql).collect().map(_.toSeq.mkString(",")).sorted.toSeq
+    // a trailing comment neither splits the statement nor swallows the
+    // text the rewrite appends after it
+    for ((commented, plain, want) <- Seq(
+        ("insert into t values (3,'c',30) -- returning id\n",
+          "insert into t values (3,'c',30)",
+          Seq("1,a,10", "2,b,20", "3,c,30")),
+        ("delete from t where id = 1 -- or id = 2\n",
+          "delete from t where id = 1", Seq("2,b,20")),
+        ("update t set v = 'x' -- where id = 1\nwhere id = 2",
+          "update t set v = 'x' where id = 2", Seq("1,a,10", "2,x,20")))) {
+      reset(); g.query(plain)
+      assert(rows("select * from t") == want, plain)
+      reset(); g.query(commented)
+      assert(rows("select * from t") == want, commented)
+    }
+    // quoted qualified keys read like the bare ones
+    reset()
+    g.query("merge into t using s on t.id = s.id " +
+      "when matched then update set n = s.n")
+    val bare = rows("select id, n from t")
+    assert(bare == Seq("1,10", "2,200"))
+    reset()
+    g.query("""merge into t using s on t."id" = s."id" """ +
+      "when matched then update set n = s.n")
+    assert(rows("select id, n from t") == bare)
+    // a paren inside a quoted identifier of a USING subquery
+    reset()
+    g.query("""merge into t using (select id, n as "n)" from s) x """ +
+      """on t.id = x.id when matched then update set n = x."n)"""")
+    assert(rows("select id, n from t") == bare)
+    assert(!g.tableNames.contains("__merge_using_sub"))
+    // a final ';' on a plain query
+    assert(rows("select id from t;") == Seq("1", "2"))
+  }
+
+  test("statements are comment- and whitespace-invariant (seeded metamorphic)") {
+    // after seeded whitespace runs between tokens (outside quotes),
+    // inserts a `-- c` line or blank lines; always starts with a
+    // seeded insertion and ends on a comment
+    val Piece = """'[^']*'|"[^"]*"|\s+""".r
+    def perturb(rnd: scala.util.Random)(sql: String): String = {
+      def extra() = if (rnd.nextBoolean()) "-- c\n" else "\n\n"
+      val body = Piece.replaceAllIn(sql, m => scala.util.matching.Regex
+        .quoteReplacement(
+          if (m.matched.head.isWhitespace && rnd.nextInt(3) == 0)
+            m.matched + extra()
+          else m.matched))
+      (if (rnd.nextBoolean()) extra() else "") + body +
+        (if (rnd.nextBoolean()) " -- c;" else " -- c\n")
+    }
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.mkString(",")).sorted.toSeq
+    def table(g: Graft) = rows(g.query("select * from t"))
+    // each form runs its statements through `p` and reports what it
+    // changed: the target table and/or the returned frame
+    val forms: Seq[(String, (Graft, String => String) => Seq[String])] = Seq(
+      "insert cols" -> { (g, p) =>
+        g.query(p("insert into t (id, n) values (4, 40), (5, 50)")); table(g) },
+      "insert on conflict" -> { (g, p) =>
+        g.query(p("insert into t values (2, 'B', 200), (6, 'f', 60) " +
+          "on conflict (id) do update set v = excluded.v, n = t.n + excluded.n"))
+        table(g) },
+      "insert returning" -> { (g, p) =>
+        rows(g.query(p("insert into t values (7, 'g', 70) " +
+          "returning id, n * 2 as n2"))) ++ table(g) },
+      "update" -> { (g, p) =>
+        g.query(p("update t set v = 'x', n = n + 1 where id >= 2")); table(g) },
+      "update from" -> { (g, p) =>
+        g.query(p("update t set v = s.v, n = t.n + s.n from s " +
+          "where t.id = s.id and s.n > 100")); table(g) },
+      "delete using subquery" -> { (g, p) =>
+        g.query(p("delete from t using (select id from s where n > 100) x " +
+          "where t.id = x.id")); table(g) },
+      "merge with residuals" -> { (g, p) =>
+        g.query(p("""merge into t using s on t.id = s.id and s.n > 100
+                     when matched and s.v <> 'none' then update set n = s.n
+                     when not matched then insert (id, v, n) values (s.id, s.v, s.n)
+                     when not matched by source then update set n = n + 1"""))
+        table(g) },
+      "copy query to" -> { (g, p) =>
+        val dir = java.nio.file.Files.createTempDirectory("graft_meta").toString
+        g.query(p(s"copy (select id, v from t where n > 15) to '$dir/c.parquet' " +
+          "(format parquet)"))
+        rows(g.query(s"select * from read_parquet('$dir/c.parquet')")) },
+      "prepare / execute" -> { (g, p) =>
+        g.query(p("prepare p1 as select id from t where n > $1 and id <> $2"))
+        g.query(p("prepare p2 as select v from t where id = ? or id = ?"))
+        rows(g.query(p("execute p1(15, 3)"))) ++
+          rows(g.query(p("execute p2(1, 2 + 1)"))) },
+      "create macro" -> { (g, p) =>
+        g.query(p("create macro m(a, b := 10) as a * b + 1"))
+        rows(g.query(p("select id, m(n) as x, m(n, 2) as y from t"))) },
+      "script" -> { (g, p) =>
+        rows(g.runScript(p("""create view w as select id, n from t where n > 10;
+          insert into t values (9, 'z', 90);
+          select count(*) as c, sum(n) as s from w;"""))) })
+    val rnd = new scala.util.Random(20261018)
+    forms.foreach { case (name, run) =>
+      def fresh(): Graft = {
+        val g = new Graft(spark)
+        g.query("create view t as select * from (values " +
+          "(1, 'a', 10), (2, 'b', 20), (3, 'c', 30)) x(id, v, n)")
+        g.query("create view s as select * from (values " +
+          "(2, 'B', 200), (3, 'C', 5), (4, 'D', 400)) x(id, v, n)")
+        g
+      }
+      val want = run(fresh(), identity)
+      for (_ <- 1 to 2) {
+        val seen = Seq.newBuilder[String]
+        val p = (sql: String) => { val x = perturb(rnd)(sql); seen += x; x }
+        val got =
+          try run(fresh(), p)
+          catch { case e: Exception =>
+            fail(s"$name: ${e.getMessage}\n${seen.result().mkString("\n---\n")}") }
+        assert(got == want, s"$name\n${seen.result().mkString("\n---\n")}")
+      }
+    }
+  }
+
   test("generate_series / range series generators (r11c)") {
     val g = fresh
     def longs(sql: String): Seq[Long] =

@@ -129,6 +129,9 @@ class FunctionsSpec extends SparkTestBase {
         .collect()
       assert(r.head.getDouble(0) == 11.0)
       assert(s2 ne prev, "a new session should have been created")
+      // every function of the one registration table resolves here
+      val missing = GraftFunctions.table.map(_._1).filterNot(s2.catalog.functionExists)
+      assert(missing.isEmpty, s"not registered by GraftExtensions: $missing")
     } finally {
       SparkSession.setActiveSession(prev)
       SparkSession.setDefaultSession(prev)

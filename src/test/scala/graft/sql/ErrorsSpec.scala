@@ -27,6 +27,19 @@ class ErrorsSpec extends SparkTestBase {
     }
   }
 
+  test("';', '?' and '$' lex for the statement layer but fail to parse") {
+    // scripts split at ';' tokens and EXECUTE binds '?' / '$n'; inside
+    // a query all three are parse errors naming the token
+    for ((sql, msg) <- Seq(
+        ("select n_name from nation; select 1 from nation", "trailing input at Op(;"),
+        ("select n_name from nation where n_nationkey = ?", "unexpected token Op(?"),
+        ("select n_name from nation where n_nationkey = $1", "unexpected token Op($"))) {
+      val e = intercept[RuntimeException](graftSession.query(sql))
+      assert(e.getClass.getSimpleName == "ParseException" &&
+        e.getMessage.contains(msg), s"$sql: $e")
+    }
+  }
+
   test("unknown column raises at translation, not at action") {
     assertThrows[Throwable](
       graftSession.query("select does_not_exist from nation"))
