@@ -2,8 +2,10 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.collection.concurrent.TrieMap
-import graft.sql.{MacroExpander, Macros, Parser, Spans, Translator}
-import graft.sql.Lexer.{Num, Op}
+import graft.sql.{Ast, Lexer, MacroExpander, Macros, Parser, Spans, Translator}
+import graft.sql.Ast._
+import graft.sql.Ast.{Statement => S}
+import graft.sql.Lexer.{Ident, Num, Op, Str}
 
 /** Session facade — the Spark-native analogue of the reference's
   * public API (register_temp_table / query / remove_temp_table,
@@ -35,196 +37,410 @@ final class Graft(val spark: SparkSession) {
   private def lookup(name: String): DataFrame =
     tables.getOrElse(name.toLowerCase, throw TableNotFoundException(name))
 
-  // ---- statement forms (r5b): the SQL spellings of the register/
-  // remove API plus EXPLAIN. Views are LAZY logical plans, exactly
-  // like registerTable - nothing materializes at CREATE time.
-  private val CreateViewRe =
-    """(?is)^\s*create\s+(or\s+replace\s+)?(?:temp(?:orary)?\s+)?view\s+(?:"([^"]+)"|([a-zA-Z_][a-zA-Z0-9_]*))\s+as\s+(.*?)\s*;?\s*$""".r
-  private val CreateTableRe =
-    """(?is)^\s*create\s+(or\s+replace\s+)?table\s+(?:"([^"]+)"|([a-zA-Z_][a-zA-Z0-9_]*))\s+as\s+(.*?)\s*;?\s*$""".r
-  // CREATE TABLE with an explicit column list (r10, VERDICT r9 #4):
-  // registers a TYPED empty plan (limit 0) — the plain-DDL companion
-  // of CTAS; types go through the dialect's CAST catalog
-  private val CreateTableSchemaRe =
-    """(?is)^\s*create\s+(or\s+replace\s+)?table\s+(?:"([^"]+)"|([a-zA-Z_][a-zA-Z0-9_]*))\s*\((.*)\)\s*;?\s*$""".r
-  private val DropViewRe =
-    """(?is)^\s*drop\s+(?:view|table)\s+(if\s+exists\s+)?(?:"([^"]+)"|([a-zA-Z_][a-zA-Z0-9_]*))\s*;?\s*$""".r
-  // r9 registry DDL conveniences: TRUNCATE and the ALTER TABLE
-  // column/rename forms — pure plan rewrites over the lazy registry,
-  // the same semantics family as CREATE VIEW / the DML statements
-  private val TruncateRe =
-    """(?is)^\s*truncate\s+(?:table\s+)?(?:"([^"]+)"|([a-zA-Z_][a-zA-Z0-9_]*))\s*;?\s*$""".r
-  private val AlterRe =
-    ("""(?is)^\s*alter\s+table\s+(?:"([^"]+)"|([a-zA-Z_][a-zA-Z0-9_]*))""" +
-     """\s+(.*?)\s*;?\s*$""").r
-  private val ExplainRe = """(?is)^\s*explain\s+(select.*|with.*)$""".r
-  // CREATE MACRO (r11c): head-matched here, params/body split with
-  // Spans (defaults may contain parens/commas)
-  private val CreateMacroHeadRe =
-    """(?is)^\s*create\s+(or\s+replace\s+)?macro\s+(?:"([^"]+)"|([a-zA-Z_][a-zA-Z0-9_]*))\s*\(.*$""".r
-  private val DropMacroRe =
-    """(?is)^\s*drop\s+macro\s+(if\s+exists\s+)?(?:"([^"]+)"|([a-zA-Z_][a-zA-Z0-9_]*))\s*;?\s*$""".r
-  private val DescribeRe =
-    """(?is)^\s*desc(?:ribe)?\s+(?:table\s+)?(?:"([^"]+)"|([a-zA-Z_][a-zA-Z0-9_]*))\s*;?\s*$""".r
-  private val ShowTablesRe = """(?is)^\s*show\s+tables\s*;?\s*$""".r
-  private val SetRe =
-    """(?is)^\s*set\s+(?:session\s+)?([a-zA-Z_][a-zA-Z0-9_.]*)\s*(?:=|\s+to\s+)\s*(.+?)\s*;?\s*$""".r
-  private val ResetRe =
-    """(?is)^\s*reset\s+([a-zA-Z_][a-zA-Z0-9_.]*)\s*;?\s*$""".r
-  // MERGE INTO (r7b; generalized r8): the statement spelling of the
-  // keyed-upsert / keyed-delete maintenance shapes (SURVEY row 94).
-  // r8 carries the full Delta/standard clause matrix: conditional
-  // `WHEN MATCHED [AND pred]`, column-level `UPDATE SET col = expr,
-  // …`, `WHEN NOT MATCHED [BY TARGET] [AND pred] THEN INSERT * /
-  // INSERT (cols) VALUES (exprs)`, and `WHEN NOT MATCHED BY SOURCE
-  // [AND pred] THEN UPDATE/DELETE`. ON and the WHEN block split at
-  // top-level keyword tokens (Spans), not regexes (r7 ADVICE).
-  private val MergeRe =
-    ("""(?is)^\s*merge\s+into\s+(?:"([^"]+)"|([a-zA-Z_][a-zA-Z0-9_]*))""" +
-     """(?:\s+(?:as\s+)?(?!using\b)([a-zA-Z_][a-zA-Z0-9_]*))?""" +
-     """\s+using\s+(?:"([^"]+)"|([a-zA-Z_][a-zA-Z0-9_]*))""" +
-     """(?:\s+(?:as\s+)?(?!on\b)([a-zA-Z_][a-zA-Z0-9_]*))?""" +
-     """\s+on\s+(.*)$""").r
-  // matches only up to USING ( — the subquery is cut out as the
-  // statement's first paren group (Spans.parenGroup), not a regex
-  private val MergeUsingSubqueryRe =
-    """(?is)^\s*merge\s+into\s+(?:"[^"]+"|[a-zA-Z_][a-zA-Z0-9_]*)(?:\s+(?:as\s+)?(?!using\b)[a-zA-Z_][a-zA-Z0-9_]*)?\s+using\s*\(.*$""".r
-
   private def fail(msg: String): Nothing = throw new RuntimeException(msg)
 
-  // DML statements (r7b): the registry is a map of LAZY plans, so
-  // INSERT/UPDATE/DELETE re-register a composed plan — the same
-  // semantics as MERGE (nothing materializes; reads after the
-  // statement see the new plan). Expressions parse through the graft
-  // dialect by rewriting into a SELECT over the target.
-  private val InsertRe =
-    ("""(?is)^\s*insert\s+into\s+(?:"([^"]+)"|([a-zA-Z_][a-zA-Z0-9_]*))""" +
-     """\s*(?:\(([^)]*)\)\s*)?""" +
-     """\s*(select\s+.*|values\s*\(.*|with\s+.*)\s*;?\s*$""").r
-  // DELETE ... USING (r9): the PostgreSQL join-delete form — target
-  // rows with ANY source row satisfying WHERE are dropped (semi
-  // semantics; multi-match is inherently fine, no cardinality guard)
-  private val DeleteUsingRe =
-    ("""(?is)^\s*delete\s+from\s+(?:"([^"]+)"|([a-zA-Z_][a-zA-Z0-9_]*))""" +
-     """(?:\s+(?:as\s+)?(?!using\b)([a-zA-Z_][a-zA-Z0-9_]*))?""" +
-     """\s+using\s+(?:"([^"]+)"|([a-zA-Z_][a-zA-Z0-9_]*))""" +
-     """(?:\s+(?:as\s+)?(?!where\b)([a-zA-Z_][a-zA-Z0-9_]*))?""" +
-     """\s+where\s+(.*?)\s*;?\s*$""").r
-  // matches only up to USING ( — the subquery is cut out as the
-  // statement's first paren group (Spans.parenGroup), not a regex
-  private val DeleteUsingSubRe =
-    ("""(?is)^\s*delete\s+from\s+(?:"[^"]+"|[a-zA-Z_][a-zA-Z0-9_]*)""" +
-     """(?:\s+(?:as\s+)?(?!using\b)[a-zA-Z_][a-zA-Z0-9_]*)?""" +
-     """\s+using\s*\(.*$""").r
-  private val DeleteRe =
-    ("""(?is)^\s*delete\s+from\s+(?:"([^"]+)"|([a-zA-Z_][a-zA-Z0-9_]*))""" +
-     """\s+where\s+(.*?)\s*;?\s*$""").r
-  // the SET-list / WHERE split happens at a keyword token, not in
-  // the regex — a string literal containing ' where ' inside an
-  // assignment must not split (r7 ADVICE). A top-level FROM after the
-  // SET list routes to the r9 UPDATE ... FROM join form.
-  private val UpdateRe =
-    ("""(?is)^\s*update\s+(?:"([^"]+)"|([a-zA-Z_][a-zA-Z0-9_]*))""" +
-     """(?:\s+(?:as\s+)?(?!set\b)([a-zA-Z_][a-zA-Z0-9_]*))?""" +
-     """\s+set\s+(.*?)\s*;?\s*$""").r
+  // ---- statements ----------------------------------------------------
+  // `query` parses every statement with graft.sql.Parser and lowers the
+  // Ast.Statement here. Views and DML re-register LAZY plans: nothing
+  // materializes at statement time (CREATE TABLE AS caches), and reads
+  // after the statement see the new plan. Intermediate frames (USING /
+  // FROM subqueries, MERGE's joined and key frames, ON CONFLICT's
+  // proposed rows, RETURNING's affected rows) are bound to names in a
+  // per-statement scope the translator consults before the registry;
+  // they never enter the registry.
 
-  // COPY (r10, DuckDB dialect): COPY <table | (query)> TO 'path'
-  // [(options)] writes through the Spark writer — the sink is a
-  // DIRECTORY of part files (the distributed convention; a
-  // 1000-executor write cannot target one file) — and COPY <table>
-  // FROM 'path' [(options)] appends the files to the registered plan
-  // LAZILY (spark.read is a plan, the union re-registers; nothing
-  // scans until a read), positional + assignment-cast like INSERT.
-  private val CopyToRe =
-    ("""(?is)^\s*copy\s+(?:"([^"]+)"|([a-zA-Z_][a-zA-Z0-9_]*))""" +
-     """\s+to\s+'([^']+)'\s*(?:\(\s*(.*?)\s*\))?\s*;?\s*$""").r
-  private val CopyFromRe =
-    ("""(?is)^\s*copy\s+(?:"([^"]+)"|([a-zA-Z_][a-zA-Z0-9_]*))""" +
-     """\s+from\s+'([^']+)'\s*(?:\(\s*(.*?)\s*\))?\s*;?\s*$""").r
-  // matches only up to COPY ( — the query is cut out as the
-  // statement's first paren group (Spans.parenGroup), not a regex
-  private val CopyQuerySubRe = """(?is)^\s*copy\s*\(.*$""".r
-  private val CopyToTailRe =
-    """(?is)^\s*to\s+'([^']+)'\s*(?:\(\s*(.*?)\s*\))?\s*;?\s*$""".r
+  /** Parse + translate SQL to a lazy DataFrame. Besides queries,
+    * accepts the statement forms of [[graft.sql.Ast.Statement]]
+    * (CREATE/DROP VIEW and TABLE, EXPLAIN, DML, MERGE, COPY,
+    * PREPARE/EXECUTE, CREATE MACRO, SET, ...), parsed by
+    * [[graft.sql.Parser.parseStatement]]: comments may stand anywhere
+    * and one trailing `;` is accepted on every form. */
+  def query(sqlText: String): DataFrame = run(Parser.parseStatement(sqlText))
 
-  private val CopyFormats = Seq("parquet", "csv", "json", "orc")
-
-  // PREPARE / EXECUTE / DEALLOCATE (r10, PostgreSQL/DuckDB spelling):
-  // a prepared statement stores SQL TEXT with $n (or ?) placeholders;
-  // EXECUTE substitutes the argument expressions literally (each
-  // wrapped in parens) and re-enters query(), so any statement form —
-  // SELECT, DML, DDL — can be prepared. Placeholders are recognized
-  // only OUTSIDE string literals and quoted identifiers.
-  private val preparedStmts = TrieMap.empty[String, String]
-  // EXECUTE re-entry depth (recursion wall; queries are driver-side
-  // single-threaded per Graft instance, a plain var suffices)
-  private var execDepth = 0
-  private val PrepareRe =
-    """(?is)^\s*prepare\s+(?:"([^"]+)"|([a-zA-Z_][a-zA-Z0-9_]*))\s+as\s+(.*?)\s*;?\s*$""".r
-  private val ExecuteRe =
-    """(?is)^\s*execute\s+(?:"([^"]+)"|([a-zA-Z_][a-zA-Z0-9_]*))\s*(?:\(\s*(.*?)\s*\))?\s*;?\s*$""".r
-  private val DeallocRe =
-    """(?is)^\s*deallocate\s+(?:prepare\s+)?(?:"([^"]+)"|([a-zA-Z_][a-zA-Z0-9_]*))\s*;?\s*$""".r
-
-  /** Substitutes `$n` / `?` placeholder tokens with the argument
-    * texts (parenthesized); string literals, quoted identifiers and
-    * comments hold no placeholder tokens. `$n` and `?` may not mix;
-    * every argument must be consumed and every placeholder bound —
-    * all loud. */
-  private def bindParams(sql: String, args: Seq[String]): String = {
-    // simple literals substitute RAW (so LIMIT/OFFSET positions,
-    // which take a bare integer, keep parsing); compound expressions
-    // are parenthesized to preserve precedence
-    val SimpleLit = """(?is)^(\d+(\.\d+)?|'[^']*'|null|true|false)$""".r
-    def rendered(a: String): String =
-      if (SimpleLit.matches(a)) a else s"($a)"
-    var qmarks = 0; var maxDollar = 0
-    val out = Spans.rewrite(sql) { (ts, i) =>
-      (ts(i), ts.lift(i + 1)) match {
-        case (Op("$", p), Some(n @ Num(d, _)))
-            if n.pos == p + 1 && d.forall(_.isDigit) =>
-          val idx = d.toInt
-          if (idx < 1 || idx > args.length)
-            fail(s"EXECUTE: placeholder $$$idx but ${args.length} " +
-              "argument(s) supplied")
-          maxDollar = math.max(maxDollar, idx)
-          Some((2, rendered(args(idx - 1))))
-        case (Op("?", _), _) =>
-          qmarks += 1
-          if (qmarks > args.length)
-            fail(s"EXECUTE: ${qmarks}th '?' placeholder but only " +
-              s"${args.length} argument(s) supplied")
-          Some((1, rendered(args(qmarks - 1))))
-        case _ => None
-      }
-    }
-    if (qmarks > 0 && maxDollar > 0)
-      fail("EXECUTE: prepared statement mixes '?' and '$n' placeholders")
-    val consumed = if (qmarks > 0) qmarks else maxDollar
-    if (consumed != args.length)
-      fail(s"EXECUTE: statement binds $consumed parameter(s) but " +
-        s"${args.length} argument(s) supplied")
-    out
+  /** Executes a multi-statement SQL SCRIPT (r11c): statements split
+    * at `;` tokens, run in order, and the LAST statement's frame is
+    * returned (the psql/DuckDB-CLI contract: set up macros/views/
+    * tables, end on the SELECT you want). Empty statements (trailing
+    * `;`, comment-only segments) are skipped; a script with no
+    * statements is loud. The whole script parses before any statement
+    * runs. */
+  def runScript(script: String): DataFrame = {
+    val stmts = Parser.parseScript(script)
+    if (stmts.isEmpty) fail("script contains no statements")
+    stmts.map(run).last
   }
+
+  private def run(st: Statement): DataFrame = st match {
+    case S.Query(q) => translate(q)
+    case S.Explain(q) =>
+      import spark.implicits._
+      translate(q).queryExecution
+        .explainString(org.apache.spark.sql.execution.FormattedMode)
+        .split("\n").toSeq.toDF("plan")
+    case S.CreateView(name, orReplace, q) =>
+      ensureNew(name, orReplace, "view")
+      registerTable(name, translate(q))
+      status("view", name.toLowerCase)
+    case S.CreateTableAs(name, orReplace, q) =>
+      // CREATE TABLE AS (r5b): like a view but MATERIALIZED-once —
+      // the plan is cached, so downstream queries reread the stored
+      // result instead of recomputing (unpersist via DROP TABLE)
+      ensureNew(name, orReplace, "table")
+      registerTable(name, translate(q).cache())
+      status("table", name.toLowerCase)
+    case S.CreateTable(name, orReplace, cols) =>
+      // CREATE TABLE with an explicit column list (r10): a TYPED empty
+      // plan — one typed NULL projection over a 1-row VALUES relation,
+      // then limit(0); INSERT/MERGE populate it lazily like any table
+      ensureNew(name, orReplace, "table")
+      if (cols.map(_.name.toLowerCase).distinct.length != cols.length)
+        fail("CREATE TABLE column list names a column twice")
+      val items = cols.map(c => SelectItem(Cast(NullLit(), c.typeName), Some(c.name)))
+      registerTable(name, translate(selectFrom(items,
+        ValuesRel(Seq(Seq(NumLit("0"))), Some(Seq("__x")), Some("__cts")))).limit(0))
+      status("table", name.toLowerCase)
+    case S.Drop(name, ifExists) =>
+      tables.get(name.toLowerCase) match {
+        case None =>
+          if (!ifExists) throw TableNotFoundException(name)
+          status("noop", name.toLowerCase)
+        case Some(df) =>
+          // a CTAS table may hold cached blocks — release them
+          try df.unpersist() catch { case _: Throwable => () }
+          removeTable(name)
+          status("dropped", name.toLowerCase)
+      }
+    case S.Truncate(name) =>
+      registerTable(name, lookup(name).limit(0))
+      status("truncated", name.toLowerCase)
+    case S.Alter(name, action) => alter(name, action)
+    case ins: S.Insert if ins.returning.nonEmpty =>
+      if (ins.onConflict.nonEmpty)
+        fail("RETURNING is not supported with ON CONFLICT")
+      // the affected rows are captured BEFORE the re-registration
+      // (lazy plans capture the DataFrames, a later re-registration
+      // cannot change them)
+      val inserted = insertFilled(lookup(ins.table), ins.table, ins.cols, ins.source)
+      run(ins.copy(returning = Nil))
+      returningOver(inserted, ins.table, ins.returning)
+    case S.Insert(name, cols, source, onConflict, _) =>
+      val target = lookup(name) // loud on unknown target
+      onConflict match {
+        case Some(oc) => insertOnConflict(name, cols, source, oc)
+        case None =>
+          cols match {
+            case None =>
+              // positional (standard): UNION ALL carries the new rows —
+              // arity/type mismatches fail at analysis, loudly
+              registerTable(name, translate(SetOp("union_all",
+                selectFrom(Seq(star), TableRef(name, None)), source)))
+            case Some(_) =>
+              registerTable(name,
+                target.unionByName(insertFilled(target, name, cols, source)))
+          }
+          status("inserted", name.toLowerCase)
+      }
+    case upd: S.Update if upd.returning.nonEmpty =>
+      if (upd.from.nonEmpty)
+        fail("RETURNING is not supported with UPDATE ... FROM")
+      // POST-update values: unconditional assignments over the rows
+      // the predicate selects (PostgreSQL semantics)
+      val target = lookup(upd.table)
+      val assigns = updateSet(target, upd.table, upd.set)
+      val items = target.columns.toSeq.map { c =>
+        assigns.get(c.toLowerCase).map(e => SelectItem(e, Some(c)))
+          .getOrElse(SelectItem(col(c), None))
+      }
+      val affected = translate(selectFrom(items, TableRef(upd.table, upd.alias),
+        upd.where.map(p => Coalesce(Seq(p, BoolLit(false))))))
+      run(upd.copy(returning = Nil))
+      returningOver(affected, upd.alias.getOrElse(upd.table), upd.returning)
+    case S.Update(name, alias, set, Some(from), where, _) =>
+      updateFrom(name, alias, set, from, where)
+    case S.Update(name, alias, set, None, where, _) =>
+      val target = lookup(name)
+      val assigns = updateSet(target, name, set)
+      val items = target.columns.toSeq.map { c =>
+        assigns.get(c.toLowerCase) match {
+          case Some(e) => SelectItem(where.fold(e)(p =>
+            CaseWhen(Seq((p, e)), col(c))), Some(c))
+          case None => SelectItem(col(c), None)
+        }
+      }
+      // the alias qualifies refs in SET and WHERE (r9 ADVICE)
+      registerTable(name, translate(selectFrom(items, TableRef(name, alias))))
+      status("updated", name.toLowerCase)
+    case del: S.Delete if del.returning.nonEmpty =>
+      // the deleted (pre-delete) rows
+      val affected = del.using match {
+        case Some(src: TableRef) =>
+          translate(deleteUsing(del.table, del.alias, src, del.where, keep = false))
+        case Some(_) =>
+          fail("RETURNING is not supported with a (subquery) USING source")
+        case None =>
+          lookup(del.table)
+          translate(selectFrom(Seq(star), TableRef(del.table, del.alias),
+            Some(Coalesce(Seq(del.where, BoolLit(false))))))
+      }
+      run(del.copy(returning = Nil))
+      returningOver(affected, del.alias.getOrElse(del.table), del.returning)
+    case S.Delete(name, alias, Some(src), where, _) =>
+      // DELETE ... USING (r9, PostgreSQL): target rows with ANY source
+      // row satisfying WHERE are dropped — the anti of the semi. The
+      // correlated-EXISTS machinery decorrelates equality conjuncts
+      // into one key anti-join; multi-match needs no guard
+      val (rel, scope) = source(src, "__del_using_sub")
+      registerTable(name, translate(deleteUsing(name, alias, rel, where, keep = true), scope))
+      status("deleted", name.toLowerCase)
+    case S.Delete(name, alias, None, where, _) =>
+      lookup(name)
+      // rows where the predicate is TRUE are deleted; NULL keeps (the
+      // standard's 3VL)
+      registerTable(name, translate(selectFrom(Seq(star), TableRef(name, alias),
+        Some(Not(Coalesce(Seq(where, BoolLit(false))))))))
+      status("deleted", name.toLowerCase)
+    case S.Merge(name, alias, src, on, clauses) =>
+      // USING (subquery) [AS] alias (r8): the subquery's lazy plan is
+      // the source frame; the alias keeps working as its qualifier
+      val (TableRef(sName, sAlias), scope) = source(src, "__merge_using_sub")
+      merge(name, alias, sName, sAlias, conjuncts(on), clauses, scope)
+    case S.CopyTo(src, path, opts) =>
+      copyTo(src.fold(lookup, translate(_)), path, opts)
+    case S.CopyFrom(name, path, opts) => copyFrom(name, path, opts)
+    case S.ExportDatabase(dir, opts0) =>
+      val opts = dbOptions(opts0)
+      copyOptions(opts, "") // validate once, loudly
+      val names = tables.keys.toSeq.sorted
+      // quoted identifiers can hold path separators, '..' or control
+      // chars — interpolated into '$dir/$n' paths and the newline-
+      // delimited manifest they would escape the export dir or
+      // corrupt the manifest (r11 ADVICE): loud wall
+      names.find(badDirName).foreach(bad => fail("EXPORT DATABASE: table name " +
+        s"'$bad' cannot name an export directory (path separator, " +
+        "'..', or control character) — rename it first"))
+      names.foreach { n => copyTo(lookup(n), s"$dir/$n", opts) }
+      // manifest: IMPORT restores exactly THIS export's table set — a
+      // re-export into a reused directory must not resurrect stale
+      // subdirectories from an earlier, larger registry
+      val fs = new org.apache.hadoop.fs.Path(dir)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val out = fs.create(
+        new org.apache.hadoop.fs.Path(dir, "_graft_tables"), true)
+      try out.write((names.mkString("\n") + "\n").getBytes("UTF-8"))
+      finally out.close()
+      status("exported", dir)
+    case S.ImportDatabase(dir, opts) => importDatabase(dir, dbOptions(opts))
+    case S.Summarize(src) => summarize(src.fold(lookup, translate(_)))
+    case S.Prepare(name, body) =>
+      if (preparedStmts.contains(name.toLowerCase))
+        fail(s"prepared statement '$name' already exists " +
+          "(DEALLOCATE it first)")
+      preparedStmts.put(name.toLowerCase, body)
+      status("prepared", name.toLowerCase)
+    case S.Execute(name, args) =>
+      val body = preparedStmts.getOrElse(name.toLowerCase,
+        fail(s"prepared statement '$name' is not registered"))
+      // self- or mutually-recursive prepared statements (PREPARE a AS
+      // EXECUTE a) would re-enter query() unboundedly — fail loudly
+      // instead of StackOverflowError (r11 ADVICE); DuckDB rejects
+      // the cycle too. Legitimate nesting is shallow.
+      if (execDepth >= 16)
+        fail(s"EXECUTE '$name': prepared-statement recursion exceeds " +
+          "depth 16 (self- or mutually-recursive EXECUTE bodies)")
+      execDepth += 1
+      try query(bindParams(body, args))
+      finally execDepth -= 1
+    case S.Deallocate(name) =>
+      if (preparedStmts.remove(name.toLowerCase).isEmpty)
+        fail(s"prepared statement '$name' is not registered")
+      status("deallocated", name.toLowerCase)
+    case m: S.CreateMacro => createMacro(m)
+    case S.DropMacro(name0, ifExists) =>
+      val name = name0.toLowerCase
+      if (macros.remove(name).isEmpty && !ifExists)
+        fail(s"macro '$name' is not registered")
+      status("dropped_macro", name)
+    case S.Describe(name) =>
+      import spark.implicits._
+      lookup(name).schema.fields.toSeq
+        .map(f => (f.name, f.dataType.simpleString, f.nullable))
+        .toDF("col_name", "data_type", "nullable")
+    case S.ShowTables =>
+      import spark.implicits._
+      tables.keySet.toSeq.sorted.toDF("table_name")
+    // SET / RESET session configuration (r12): values route to the
+    // session's RuntimeConf — Spark itself rejects static/unknown-
+    // static keys loudly. A mid-script SET reshapes every later
+    // statement's plan, exactly like the DuckDB PRAGMA dial.
+    case S.SetConf(key, value) =>
+      spark.conf.set(key, value)
+      status("set", s"$key=$value")
+    case S.Reset(key) =>
+      spark.conf.unset(key)
+      status("reset", key)
+  }
+
+  /** CREATE's wall: `name` is free unless OR REPLACE. */
+  private def ensureNew(name: String, orReplace: Boolean, kind: String): Unit =
+    if (!orReplace && tables.contains(name.toLowerCase))
+      fail(s"$kind '$name' already exists (use CREATE OR REPLACE ${kind.toUpperCase})")
+
+  /** EXPORT / IMPORT write and read parquet unless told otherwise. */
+  private def dbOptions(opts: Seq[CopyOption]): Seq[CopyOption] =
+    if (opts.isEmpty) Seq(CopyOption("format", Some("parquet"))) else opts
+
+  private def status(kind: String, name: String): DataFrame = {
+    import org.apache.spark.sql.{functions => F}
+    spark.range(1).select(F.lit(kind).as("kind"), F.lit(name).as("name"))
+  }
+
+  // ---- AST builders ---------------------------------------------------
+  private val star = SelectItem(Star(None), None)
+  private def col(c: String): Expr = ColRef(None, c)
+  private def selectFrom(items: Seq[SelectItem], from: Relation,
+                         where: Option[Expr] = None): SetExpr =
+    Leaf(Ast.Query(Select(false, items, from, where, Nil, None), Nil, None, None))
+  private def conj(es: Seq[Expr]): Expr = es.reduceLeft(And)
+  private def conjuncts(e: Expr): Seq[Expr] = e match {
+    case And(l, r) => conjuncts(l) ++ conjuncts(r)
+    case other     => Seq(other)
+  }
+  /** Every column reference of `e`, subquery bodies included. */
+  private def colRefs(e: Expr): Seq[ColRef] = {
+    val b = Seq.newBuilder[ColRef]
+    Ast.transformDeep(e) { case r: ColRef => b += r; r }
+    b.result()
+  }
+
+  /** Names for a statement's intermediate frames, consulted before the
+    * registry (lower-case keys). */
+  private type Scope = Map[String, DataFrame]
+
+  private def resolve(scope: Scope)(name: String): DataFrame =
+    scope.getOrElse(name.toLowerCase, lookup(name))
+
+  /** Lowers a query against the registry, `scope`'s frames first. */
+  private def translate(q: SetExpr, scope: Scope = Map.empty): DataFrame = {
+    // macro expansion pre-pass (r11c): pure AST substitution — with
+    // no macros registered the tree passes through untouched (builtin
+    // generate_series/range lower in the translator)
+    val ast = if (macros.isEmpty) q else new MacroExpander(n => macros.get(n)).apply(q)
+    new Translator(resolve(scope), spark).translate(ast)
+  }
+
+  /** A USING / FROM source as a table reference: a (subquery) becomes
+    * the frame `tmp` of the returned scope, under its alias or `tmp`. */
+  private def source(src: Relation, tmp: String): (TableRef, Scope) = src match {
+    case t: TableRef => (t, Map.empty)
+    case SubqueryRel(q, alias) => (TableRef(tmp, alias), Map(tmp -> translate(q)))
+    case other => fail(s"unsupported statement source $other")
+  }
+
+  /** `SELECT * FROM t [AS a] WHERE [NOT] EXISTS (SELECT 1 FROM src
+    * WHERE cond)` — DELETE ... USING's kept (`keep`) or deleted rows. */
+  private def deleteUsing(tName: String, tAlias: Option[String], src: TableRef,
+                          cond: Expr, keep: Boolean): SetExpr = {
+    val TableRef(sName, sAlias) = src
+    lookup(tName)
+    val matched = ExistsSubquery(selectFrom(Seq(SelectItem(NumLit("1"), None)),
+      TableRef(sName, Some(sAlias.getOrElse(sName))), Some(cond)))
+    selectFrom(Seq(star), TableRef(tName, Some(tAlias.getOrElse(tName))),
+      Some(if (keep) Not(matched) else matched))
+  }
+
+  /** An UPDATE's SET list: target column (lower case) -> expression. */
+  private def updateSet(target: DataFrame, name: String,
+                        set: Seq[Assignment]): Map[String, Expr] =
+    set.map(a => column(target, name, a.col, "UPDATE").toLowerCase -> a.e).toMap
+
+  /** The column of `df` (registered as `table`) that `c` names, any
+    * case. */
+  private def column(df: DataFrame, table: String, c: String, what: String): String =
+    df.columns.find(_.equalsIgnoreCase(c))
+      .getOrElse(fail(s"$what: column '$c' not in $table"))
+
+  /** The column an assignment's left side names: bare, or qualified
+    * by one of `quals`. */
+  private def column(df: DataFrame, table: String, ref: ColRef, what: String,
+                     quals: Set[String] = Set.empty): String = ref match {
+    case ColRef(None, c)                            => column(df, table, c, what)
+    case ColRef(Some(q), c) if quals(q.toLowerCase) => column(df, table, c, what)
+    case ColRef(Some(q), c) => fail(s"$what: bad column ref '$q.$c'")
+  }
+
+  /** Evaluates RETURNING items over the affected-rows frame, visible
+    * under the statement's target alias. */
+  private def returningOver(affected: DataFrame, alias: String,
+                            items: Seq[SelectItem]): DataFrame = {
+    val tmp = "__returning_src"
+    translate(selectFrom(items, TableRef(tmp, Some(alias))), Map(tmp -> affected))
+  }
+
+  // ---- ALTER TABLE (r9): pure plan rewrites over the lazy registry ----
+  private def alter(name: String, action: AlterAction): DataFrame = {
+    import org.apache.spark.sql.{functions => F}
+    val t = lookup(name)
+    def real(c: String) = t.columns.find(_.equalsIgnoreCase(c))
+      .getOrElse(fail(s"ALTER TABLE: column '$c' not in $name"))
+    def fresh(c: String): Unit = if (t.columns.exists(_.equalsIgnoreCase(c)))
+      fail(s"ALTER TABLE: column '$c' already exists in $name")
+    action match {
+      case AddColumn(ColumnDef(c, typ)) =>
+        fresh(c)
+        // the new column reads NULL of the declared type (ADD COLUMN
+        // over a lazy plan cannot backfill); the type goes through the
+        // dialect's CAST catalog
+        val typed = translate(selectFrom(
+          Seq(SelectItem(Cast(NullLit(), typ), Some(c))), TableRef(name, None)))
+        registerTable(name,
+          t.withColumn(c, F.lit(null).cast(typed.schema.head.dataType)))
+        status("altered", name.toLowerCase)
+      case DropColumn(c) =>
+        val r = real(c)
+        if (t.columns.length == 1)
+          fail("ALTER TABLE: cannot drop the only column")
+        registerTable(name, t.drop(r))
+        status("altered", name.toLowerCase)
+      case RenameColumn(c, n) =>
+        val r = real(c)
+        fresh(n)
+        registerTable(name, t.withColumnRenamed(r, n))
+        status("altered", name.toLowerCase)
+      case RenameTable(n) =>
+        if (tables.contains(n.toLowerCase))
+          fail(s"ALTER TABLE RENAME: '$n' already exists")
+        registerTable(n, t); removeTable(name)
+        status("renamed", n.toLowerCase)
+    }
+  }
+
+  // ---- COPY (r10, DuckDB dialect) --------------------------------------
+  // COPY <table | (query)> TO 'path' [(options)] writes through the
+  // Spark writer — the sink is a DIRECTORY of part files (the
+  // distributed convention; a 1000-executor write cannot target one
+  // file) — and COPY <table> FROM 'path' [(options)] appends the files
+  // to the registered plan LAZILY (spark.read is a plan, the union
+  // re-registers; nothing scans until a read), positional +
+  // assignment-cast like INSERT.
+  private val CopyFormats = Seq("parquet", "csv", "json", "orc")
 
   /** (format, Spark reader/writer options) from a COPY option list
     * and the path extension fallback. */
-  private def copyOptions(optsOrNull: String,
+  private def copyOptions(opts: Seq[CopyOption],
                           path: String): (String, Map[String, String]) = {
-    val FormatRe = """(?is)^format\s+'?(\w+)'?$""".r
-    val HeaderRe = """(?is)^header(?:\s+(true|false))?$""".r
-    val DelimRe  = """(?is)^delim(?:iter)?\s+'(.)'$""".r
     var fmt: Option[String] = None
     val extra = scala.collection.mutable.LinkedHashMap[String, String]()
-    Option(optsOrNull).toSeq.flatMap(Spans.split(_, ",")).filter(_.nonEmpty)
-      .foreach {
-        case FormatRe(f) => fmt = Some(f.toLowerCase)
-        case HeaderRe(v) =>
-          extra += "header" -> Option(v).map(_.toLowerCase).getOrElse("true")
-        case DelimRe(d)  => extra += "sep" -> d
-        case other => fail(s"COPY option not supported: '$other' " +
+    opts.foreach {
+      case CopyOption("format", Some(f)) => fmt = Some(f.toLowerCase)
+      case CopyOption("header", v) if v.forall(x =>
+          x.equalsIgnoreCase("true") || x.equalsIgnoreCase("false")) =>
+        extra += "header" -> v.map(_.toLowerCase).getOrElse("true")
+      case CopyOption("delim" | "delimiter", Some(d)) if d.length == 1 =>
+        extra += "sep" -> d
+      case CopyOption(n, v) =>
+        fail(s"COPY option not supported: '$n${v.fold("")(" " + _)}' " +
           "(FORMAT <fmt>, HEADER [true|false], DELIMITER '<c>')")
-      }
+    }
     val format = fmt.getOrElse {
       val dot = path.lastIndexOf('.')
       val ext = if (dot < 0) "" else path.substring(dot + 1).toLowerCase
@@ -274,7 +490,7 @@ final class Graft(val spark: SparkSession) {
   }
 
   private def copyTo(df: DataFrame, path: String,
-                     optsOrNull: String): DataFrame = {
+                     opts: Seq[CopyOption]): DataFrame = {
     val np = normPath(path)
     val guarded = registeredReadPaths
     val clash = guarded.keys.find(rp =>
@@ -286,18 +502,18 @@ final class Graft(val spark: SparkSession) {
         "corrupt the registered plan(s) — write to a fresh path or " +
         "DROP the reading table(s) first")
     }
-    val (format, extra) = copyOptions(optsOrNull, path)
+    val (format, extra) = copyOptions(opts, path)
     // DuckDB writes a CSV header by default; mirror that
-    val opts = if (format == "csv" && !extra.contains("header"))
+    val options = if (format == "csv" && !extra.contains("header"))
       extra + ("header" -> "true") else extra
-    df.write.mode("overwrite").options(opts).format(format).save(path)
+    df.write.mode("overwrite").options(options).format(format).save(path)
     status("copied", path)
   }
 
   private def copyFrom(name: String, path: String,
-                       optsOrNull: String): DataFrame = {
+                       opts: Seq[CopyOption]): DataFrame = {
     val target = lookup(name)
-    val (format, extra) = copyOptions(optsOrNull, path)
+    val (format, extra) = copyOptions(opts, path)
     val r = spark.read.options(extra)
     val src = format match {
       // text formats read with the TARGET's schema (DuckDB's COPY
@@ -347,10 +563,47 @@ final class Graft(val spark: SparkSession) {
   // name (overwriting same-named registrations — the restore
   // semantics). Self-describing formats roundtrip schemas; csv/json
   // re-infer on import (documented lossy corner of text formats).
-  private val ExportDbRe =
-    """(?is)^\s*export\s+database\s+'([^']+)'\s*(?:\(\s*(.*?)\s*\))?\s*;?\s*$""".r
-  private val ImportDbRe =
-    """(?is)^\s*import\s+database\s+'([^']+)'\s*(?:\(\s*(.*?)\s*\))?\s*;?\s*$""".r
+  private def importDatabase(dir: String, opts: Seq[CopyOption]): DataFrame = {
+    val (format, extra) = copyOptions(opts, "")
+    // Hadoop FS, not java.io.File — EXPORT can target any FS the
+    // writer reaches (hdfs://, s3a://) and the roundtrip must too
+    val hPath = new org.apache.hadoop.fs.Path(dir)
+    val fs =
+      try hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      catch { case e: Exception =>
+        fail(s"IMPORT DATABASE: cannot access '$dir': ${e.getMessage}") }
+    val manifest = new org.apache.hadoop.fs.Path(dir, "_graft_tables")
+    val sub: Seq[String] =
+      if (fs.exists(manifest)) {
+        val in = fs.open(manifest)
+        val txt =
+          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+          finally in.close()
+        txt.split("\n").map(_.trim).filter(_.nonEmpty).toSeq.sorted
+      } else if (fs.exists(hPath)) {
+        fs.listStatus(hPath).filter(_.isDirectory)
+          .map(_.getPath.getName).toSeq.sorted
+      } else fail(s"IMPORT DATABASE: cannot list '$dir'")
+    if (sub.isEmpty) fail(s"IMPORT DATABASE: no table directories in '$dir'")
+    // a crafted manifest line must not read outside the export dir
+    sub.find(badDirName).foreach(bad => fail("IMPORT DATABASE: manifest entry " +
+      s"'$bad' is not a valid table directory name"))
+    sub.foreach { n =>
+      val r = spark.read.options(extra)
+      val df = format match {
+        case "csv" => r.option("header", extra.getOrElse("header", "true"))
+          .option("inferSchema", "true").csv(s"$dir/$n")
+        case "json"    => r.json(s"$dir/$n")
+        case "parquet" => r.parquet(s"$dir/$n")
+        case _         => r.orc(s"$dir/$n")
+      }
+      registerTable(n, df)
+    }
+    status("imported", dir)
+  }
+
+  private def badDirName(n: String): Boolean = n.contains("..") ||
+    n.exists(c => c == '/' || c == '\\' || Character.isISOControl(c))
 
   // SUMMARIZE (r10, DuckDB surface): per-column profile of a table or
   // query. DuckDB's version mixes approximate fields (approx_unique,
@@ -363,9 +616,6 @@ final class Graft(val spark: SparkSession) {
   // ducks it with approx_unique); fine for a profiling statement,
   // not a per-query hot path. Columns aggregate POSITIONALLY so
   // duplicate output names in SUMMARIZE <query> profile cleanly.
-  private val SummarizeRe = """(?is)^\s*summarize\s+(.+?)\s*;?\s*$""".r
-  private val BareNameRe = """^(?:"([^"]+)"|([a-zA-Z_][a-zA-Z0-9_]*))$""".r
-
   private def summarize(df0: DataFrame): DataFrame = {
     import org.apache.spark.sql.{functions => F}
     val fields = df0.schema.fields
@@ -391,518 +641,61 @@ final class Graft(val spark: SparkSession) {
       "__total as count")
   }
 
-  private def status(kind: String, name: String): DataFrame = {
-    import org.apache.spark.sql.{functions => F}
-    spark.range(1).select(F.lit(kind).as("kind"), F.lit(name).as("name"))
-  }
 
-  /** Parse + translate SQL to a lazy DataFrame. Besides queries,
-    * accepts the statement forms (CREATE/DROP VIEW and TABLE, EXPLAIN,
-    * DML, MERGE, COPY, PREPARE/EXECUTE, CREATE MACRO, SET, ...).
-    * Statement text is tokenized by [[graft.sql.Lexer]]: comments may
-    * stand anywhere and one trailing `;` is accepted on every form. */
-  def query(sqlText: String): DataFrame = {
-    val sql = Spans.statement(sqlText)
-    // RETURNING (r11b, PostgreSQL/DuckDB): a trailing top-level
-    // RETURNING clause on INSERT/UPDATE/DELETE returns the affected
-    // rows instead of the status frame. Split here, execute the bare
-    // statement, and evaluate the expressions over the affected-rows
-    // frame captured BEFORE the re-registration (a deleted row must
-    // still be returnable).
-    val head = sql.toLowerCase
-    if (head.startsWith("insert") || head.startsWith("update") ||
-        head.startsWith("delete")) {
-      Spans.around(sql, "returning") match {
-        case Seq() =>
-        case Seq((stmt, exprs)) => return returningStatement(stmt, exprs)
-        case _ => fail("multiple top-level RETURNING clauses")
+  // PREPARE / EXECUTE / DEALLOCATE (r10, PostgreSQL/DuckDB spelling):
+  // a prepared statement stores the statement's token text with $n (or
+  // ?) placeholders; EXECUTE substitutes the argument texts token by
+  // token and re-enters query(), so any statement form — SELECT, DML,
+  // DDL — can be prepared, and a placeholder may stand where the
+  // grammar takes an integer (`LIMIT ?`).
+  private val preparedStmts = TrieMap.empty[String, String]
+  // EXECUTE re-entry depth (recursion wall; queries are driver-side
+  // single-threaded per Graft instance, a plain var suffices)
+  private var execDepth = 0
+
+  /** Substitutes `$n` / `?` placeholder tokens with the argument
+    * texts; string literals, quoted identifiers and comments hold no
+    * placeholder tokens. `$n` and `?` may not mix; every argument must
+    * be consumed and every placeholder bound — all loud. */
+  private def bindParams(sql: String, args: Seq[String]): String = {
+    // single-token literals substitute RAW (so LIMIT/OFFSET positions,
+    // which take a bare integer, keep parsing); anything else is
+    // parenthesized to preserve precedence
+    def rendered(a: String): String = Lexer.tokenize(a).init match {
+      case Vector(Num(d, _)) if d.forall(c => c.isDigit || c == '.') &&
+          d.head.isDigit && d.last.isDigit && d.count(_ == '.') <= 1 => a
+      case Vector(Str(_, _)) => a
+      case Vector(Ident(v, p)) if a.charAt(p) != '"' &&
+          Set("null", "true", "false").contains(v.toLowerCase) => a
+      case _ => s"($a)"
+    }
+    var qmarks = 0; var maxDollar = 0
+    val out = Spans.rewrite(sql) { (ts, i) =>
+      (ts(i), ts.lift(i + 1)) match {
+        case (Op("$", p), Some(n @ Num(d, _)))
+            if n.pos == p + 1 && d.forall(_.isDigit) =>
+          val idx = d.toInt
+          if (idx < 1 || idx > args.length)
+            fail(s"EXECUTE: placeholder $$$idx but ${args.length} " +
+              "argument(s) supplied")
+          maxDollar = math.max(maxDollar, idx)
+          Some((2, rendered(args(idx - 1))))
+        case (Op("?", _), _) =>
+          qmarks += 1
+          if (qmarks > args.length)
+            fail(s"EXECUTE: ${qmarks}th '?' placeholder but only " +
+              s"${args.length} argument(s) supplied")
+          Some((1, rendered(args(qmarks - 1))))
+        case _ => None
       }
     }
-    queryDispatch(sql)
-  }
-
-  /** Executes a multi-statement SQL SCRIPT (r11c): statements split
-    * on top-level `;` tokens, run in order through [[query]], and the
-    * LAST statement's frame is returned (the psql/DuckDB-CLI contract:
-    * set up macros/views/tables, end on the SELECT you want). Empty
-    * statements (trailing `;`, comment-only segments) are skipped; a
-    * script with no statements is loud. */
-  def runScript(script: String): DataFrame = {
-    val stmts = Spans.split(script, ";").filter(_.nonEmpty)
-    if (stmts.isEmpty) fail("script contains no statements")
-    stmts.map(query).last
-  }
-
-  /** RETURNING lowering (r11b): build the affected-rows frame from
-    * the PRE-statement registry (lazy plans capture the DataFrames,
-    * so the later re-registration cannot change them), run the bare
-    * statement, then evaluate the RETURNING expressions over the
-    * captured frame aliased as the target. INSERT returns the
-    * assignment-cast inserted rows; UPDATE returns POST-update
-    * values (PostgreSQL semantics); DELETE returns the deleted rows.
-    * Unsupported combinations (ON CONFLICT, UPDATE ... FROM,
-    * subquery USING sources) are loud. */
-  private def returningStatement(stmt: String, exprs: String): DataFrame = {
-    if (exprs.isEmpty) fail("RETURNING requires at least one expression")
-    stmt match {
-      case InsertRe(q, b, colListOrNull, body0) =>
-        if (Spans.around(body0, "on", "conflict").nonEmpty)
-          fail("RETURNING is not supported with ON CONFLICT")
-        val name = Option(q).getOrElse(b)
-        val target = lookup(name)
-        val inserted = insertFilled(target, name, Option(colListOrNull),
-          insertSrcSql(body0))
-        queryDispatch(stmt)
-        returningOver(inserted, name, exprs)
-      case DeleteUsingSubRe() =>
-        fail("RETURNING is not supported with a (subquery) USING source")
-      case DeleteUsingRe(tq, tb, tAl, sq, sb, sAl, cond) =>
-        val tName = Option(tq).getOrElse(tb)
-        val sName = Option(sq).getOrElse(sb)
-        lookup(tName); lookup(sName)
-        val tA = Option(tAl).getOrElse(tName)
-        val sA = Option(sAl).getOrElse(sName)
-        val affected = translateOnly(
-          s"""select * from "$tName" as $tA where exists """ +
-          s"""(select 1 from "$sName" as $sA where ($cond))""")
-        queryDispatch(stmt)
-        returningOver(affected, tA, exprs)
-      case DeleteRe(q, b, pred) =>
-        val name = Option(q).getOrElse(b)
-        lookup(name)
-        val affected = translateOnly(
-          s"""select * from "$name" where coalesce(($pred), false)""")
-        queryDispatch(stmt)
-        returningOver(affected, name, exprs)
-      case UpdateRe(q, b, tAl, tail) =>
-        if (Spans.around(tail, "from").nonEmpty)
-          fail("RETURNING is not supported with UPDATE ... FROM")
-        val name = Option(q).getOrElse(b)
-        val target = lookup(name)
-        val (assigns, pred) = updateSet(target, name, tail)
-        // POST-update values: unconditional assignments over the rows
-        // the predicate selects (the statement's own CASE arms are
-        // per-row conditionals; here the filter already decided)
-        val items = target.columns.map { c =>
-          assigns.get(c.toLowerCase)
-            .map(e => s"""($e) as "$c"""").getOrElse(s""""$c"""")
-        }
-        val fromTxt = Option(tAl).map(al => s""""$name" as $al""")
-          .getOrElse(s""""$name"""")
-        val whereTxt =
-          pred.map(p => s" where coalesce(($p), false)").getOrElse("")
-        val affected = translateOnly(
-          s"select ${items.mkString(", ")} from $fromTxt$whereTxt")
-        queryDispatch(stmt)
-        returningOver(affected, Option(tAl).getOrElse(name), exprs)
-      case _ => fail("RETURNING is only supported on INSERT INTO, " +
-        "UPDATE ... SET, and DELETE FROM statements")
-    }
-  }
-
-  /** An UPDATE's `SET` list (target column, lower case -> expression
-    * text), cut at its first top-level WHERE, and that WHERE's
-    * predicate. */
-  private def updateSet(target: DataFrame, name: String,
-                        tail: String): (Map[String, String], Option[String]) = {
-    val (setList, pred) = Spans.around(tail, "where").headOption match {
-      case Some((sl, p)) => (sl, Some(p))
-      case None          => (tail, None)
-    }
-    val assigns = Spans.split(setList, ",").map { a =>
-      val (col, e) = Spans.around(a, "=").headOption
-        .getOrElse(fail(s"UPDATE SET expects col = expr, got: $a"))
-      column(target, name, col, "UPDATE").toLowerCase -> e
-    }.toMap
-    (assigns, pred)
-  }
-
-  /** The column of `df` (registered as `table`) that a column-list
-    * entry names: bare or quoted, any case, qualified only by one of
-    * `quals`. */
-  private def column(df: DataFrame, table: String, ref: String, what: String,
-                     quals: Set[String] = Set.empty): String = {
-    val c = Spans.ref(ref) match {
-      case Some((None, c))                            => c
-      case Some((Some(q), c)) if quals(q.toLowerCase) => c
-      case _ => fail(s"$what: bad column ref '$ref'")
-    }
-    df.columns.find(_.equalsIgnoreCase(c))
-      .getOrElse(fail(s"$what: column '$c' not in $table"))
-  }
-
-  /** Evaluates RETURNING expressions over the affected-rows frame,
-    * visible under the statement's target alias. */
-  private def returningOver(affected: DataFrame, alias: String,
-                            exprs: String): DataFrame = {
-    val tmp = "__returning_src"
-    registerTable(tmp, affected)
-    try translateOnly(s"""select $exprs from $tmp as "$alias"""")
-    finally removeTable(tmp)
-  }
-
-  private def queryDispatch(sqlText: String): DataFrame = sqlText match {
-    case CreateViewRe(orReplace, quoted, bare, body) =>
-      val name = Option(quoted).getOrElse(bare)
-      if (orReplace == null && tables.contains(name.toLowerCase))
-        throw new RuntimeException(
-          s"view '$name' already exists (use CREATE OR REPLACE VIEW)")
-      registerTable(name, translateOnly(body))
-      status("view", name.toLowerCase)
-    case CreateTableRe(orReplace, quoted, bare, body) =>
-      // CREATE TABLE AS (r5b): like a view but MATERIALIZED-once —
-      // the plan is cached, so downstream queries reread the stored
-      // result instead of recomputing (unpersist via DROP TABLE)
-      val name = Option(quoted).getOrElse(bare)
-      if (orReplace == null && tables.contains(name.toLowerCase))
-        throw new RuntimeException(
-          s"table '$name' already exists (use CREATE OR REPLACE TABLE)")
-      registerTable(name, translateOnly(body).cache())
-      status("table", name.toLowerCase)
-    case CreateTableSchemaRe(orReplace, quoted, bare, defs) =>
-      val name = Option(quoted).getOrElse(bare)
-      if (orReplace == null && tables.contains(name.toLowerCase))
-        throw new RuntimeException(
-          s"table '$name' already exists (use CREATE OR REPLACE TABLE)")
-      val ColDef =
-        """(?is)^\s*(?:"([^"]+)"|(\w+))\s+(\w+(?:\s+\w+)*(?:\s*\(\s*\d+\s*(?:,\s*\d+\s*)?\))?)\s*$""".r
-      val cols = Spans.split(defs, ",").map {
-        case ColDef(cq, cb, typ) => (Option(cq).getOrElse(cb), typ)
-        case other => fail(s"CREATE TABLE column definition must be " +
-          s"'name type', got: $other")
-      }
-      if (cols.isEmpty) fail("CREATE TABLE requires at least one column")
-      if (cols.map(_._1.toLowerCase).distinct.length != cols.length)
-        fail("CREATE TABLE column list names a column twice")
-      // one typed NULL projection over a 1-row VALUES relation, then
-      // limit(0): the registered plan carries the declared schema and
-      // zero rows — INSERT/MERGE populate it lazily like any table
-      val items = cols.map { case (c, t) =>
-        s"""cast(null as $t) as "$c"""" }.mkString(", ")
-      registerTable(name,
-        translateOnly(s"select $items from (values (0)) __cts(__x)")
-          .limit(0))
-      status("table", name.toLowerCase)
-    case DropViewRe(ifExists, quoted, bare) =>
-      val name = Option(quoted).getOrElse(bare)
-      if (!tables.contains(name.toLowerCase)) {
-        if (ifExists == null) throw TableNotFoundException(name)
-        status("noop", name.toLowerCase)
-      } else {
-        // a CTAS table may hold cached blocks — release them
-        tables.get(name.toLowerCase).foreach { df =>
-          try df.unpersist() catch { case _: Throwable => () }
-        }
-        removeTable(name)
-        status("dropped", name.toLowerCase)
-      }
-    case InsertRe(q, b, colListOrNull, body0) =>
-      val name = Option(q).getOrElse(b)
-      val target = lookup(name) // loud on unknown target
-      // ON CONFLICT (r10): split at the LAST top-level ON CONFLICT
-      // (an unparenthesized join's ON inside an INSERT ... SELECT body
-      // is followed by its condition, never by the keyword CONFLICT)
-      Spans.around(body0, "on", "conflict").lastOption match {
-        case Some((body, tail)) =>
-          insertOnConflict(name, Option(colListOrNull), body, tail)
-        case None =>
-          val src = insertSrcSql(body0)
-          Option(colListOrNull) match {
-            case None =>
-              // positional (standard): UNION ALL carries the new rows —
-              // arity/type mismatches fail at analysis, loudly
-              registerTable(name,
-                translateOnly(s"select * from $name union all $src"))
-            case Some(colList) =>
-              registerTable(name, target.unionByName(
-                insertFilled(target, name, Some(colList), src)))
-          }
-          status("inserted", name.toLowerCase)
-      }
-    case DeleteUsingRe(tq, tb, tAl, sq, sb, sAl, cond) =>
-      val tName = Option(tq).getOrElse(tb)
-      val sName = Option(sq).getOrElse(sb)
-      lookup(tName); lookup(sName)
-      val tA = Option(tAl).getOrElse(tName)
-      val sA = Option(sAl).getOrElse(sName)
-      // the anti of the semi: keep target rows with NO source row
-      // satisfying the condition. The correlated-EXISTS machinery
-      // decorrelates equality conjuncts into one key anti-join;
-      // multi-match needs no guard (no expression reads the source
-      // row) — PostgreSQL's semantics exactly.
-      registerTable(tName, translateOnly(
-        s"""select * from "$tName" as $tA where not exists """ +
-        s"""(select 1 from "$sName" as $sA where ($cond))"""))
-      status("deleted", tName.toLowerCase)
-    case DeleteRe(q, b, pred) =>
-      val name = Option(q).getOrElse(b)
-      lookup(name)
-      // rows where the predicate is TRUE are deleted; NULL keeps
-      // (the standard's 3VL) — and the WHERE path brings the whole
-      // dialect (subqueries included) for free
-      registerTable(name, translateOnly(
-        s"select * from $name where not coalesce(($pred), false)"))
-      status("deleted", name.toLowerCase)
-    case UpdateRe(q, b, tAl, tail) =>
-      val name = Option(q).getOrElse(b)
-      val target = lookup(name)
-      // a top-level FROM ends the SET list and routes to the r9
-      // join-update form (PostgreSQL UPDATE ... FROM)
-      Spans.around(tail, "from").headOption match {
-        case Some((setList, from)) =>
-          return updateFromStatement(name, Option(tAl), setList, from)
-        case None =>
-      }
-      val (assigns, pred) = updateSet(target, name, tail)
-      val items = target.columns.map { c =>
-        assigns.get(c.toLowerCase) match {
-          case Some(e) => pred match {
-            case Some(p) => s"""case when ($p) then ($e) else "$c" end as "$c""""
-            case None    => s"""($e) as "$c""""
-          }
-          case None => s""""$c""""
-        }
-      }
-      // thread the optional alias into the rewritten SELECT (r9
-      // ADVICE: a silently-dropped alias made `x.col` refs fail with
-      // an opaque unresolved-column error)
-      val fromTxt = tAl match {
-        case null => s""""$name""""
-        case al   => s""""$name" as $al"""
-      }
-      registerTable(name,
-        translateOnly(s"select ${items.mkString(", ")} from $fromTxt"))
-      status("updated", name.toLowerCase)
-    case MergeUsingSubqueryRe() =>
-      // USING (subquery) [AS] alias (r8): cut out the subquery (the
-      // statement's first paren group), register its LAZY plan under a
-      // reserved temp name, and re-enter with the rewritten text —
-      // the alias keeps working as the source qualifier
-      usingSubquery(sqlText, "__merge_using_sub")
-    case DeleteUsingSubRe() =>
-      // DELETE ... USING (subquery) alias (r9): same cut + re-enter
-      // pattern as MERGE USING (subquery)
-      usingSubquery(sqlText, "__del_using_sub")
-    case MergeRe(tq, tb, tAl, sq, sb, sAl, rest) =>
-      mergeStatement(Option(tq).getOrElse(tb), Option(tAl),
-        Option(sq).getOrElse(sb), Option(sAl), rest)
-    case ExportDbRe(dir, opts) =>
-      val fmtOpts = Option(opts).getOrElse("format parquet")
-      val (_, _) = copyOptions(fmtOpts, "") // validate once, loudly
-      val names = tables.keys.toSeq.sorted
-      // quoted identifiers can hold path separators, '..' or control
-      // chars — interpolated into '$dir/$n' paths and the newline-
-      // delimited manifest they would escape the export dir or
-      // corrupt the manifest (r11 ADVICE): loud wall
-      names.find(n => n.contains("..") || n.exists(c =>
-          c == '/' || c == '\\' || Character.isISOControl(c)))
-        .foreach(bad => fail("EXPORT DATABASE: table name " +
-          s"'$bad' cannot name an export directory (path separator, " +
-          "'..', or control character) — rename it first"))
-      names.foreach { n => copyTo(lookup(n), s"$dir/$n", fmtOpts) }
-      // manifest: IMPORT restores exactly THIS export's table set — a
-      // re-export into a reused directory must not resurrect stale
-      // subdirectories from an earlier, larger registry
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val out = fs.create(
-        new org.apache.hadoop.fs.Path(dir, "_graft_tables"), true)
-      try out.write((names.mkString("\n") + "\n").getBytes("UTF-8"))
-      finally out.close()
-      status("exported", dir)
-    case ImportDbRe(dir, opts) =>
-      val fmtOpts = Option(opts).getOrElse("format parquet")
-      val (format, extra) = copyOptions(fmtOpts, "")
-      // Hadoop FS, not java.io.File — EXPORT can target any FS the
-      // writer reaches (hdfs://, s3a://) and the roundtrip must too
-      val hPath = new org.apache.hadoop.fs.Path(dir)
-      val fs =
-        try hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        catch { case e: Exception =>
-          fail(s"IMPORT DATABASE: cannot access '$dir': ${e.getMessage}") }
-      val manifest = new org.apache.hadoop.fs.Path(dir, "_graft_tables")
-      val sub: Seq[String] =
-        if (fs.exists(manifest)) {
-          val in = fs.open(manifest)
-          val txt =
-            try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-            finally in.close()
-          txt.split("\n").map(_.trim).filter(_.nonEmpty).toSeq.sorted
-        } else if (fs.exists(hPath)) {
-          fs.listStatus(hPath).filter(_.isDirectory)
-            .map(_.getPath.getName).toSeq.sorted
-        } else fail(s"IMPORT DATABASE: cannot list '$dir'")
-      if (sub.isEmpty) fail(s"IMPORT DATABASE: no table directories in '$dir'")
-      // a crafted manifest line must not read outside the export dir
-      sub.find(n => n.contains("..") || n.exists(c =>
-          c == '/' || c == '\\' || Character.isISOControl(c)))
-        .foreach(bad => fail("IMPORT DATABASE: manifest entry " +
-          s"'$bad' is not a valid table directory name"))
-      sub.foreach { n =>
-        val r = spark.read.options(extra)
-        val df = format match {
-          case "csv" => r.option("header", extra.getOrElse("header", "true"))
-            .option("inferSchema", "true").csv(s"$dir/$n")
-          case "json"    => r.json(s"$dir/$n")
-          case "parquet" => r.parquet(s"$dir/$n")
-          case _         => r.orc(s"$dir/$n")
-        }
-        registerTable(n, df)
-      }
-      status("imported", dir)
-    case SummarizeRe(body) =>
-      body.trim match {
-        case BareNameRe(q, b) => summarize(lookup(Option(q).getOrElse(b)))
-        case queryText        => summarize(translateOnly(queryText))
-      }
-    case PrepareRe(q, b, body) =>
-      val name = Option(q).getOrElse(b)
-      if (preparedStmts.contains(name.toLowerCase))
-        fail(s"prepared statement '$name' already exists " +
-          "(DEALLOCATE it first)")
-      preparedStmts.put(name.toLowerCase, body)
-      status("prepared", name.toLowerCase)
-    case ExecuteRe(q, b, argsOrNull) =>
-      val name = Option(q).getOrElse(b)
-      val body = preparedStmts.getOrElse(name.toLowerCase,
-        fail(s"prepared statement '$name' is not registered"))
-      val args =
-        Option(argsOrNull).toSeq.flatMap(Spans.split(_, ",")).filter(_.nonEmpty)
-      // self- or mutually-recursive prepared statements (PREPARE a AS
-      // EXECUTE a) would re-enter query() unboundedly — fail loudly
-      // instead of StackOverflowError (r11 ADVICE); DuckDB rejects
-      // the cycle too. Legitimate nesting is shallow.
-      if (execDepth >= 16)
-        fail(s"EXECUTE '$name': prepared-statement recursion exceeds " +
-          "depth 16 (self- or mutually-recursive EXECUTE bodies)")
-      execDepth += 1
-      try query(bindParams(body, args))
-      finally execDepth -= 1
-    case DeallocRe(q, b) =>
-      val name = Option(q).getOrElse(b)
-      if (preparedStmts.remove(name.toLowerCase).isEmpty)
-        fail(s"prepared statement '$name' is not registered")
-      status("deallocated", name.toLowerCase)
-    case CopyToRe(q, b, path, opts) =>
-      copyTo(lookup(Option(q).getOrElse(b)), path, opts)
-    case CopyFromRe(q, b, path, opts) =>
-      copyFrom(Option(q).getOrElse(b), path, opts)
-    case CopyQuerySubRe() =>
-      // COPY (query) TO 'path' [(opts)]: the first paren group, like
-      // MERGE USING (subquery); the query goes through the dialect
-      val (_, subSql, after) = Spans.parenGroup(sqlText)
-      after match {
-        case CopyToTailRe(path, opts) =>
-          copyTo(translateOnly(subSql), path, opts)
-        case other => fail("COPY (query) must be followed by " +
-          s"TO 'path' [(options)], got: $other")
-      }
-    case TruncateRe(q, b) =>
-      val name = Option(q).getOrElse(b)
-      registerTable(name, lookup(name).limit(0))
-      status("truncated", name.toLowerCase)
-    case AlterRe(q, b, action) =>
-      import org.apache.spark.sql.{functions => F}
-      val name = Option(q).getOrElse(b)
-      val t = lookup(name)
-      val AddCol =
-        """(?is)^add\s+(?:column\s+)?(?:if\s+not\s+exists\s+)?(?:"([^"]+)"|(\w+))\s+(\w+(?:\s+\w+)*(?:\s*\(\s*\d+\s*(?:,\s*\d+\s*)?\))?)$""".r
-      val DropCol =
-        """(?is)^drop\s+(?:column\s+)?(?:if\s+exists\s+)?(?:"([^"]+)"|(\w+))$""".r
-      val RenameCol =
-        """(?is)^rename\s+(?:column\s+)?(?:"([^"]+)"|(\w+))\s+to\s+(?:"([^"]+)"|(\w+))$""".r
-      val RenameTo =
-        """(?is)^rename\s+to\s+(?:"([^"]+)"|(\w+))$""".r
-      action.trim match {
-        case AddCol(cq, cb, typ) =>
-          val c = Option(cq).getOrElse(cb)
-          if (t.columns.exists(_.equalsIgnoreCase(c)))
-            fail(s"ALTER TABLE: column '$c' already exists in $name")
-          // the new column reads NULL of the declared type (ADD
-          // COLUMN over a lazy plan cannot backfill); the type name
-          // goes through the dialect's CAST catalog via a 1-row parse
-          // (table name QUOTED — r9 ADVICE: an unquoted probe broke
-          // for quoted names with spaces/mixed case; multi-word
-          // standard spellings parse since r10's parseTypeName)
-          val typed = translateOnly(
-            s"""select cast(null as $typ) as "$c" from "$name"""")
-          registerTable(name,
-            t.withColumn(c, F.lit(null).cast(typed.schema.head.dataType)))
-          status("altered", name.toLowerCase)
-        case DropCol(cq, cb) =>
-          val c = Option(cq).getOrElse(cb)
-          val real = t.columns.find(_.equalsIgnoreCase(c))
-            .getOrElse(fail(s"ALTER TABLE: column '$c' not in $name"))
-          if (t.columns.length == 1)
-            fail("ALTER TABLE: cannot drop the only column")
-          registerTable(name, t.drop(real))
-          status("altered", name.toLowerCase)
-        case RenameCol(cq, cb, nq, nb) =>
-          val c = Option(cq).getOrElse(cb)
-          val n = Option(nq).getOrElse(nb)
-          val real = t.columns.find(_.equalsIgnoreCase(c))
-            .getOrElse(fail(s"ALTER TABLE: column '$c' not in $name"))
-          if (t.columns.exists(_.equalsIgnoreCase(n)))
-            fail(s"ALTER TABLE: column '$n' already exists in $name")
-          registerTable(name, t.withColumnRenamed(real, n))
-          status("altered", name.toLowerCase)
-        case RenameTo(nq, nb) =>
-          val n = Option(nq).getOrElse(nb)
-          if (tables.contains(n.toLowerCase))
-            fail(s"ALTER TABLE RENAME: '$n' already exists")
-          registerTable(n, t); removeTable(name)
-          status("renamed", n.toLowerCase)
-        case other => fail("ALTER TABLE supports ADD/DROP/RENAME " +
-          s"COLUMN and RENAME TO, got: $other")
-      }
-    case ExplainRe(body) =>
-      import spark.implicits._
-      explain(body).split("\n").toSeq.toDF("plan")
-    case DescribeRe(quoted, bare) =>
-      import spark.implicits._
-      val name = Option(quoted).getOrElse(bare)
-      lookup(name).schema.fields.toSeq
-        .map(f => (f.name, f.dataType.simpleString, f.nullable))
-        .toDF("col_name", "data_type", "nullable")
-    case ShowTablesRe() =>
-      import spark.implicits._
-      tables.keySet.toSeq.sorted.toDF("table_name")
-    // SET / RESET session configuration (r12, DuckDB/Spark-SQL
-    // statement surface): values route to the session's RuntimeConf —
-    // Spark itself rejects static/unknown-static keys loudly. Quoted
-    // values unwrap; `SET key TO value` (PostgreSQL spelling) works.
-    // The session-global effect is the point: `set
-    // spark.sql.shuffle.partitions = 16` mid-script reshapes every
-    // later statement's plan, exactly like the DuckDB PRAGMA dial.
-    case SetRe(key, value0) =>
-      val value = value0.trim match {
-        case v if v.length >= 2 && v.startsWith("'") && v.endsWith("'") =>
-          v.substring(1, v.length - 1).replace("''", "'")
-        case v => v
-      }
-      spark.conf.set(key, value)
-      status("set", s"$key=$value")
-    case ResetRe(key) =>
-      spark.conf.unset(key)
-      status("reset", key)
-    case CreateMacroHeadRe(orReplace, quoted, bare) =>
-      createMacro(sqlText, orReplace != null, Option(quoted).getOrElse(bare))
-    case DropMacroRe(ifExists, quoted, bare) =>
-      val name = Option(quoted).getOrElse(bare).toLowerCase
-      if (macros.remove(name).isEmpty && ifExists == null)
-        fail(s"macro '$name' is not registered")
-      status("dropped_macro", name)
-    case _ => translateOnly(sqlText)
-  }
-
-  /** Registers a statement's first paren group — a USING (subquery)
-    * source — under `tmp` and re-enters [[query]] with the group
-    * replaced by that name. */
-  private def usingSubquery(sqlText: String, tmp: String): DataFrame = {
-    val (before, subSql, after) = Spans.parenGroup(sqlText)
-    registerTable(tmp, translateOnly(subSql))
-    try query(s"$before $tmp $after")
-    finally removeTable(tmp)
+    if (qmarks > 0 && maxDollar > 0)
+      fail("EXECUTE: prepared statement mixes '?' and '$n' placeholders")
+    val consumed = if (qmarks > 0) qmarks else maxDollar
+    if (consumed != args.length)
+      fail(s"EXECUTE: statement binds $consumed parameter(s) but " +
+        s"${args.length} argument(s) supplied")
+    out
   }
 
   // ---- CREATE MACRO (r11c, DuckDB dialect) ---------------------------
@@ -917,11 +710,10 @@ final class Graft(val spark: SparkSession) {
   /** Registered macro names (introspection; mirrors tableNames). */
   def macroNames: Set[String] = macros.keySet.toSet
 
-  private def createMacro(sqlText: String, orReplace: Boolean,
-                          name: String): DataFrame = {
-    val lower = name.toLowerCase
+  private def createMacro(m: S.CreateMacro): DataFrame = {
+    val lower = m.name.toLowerCase
     if (Macros.builtinTableFns.contains(lower))
-      fail(s"macro name '$name' shadows the builtin table function")
+      fail(s"macro name '${m.name}' shadows the builtin table function")
     // a macro named after a builtin scalar function would silently
     // rewrite every matching-arity call in the session (the expander
     // substitutes any registered FuncCall name) — DuckDB rejects
@@ -938,38 +730,19 @@ final class Graft(val spark: SparkSession) {
       try spark.catalog.functionExists(lower)
       catch { case _: Exception => false }
     if (parserReservedFns.contains(lower) || registryCollision)
-      fail(s"macro name '$name' shadows a builtin function " +
+      fail(s"macro name '${m.name}' shadows a builtin function " +
         "(DuckDB-compatible restriction: pick a non-colliding name)")
-    if (!orReplace && macros.contains(lower))
-      fail(s"macro '$name' already exists (use CREATE OR REPLACE MACRO)")
-    // the parameter list is the first paren group (a quoted name is
-    // one identifier token, whatever it holds)
-    val (_, paramsTxt, after) = Spans.parenGroup(sqlText)
-    val AsTail = """(?is)^\s*as\s+(.*?)\s*;?\s*$""".r
-    val bodyTxt = after match {
-      case AsTail(b) => b
-      case other => fail(s"CREATE MACRO expects AS <body>, got: $other")
-    }
-    val ParamRe = """(?s)^\s*([a-zA-Z_][a-zA-Z0-9_]*)\s*(?::=\s*(.+?))?\s*$""".r
-    val params = Spans.split(paramsTxt, ",").filter(_.nonEmpty).map {
-      case ParamRe(p, dflt) =>
-        (p.toLowerCase, Option(dflt).map(Parser.parseExpression))
-      case other => fail(s"CREATE MACRO parameter must be 'name' or " +
-        s"'name := default', got: $other")
-    }
+    if (!m.orReplace && macros.contains(lower))
+      fail(s"macro '${m.name}' already exists (use CREATE OR REPLACE MACRO)")
+    val params = m.params.map(p => (p.name.toLowerCase, p.default))
     if (params.map(_._1).distinct.length != params.length)
       fail("CREATE MACRO parameter list names a parameter twice")
     // defaults must be trailing (positional binding fills from the left)
     val firstDefault = params.indexWhere(_._2.isDefined)
     if (firstDefault >= 0 && params.drop(firstDefault).exists(_._2.isEmpty))
       fail("CREATE MACRO: parameters with defaults must come last")
-    val TableBody = """(?is)^table\s+(.*)$""".r
-    val body = bodyTxt match {
-      case TableBody(q) => Right(graft.sql.Parser.parse(q))
-      case e => Left(Parser.parseExpression(e))
-    }
     macros.put(lower, Macros.Macro(lower, params.map(_._1),
-      params.collect { case (p, Some(d)) => p -> d }.toMap, body))
+      params.collect { case (p, Some(d)) => p -> d }.toMap, m.body))
     status("macro", lower)
   }
 
@@ -990,39 +763,21 @@ final class Graft(val spark: SparkSession) {
     "list_has_all", "list_unique", "starts_with", "ends_with",
     "prefix", "suffix", "regexp_matches", "regexp_full_match")
 
-  private sealed trait MergeAction
-  private case object DeleteAct extends MergeAction
-  private case object UpdateStar extends MergeAction
-  private final case class UpdateCols(assigns: Seq[(String, String)]) extends MergeAction
-  private case object InsertStar extends MergeAction
-  private final case class InsertCols(cols: Seq[String], exprs: Seq[String]) extends MergeAction
-  // cat: 0 = WHEN MATCHED, 1 = WHEN NOT MATCHED [BY TARGET],
-  //      2 = WHEN NOT MATCHED BY SOURCE
-  private final case class MergeClause(cat: Int, cond: Option[String],
-                                       act: MergeAction)
-
-  /** Wraps a VALUES body as a selectable derived table. */
-  private def insertSrcSql(body: String): String =
-    if (body.trim.toLowerCase.startsWith("values"))
-      s"select * from ($body) __ins"
-    else body
 
   /** The INSERT source as a full-target-schema frame: listed columns
     * take the source positionally, unlisted ones read NULL;
     * assignment-casts to the target types (the standard INSERT
-    * semantics). colList = None takes the source positionally across
-    * ALL target columns. */
+    * semantics). cols = None takes the source positionally across ALL
+    * target columns. */
   private def insertFilled(target: DataFrame, name: String,
-                           colList: Option[String],
-                           src: String): DataFrame = {
+                           cols0: Option[Seq[String]],
+                           src: SetExpr): DataFrame = {
     import org.apache.spark.sql.{functions => F}
-    val cols = colList match {
-      case Some(cl) => Spans.split(cl, ",").map(column(target, name, _, "INSERT"))
-      case None => target.columns.toSeq
-    }
+    val cols = cols0.map(_.map(column(target, name, _, "INSERT")))
+      .getOrElse(target.columns.toSeq)
     if (cols.distinct.length != cols.length)
       fail("INSERT column list names a column twice")
-    val srcDf = translateOnly(src)
+    val srcDf = translate(src)
     if (srcDf.columns.length != cols.length)
       fail(s"INSERT: ${cols.length} columns listed but the source " +
         s"has ${srcDf.columns.length}")
@@ -1046,49 +801,34 @@ final class Graft(val spark: SparkSession) {
     * "cannot affect row a second time". The conflict target column
     * list is REQUIRED (there is no unique-constraint registry to
     * infer it from). */
-  private def insertOnConflict(name: String, colList: Option[String],
-                               body: String, tail: String): DataFrame = {
+  private def insertOnConflict(name: String, cols: Option[Seq[String]],
+                               src: SetExpr, oc: OnConflict): DataFrame = {
     val target = lookup(name)
-    val OcRe =
-      """(?is)^\s*(?:\(([^)]*)\)\s*)?do\s+(?:(nothing)|update\s+set\s+(.*?))\s*;?\s*$""".r
-    val (keysTxt, setList) = tail match {
-      case OcRe(ks, n2, sl) =>
-        if (n2 != null) (Option(ks), None) else (Option(ks), Some(sl))
-      case _ => fail("ON CONFLICT expects [(key cols)] DO NOTHING or " +
-        s"DO UPDATE SET assignments, got: $tail")
-    }
-    val keys = keysTxt.map(ks =>
-      Spans.split(ks, ",").map(column(target, name, _, "ON CONFLICT"))
-    ).getOrElse(fail("ON CONFLICT requires an explicit conflict " +
-      "target column list — there is no unique-constraint registry " +
-      "to infer one from"))
-    if (keys.isEmpty) fail("ON CONFLICT key list is empty")
-    val filled = insertFilled(target, name, colList, insertSrcSql(body))
+    val keys = oc.keys.map(_.map(column(target, name, _, "ON CONFLICT")))
+      .getOrElse(fail("ON CONFLICT requires an explicit conflict " +
+        "target column list — there is no unique-constraint registry " +
+        "to infer one from"))
     val tmp = "__ins_conflict_src"
-    registerTable(tmp, filled)
-    try {
-      // bare same-named keys (both frames carry the full target
-      // schema); two proposed rows sharing a key that is ABSENT from
-      // the target both insert — set semantics, vs PostgreSQL's
-      // row-at-a-time self-conflict skip
-      val onTxt = keys.map(k => s"$k = $k").mkString(" and ")
-      val restTxt = setList match {
-        case Some(sl) => s"$onTxt when matched then update set $sl " +
-          "when not matched then insert *"
-        case None => s"$onTxt when not matched then insert *"
-      }
-      mergeStatement(name, None, tmp, Some("excluded"), restTxt)
-    } finally removeTable(tmp)
+    val scope = Map(tmp -> insertFilled(target, name, cols, src))
+    // bare same-named keys (both frames carry the full target
+    // schema); two proposed rows sharing a key that is ABSENT from
+    // the target both insert — set semantics, vs PostgreSQL's
+    // row-at-a-time self-conflict skip
+    val on = keys.map(k => Cmp("=", col(k), col(k)))
+    val clauses =
+      oc.set.map(s => MergeClause(WhenMatched, None, MergeUpdate(s))).toSeq :+
+        MergeClause(WhenNotMatched, None, MergeInsertAll)
+    merge(name, None, tmp, Some("excluded"), on, clauses, scope)
     status("inserted", name.toLowerCase)
   }
 
   /** The target and source frames of a MERGE (and of the UPDATE ...
     * FROM and ON CONFLICT forms lowered through it): which frame an
-    * expression text reads, and rewriting its qualified refs. */
+    * expression reads, and rewriting its qualified refs. */
   private final class Frames(tName: String, tAlias: Option[String],
-                             sName: String, sAlias: Option[String]) {
-    val target: DataFrame = lookup(tName)
-    val source: DataFrame = lookup(sName)
+                             sName: String, sAlias: Option[String], scope: Scope) {
+    val target: DataFrame = resolve(scope)(tName)
+    val source: DataFrame = resolve(scope)(sName)
     val tQuals: Set[String] = Set(tName.toLowerCase) ++ tAlias.map(_.toLowerCase)
     val sQuals: Set[String] = Set(sName.toLowerCase) ++ sAlias.map(_.toLowerCase)
     def inT(c: String): Boolean = target.columns.exists(_.equalsIgnoreCase(c))
@@ -1100,9 +840,9 @@ final class Graft(val spark: SparkSession) {
       * both frames must qualify, an unknown qualifier is a typo'd
       * alias (both loud; r9 ADVICE: a silent skip surfaced as a
       * confusing downstream analysis error). */
-    def sides(e: String): (Boolean, Boolean) = {
+    def sides(e: Expr): (Boolean, Boolean) = {
       var t = false; var s = false
-      Spans.mapRefs(e) { (q, c) =>
+      colRefs(e).foreach { case ColRef(q, c) =>
         q.map(_.toLowerCase) match {
           case Some(x) if tQuals(x) => t = true
           case Some(x) if sQuals(x) => s = true
@@ -1112,29 +852,37 @@ final class Graft(val spark: SparkSession) {
               fail(s"bare column '$id' exists in both the target and the " +
                 "source frame — qualify it (t.col / s.col)")
             if (q.isDefined && !inT(id) && !inS(id))
-              fail(s"unknown alias or column '$id' in: $e (known " +
-                s"qualifiers: ${(tQuals ++ sQuals).toSeq.sorted.mkString(", ")})")
+              fail(s"unknown alias or column '$id' (known qualifiers: " +
+                s"${(tQuals ++ sQuals).toSeq.sorted.mkString(", ")})")
             t ||= inT(id); s ||= inS(id)
         }
-        None
       }
       (t, s)
     }
 
     /** `e` with each qualified ref replaced by `tMap(col)` (target
       * qualifier) or `sMap(col)` (source qualifier), col spelled as in
-      * its frame; bare refs stay. */
-    def rewrite(e: String, tMap: String => String,
-                sMap: String => String): String =
-      Spans.mapRefs(e) {
-        case (Some(q), c) if tQuals(q.toLowerCase) =>
-          Some(tMap(target.columns.find(_.equalsIgnoreCase(c))
-            .getOrElse(fail(s"MERGE: column '$c' not in target"))))
-        case (Some(q), c) if sQuals(q.toLowerCase) =>
-          Some(sMap(source.columns.find(_.equalsIgnoreCase(c))
-            .getOrElse(fail(s"MERGE: column '$c' not in source"))))
-        case _ => None
+      * its frame; bare refs stay. Subquery bodies are rewritten too. */
+    def rewrite(e: Expr, tMap: String => Expr, sMap: String => Expr): Expr =
+      Ast.transformDeep(e) {
+        case ColRef(Some(q), c) if tQuals(q.toLowerCase) =>
+          tMap(target.columns.find(_.equalsIgnoreCase(c))
+            .getOrElse(fail(s"MERGE: column '$c' not in target")))
+        case ColRef(Some(q), c) if sQuals(q.toLowerCase) =>
+          sMap(source.columns.find(_.equalsIgnoreCase(c))
+            .getOrElse(fail(s"MERGE: column '$c' not in source")))
       }
+
+    /** (target side, source side) of a two-sided equality. */
+    def oriented(c: Expr): Option[(Expr, Expr)] = c match {
+      case Cmp("=", l, r) =>
+        val (lt, ls) = sides(l)
+        val (rt, rs) = sides(r)
+        if (lt && !ls && rs && !rt) Some((l, r))
+        else if (ls && !lt && rt && !rs) Some((r, l))
+        else None
+      case _ => None
+    }
   }
 
   /** UPDATE ... FROM (r9): the PostgreSQL join-update form, lowered
@@ -1146,74 +894,39 @@ final class Graft(val spark: SparkSession) {
     * everything else rides WHEN MATCHED AND. Multi-match after the
     * pre-filter raises MERGE's cardinality violation — STRICTER than
     * PostgreSQL, which silently applies an arbitrary matching row. */
-  private def updateFromStatement(tName: String, tAlias: Option[String],
-                                  setList: String,
-                                  fromTail: String): DataFrame = {
-    lookup(tName) // an unknown target is loud before the source registers
-    val FromRe =
-      ("""(?is)^\s*(?:"([^"]+)"|([a-zA-Z_][a-zA-Z0-9_]*))""" +
-       """(?:\s+(?:as\s+)?([a-zA-Z_][a-zA-Z0-9_]*))?\s*$""").r
-    val (fromPart, cond) = Spans.around(fromTail, "where").headOption
-      .getOrElse(fail("UPDATE ... FROM requires a WHERE with at least " +
-        "one target=source equality conjunct (the join key)"))
-    // FROM (subquery) alias (r9): register the derived source's lazy
-    // plan under a reserved name — the composed MERGE plan captures
-    // the DataFrame, so the name unregisters on exit
-    val (sName, sAlias, tmpSub) = fromPart match {
-      case fp if fp.startsWith("(") =>
-        val (_, sub, after) = Spans.parenGroup(fp)
-        val al = """(?is)^\s*(?:as\s+)?([a-zA-Z_][a-zA-Z0-9_]*)\s*$""".r
-          .findFirstMatchIn(after).map(_.group(1))
-          .getOrElse(fail(
-            "UPDATE ... FROM (subquery) requires an alias"))
-        val tmp = "__upd_from_sub"
-        registerTable(tmp, translateOnly(sub))
-        (tmp, Some(al), true)
-      case FromRe(q2, b2, al) =>
-        (Option(q2).getOrElse(b2), Option(al), false)
-      case other => fail("UPDATE ... FROM supports a single table or " +
-        s"(subquery) alias source, got: $other")
+  private def updateFrom(tName: String, tAlias: Option[String],
+                         set: Seq[Assignment], from: Relation,
+                         where: Option[Expr]): DataFrame = {
+    lookup(tName) // an unknown target is loud before the source
+    val cond = where.getOrElse(fail("UPDATE ... FROM requires a WHERE " +
+      "with at least one target=source equality conjunct (the join key)"))
+    from match {
+      case SubqueryRel(_, None) =>
+        fail("UPDATE ... FROM (subquery) requires an alias")
+      case _ =>
     }
-    try {
-    val fr = new Frames(tName, tAlias, sName, sAlias)
-    val onKeys = Seq.newBuilder[String]
-    val srcOnly = Seq.newBuilder[String]
-    val residual = Seq.newBuilder[String]
-    Spans.split(cond, "and").map(Spans.stripParens).foreach { c =>
-      val isKey = Spans.equality(c).exists { case (l, r) =>
-        val (lt, ls) = fr.sides(l)
-        val (rt, rs) = fr.sides(r)
-        (lt && !ls && rs && !rt) || (ls && !lt && rt && !rs)
-      }
-      if (isKey) onKeys += c
-      else {
-        val (t2, s2) = fr.sides(c)
-        if (s2 && !t2) srcOnly += c else residual += c
-      }
-    }
-    val keys = onKeys.result()
+    val (TableRef(sName, sAlias), scope0) = source(from, "__upd_from_sub")
+    val fr = new Frames(tName, tAlias, sName, sAlias, scope0)
+    val (keys, rest) = conjuncts(cond).partition(fr.oriented(_).isDefined)
     if (keys.isEmpty)
       fail("UPDATE ... FROM requires at least one target=source " +
         "equality conjunct in WHERE (the join key)")
-    val res = residual.result()
-    val andTxt =
-      if (res.isEmpty) "" else s" and ${res.map(c => s"($c)").mkString(" and ")}"
-    val restTxt =
-      s"${keys.mkString(" and ")} when matched$andTxt then update set $setList"
-    val srcConds = srcOnly.result()
-    if (srcConds.isEmpty)
-      mergeStatement(tName, tAlias, sName, sAlias, restTxt)
+    val (srcOnly, residual) = rest.partition { c =>
+      val (t, s) = fr.sides(c); s && !t
+    }
+    val clause = MergeClause(WhenMatched,
+      if (residual.isEmpty) None else Some(conj(residual)), MergeUpdate(set))
+    if (srcOnly.isEmpty)
+      merge(tName, tAlias, sName, sAlias, keys, Seq(clause), scope0)
     else {
       val sEff = sAlias.getOrElse(sName)
       val tmp = "__upd_src"
-      registerTable(tmp, translateOnly(
-        s"""select * from "$sName" as $sEff where """ +
-        srcConds.map(c => s"($c)").mkString(" and ")))
-      try mergeStatement(tName, tAlias, tmp, Some(sEff), restTxt)
-      finally removeTable(tmp)
+      val filtered = translate(
+        selectFrom(Seq(star), TableRef(sName, Some(sEff)), Some(conj(srcOnly))), scope0)
+      merge(tName, tAlias, tmp, Some(sEff), keys, Seq(clause),
+        scope0 + (tmp -> filtered))
     }
     status("updated", tName.toLowerCase)
-    } finally if (tmpSub) removeTable(sName)
   }
 
   /** MERGE INTO lowering (r8 general form; r9 generalizes ON to
@@ -1236,71 +949,59 @@ final class Graft(val spark: SparkSession) {
     *  - A non-last clause of a category without an AND condition
     *    shadows everything after it — rejected loudly (Delta's rule).
     *
+    * `on` holds the ON condition's conjuncts; `scope` names the
+    * statement's intermediate frames (each step below adds its own).
+    *
     * Plan shape at scale: one per-key count window on the SOURCE
     * (same shuffle key as the join, so the exchange is shared), one
     * left join target↔source on the keys, a single projection of
     * per-column CASE chains, plus one anti join for the insert leg —
     * no driver-side action, nothing materializes. */
-  private def mergeStatement(tName: String, tAlias: Option[String],
-                             sName: String, sAlias: Option[String],
-                             rest: String): DataFrame = {
+  private def merge(tName: String, tAlias: Option[String],
+                    sName: String, sAlias: Option[String],
+                    on: Seq[Expr], clauses0: Seq[MergeClause],
+                    scope: Scope): DataFrame = {
     import org.apache.spark.sql.{functions => F}
     import org.apache.spark.sql.expressions.Window
-    val fr = new Frames(tName, tAlias, sName, sAlias)
+    val fr = new Frames(tName, tAlias, sName, sAlias, scope)
     val target = fr.target; val source = fr.source
-    val segs = Spans.split(rest, "when")
-    if (segs.length < 2) fail("MERGE requires at least one WHEN clause")
-    val onCond = segs.head
 
     // ON: equality conjuncts, each comparing a TARGET-side expression
     // with a SOURCE-side expression (r9: differently-named columns —
     // `t.id = s.src_id` — and expression keys — `t.k = s.k + 1` —
     // join through computed key columns; same-named bare keys keep
-    // working). Non-equality conjuncts stay loud: the keyed-
-    // maintenance lowering needs hash-joinable keys, residual
-    // predicates belong in WHEN ... AND.
-    def q(c: String) = "\"" + c + "\""
-    // ON conjunct classification (r9): two-sided equalities become
-    // the JOIN KEYS; everything else is a RESIDUAL — part of the match condition (a
-    // key-matched row failing the residual is NOT MATCHED: matched
-    // clauses skip it, BY SOURCE sees it, the insert leg admits its
-    // source row). Residuals must qualify every frame ref — they
-    // evaluate in differently-named frames per leg.
-    val keyB = Seq.newBuilder[(String, String)]
-    val resB = Seq.newBuilder[String]
-    Spans.split(onCond, "and").map(Spans.stripParens).foreach { c =>
-      val asKey: Option[(String, String)] =
-        Spans.equality(c).flatMap { case (lhs, rhs) =>
-          (Spans.ref(lhs), Spans.ref(rhs)) match {
-            // legacy same-named bare key (`ON k = k`): both sides
-            // read the like-named column of their own frame
-            case (Some((None, a)), Some((None, b))) if a.equalsIgnoreCase(b) &&
-                fr.inT(a) && fr.inS(a) =>
-              Some((q(target.columns.find(_.equalsIgnoreCase(a)).get),
-                    q(source.columns.find(_.equalsIgnoreCase(a)).get)))
-            case _ =>
-              val (lt, ls) = fr.sides(lhs)
-              val (rt, rs) = fr.sides(rhs)
-              val oriented =
-                if (lt && !ls && rs && !rt) Some((lhs, rhs))
-                else if (ls && !lt && rt && !rs) Some((rhs, lhs))
-                else None
-              oriented.map { case (tTxt, sTxt) =>
-                (fr.rewrite(tTxt, q,
-                   _ => fail("MERGE ON: source ref on the target side")),
-                 fr.rewrite(sTxt,
-                   _ => fail("MERGE ON: target ref on the source side"), q))
-              }
+    // working), become the JOIN KEYS. Everything else is a RESIDUAL —
+    // part of the match condition (a key-matched row failing the
+    // residual is NOT MATCHED: matched clauses skip it, BY SOURCE sees
+    // it, the insert leg admits its source row). Residuals must
+    // qualify every frame ref — they evaluate in differently-named
+    // frames per leg.
+    val keyB = Seq.newBuilder[(Expr, Expr)]
+    val resB = Seq.newBuilder[Expr]
+    on.foreach { c =>
+      val asKey: Option[(Expr, Expr)] = c match {
+        // legacy same-named bare key (`ON k = k`): both sides read the
+        // like-named column of their own frame
+        case Cmp("=", ColRef(None, a), ColRef(None, b))
+            if a.equalsIgnoreCase(b) && fr.inT(a) && fr.inS(a) =>
+          Some((col(target.columns.find(_.equalsIgnoreCase(a)).get),
+                col(source.columns.find(_.equalsIgnoreCase(a)).get)))
+        case _ =>
+          fr.oriented(c).map { case (tE, sE) =>
+            (fr.rewrite(tE, col,
+               _ => fail("MERGE ON: source ref on the target side")),
+             fr.rewrite(sE,
+               _ => fail("MERGE ON: target ref on the source side"), col))
           }
-        }
+      }
       asKey match {
         case Some(k) => keyB += k
         case None =>
-          Spans.mapRefs(c) {
-            case (None, id) if fr.inT(id) || fr.inS(id) =>
-              fail("MERGE ON non-key conjuncts must qualify every " +
-                s"column reference (t.col / s.col); got bare '$id' in: $c")
-            case _ => None
+          colRefs(c).collectFirst {
+            case ColRef(None, id) if fr.inT(id) || fr.inS(id) => id
+          }.foreach { id =>
+            fail("MERGE ON non-key conjuncts must qualify every " +
+              s"column reference (t.col / s.col); got bare '$id'")
           }
           resB += c
       }
@@ -1309,116 +1010,72 @@ final class Graft(val spark: SparkSession) {
     val residuals = resB.result()
     if (keys.isEmpty)
       fail("MERGE ON requires at least one target=source equality " +
-        s"conjunct (the hash-join key), got: $onCond")
+        "conjunct (the hash-join key)")
     val tKeyNs = keys.indices.map(i => s"__t_key_$i")
     val sKeyNs = keys.indices.map(i => s"__s_key_$i")
     // computed key columns ride each frame through the dialect; the
     // final projections select only the target's columns, so the key
     // columns never surface
-    def attachKeys(df: DataFrame, base: String, exprs: Seq[String],
+    def attachKeys(df: DataFrame, base: String, exprs: Seq[Expr],
                    names: Seq[String]): DataFrame = {
       val tmp = s"__merge_keys_$base"
-      registerTable(tmp, df)
-      try {
-        val cols = df.columns.map(q).mkString(", ")
-        val ks = exprs.zip(names)
-          .map { case (e, n2) => s"($e) as ${q(n2)}" }.mkString(", ")
-        translateOnly(s"select $cols, $ks from $tmp")
-      } finally removeTable(tmp)
+      translate(selectFrom(
+        df.columns.toSeq.map(c => SelectItem(col(c), None)) ++
+          exprs.zip(names).map { case (e, n) => SelectItem(e, Some(n)) },
+        TableRef(tmp, None)), scope + (tmp -> df))
     }
     val targetK = attachKeys(target, "t", keys.map(_._1), tKeyNs)
     val sourceK = attachKeys(source, "s", keys.map(_._2), sKeyNs)
     def keyCond: org.apache.spark.sql.Column =
-      tKeyNs.zip(sKeyNs).map { case (a, b) =>
-        org.apache.spark.sql.functions.col(a) ===
-          org.apache.spark.sql.functions.col(b)
-      }.reduce(_ && _)
+      tKeyNs.zip(sKeyNs).map { case (a, b) => F.col(a) === F.col(b) }.reduce(_ && _)
 
-    // ---- parse the WHEN clauses
-    val HeadRe =
-      """(?is)^\s*(not\s+)?matched(?:\s+by\s+(source|target))?(?:\s+and\s+(.*?))?\s*$""".r
-    val clauses = segs.tail.map { seg =>
-      val (head, actTxt) = Spans.around(seg, "then").headOption
-        .getOrElse(fail(s"MERGE WHEN clause missing THEN: $seg"))
-      val (not, by, cond) = head match {
-        case HeadRe(n, b2, c) =>
-          (n != null, Option(b2).map(_.toLowerCase), Option(c).map(_.trim))
-        case _ => fail(s"cannot parse MERGE WHEN clause: when $seg")
+    // ---- check the WHEN clauses; SET / INSERT columns resolve to the
+    // target's spelling
+    val clauses = clauses0.map { cl =>
+      val act = (cl.kind, cl.action) match {
+        case (WhenNotMatched, MergeDelete) =>
+          fail("MERGE: WHEN NOT MATCHED cannot DELETE (no target row exists)")
+        case (WhenNotMatched, MergeUpdateAll | MergeUpdate(_)) =>
+          fail("MERGE: WHEN NOT MATCHED cannot UPDATE")
+        case (WhenNotMatchedBySource, MergeUpdateAll) =>
+          fail("MERGE: NOT MATCHED BY SOURCE cannot UPDATE SET * " +
+            "(no source row exists)")
+        case (WhenMatched, MergeInsertAll | MergeInsert(_, _)) =>
+          fail("MERGE: WHEN MATCHED cannot INSERT")
+        case (WhenNotMatchedBySource, MergeInsertAll | MergeInsert(_, _)) =>
+          fail("MERGE: NOT MATCHED BY SOURCE cannot INSERT")
+        case (_, MergeUpdate(set)) =>
+          // optionally target-qualified on the left side
+          MergeUpdate(set.map(a => a.copy(col = ColRef(None,
+            column(target, tName, a.col, "MERGE UPDATE", fr.tQuals)))))
+        case (_, MergeInsert(cols, values)) =>
+          MergeInsert(cols.map(column(target, tName, _, "MERGE INSERT")), values)
+        case (_, a) => a
       }
-      val cat = (not, by) match {
-        case (false, None)           => 0
-        case (true, None)            => 1
-        case (true, Some("target"))  => 1
-        case (true, Some("source"))  => 2
-        case (false, Some(b3)) =>
-          fail(s"WHEN MATCHED BY ${b3.toUpperCase} is not a MERGE form " +
-            "(BY SOURCE/TARGET qualify NOT MATCHED)")
-        case (true, Some(b3)) => fail(s"unknown MERGE qualifier BY $b3")
-      }
-      val act: MergeAction = actTxt match {
-        case a if a.matches("(?is)^delete$") =>
-          if (cat == 1) fail("MERGE: WHEN NOT MATCHED cannot DELETE " +
-            "(no target row exists)")
-          DeleteAct
-        case a if a.matches("(?is)^update\\s+set\\s+\\*$") =>
-          if (cat == 1) fail("MERGE: WHEN NOT MATCHED cannot UPDATE")
-          if (cat == 2) fail("MERGE: NOT MATCHED BY SOURCE cannot " +
-            "UPDATE SET * (no source row exists)")
-          UpdateStar
-        case a if a.matches("(?is)^update\\s+set\\s+.*$") =>
-          if (cat == 1) fail("MERGE: WHEN NOT MATCHED cannot UPDATE")
-          val setList = a.replaceFirst("(?is)^update\\s+set\\s+", "")
-          UpdateCols(Spans.split(setList, ",").map { asn =>
-            val (lhs, e) = Spans.around(asn, "=").headOption.getOrElse(
-              fail(s"MERGE UPDATE SET expects col = expr, got: $asn"))
-            // optionally target-qualified on the left side
-            column(target, tName, lhs, "MERGE UPDATE", fr.tQuals) -> e
-          })
-        case a if a.matches("(?is)^insert\\s+\\*$") =>
-          if (cat == 0) fail("MERGE: WHEN MATCHED cannot INSERT")
-          if (cat == 2) fail("MERGE: NOT MATCHED BY SOURCE cannot INSERT")
-          InsertStar
-        case a if a.matches("(?is)^insert\\s*\\(.*$") =>
-          if (cat == 0) fail("MERGE: WHEN MATCHED cannot INSERT")
-          if (cat == 2) fail("MERGE: NOT MATCHED BY SOURCE cannot INSERT")
-          val m = """(?is)^insert\s*\((.*?)\)\s*values\s*\((.*)\)\s*$"""
-            .r.findFirstMatchIn(a).getOrElse(
-              fail(s"MERGE INSERT expects INSERT (cols) VALUES (exprs): $a"))
-          val cols = Spans.split(m.group(1), ",")
-            .map(column(target, tName, _, "MERGE INSERT"))
-          val exprs = Spans.split(m.group(2), ",")
-          if (cols.length != exprs.length)
-            fail("MERGE INSERT: column/value count mismatch")
-          InsertCols(cols, exprs)
-        case a => fail(s"MERGE: unsupported action '$a'")
-      }
-      MergeClause(cat, cond, act)
+      cl.copy(action = act)
     }
 
     // Delta's shadowing rule: within a category, only the LAST clause
     // may omit its AND condition
-    Seq(0, 1, 2).foreach { cat =>
-      val inCat = clauses.filter(_.cat == cat)
-      inCat.dropRight(1).find(_.cond.isEmpty).foreach { _ =>
-        fail("MERGE: only the last WHEN clause of a kind may omit " +
-          "its AND condition (earlier unconditional clauses shadow " +
-          "the rest)")
-      }
-    }
-    val matchedCls = clauses.filter(_.cat == 0)
-    val insertCls  = clauses.filter(_.cat == 1)
-    val bySrcCls   = clauses.filter(_.cat == 2)
-    val starNeedsSchema = clauses.exists(c =>
-      c.act == UpdateStar || c.act == InsertStar)
-    if (starNeedsSchema) {
+    if (clauses.groupBy(_.kind).values.exists(_.dropRight(1).exists(_.cond.isEmpty)))
+      fail("MERGE: only the last WHEN clause of a kind may omit " +
+        "its AND condition (earlier unconditional clauses shadow " +
+        "the rest)")
+    val matchedCls = clauses.filter(_.kind == WhenMatched)
+    val insertCls  = clauses.filter(_.kind == WhenNotMatched)
+    val bySrcCls   = clauses.filter(_.kind == WhenNotMatchedBySource)
+    if (clauses.exists(c => c.action == MergeUpdateAll || c.action == MergeInsertAll)) {
       val sameCols = target.columns.map(_.toLowerCase).sorted
         .sameElements(source.columns.map(_.toLowerCase).sorted)
       if (!sameCols) fail("MERGE UPDATE SET * / INSERT * require " +
         "matching target/source schemas")
     }
 
-    val sQ = (c: String) => "\"__s_" + c.toLowerCase + "\""
-    def rw(e: String): String = fr.rewrite(e, q, sQ)
+    // the joined frame carries the source's columns as __s_<col>
+    val sCol = (c: String) => col("__s_" + c.toLowerCase)
+    def rw(e: Expr): Expr = fr.rewrite(e, col, sCol)
+    // the MATCH condition = key existence AND the ON residuals
+    val matchCond = conj(Cmp("=", col("__s_exists"), NumLit("1")) +: residuals.map(rw))
 
     // ---- target-side leg: kept + matched-updated + by-source-updated
     val targetLeg: DataFrame =
@@ -1461,13 +1118,13 @@ final class Graft(val spark: SparkSession) {
             // matching source row exists when the clause applies) —
             // enforced loudly below, so the surviving arbitrary
             // source values are never read.
-            (bySrcCls.flatMap(_.cond) ++ bySrcCls.flatMap(_.act match {
-              case UpdateCols(as) => as.map(_._2)
-              case _              => Seq.empty
+            (bySrcCls.flatMap(_.cond) ++ bySrcCls.flatMap(_.action match {
+              case MergeUpdate(set) => set.map(_.e)
+              case _                => Seq.empty
             })).foreach { e =>
               if (fr.sides(e)._2)
                 fail("MERGE: a NOT MATCHED BY SOURCE condition or " +
-                  s"assignment cannot reference source columns: $e")
+                  "assignment cannot reference source columns")
             }
             val tTag = targetK.withColumn("__t_rid",
               F.monotonically_increasing_id())
@@ -1476,14 +1133,10 @@ final class Graft(val spark: SparkSession) {
                 F.col(c).as("__s_" + c.toLowerCase)) ++
               sKeyNs.map(F.col) :+
               F.lit(1).as("__s_exists"): _*)
-            val j0 = tTag.join(sRen, keyCond, "left_outer")
             val tmp0 = "__merge_mflag"
-            registerTable(tmp0, j0)
-            val withM = try {
-              val matchTxt = (Seq("\"__s_exists\" = 1") ++
-                residuals.map(r => s"(${rw(r)})")).mkString(" and ")
-              translateOnly(s"""select *, ($matchTxt) as "__m" from $tmp0""")
-            } finally removeTable(tmp0)
+            val withM = translate(selectFrom(
+              Seq(star, SelectItem(matchCond, Some("__m"))), TableRef(tmp0, None)),
+              scope + (tmp0 -> tTag.join(sRen, keyCond, "left_outer")))
             val wr = Window.partitionBy(F.col("__t_rid"))
             withM
               .withColumn("__s_matched",
@@ -1499,63 +1152,41 @@ final class Graft(val spark: SparkSession) {
             targetK.join(sKeys, keyCond, "left_outer")
           }
         // compose the per-column CASE projection through the graft
-        // dialect (conditions/exprs are user dialect text)
+        // dialect (conditions and values are user expressions)
         val tmp = s"__merge_${tName.toLowerCase}"
-        registerTable(tmp, joined)
-        try {
-          val rowCls = clauses.filter(c => c.cat == 0 || c.cat == 2)
-          // BY-SOURCE-only + residuals rides the tag/fold branch above,
-          // which pre-computes the per-target-row flag
-          val flagMode = matchedCls.isEmpty && residuals.nonEmpty
-          def clauseCond(c: MergeClause): String = {
-            // the MATCH condition = key existence AND the ON
-            // residuals (3VL: a NULL residual is not-matched); BY
-            // SOURCE = its strict negation
-            val matchTxt = (Seq("\"__s_exists\" = 1") ++
-              residuals.map(r => s"(${rw(r)})")).mkString(" and ")
-            val m = if (flagMode) "\"__s_matched\" = 0"
-                    else if (c.cat == 0) s"($matchTxt)"
-                    else if (residuals.isEmpty) "\"__s_exists\" is null"
-                    else s"not coalesce(($matchTxt), false)"
-            c.cond match {
-              case Some(p) => s"($m) and (${rw(p)})"
-              case None    => m
-            }
-          }
-          val assigned: Set[String] = rowCls.flatMap(c => c.act match {
-            case UpdateStar        => target.columns.toSeq
-            case UpdateCols(as)    => as.map(_._1)
-            case _                 => Seq.empty
-          }).toSet
-          val items = target.columns.map { c =>
-            if (!assigned.contains(c)) s"${q(c)}"
-            else {
-              val branches = rowCls.map { cl =>
-                val v = cl.act match {
-                  case UpdateStar     => sQ(c)
-                  case UpdateCols(as) =>
-                    as.find(_._1 == c).map(a => s"(${rw(a._2)})").getOrElse(q(c))
-                  case DeleteAct      => q(c) // row dropped by the filter
-                  case _              => q(c)
-                }
-                s"when ${clauseCond(cl)} then $v"
-              }
-              s"case ${branches.mkString(" ")} else ${q(c)} end as ${q(c)}"
-            }
-          }
-          val delCase = {
-            val branches = rowCls.map { cl =>
-              val v = if (cl.act == DeleteAct) "true" else "false"
-              s"when ${clauseCond(cl)} then $v"
-            }
-            s"case ${branches.mkString(" ")} else false end"
-          }
-          val whereTxt =
-            if (rowCls.exists(_.act == DeleteAct)) s" where not ($delCase)"
-            else ""
-          translateOnly(
-            s"select ${items.mkString(", ")} from $tmp$whereTxt")
-        } finally removeTable(tmp)
+        val rowCls = clauses.filter(_.kind != WhenNotMatched)
+        // BY-SOURCE-only + residuals rides the tag/fold branch above,
+        // which pre-computes the per-target-row flag
+        val flagMode = matchedCls.isEmpty && residuals.nonEmpty
+        def clauseCond(c: MergeClause): Expr = {
+          // BY SOURCE = the strict negation of the MATCH condition
+          val m =
+            if (flagMode) Cmp("=", col("__s_matched"), NumLit("0"))
+            else if (c.kind == WhenMatched) matchCond
+            else if (residuals.isEmpty) IsNull(col("__s_exists"), negated = false)
+            else Not(Coalesce(Seq(matchCond, BoolLit(false))))
+          c.cond.fold(m)(p => And(m, rw(p)))
+        }
+        val assigned: Set[String] = rowCls.flatMap(_.action match {
+          case MergeUpdateAll   => target.columns.toSeq
+          case MergeUpdate(set) => set.map(_.col.name)
+          case _                => Seq.empty
+        }).toSet
+        val items = target.columns.toSeq.map { c =>
+          if (!assigned.contains(c)) SelectItem(col(c), None)
+          else SelectItem(CaseWhen(rowCls.map { cl =>
+            (clauseCond(cl), cl.action match {
+              case MergeUpdateAll   => sCol(c)
+              case MergeUpdate(set) => set.find(_.col.name == c).fold(col(c))(a => rw(a.e))
+              case _                => col(c) // a deleted row is dropped by the filter
+            })
+          }, col(c)), Some(c))
+        }
+        val deleted = CaseWhen(rowCls.map(cl =>
+          (clauseCond(cl), BoolLit(cl.action == MergeDelete))), BoolLit(false))
+        translate(selectFrom(items, TableRef(tmp, None),
+            if (rowCls.exists(_.action == MergeDelete)) Some(Not(deleted)) else None),
+          scope + (tmp -> joined))
       }
 
     // ---- insert leg: source rows with no target match
@@ -1575,81 +1206,55 @@ final class Graft(val spark: SparkSession) {
               .select(source.columns.toSeq.map(F.col): _*)
           else {
             val tmpS = "__merge_ins_src"; val tmpT = "__merge_ins_tgt"
-            registerTable(tmpS, source); registerTable(tmpT, target)
-            try {
-              // key texts hold bare refs of one frame each: qualify
-              // them, or a same-named key would compare t.k with t.k
-              def qualify(e: String, al: String, cols: Array[String]) =
-                "(" + Spans.mapRefs(e) {
-                  case (None, c) =>
-                    cols.find(_.equalsIgnoreCase(c)).map(col => s"$al.${q(col)}")
-                  case _ => None
-                } + ")"
-              val keyConds = keys.map { case (t, s2) =>
-                s"${qualify(t, "t", target.columns)} = " +
-                  qualify(s2, "s", source.columns)
+            // key expressions hold bare refs of one frame each: qualify
+            // them, or a same-named key would compare t.k with t.k
+            def qualify(e: Expr, al: String, cols: Array[String]) =
+              Ast.transformDeep(e) {
+                case ColRef(None, c) if cols.exists(_.equalsIgnoreCase(c)) =>
+                  ColRef(Some(al), cols.find(_.equalsIgnoreCase(c)).get)
               }
-              def inSub(e: String) =
-                "(" + fr.rewrite(e, c => "t." + q(c), c => "s." + q(c)) + ")"
-              translateOnly(
-                s"select s.* from $tmpS as s where not exists " +
-                s"(select 1 from $tmpT as t where " +
-                (keyConds ++ residuals.map(inSub)).mkString(" and ") + ")")
-            } finally { removeTable(tmpS); removeTable(tmpT) }
+            val keyConds = keys.map { case (t, s) =>
+              Cmp("=", qualify(t, "t", target.columns), qualify(s, "s", source.columns))
+            }
+            val inSub = residuals.map(fr.rewrite(_,
+              c => ColRef(Some("t"), c), c => ColRef(Some("s"), c)))
+            translate(selectFrom(Seq(SelectItem(Star(Some("s")), None)),
+              TableRef(tmpS, Some("s")),
+              Some(Not(ExistsSubquery(selectFrom(Seq(SelectItem(NumLit("1"), None)),
+                TableRef(tmpT, Some("t")), Some(conj(keyConds ++ inSub))))))),
+              scope + (tmpS -> source) + (tmpT -> target))
           }
         val tmp = s"__merge_src_${sName.toLowerCase}"
-        registerTable(tmp, notMatched)
-        try {
-          // source-frame rewriting: s-quals → bare source columns;
-          // target refs have no row here and fail loudly
-          def rwS(e: String): String =
-            fr.rewrite(e, _ => fail("MERGE INSERT expressions cannot " +
-              "reference the target (no target row exists for NOT MATCHED)"),
-              q)
-          val conds = insertCls.map(c => c.cond.map(rwS))
-          val filt = {
-            val ors = conds.map(_.getOrElse("true")).map(c => s"($c)")
-            if (conds.exists(_.isEmpty)) "" // an unconditional clause admits all
-            else s" where ${ors.mkString(" or ")}"
-          }
-          val items = target.columns.map { c =>
-            val branches = insertCls.map { cl =>
-              val condTxt = cl.cond.map(rwS).map(p => s"($p)").getOrElse("true")
-              val v = cl.act match {
-                case InsertStar => q(c)
-                case InsertCols(cols, exprs) =>
-                  cols.zip(exprs).find(_._1 == c)
-                    .map(a => s"(${rwS(a._2)})").getOrElse("null")
-                case _ => "null"
-              }
-              s"when $condTxt then $v"
-            }
-            s"case ${branches.mkString(" ")} else null end as ${q(c)}"
-          }
-          val leg = translateOnly(
-            s"select ${items.mkString(", ")} from $tmp$filt")
-          // per-column cast to the TARGET types: all-null CASE arms
-          // land as NullType and assignment-casting is the standard's
-          // INSERT semantics anyway
-          Some(leg.select(target.schema.fields.toSeq.map(f =>
-            F.col(f.name).cast(f.dataType).as(f.name)): _*))
-        } finally removeTable(tmp)
+        // source-frame rewriting: s-quals → bare source columns;
+        // target refs have no row here and fail loudly
+        def rwS(e: Expr): Expr =
+          fr.rewrite(e, _ => fail("MERGE INSERT expressions cannot " +
+            "reference the target (no target row exists for NOT MATCHED)"),
+            col)
+        val conds = insertCls.map(_.cond.map(rwS))
+        // an unconditional clause admits all
+        val filt = if (conds.exists(_.isEmpty)) None else Some(conds.flatten.reduceLeft(Or))
+        val items = target.columns.toSeq.map { c =>
+          SelectItem(CaseWhen(insertCls.zip(conds).map { case (cl, cond) =>
+            (cond.getOrElse(BoolLit(true)), cl.action match {
+              case MergeInsertAll => col(c)
+              case MergeInsert(cols, values) =>
+                cols.zip(values).find(_._1 == c).fold[Expr](NullLit())(a => rwS(a._2))
+              case _ => NullLit()
+            })
+          }, NullLit()), Some(c))
+        }
+        val leg = translate(selectFrom(items, TableRef(tmp, None), filt),
+          scope + (tmp -> notMatched))
+        // per-column cast to the TARGET types: all-null CASE arms
+        // land as NullType and assignment-casting is the standard's
+        // INSERT semantics anyway
+        Some(leg.select(target.schema.fields.toSeq.map(f =>
+          F.col(f.name).cast(f.dataType).as(f.name)): _*))
       }
 
-    val merged = insertLeg.fold(targetLeg)(targetLeg.unionByName)
-    registerTable(tName, merged)
+    registerTable(tName, insertLeg.fold(targetLeg)(targetLeg.unionByName))
     status("merged", tName.toLowerCase)
-  }
-
-  private def translateOnly(sqlText: String): DataFrame = {
-    val ast0 = Parser.parse(sqlText)
-    // macro expansion pre-pass (r11c): pure AST substitution — with
-    // no macros registered the tree passes through untouched (builtin
-    // generate_series/range lower in the translator)
-    val ast =
-      if (macros.isEmpty) ast0
-      else new MacroExpander(n => macros.get(n)).apply(ast0)
-    new Translator(lookup, spark).translate(ast)
   }
 
   /** Formatted physical plan of `sqlText` — the plan-inspection

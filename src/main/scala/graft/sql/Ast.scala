@@ -410,4 +410,172 @@ object Ast {
     * non-child fields — children erased before comparing. */
   def sameShape(a: Expr, b: Expr): Boolean =
     mapChildren(a, _ => Hole) == mapChildren(b, _ => Hole)
+
+  /** [[transformUp]] that also rewrites inside subquery bodies (IN,
+    * EXISTS, scalar and quantified subqueries): every expression of
+    * every query they hold goes through the same rewrite. */
+  def transformDeep(e: Expr)(pf: PartialFunction[Expr, Expr]): Expr = {
+    def go(x: Expr): Expr = {
+      val rebuilt = mapChildren(x, go) match {
+        case ScalarSubquery(s)     => ScalarSubquery(mapExprs(s, go))
+        case ExistsSubquery(s)     => ExistsSubquery(mapExprs(s, go))
+        case InSubquery(p, s)      => InSubquery(p, mapExprs(s, go))
+        case QuantCmp(op, a, p, s) => QuantCmp(op, a, p, mapExprs(s, go))
+        case other                 => other
+      }
+      pf.applyOrElse(rebuilt, identity[Expr])
+    }
+    go(e)
+  }
+
+  /** `s` with `f` applied to each top-level expression of each query
+    * it holds (select items, conditions, keys, orderings, VALUES rows,
+    * call arguments), FROM subqueries and CTEs included. A relation
+    * `rels` is defined at is replaced by its result, which is not
+    * walked further. */
+  def mapExprs(s: SetExpr, f: Expr => Expr,
+               rels: PartialFunction[Relation, Relation] = PartialFunction.empty): SetExpr = {
+    def order(os: Seq[OrderItem]) = os.map(o => o.copy(e = f(o.e)))
+    def window(w: WindowSpec) =
+      w.copy(partitionBy = w.partitionBy.map(f), orderBy = order(w.orderBy))
+    def pairs(ps: Seq[(Expr, Option[String])]) = ps.map { case (e, a) => (f(e), a) }
+    def rel(r: Relation): Relation = if (rels.isDefinedAt(r)) rels(r) else r match {
+      case TableRef(_, _) | TableFnRel(_, _, _, _) => r
+      case MacroCallRel(n, args, a)  => MacroCallRel(n, args.map(f), a)
+      case SubqueryRel(q, a)         => SubqueryRel(set(q), a)
+      case ValuesRel(rows, cs, a)    => ValuesRel(rows.map(_.map(f)), cs, a)
+      case JoinRel(l, rt, jt, on)    => JoinRel(rel(l), rel(rt), jt, on.map(f))
+      case PositionalJoinRel(l, rt)  => PositionalJoinRel(rel(l), rel(rt))
+      case AliasedRel(x, a)          => AliasedRel(rel(x), a)
+      case UsingJoinRel(l, rt, jt, cs) => UsingJoinRel(rel(l), rel(rt), jt, cs)
+      case NaturalJoinRel(l, rt, jt) => NaturalJoinRel(rel(l), rel(rt), jt)
+      case AsofJoinRel(l, rt, lo, on) => AsofJoinRel(rel(l), rel(rt), lo, f(on))
+      case LateralRel(l, sub, a, k)  => LateralRel(rel(l), set(sub), a, k)
+      case SampleRel(x, p, k)        => SampleRel(rel(x), p, k)
+      case UnnestRel(l, arr, a, cs, o, k) =>
+        UnnestRel(l.map(rel), f(arr), a, cs, o, k)
+      case PivotRel(x, aggs, forCol, vs) =>
+        PivotRel(rel(x), pairs(aggs), forCol, pairs(vs))
+      case UnpivotRel(x, vn, nn, cs) => UnpivotRel(rel(x), vn, nn, cs)
+    }
+    def query(q: Query): Query = {
+      val sel = q.sel
+      q.copy(orderBy = order(q.orderBy), sel = sel.copy(
+        items = sel.items.map(i => i.copy(e = f(i.e))), from = rel(sel.from),
+        where = sel.where.map(f), groupBy = sel.groupBy.map(f),
+        having = sel.having.map(f), qualify = sel.qualify.map(f),
+        groupSets = sel.groupSets.map(_.map(f)),
+        windows = sel.windows.map { case (n, w) => (n, window(w)) },
+        distinctOn = sel.distinctOn.map(f)))
+    }
+    def set(x: SetExpr): SetExpr = x match {
+      case Leaf(q)         => Leaf(query(q))
+      case SetOp(op, l, r) => SetOp(op, set(l), set(r))
+      case WithQuery(ctes, b, rec, cols) =>
+        WithQuery(ctes.map { case (n, c) => (n, set(c)) }, set(b), rec, cols)
+      case OrderedSet(b, ob, lim, off, t) => OrderedSet(set(b), order(ob), lim, off, t)
+    }
+    set(s)
+  }
+
+  // ---- statements ---------------------------------------------------
+  /** A parsed statement ([[Parser.parseStatement]]): registry DDL, DML,
+    * MERGE, COPY, PREPARE/EXECUTE, macros, session commands, or a plain
+    * query. [[graft.Graft]] lowers each case. Sources of UPDATE ...
+    * FROM, DELETE ... USING and MERGE ... USING are a [[TableRef]] or
+    * a [[SubqueryRel]]. */
+  sealed trait Statement
+  object Statement {
+    final case class Query(q: SetExpr) extends Statement
+    final case class Explain(q: SetExpr) extends Statement
+    final case class CreateView(name: String, orReplace: Boolean,
+                                q: SetExpr) extends Statement
+    final case class CreateTableAs(name: String, orReplace: Boolean,
+                                   q: SetExpr) extends Statement
+    final case class CreateTable(name: String, orReplace: Boolean,
+                                 cols: Seq[ColumnDef]) extends Statement
+    /** DROP VIEW and DROP TABLE (one registry, one semantics). */
+    final case class Drop(name: String, ifExists: Boolean) extends Statement
+    final case class Truncate(name: String) extends Statement
+    final case class Alter(name: String, action: AlterAction) extends Statement
+    /** `source` is the INSERT's query; a VALUES list parses to
+      * `SELECT * FROM (VALUES ...) __ins`. */
+    final case class Insert(table: String, cols: Option[Seq[String]],
+                            source: SetExpr, onConflict: Option[OnConflict],
+                            returning: Seq[SelectItem]) extends Statement
+    final case class Update(table: String, alias: Option[String],
+                            set: Seq[Assignment], from: Option[Relation],
+                            where: Option[Expr],
+                            returning: Seq[SelectItem]) extends Statement
+    final case class Delete(table: String, alias: Option[String],
+                            using: Option[Relation], where: Expr,
+                            returning: Seq[SelectItem]) extends Statement
+    final case class Merge(table: String, alias: Option[String],
+                           using: Relation, on: Expr,
+                           clauses: Seq[MergeClause]) extends Statement
+    /** `source`: Left = a registered table, Right = a query. */
+    final case class CopyTo(source: Either[String, SetExpr], path: String,
+                            options: Seq[CopyOption]) extends Statement
+    final case class CopyFrom(table: String, path: String,
+                              options: Seq[CopyOption]) extends Statement
+    final case class ExportDatabase(dir: String,
+                                    options: Seq[CopyOption]) extends Statement
+    final case class ImportDatabase(dir: String,
+                                    options: Seq[CopyOption]) extends Statement
+    /** `body` is the statement's token text, `$n` / `?` placeholders
+      * included: EXECUTE binds them by token substitution, since a
+      * placeholder may stand where the grammar takes an integer. */
+    final case class Prepare(name: String, body: String) extends Statement
+    /** `args`: the token text of each argument expression. */
+    final case class Execute(name: String, args: Seq[String]) extends Statement
+    final case class Deallocate(name: String) extends Statement
+    /** `body`: Left = scalar expression, Right = TABLE macro query. */
+    final case class CreateMacro(name: String, orReplace: Boolean,
+                                 params: Seq[MacroParam],
+                                 body: Either[Expr, SetExpr]) extends Statement
+    final case class DropMacro(name: String, ifExists: Boolean) extends Statement
+    final case class Describe(name: String) extends Statement
+    case object ShowTables extends Statement
+    final case class SetConf(key: String, value: String) extends Statement
+    final case class Reset(key: String) extends Statement
+    /** `source`: Left = a registered table, Right = a query. */
+    final case class Summarize(source: Either[String, SetExpr]) extends Statement
+  }
+
+  final case class ColumnDef(name: String, typeName: String)
+  sealed trait AlterAction
+  final case class AddColumn(col: ColumnDef) extends AlterAction
+  final case class DropColumn(name: String) extends AlterAction
+  final case class RenameColumn(from: String, to: String) extends AlterAction
+  final case class RenameTable(to: String) extends AlterAction
+
+  /** `col = e` in a SET list; `col` may carry a qualifier. */
+  final case class Assignment(col: ColRef, e: Expr)
+  /** ON CONFLICT [(keys)] DO NOTHING (`set` None) | DO UPDATE SET ... */
+  final case class OnConflict(keys: Option[Seq[String]],
+                              set: Option[Seq[Assignment]])
+
+  /** WHEN [NOT] MATCHED [BY SOURCE|TARGET] [AND cond] THEN action. */
+  final case class MergeClause(kind: MergeKind, cond: Option[Expr],
+                               action: MergeAction)
+  sealed trait MergeKind
+  case object WhenMatched extends MergeKind
+  /** NOT MATCHED, NOT MATCHED BY TARGET. */
+  case object WhenNotMatched extends MergeKind
+  case object WhenNotMatchedBySource extends MergeKind
+  sealed trait MergeAction
+  case object MergeDelete extends MergeAction
+  /** UPDATE SET * */
+  case object MergeUpdateAll extends MergeAction
+  final case class MergeUpdate(set: Seq[Assignment]) extends MergeAction
+  /** INSERT * */
+  case object MergeInsertAll extends MergeAction
+  final case class MergeInsert(cols: Seq[String],
+                               values: Seq[Expr]) extends MergeAction
+
+  /** A COPY / EXPORT / IMPORT option: `FORMAT csv`, `HEADER`,
+    * `DELIMITER '|'` (the value's token text, quotes dropped). */
+  final case class CopyOption(name: String, value: Option[String])
+  /** A macro parameter `p` or `p := default`. */
+  final case class MacroParam(name: String, default: Option[Expr])
 }

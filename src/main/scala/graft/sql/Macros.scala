@@ -72,85 +72,20 @@ final class MacroExpander(lookup: String => Option[Macros.Macro]) {
   }
 
   private def set(s: SetExpr, env: Map[String, Expr], d: Int): SetExpr =
-    s match {
-      case Leaf(q) => Leaf(query(q, env, d))
-      case SetOp(op, l, r) => SetOp(op, set(l, env, d), set(r, env, d))
-      case WithQuery(ctes, b, rec, cols) =>
-        WithQuery(ctes.map { case (n, c) => (n, set(c, env, d)) },
-          set(b, env, d), rec, cols)
-      case OrderedSet(b, ob, lim, off, t) =>
-        OrderedSet(set(b, env, d),
-          ob.map(oi => oi.copy(e = expr(oi.e, env, d))), lim, off, t)
-    }
-
-  private def query(q: Query, env: Map[String, Expr], d: Int): Query =
-    q.copy(sel = select(q.sel, env, d),
-      orderBy = q.orderBy.map(oi => oi.copy(e = expr(oi.e, env, d))))
-
-  private def window(w: WindowSpec, env: Map[String, Expr],
-                     d: Int): WindowSpec =
-    w.copy(partitionBy = w.partitionBy.map(expr(_, env, d)),
-      orderBy = w.orderBy.map(oi => oi.copy(e = expr(oi.e, env, d))))
-
-  private def select(sel: Select, env: Map[String, Expr],
-                     d: Int): Select =
-    sel.copy(
-      items = sel.items.map(si => si.copy(e = expr(si.e, env, d))),
-      from = rel(sel.from, env, d),
-      where = sel.where.map(expr(_, env, d)),
-      groupBy = sel.groupBy.map(expr(_, env, d)),
-      having = sel.having.map(expr(_, env, d)),
-      qualify = sel.qualify.map(expr(_, env, d)),
-      groupSets = sel.groupSets.map(_.map(expr(_, env, d))),
-      windows = sel.windows.map { case (n, w) => (n, window(w, env, d)) },
-      distinctOn = sel.distinctOn.map(expr(_, env, d)))
-
-  private def rel(r: Relation, env: Map[String, Expr], d: Int): Relation =
-    r match {
-      case m @ MacroCallRel(name, args, alias) =>
-        val expandedArgs = args.map(expr(_, env, d))
-        lookup(name.toLowerCase) match {
-          case Some(mc) =>
-            val bodySet = mc.body.getOrElse(
-              fail(s"macro '$name' is scalar — a FROM-position call " +
-                "needs a TABLE macro (CREATE MACRO … AS TABLE …)"))
-            if (d >= MaxDepth)
-              fail(s"macro expansion exceeds depth $MaxDepth at " +
-                s"'$name' (self- or mutually-recursive macros)")
-            SubqueryRel(set(bodySet, bind(mc, expandedArgs, d + 1), d + 1),
-              alias.orElse(Some(name)))
-          case None =>
-            // builtin series generators pass through to the translator
-            m.copy(args = expandedArgs)
-        }
-      case TableRef(_, _) | TableFnRel(_, _, _, _) => r
-      case SubqueryRel(q, a) => SubqueryRel(set(q, env, d), a)
-      case ValuesRel(rows, cols, a) =>
-        ValuesRel(rows.map(_.map(expr(_, env, d))), cols, a)
-      case JoinRel(l, rt, jt, on) =>
-        JoinRel(rel(l, env, d), rel(rt, env, d), jt,
-          on.map(expr(_, env, d)))
-      case PositionalJoinRel(l, rt) =>
-        PositionalJoinRel(rel(l, env, d), rel(rt, env, d))
-      case AliasedRel(x, a) => AliasedRel(rel(x, env, d), a)
-      case UsingJoinRel(l, rt, jt, cols) =>
-        UsingJoinRel(rel(l, env, d), rel(rt, env, d), jt, cols)
-      case NaturalJoinRel(l, rt, jt) =>
-        NaturalJoinRel(rel(l, env, d), rel(rt, env, d), jt)
-      case AsofJoinRel(l, rt, lo, on) =>
-        AsofJoinRel(rel(l, env, d), rel(rt, env, d), lo, expr(on, env, d))
-      case LateralRel(l, sub, a, k) =>
-        LateralRel(rel(l, env, d), set(sub, env, d), a, k)
-      case SampleRel(x, p, k) => SampleRel(rel(x, env, d), p, k)
-      case UnnestRel(l, arr, a, cols, ord, k) =>
-        UnnestRel(l.map(rel(_, env, d)), expr(arr, env, d), a, cols, ord, k)
-      case PivotRel(x, aggs, forCol, values) =>
-        PivotRel(rel(x, env, d),
-          aggs.map { case (e, a) => (expr(e, env, d), a) }, forCol,
-          values.map { case (e, a) => (expr(e, env, d), a) })
-      case UnpivotRel(x, vn, nn, cols) =>
-        UnpivotRel(rel(x, env, d), vn, nn, cols)
-    }
+    Ast.mapExprs(s, expr(_, env, d), {
+      case MacroCallRel(name, args, alias) if lookup(name.toLowerCase).isDefined =>
+        val mc = lookup(name.toLowerCase).get
+        val bodySet = mc.body.getOrElse(
+          fail(s"macro '$name' is scalar — a FROM-position call " +
+            "needs a TABLE macro (CREATE MACRO … AS TABLE …)"))
+        if (d >= MaxDepth)
+          fail(s"macro expansion exceeds depth $MaxDepth at " +
+            s"'$name' (self- or mutually-recursive macros)")
+        SubqueryRel(set(bodySet, bind(mc, args.map(expr(_, env, d)), d + 1), d + 1),
+          alias.orElse(Some(name)))
+      // any other call (the builtin series generators) passes through
+      // to the translator with its arguments expanded
+    })
 
   /** Top-down lexical walk (NOT transformUp): lambda parameters
     * SHADOW same-named macro parameters inside their body (`CREATE

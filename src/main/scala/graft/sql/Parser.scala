@@ -11,15 +11,14 @@ import Lexer._
   * with joins, subqueries, boolean and arithmetic expressions with
   * standard precedence, CASE/CAST/COALESCE, aggregates and windows.
   */
-final class Parser(tokens: Vector[Token]) {
+final class Parser(tokens: Vector[Token], src: String = "") {
   private var pos = 0
 
-  private def peek: Token = tokens(pos)
+  // a failed token read may have stepped past End
+  private def peek: Token = tokens(math.min(pos, tokens.length - 1))
   private def next(): Token = { val t = tokens(pos); pos += 1; t }
 
-  final case class ParseException(msg: String)
-      extends RuntimeException(s"$msg (at token ${peek})")
-  private def fail(msg: String): Nothing = throw ParseException(msg)
+  private def fail(msg: String): Nothing = throw Parser.ParseException(msg, peek)
 
   private val reserved = Set(
     "select", "from", "where", "group", "having", "order", "limit",
@@ -49,17 +48,24 @@ final class Parser(tokens: Vector[Token]) {
     if (atOp(op)) { pos += 1; true } else false
   private def expectOp(op: String): Unit =
     if (!eatOp(op)) fail(s"expected '$op'")
-  private def ident(): String = next() match {
-    case Ident(v, _) => v
+  private def ident(): String = peek match {
+    case Ident(v, _) => pos += 1; v
     case t => fail(s"expected identifier, got $t")
   }
 
   // ---- entry --------------------------------------------------------
-  def parse(): SetExpr = {
+  def parse(): SetExpr = { val e = parseQuery(); expectEnd(); e }
+
+  private def expectEnd(): Unit = peek match {
+    case End(_) => ()
+    case t => fail(s"trailing input at $t")
+  }
+
+  private def parseQuery(): SetExpr = {
     // WITH name AS (query) [, ...] body — graft extension beyond the
     // reference grammar (which has no CTEs); names are visible to
     // later CTEs and the body
-    val e = if (eatKw("with")) {
+    if (eatKw("with")) {
       // WITH RECURSIVE (r5): self-referencing `base UNION [ALL] step`
       // CTEs iterate to a fixpoint at translation
       val recursive = eatKw("recursive")
@@ -87,11 +93,356 @@ final class Parser(tokens: Vector[Token]) {
       }
       WithQuery(ctes.result(), parseSetExpr(), recursive, cols.result())
     } else parseSetExpr()
-    peek match {
-      case End(_) => e
-      case t => fail(s"trailing input at $t")
+  }
+
+  // ---- statements ---------------------------------------------------
+  // One statement per call, dispatched on its first keyword; anything
+  // else parses as a query. A statement ends at `;` or the end of input.
+
+  /** Words that end a clause inside a statement, so they never read as
+    * an implicit alias (`insert into t select a from s returning a`). */
+  private var clauseWords = Set.empty[String]
+
+  /** A single statement; one final `;` may follow. */
+  def statement(): Ast.Statement = {
+    val st = parseStatement()
+    if (atOp(";") && isEndAt(pos + 1)) pos += 1
+    expectEnd()
+    st
+  }
+
+  /** Statements separated by `;`; empty statements are skipped. */
+  def script(): Seq[Ast.Statement] = {
+    val out = Seq.newBuilder[Ast.Statement]
+    while (!isEndAt(pos)) {
+      if (!eatOp(";")) {
+        out += parseStatement()
+        if (!isEndAt(pos) && !atOp(";")) fail(s"trailing input at $peek")
+      }
+    }
+    out.result()
+  }
+
+  private def isEndAt(p: Int): Boolean = tokens(p).isInstanceOf[End]
+  private def atStmtEnd: Boolean = isEndAt(pos) || atOp(";")
+
+  private def commaList[A](item: => A): Seq[A] = {
+    val b = Seq.newBuilder[A]
+    b += item
+    while (eatOp(",")) b += item
+    b.result()
+  }
+
+  private def parenIdents(): Seq[String] = {
+    expectOp("("); val cs = commaList(ident()); expectOp(")"); cs
+  }
+
+  private def ifExists(): Boolean =
+    if (eatKw("if")) { expectKw("exists"); true } else false
+
+  private def parseStatement(): Ast.Statement = {
+    import Ast.{Statement => S}
+    clauseWords = Set.empty
+    val head = peek match {
+      case Ident(v, _) => v.toLowerCase
+      case _ => ""
+    }
+    head match {
+      case "create" => pos += 1; parseCreate()
+      case "drop" =>
+        pos += 1
+        if (eatKw("macro")) { val ie = ifExists(); S.DropMacro(ident(), ie) }
+        else {
+          if (!eatKw("view")) expectKw("table")
+          val ie = ifExists()
+          S.Drop(ident(), ie)
+        }
+      case "truncate" => pos += 1; eatKw("table"); S.Truncate(ident())
+      case "alter" => pos += 1; expectKw("table"); parseAlter(ident())
+      case "insert" | "update" | "delete" =>
+        clauseWords = Set("returning")
+        pos += 1
+        if (head == "insert") parseInsert()
+        else if (head == "update") parseUpdate()
+        else parseDelete()
+      case "merge" => pos += 1; parseMerge()
+      case "copy" => pos += 1; parseCopy()
+      case "export" | "import" =>
+        pos += 1; expectKw("database")
+        val dir = parsePath()
+        if (head == "export") S.ExportDatabase(dir, parseCopyOptions())
+        else S.ImportDatabase(dir, parseCopyOptions())
+      case "prepare" =>
+        pos += 1
+        val name = ident(); expectKw("as")
+        // the body's token text up to the statement's end
+        val start = pos
+        var depth = 0
+        while (!isEndAt(pos) && !(depth == 0 && atOp(";"))) {
+          if (atOp("(")) depth += 1 else if (atOp(")")) depth -= 1
+          pos += 1
+        }
+        if (pos == start) fail("PREPARE requires a statement body")
+        S.Prepare(name, src.substring(tokens(start).pos, tokens(pos - 1).end))
+      case "execute" =>
+        pos += 1
+        val name = ident()
+        val args =
+          if (!eatOp("(")) Nil
+          else if (eatOp(")")) Nil
+          else {
+            val as = commaList {
+              val start = pos
+              parseExpr()
+              src.substring(tokens(start).pos, tokens(pos - 1).end)
+            }
+            expectOp(")"); as
+          }
+        S.Execute(name, args)
+      case "deallocate" => pos += 1; eatKw("prepare"); S.Deallocate(ident())
+      case "describe" | "desc" => pos += 1; eatKw("table"); S.Describe(ident())
+      case "show" => pos += 1; expectKw("tables"); S.ShowTables
+      case "set" =>
+        pos += 1
+        if (atKw("session") && !isOpAt(pos + 1, "=") && !isKwAt(pos + 1, "to"))
+          pos += 1
+        val key = confKey()
+        if (!eatOp("=")) expectKw("to")
+        if (atStmtEnd) fail("SET requires a value")
+        val value = peek match {
+          case Str(v, _) if isEndAt(pos + 1) || isOpAt(pos + 1, ";") => pos += 1; v
+          case _ =>
+            val start = pos
+            while (!atStmtEnd) pos += 1
+            src.substring(tokens(start).pos, tokens(pos - 1).end)
+        }
+        S.SetConf(key, value)
+      case "reset" => pos += 1; S.Reset(confKey())
+      case "summarize" =>
+        pos += 1
+        S.Summarize(if (atKw("select") || atKw("with")) Right(parseQuery())
+                    else Left(ident()))
+      case "explain" => pos += 1; S.Explain(parseQuery())
+      case _ => S.Query(parseQuery())
     }
   }
+
+  /** A dotted configuration key: `spark.sql.shuffle.partitions`. */
+  private def confKey(): String = {
+    val parts = Seq.newBuilder[String]
+    parts += ident()
+    while (eatOp(".")) parts += ident()
+    parts.result().mkString(".")
+  }
+
+  private def parseCreate(): Ast.Statement = {
+    import Ast.{Statement => S}
+    val orReplace = if (eatKw("or")) { expectKw("replace"); true } else false
+    val temp = eatKw("temp") || eatKw("temporary")
+    if (temp || atKw("view")) {
+      expectKw("view")
+      val name = ident(); expectKw("as")
+      S.CreateView(name, orReplace, parseQuery())
+    } else if (eatKw("table")) {
+      val name = ident()
+      if (eatKw("as")) S.CreateTableAs(name, orReplace, parseQuery())
+      else {
+        expectOp("(")
+        val cols = commaList(parseColumnDef())
+        expectOp(")")
+        S.CreateTable(name, orReplace, cols)
+      }
+    } else if (eatKw("macro")) {
+      val name = ident()
+      expectOp("(")
+      val params =
+        if (atOp(")")) Nil
+        else commaList {
+          val p = ident()
+          MacroParam(p, if (eatOp(":")) { expectOp("="); Some(parseExpr()) } else None)
+        }
+      expectOp(")")
+      expectKw("as")
+      S.CreateMacro(name, orReplace, params,
+        if (eatKw("table")) Right(parseQuery()) else Left(parseExpr()))
+    } else fail("expected VIEW, TABLE or MACRO after CREATE")
+  }
+
+  private def parseColumnDef(): ColumnDef = {
+    val name = ident()
+    if (atOp(",") || atOp(")") || atStmtEnd)
+      fail("column definition must be 'name type'")
+    ColumnDef(name, parseTypeName())
+  }
+
+  private def parseAlter(table: String): Ast.Statement = {
+    val action =
+      if (eatKw("add")) {
+        eatKw("column")
+        if (eatKw("if")) { expectKw("not"); expectKw("exists") }
+        AddColumn(parseColumnDef())
+      } else if (eatKw("drop")) {
+        eatKw("column"); ifExists()
+        DropColumn(ident())
+      } else if (eatKw("rename")) {
+        if (eatKw("to")) RenameTable(ident())
+        else {
+          eatKw("column")
+          val from = ident(); expectKw("to")
+          RenameColumn(from, ident())
+        }
+      } else fail("ALTER TABLE supports ADD/DROP/RENAME COLUMN and RENAME TO")
+    Ast.Statement.Alter(table, action)
+  }
+
+  private def parseInsert(): Ast.Statement = {
+    expectKw("into")
+    val table = ident()
+    val cols = if (atOp("(")) Some(parenIdents()) else None
+    val source =
+      if (eatKw("values")) {
+        val rows = commaList {
+          expectOp("("); val row = commaList(parseExpr()); expectOp(")"); row
+        }
+        Leaf(Query(Select(false, Seq(SelectItem(Star(None), None)),
+          ValuesRel(rows, None, Some("__ins")), None, Nil, None), Nil, None, None))
+      } else parseQuery()
+    val onConflict =
+      if (eatKw("on")) {
+        expectKw("conflict")
+        val keys = if (atOp("(")) Some(parenIdents()) else None
+        expectKw("do")
+        Some(OnConflict(keys,
+          if (eatKw("nothing")) None
+          else { expectKw("update"); expectKw("set"); Some(parseAssignments()) }))
+      } else None
+    Ast.Statement.Insert(table, cols, source, onConflict, parseReturning())
+  }
+
+  private def parseUpdate(): Ast.Statement = {
+    val table = ident()
+    val alias =
+      if (eatKw("as")) Some(ident()) else if (atKw("set")) None else Some(ident())
+    expectKw("set")
+    val set = parseAssignments()
+    val from = if (eatKw("from")) Some(parseSource()) else None
+    val where = if (eatKw("where")) Some(parseExpr()) else None
+    Ast.Statement.Update(table, alias, set, from, where, parseReturning())
+  }
+
+  private def parseDelete(): Ast.Statement = {
+    expectKw("from")
+    val table = ident()
+    val alias = parseOptionalAlias()
+    val using = if (eatKw("using")) Some(parseSource()) else None
+    expectKw("where")
+    val where = parseExpr()
+    Ast.Statement.Delete(table, alias, using, where, parseReturning())
+  }
+
+  /** The source of UPDATE ... FROM, DELETE ... USING and MERGE ...
+    * USING: a table or a parenthesized query, optionally aliased. */
+  private def parseSource(): Relation =
+    if (eatOp("(")) {
+      val q = parseQuery(); expectOp(")")
+      SubqueryRel(q, parseOptionalAlias())
+    } else TableRef(ident(), parseOptionalAlias())
+
+  private def parseAssignments(): Seq[Assignment] = commaList {
+    val first = ident()
+    val col = if (eatOp(".")) ColRef(Some(first), ident()) else ColRef(None, first)
+    expectOp("=")
+    Assignment(col, parseExpr())
+  }
+
+  private def parseReturning(): Seq[SelectItem] =
+    if (!eatKw("returning")) Nil
+    else if (atStmtEnd) fail("RETURNING requires at least one expression")
+    else commaList(parseSelectItem())
+
+  private def parseMerge(): Ast.Statement = {
+    expectKw("into")
+    val table = ident()
+    val alias = parseOptionalAlias()
+    expectKw("using")
+    val source = parseSource()
+    expectKw("on")
+    val on = parseExpr()
+    val clauses = Seq.newBuilder[MergeClause]
+    while (eatKw("when")) {
+      val kind =
+        if (eatKw("matched")) {
+          if (atKw("by")) fail("WHEN MATCHED BY is not a MERGE form " +
+            "(BY SOURCE/TARGET qualify NOT MATCHED)")
+          WhenMatched
+        } else {
+          expectKw("not"); expectKw("matched")
+          if (!eatKw("by")) WhenNotMatched
+          else if (eatKw("source")) WhenNotMatchedBySource
+          else { expectKw("target"); WhenNotMatched }
+        }
+      val cond = if (eatKw("and")) Some(parseExpr()) else None
+      expectKw("then")
+      val action =
+        if (eatKw("delete")) MergeDelete
+        else if (eatKw("update")) {
+          expectKw("set")
+          if (eatOp("*")) MergeUpdateAll else MergeUpdate(parseAssignments())
+        } else if (eatKw("insert")) {
+          if (eatOp("*")) MergeInsertAll
+          else {
+            val cols = parenIdents()
+            expectKw("values"); expectOp("(")
+            val values = commaList(parseExpr())
+            expectOp(")")
+            if (cols.length != values.length)
+              fail("MERGE INSERT: column/value count mismatch")
+            MergeInsert(cols, values)
+          }
+        } else fail("MERGE actions are DELETE, UPDATE SET and INSERT")
+      clauses += MergeClause(kind, cond, action)
+    }
+    val cs = clauses.result()
+    if (cs.isEmpty) fail("MERGE requires at least one WHEN clause")
+    Ast.Statement.Merge(table, alias, source, on, cs)
+  }
+
+  private def parseCopy(): Ast.Statement = {
+    import Ast.{Statement => S}
+    if (eatOp("(")) {
+      val q = parseQuery(); expectOp(")")
+      if (!eatKw("to"))
+        fail("COPY (query) must be followed by TO 'path' [(options)]")
+      S.CopyTo(Right(q), parsePath(), parseCopyOptions())
+    } else {
+      val table = ident()
+      if (eatKw("to")) S.CopyTo(Left(table), parsePath(), parseCopyOptions())
+      else {
+        expectKw("from")
+        S.CopyFrom(table, parsePath(), parseCopyOptions())
+      }
+    }
+  }
+
+  private def parsePath(): String = peek match {
+    case Str(v, _) => pos += 1; v
+    case _ => fail("expected a quoted path")
+  }
+
+  private def parseCopyOptions(): Seq[CopyOption] =
+    if (!eatOp("(")) Nil
+    else {
+      val os = commaList {
+        val name = ident().toLowerCase
+        CopyOption(name, peek match {
+          case Ident(v, _) => pos += 1; Some(v)
+          case Str(v, _)   => pos += 1; Some(v)
+          case Num(v, _)   => pos += 1; Some(v)
+          case _           => None
+        })
+      }
+      expectOp(")"); os
+    }
 
   /** sql.lark:3-8 — left-associative UNION/INTERSECT/EXCEPT [ALL]. */
   private def parseSetExpr(): SetExpr = {
@@ -191,8 +542,8 @@ final class Parser(tokens: Vector[Token]) {
     (limit, offset, ties)
   }
 
-  private def parseIntLit(): Long = next() match {
-    case Num(v, _) => v.toLong
+  private def parseIntLit(): Long = peek match {
+    case Num(v, _) => pos += 1; v.toLong
     case t => fail(s"expected integer, got $t")
   }
 
@@ -480,7 +831,8 @@ final class Parser(tokens: Vector[Token]) {
   private def parseOptionalAlias(): Option[String] = {
     if (eatKw("as")) Some(ident())
     else peek match {
-      case Ident(v, _) if !reserved.contains(v.toLowerCase) =>
+      case Ident(v, _) if !reserved.contains(v.toLowerCase) &&
+          !clauseWords.contains(v.toLowerCase) =>
         pos += 1; Some(v)
       case _ => None
     }
@@ -837,16 +1189,6 @@ final class Parser(tokens: Vector[Token]) {
   // precedence: OR < AND < NOT < comparison < additive < multiplicative
   // < unary < primary (sql.lark:40-131)
   def parseExpr(): Expr = parseOr()
-
-  /** [[parseExpr]] + end-of-input check (standalone expression texts:
-    * macro bodies and parameter defaults). */
-  def parseExprOnly(): Expr = {
-    val e = parseExpr()
-    peek match {
-      case Lexer.End(_) => e
-      case t => fail(s"unexpected trailing input after expression: $t")
-    }
-  }
 
   private def parseOr(): Expr = {
     var l = parseAnd()
@@ -1813,13 +2155,21 @@ final class Parser(tokens: Vector[Token]) {
 }
 
 object Parser {
+  /** A syntax error at `token` (its `pos` is the source offset). */
+  final case class ParseException(msg: String, token: Token)
+      extends RuntimeException(s"$msg (at token $token)")
+
   def parse(sql: String): Ast.SetExpr =
     new Parser(Lexer.tokenize(sql)).parse()
 
-  /** Parses a standalone scalar expression (macro bodies/defaults) —
-    * trailing input is a loud error. */
-  def parseExpression(sql: String): Ast.Expr =
-    new Parser(Lexer.tokenize(sql)).parseExprOnly()
+  /** One statement — a query or any statement form of
+    * [[Ast.Statement]]; one final `;` may follow. */
+  def parseStatement(sql: String): Ast.Statement =
+    new Parser(Lexer.tokenize(sql), sql).statement()
+
+  /** The statements of a script, split at `;` tokens. */
+  def parseScript(sql: String): Seq[Ast.Statement] =
+    new Parser(Lexer.tokenize(sql), sql).script()
 
   /** Hidden helper-column name prefixes the translator generates; user
     * select-item aliases may not collide with them (parseSelectItem

@@ -1463,7 +1463,25 @@ class StatementsSpec extends SparkTestBase {
       "script" -> { (g, p) =>
         rows(g.runScript(p("""create view w as select id, n from t where n > 10;
           insert into t values (9, 'z', 90);
-          select count(*) as c, sum(n) as s from w;"""))) })
+          select count(*) as c, sum(n) as s from w;"""))) },
+      "merge on between" -> { (g, p) =>
+        g.query(p("merge into t using s on t.id = s.id and s.n between 1 and 500 " +
+          "when matched then update set n = s.n")); table(g) },
+      "merge set case when" -> { (g, p) =>
+        g.query(p("merge into t using s on t.id = s.id when matched then " +
+          "update set n = case when s.n > 100 then s.n else t.n end")); table(g) },
+      "update from set case when" -> { (g, p) =>
+        g.query(p("update t set n = case when id = 2 then 0 else n end " +
+          "from s where t.id = s.id")); table(g) },
+      "quoted ')' column lists" -> { (g, p) =>
+        g.query(p("""create table q1 ("a)b" bigint, c bigint)"""))
+        g.query(p("""insert into q1 ("a)b", c) values (1, 2)"""))
+        g.query(p("""merge into q1 using s on q1.c = s.id
+                     when not matched then insert ("a)b", c) values (s.n, s.id)"""))
+        rows(g.query("select * from q1")) },
+      "insert with" -> { (g, p) =>
+        g.query(p("insert into t with z as (select id + 10 as id, v, n from s) " +
+          "select * from z")); table(g) })
     val rnd = new scala.util.Random(20261018)
     forms.foreach { case (name, run) =>
       def fresh(): Graft = {
@@ -1484,6 +1502,105 @@ class StatementsSpec extends SparkTestBase {
             fail(s"$name: ${e.getMessage}\n${seen.result().mkString("\n---\n")}") }
         assert(got == want, s"$name\n${seen.result().mkString("\n---\n")}")
       }
+    }
+  }
+
+  test("MERGE ON BETWEEN, CASE WHEN in SET lists, quoted ')' column lists") {
+    val g = new Graft(spark)
+    def reset(): Unit = {
+      g.query("create or replace view t as select * from (values " +
+        "(1, 'a', 10), (2, 'b', 20), (3, 'c', 30)) x(id, v, n)")
+      g.query("create or replace view s as select * from (values " +
+        "(2, 'B', 200), (3, 'C', 5), (4, 'D', 900)) x(id, v, n)")
+    }
+    def rows(sql: String): Seq[String] =
+      g.query(sql).collect().map(_.toSeq.mkString(",")).sorted.toSeq
+    // BETWEEN's AND inside an ON residual is not a conjunct boundary
+    reset()
+    g.query("merge into t using s on t.id = s.id and s.n between 1 and 500 " +
+      "when matched then update set n = s.n")
+    assert(rows("select id, n from t") == Seq("1,10", "2,200", "3,5"))
+    // CASE WHEN inside a MERGE SET value is not a WHEN clause
+    reset()
+    g.query("merge into t using s on t.id = s.id when matched then " +
+      "update set n = case when s.n > 100 then s.n else t.n end")
+    assert(rows("select id, n from t") == Seq("1,10", "2,200", "3,30"))
+    // ... nor inside an UPDATE ... FROM SET value
+    reset()
+    g.query("update t set n = case when id = 2 then 0 else n end " +
+      "from s where t.id = s.id")
+    assert(rows("select id, n from t") == Seq("1,10", "2,0", "3,30"))
+    // a quoted column name holding ')' in INSERT and MERGE column lists
+    g.query("""create table q1 ("a)b" bigint, c bigint)""")
+    g.query("""insert into q1 ("a)b", c) values (1, 2)""")
+    g.query("""merge into q1 using s on q1.c = s.id
+               when not matched then insert ("a)b", c) values (s.n, s.id)""")
+    assert(rows("select * from q1") == Seq("1,2", "5,3", "900,4"))
+  }
+
+  test("INSERT ... WITH, and a source's ORDER BY / LIMIT bind to the source") {
+    val g = new Graft(spark)
+    g.query("create table t as select * from (values (1, 'a')) x(id, v)")
+    g.query("insert into t with z as (select id + 10 as id, upper(v) as v from t) " +
+      "select * from z")
+    g.query("insert into t (v, id) with z as (select 'q' as v from t limit 1) " +
+      "select v, 7 from z")
+    // the new rows are the source query's rows: its LIMIT does not cut
+    // the table's existing rows
+    g.query("insert into t select id + 100, v from t order by id desc limit 1")
+    assert(g.query("select * from t").collect().map(_.toSeq.mkString(","))
+      .sorted.toSeq == Seq("1,a", "11,A", "111,A", "7,q"))
+  }
+
+  test("statements leave the registry as it was, plus or minus their target") {
+    // user tables named like intermediate frames of the statement
+    // layer must neither be shadowed for good nor dropped
+    val reservedLike = Seq("__upd_src", "__upd_from_sub", "__returning_src",
+      "__merge_t", "__merge_src_s", "__merge_using_sub", "__merge_keys_t",
+      "__merge_keys_s", "__merge_mflag", "__merge_ins_src", "__merge_ins_tgt",
+      "__del_using_sub", "__ins_conflict_src")
+    val dir = java.nio.file.Files.createTempDirectory("graft_hyg").toString
+    val forms: Seq[(String, String)] = Seq(
+      "t" -> "insert into t values (5, 'e', 50)",
+      "t" -> "insert into t (id) select id + 100 from s",
+      "t" -> "insert into t values (2, 'x', 1) on conflict (id) do update set n = excluded.n",
+      "t" -> "insert into t values (6, 'f', 60) returning id",
+      "t" -> "update t set n = n + 1 where id = 1",
+      "t" -> "update t set n = 0 where id = 2 returning id, n",
+      "t" -> "update t set n = s.n from s where t.id = s.id and s.n > 0",
+      "t" -> "update t set n = x.n from (select id, n from s) x where t.id = x.id",
+      "t" -> "delete from t where id = 1",
+      "t" -> "delete from t where id = 1 returning id",
+      "t" -> "delete from t using s where t.id = s.id and s.n > 100",
+      "t" -> "delete from t using (select id from s) x where t.id = x.id",
+      "t" -> """merge into t using s on t.id = s.id
+                when matched then update set n = s.n
+                when not matched then insert *""",
+      "t" -> """merge into t using s on t.id = s.id and s.n > 100
+                when not matched by source then update set n = 0""",
+      "t" -> """merge into t using s on t.id = s.id and s.n > 100
+                when not matched then insert *""",
+      "t" -> """merge into t using (select * from s) x on t.id = x.id
+                when matched then delete""",
+      "" -> s"copy (select * from t) to '$dir/t.parquet'",
+      "v1" -> "create view v1 as select * from t",
+      "t2" -> "create table t2 as select * from t",
+      "t3" -> "create table t3 (a bigint)",
+      "t" -> "alter table t add column w double",
+      "t" -> "truncate table t")
+    for ((target, stmt) <- forms) {
+      val g = new Graft(spark)
+      g.query("create view t as select * from (values " +
+        "(1, 'a', 10), (2, 'b', 20), (3, 'c', 30)) x(id, v, n)")
+      g.query("create view s as select * from (values " +
+        "(2, 'B', 200), (3, 'C', 5), (4, 'D', 400)) x(id, v, n)")
+      reservedLike.foreach(n => g.query(s"create view $n as select '$n' as who from s"))
+      val before = g.tableNames
+      g.query(stmt)
+      assert(g.tableNames -- Set(target) == before -- Set(target), stmt)
+      val whos = reservedLike.map(n => s"select who from $n")
+      assert(g.query(whos.mkString(" union all ")).collect().map(_.getString(0))
+        .toSet == reservedLike.toSet, stmt)
     }
   }
 

@@ -40,6 +40,19 @@ class ErrorsSpec extends SparkTestBase {
     }
   }
 
+  test("malformed statements raise ParseException at the offending token") {
+    for ((sql, at) <- Seq(
+        ("merge into t using s on", 23),
+        ("update t set", 12),
+        ("copy t to", 9),
+        ("merge into t using s on t.k = s.k when matched then upsert", 52),
+        ("insert into t (a b) values (1)", 17),
+        ("create table t (a)", 17))) {
+      val e = intercept[Parser.ParseException](graftSession.query(sql))
+      assert(e.token.pos == at, s"$sql: $e")
+    }
+  }
+
   test("unknown column raises at translation, not at action") {
     assertThrows[Throwable](
       graftSession.query("select does_not_exist from nation"))
