@@ -21,10 +21,8 @@ import graft.sql.Lexer.{Ident, Num, Op, Str}
   * (tests/expression_generation/test_select.py:31).
   */
 final class Graft(val spark: SparkSession) {
+  import Graft.TableNotFoundException
   private val tables = TrieMap.empty[String, DataFrame]
-
-  final case class TableNotFoundException(name: String)
-      extends RuntimeException(s"Table '$name' is not registered")
 
   def registerTable(name: String, df: DataFrame): Unit =
     tables.put(name.toLowerCase, df)
@@ -385,7 +383,12 @@ final class Graft(val spark: SparkSession) {
     def fresh(c: String): Unit = if (t.columns.exists(_.equalsIgnoreCase(c)))
       fail(s"ALTER TABLE: column '$c' already exists in $name")
     action match {
-      case AddColumn(ColumnDef(c, typ)) =>
+      case AddColumn(ColumnDef(c, _), true)
+          if t.columns.exists(_.equalsIgnoreCase(c)) =>
+        status("altered", name.toLowerCase)
+      case DropColumn(c, true) if !t.columns.exists(_.equalsIgnoreCase(c)) =>
+        status("altered", name.toLowerCase)
+      case AddColumn(ColumnDef(c, typ), _) =>
         fresh(c)
         // the new column reads NULL of the declared type (ADD COLUMN
         // over a lazy plan cannot backfill); the type goes through the
@@ -395,7 +398,7 @@ final class Graft(val spark: SparkSession) {
         registerTable(name,
           t.withColumn(c, F.lit(null).cast(typed.schema.head.dataType)))
         status("altered", name.toLowerCase)
-      case DropColumn(c) =>
+      case DropColumn(c, _) =>
         val r = real(c)
         if (t.columns.length == 1)
           fail("ALTER TABLE: cannot drop the only column")
@@ -1268,6 +1271,9 @@ final class Graft(val spark: SparkSession) {
 
 object Graft {
   def apply(spark: SparkSession): Graft = new Graft(spark)
+
+  final case class TableNotFoundException(name: String)
+      extends RuntimeException(s"Table '$name' is not registered")
 
   // base-table reads per (session, dir) — each `spark.read.parquet`
   // is a driver-side schema/footer read, and statement-family bench

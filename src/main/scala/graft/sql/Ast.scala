@@ -544,8 +544,13 @@ object Ast {
 
   final case class ColumnDef(name: String, typeName: String)
   sealed trait AlterAction
-  final case class AddColumn(col: ColumnDef) extends AlterAction
-  final case class DropColumn(name: String) extends AlterAction
+  /** `ifNotExists`: ADD COLUMN IF NOT EXISTS — an existing column is
+    * left as it is. */
+  final case class AddColumn(col: ColumnDef, ifNotExists: Boolean)
+      extends AlterAction
+  /** `ifExists`: DROP COLUMN IF EXISTS — a missing column is no error. */
+  final case class DropColumn(name: String, ifExists: Boolean)
+      extends AlterAction
   final case class RenameColumn(from: String, to: String) extends AlterAction
   final case class RenameTable(to: String) extends AlterAction
 

@@ -37,6 +37,9 @@ object Macros {
 
   val MaxDepth = 16
 
+  /** A macro that cannot be defined or expanded. */
+  final case class MacroException(msg: String) extends RuntimeException(msg)
+
   /** Series-generator names the translator lowers natively — a user
     * macro may not shadow them (the FROM-position call would be
     * ambiguous). */
@@ -47,7 +50,6 @@ object Macros {
 final class MacroExpander(lookup: String => Option[Macros.Macro]) {
   import Macros._
 
-  final case class MacroException(msg: String) extends RuntimeException(msg)
   private def fail(msg: String): Nothing = throw MacroException(msg)
 
   def apply(s: SetExpr): SetExpr = set(s, Map.empty, 0)

@@ -279,11 +279,13 @@ final class Parser(tokens: Vector[Token], src: String = "") {
     val action =
       if (eatKw("add")) {
         eatKw("column")
-        if (eatKw("if")) { expectKw("not"); expectKw("exists") }
-        AddColumn(parseColumnDef())
+        val ifNotExists = eatKw("if")
+        if (ifNotExists) { expectKw("not"); expectKw("exists") }
+        AddColumn(parseColumnDef(), ifNotExists)
       } else if (eatKw("drop")) {
-        eatKw("column"); ifExists()
-        DropColumn(ident())
+        eatKw("column")
+        val ie = ifExists()
+        DropColumn(ident(), ie)
       } else if (eatKw("rename")) {
         if (eatKw("to")) RenameTable(ident())
         else {

@@ -17,7 +17,7 @@ import Ast._
 final class Translator(catalog: String => DataFrame,
                        session: SparkSession) {
 
-  final case class TranslateException(msg: String) extends RuntimeException(msg)
+  import Translator.TranslateException
   private def fail(msg: String): Nothing = throw TranslateException(msg)
 
   /** Aliases of FROM-position unnests (r5b): their single column is a
@@ -1287,7 +1287,7 @@ final class Translator(catalog: String => DataFrame,
     out
   }
 
-  /** LATERAL (r5): correlated aggregate derived tables —
+  /** LATERAL: correlated aggregate derived tables —
     * `cross join lateral (select count(*) n, sum(x) s from t where
     * t.k = outer.k) a` — the multi-column generalization of the
     * correlated scalar subquery. Restricted to aggregate subqueries
@@ -1336,18 +1336,12 @@ final class Translator(catalog: String => DataFrame,
       fail("LATERAL select items must either all aggregate or " +
         "(for the top-n form) none aggregate")
     val outerOnly = outerAliases -- relationAliases(q.sel.from)
-    // theta conjuncts (r5b) decorrelate through the same per-distinct-
-    // outer-tuple aggregation as theta scalar subqueries; general
-    // correlated predicates (r5c: correlation under OR/NOT, mixed-side
-    // comparisons) ride the same tuple join as residual conditions
-    val (keyPairs, thetas, gens, genDefs, local) =
-      corrSplitG(q, outerOnly, "LATERAL", allowTheta = true,
-        Some("__lat_ge"))
-    var inner = drainGenHoists(translateRelation(q.sel.from))
-    local.reduceOption(And).foreach(p => inner = inner.filter(exprToCol(p, None)))
-    val keyNames = keyPairs.indices.map(i => s"__lat_k$i")
-    val tNames = thetas.indices.map(i => s"__lat_t$i")
-    // inner GROUP BY keys (r7): each surviving (tuple, group) becomes
+    // theta conjuncts decorrelate through the same per-distinct-outer-
+    // tuple aggregation as theta scalar subqueries; general correlated
+    // predicates ride the same tuple join as residual conditions
+    val c = correlate(q, outerOnly, "LATERAL", "__lat_")
+    val inner = c.inner
+    // inner GROUP BY keys: each surviving (tuple, group) becomes
     // one lateral row — the "per-outer-row breakdown" shape. HAVING
     // filters groups BEFORE the join back. A grouped (or HAVING-
     // filtered) lateral can yield ZERO rows for a tuple, so the
@@ -1395,7 +1389,7 @@ final class Translator(catalog: String => DataFrame,
     val aggCols = aggs.map { case (n, a) => aggColumn(a).as(n) }
     val grpCols = innerKeys.zip(grpNames).map { case (g, n) =>
       exprToCol(g, None).as(n) }
-    if (keyPairs.isEmpty && thetas.isEmpty && gens.isEmpty) {
+    if (c.keys.isEmpty && c.keyed) {
       // uncorrelated: a global aggregate is ONE row (or one per
       // group) — broadcast it
       var grouped =
@@ -1414,30 +1408,12 @@ final class Translator(catalog: String => DataFrame,
       // side joins the DISTINCT tuple table on keys + the full
       // condition first — one aggregation per tuple, never per
       // outer row.
-      val gNames = genDefs.map(_._1)
-      val tupleNames = keyNames ++ tNames ++ gNames
-      val tupleCols = keyPairs.zip(keyNames).map { case ((_, oe), n) =>
-        exprToCol(oe, None).as(n) } ++
-        thetas.zip(tNames).map { case ((_, _, oe), n) =>
-          exprToCol(oe, None).as(n) } ++
-        genDefs.map { case (n, oe) => exprToCol(oe, None).as(n) }
-      val tuples = lf.select(tupleCols: _*).distinct()
+      val tupleNames = c.tupleNames
+      val tuples = c.tuples(lf)
       var grouped =
-        if (thetas.isEmpty && gens.isEmpty)
-          inner.groupBy(keyPairs.zip(keyNames).map { case ((ik, _), n) =>
-            exprToCol(ik, None).as(n) } ++ grpCols: _*)
-            .agg(aggCols.head, aggCols.tail: _*)
-        else {
-          val joinCond =
-            (keyPairs.zip(keyNames).map { case ((ik, _), n) =>
-              exprToCol(ik, None) === F.col(n) } ++
-             thetas.zip(tNames).map { case ((ie, op, _), n) =>
-              cmp(op, exprToCol(ie, None), F.col(n)) } ++
-             gens.map(exprToCol(_, None))).reduce(_ && _)
-          tuples.join(inner, joinCond, "inner")
-            .groupBy(tupleNames.map(F.col) ++ grpCols: _*)
-            .agg(aggCols.head, aggCols.tail: _*)
-        }
+        if (c.keyed) c.keySummary(aggCols, grpCols)
+        else c.tupleJoin(tuples).groupBy(c.tupleCols() ++ grpCols: _*)
+          .agg(aggCols.head, aggCols.tail: _*)
       havingSubst.foreach(h => grouped = grouped.filter(exprToCol(h, None)))
       // a general predicate (IS NULL, OR arms) can select rows for a
       // NULL-operand tuple, so the fill join must be NULL-SAFE on the
@@ -1446,34 +1422,29 @@ final class Translator(catalog: String => DataFrame,
       // groups has ZERO lateral rows, not one NULL row
       val filled =
         if (!fillMissing) grouped
-        else if (gens.isEmpty)
-          tuples.join(grouped, tupleNames.toSeq, "left_outer")
+        else if (c.gens.isEmpty)
+          tuples.join(grouped, tupleNames, "left_outer")
         else {
-          val renamed = grouped.select(grouped.columns.map(c =>
-            if (tupleNames.contains(c)) F.col(c).as(c + "__g")
-            else F.col(c)): _*)
+          val renamed = grouped.select(grouped.columns.map(n =>
+            if (tupleNames.contains(n)) F.col(n).as(n + "__g")
+            else F.col(n)): _*)
           tuples.join(renamed,
               tupleNames.map(n => F.col(n) <=> F.col(n + "__g"))
                 .reduce(_ && _), "left_outer")
             .drop(tupleNames.map(_ + "__g"): _*)
         }
+      val a = alias.toLowerCase
       val lat = filled.select((tupleNames.map(F.col) ++ items.map {
         case (e, n) => exprToCol(e, None).as(n) }): _*)
-        .alias(alias.toLowerCase)
-      val cond = (keyPairs.zip(keyNames).map { case ((_, oe), n) =>
-        exprToCol(oe, None) <=> F.col(s"${alias.toLowerCase}.$n") } ++
-        thetas.zip(tNames).map { case ((_, _, oe), n) =>
-          exprToCol(oe, None) <=> F.col(s"${alias.toLowerCase}.$n") } ++
-        genDefs.map { case (n, oe) =>
-          exprToCol(oe, None) <=> F.col(s"${alias.toLowerCase}.$n")
-        }).reduce(_ && _)
+        .alias(a)
       val joinType =
         if (kind == "left" && !fillMissing) "left_outer" else "inner"
-      lf.join(lat, cond, joinType).drop(tupleNames: _*)
+      lf.join(lat, c.backCond(nullSafe = true, col = n => F.col(s"$a.$n")),
+        joinType).drop(tupleNames: _*)
     }
   }
 
-  /** LATERAL top-n (r5b): `[cross|inner|left] join lateral (select
+  /** LATERAL top-n: `[cross|inner|left] join lateral (select
     * cols from t2 where t2.k = o.k order by s [desc] limit n
     * [offset m]) a` — the per-outer-row top-k shape (latest order per
     * customer, best k matches per query, ...).
@@ -1505,21 +1476,9 @@ final class Translator(catalog: String => DataFrame,
         q.orderBy.exists(oi => containsWindow(oi.e)))
       fail("window functions inside LATERAL top-n subqueries are " +
         "unsupported (apply them outside the lateral)")
-    val outerOnly = outerAliases -- relationAliases(q.sel.from)
-    val conjs = q.sel.where.map(splitConjuncts).getOrElse(Nil)
-    val (corr, local) = conjs.partition(refersToAliases(_, outerOnly))
-    val keyPairs = corr.map { // (inner expr, outer expr)
-      case Cmp("=", a, b)
-          if refersToAliases(b, outerOnly) && !refersToAliases(a, outerOnly) =>
-        (a, b)
-      case Cmp("=", a, b)
-          if refersToAliases(a, outerOnly) && !refersToAliases(b, outerOnly) =>
-        (b, a)
-      case other => fail("LATERAL correlation must be equality " +
-        s"conjuncts between inner and outer columns, got $other")
-    }
-    var inner = drainGenHoists(translateRelation(q.sel.from))
-    local.reduceOption(And).foreach(p => inner = inner.filter(exprToCol(p, None)))
+    val c = correlate(q, outerAliases -- relationAliases(q.sel.from),
+      "LATERAL", "__lat_", allowTheta = false, general = false)
+    val inner = c.inner
     // ORDER BY sees the subquery's select aliases (and positions),
     // falling back to inner columns — evaluated PRE-projection so
     // unprojected sort keys work too
@@ -1551,7 +1510,7 @@ final class Translator(catalog: String => DataFrame,
       }
     }
     val off = q.offset.getOrElse(0L)
-    if (keyPairs.isEmpty) {
+    if (c.keys.isEmpty) {
       // uncorrelated: a global top-n is tiny — TakeOrdered + broadcast
       var lat0 = inner.orderBy(sortCols: _*)
       if (off > 0) lat0 = lat0.offset(off.toInt)
@@ -1561,9 +1520,8 @@ final class Translator(catalog: String => DataFrame,
       if (kind == "left") lf.join(F.broadcast(lat), F.lit(true), "left_outer")
       else lf.crossJoin(F.broadcast(lat))
     } else {
-      val keyNames = keyPairs.indices.map(i => s"__lat_k$i")
       val w = Window
-        .partitionBy(keyPairs.map(kp => exprToCol(kp._1, None)): _*)
+        .partitionBy(c.keys.map(kp => exprToCol(kp._1, None)): _*)
         .orderBy(sortCols: _*)
       val rn = (if (q.fetchTies) F.rank() else F.row_number()).over(w)
       // filter on the MATERIALIZED rank column — filtering on the
@@ -1571,20 +1529,16 @@ final class Translator(catalog: String => DataFrame,
       // the projected frame, whose partition keys may be dropped
       var keep = F.col("__lat_rn") > F.lit(off)
       q.limit.foreach(n => keep = keep && F.col("__lat_rn") <= F.lit(off + n))
+      val a = alias.toLowerCase
       val lat = inner
-        .select((keyPairs.zip(keyNames).map { case ((ik, _), n) =>
-          exprToCol(ik, None).as(n) } ++
+        .select((c.innerKeys() ++
           items.map { case (e, n) => exprToCol(e, None).as(n) } :+
           rn.as("__lat_rn")): _*)
         .filter(keep).drop("__lat_rn")
-        .alias(alias.toLowerCase)
-      val cond = keyPairs.zip(keyNames).map { case ((_, oe), n) =>
-        exprToCol(oe, None) <=> F.col(s"${alias.toLowerCase}.$n")
-      }.reduce(_ && _)
-      val joined =
-        if (kind == "left") lf.join(lat, cond, "left_outer")
-        else lf.join(lat, cond, "inner")
-      joined.drop(keyNames: _*)
+        .alias(a)
+      val cond = c.backCond(nullSafe = true, col = n => F.col(s"$a.$n"))
+      lf.join(lat, cond, if (kind == "left") "left_outer" else "inner")
+        .drop(c.keyNames: _*)
     }
   }
 
@@ -1737,42 +1691,21 @@ final class Translator(catalog: String => DataFrame,
     // GROUP BY that leaves >1 row in some evaluated correlation group
     // raises the standard more-than-one-row error at runtime (window
     // count over the correlation keys + raise_error). Outer refs must
-    // be alias-qualified; every correlated conjunct must be an
-    // equality.
+    // be alias-qualified. Theta and general correlated conjuncts take
+    // the outer-tuple join (see [[Correlation]]).
     def hoistScalars(e: Expr): Expr =
       Ast.transformUp(e) { case ScalarSubquery(sub) =>
-        // standard SQL shadowing: an inner relation with the same
-        // name/alias as an outer one hides it, so only qualifiers NOT
-        // re-introduced by the subquery's own FROM count as outer refs
-        def outerOnly(q: Query): Set[String] =
-          outerAliasesPre -- relationAliases(q.sel.from)
-        val corrForm = sub match {
-          case Leaf(q) if q.sel.groupMode == "plain" &&
-              q.sel.groupSets.isEmpty &&
-              q.sel.qualify.isEmpty &&
-              (!q.sel.distinct || q.sel.groupBy.isEmpty) &&
-              q.limit.isEmpty && q.offset.isEmpty && q.sel.items.length == 1 &&
-              containsAgg(q.sel.items.head.e) &&
-              q.sel.where.exists(w =>
-                splitConjuncts(w).exists(refersToAliases(_, outerOnly(q)))) =>
-            Some(q)
-          case _ => None
-        }
-        corrForm match {
-          case Some(q) =>
-            val outerRefs = outerOnly(q)
+        correlatedLeaf(sub, outerAliasesPre, aggregate = true) match {
+          case Some((q, outerRefs)) =>
             val idx = helperCols.size
             // theta conjuncts (any number) decorrelate for plain
-            // aggregates AND (r5b) for inner GROUP BY/HAVING — the
+            // aggregates AND for inner GROUP BY/HAVING — the
             // "aggregate over earlier/smaller rows" shape in both
             // grouped and ungrouped forms
-            val (keyPairs, thetas, gens, genDefs, local) = corrSplitG(q,
-              outerRefs, "scalar subquery", allowTheta = true,
-              Some(s"__csq_${idx}_ge"))
-            var inner = drainGenHoists(translateRelation(q.sel.from))
-            local.reduceOption(And).foreach(p =>
-              inner = inner.filter(exprToCol(p, None)))
-            val keyNames = keyPairs.indices.map(i => s"__csq_${idx}_k$i")
+            val c = correlate(q, outerRefs, "scalar subquery", s"__csq_${idx}_")
+            val inner = c.inner
+            val keyPairs = c.keys
+            val keyNames = c.keyNames
             val innerKeys = q.sel.groupBy
             val gNames = innerKeys.indices.map(j => s"__csq_${idx}_g$j")
             // every aggregate node in the item (and the subquery's
@@ -1810,15 +1743,13 @@ final class Translator(catalog: String => DataFrame,
             }
             if (aggs.isEmpty)
               fail("correlated scalar subquery needs at least one aggregate")
-            val grpCols = keyPairs.zip(keyNames).map { case ((ik, _), n) =>
-              exprToCol(ik, None).as(n)
-            } ++ innerKeys.zip(gNames).map { case (g, n) =>
+            val gCols = innerKeys.zip(gNames).map { case (g, n) =>
               exprToCol(g, None).as(n)
             }
             val aggCols = aggs.map { case (n, a) => aggColumn(a).as(n) }
-            // r13 (VERDICT r12 #4) widens the r10 fusion beyond the
-            // plain shape to the two next-simplest ones, both provably
-            // single-group per outer row:
+            // the window fusion below takes the plain shape and the two
+            // next-simplest ones, both provably single-group per outer
+            // row:
             //  - inner GROUP BY where every key structurally matches a
             //    correlation equality key (grouping adds nothing but
             //    the zero-rows ⟹ NULL-even-for-COUNT contract);
@@ -1837,10 +1768,10 @@ final class Translator(catalog: String => DataFrame,
               }) { case c: ColRef => bare = true; c }
               !bare
             }
-            val fusable = thetas.length == 1 && gens.isEmpty &&
+            val fusable = c.thetas.length == 1 && c.gens.isEmpty &&
               innerKeysFusable && havingAggOnly &&
               keyPairs.nonEmpty &&
-              Set("<", "<=", ">", ">=").contains(thetas.head._2) &&
+              Set("<", "<=", ">", ">=").contains(c.thetas.head._2) &&
               aggs.forall { case (_, a) =>
                 Set("count", "sum", "min", "max", "avg").contains(a.func) &&
                   !a.distinct && a.aggOrder.isEmpty && a.extraArgs.isEmpty } &&
@@ -1850,9 +1781,9 @@ final class Translator(catalog: String => DataFrame,
               from.columns.map(_.toLowerCase).distinct.length ==
                 from.columns.length
             if (fusable) {
-                // single-theta running-aggregate fusion (r10, VERDICT
-                // r9 #7 — the asof joinless pattern): instead of
-                // distinct-tuples → join → groupBy → join-back, UNION
+                // single-theta running-aggregate fusion (the asof
+                // joinless pattern): instead of distinct-tuples →
+                // join → groupBy → join-back, UNION
                 // the outer rows (marker 0, the theta operand as the
                 // sort value) with the inner rows (marker 1, the
                 // theta expression), window-partition by the
@@ -1868,7 +1799,7 @@ final class Translator(catalog: String => DataFrame,
                 // predicate — filtered before the union; outer rows
                 // with a NULL operand sort nulls-FIRST, so their
                 // frame is empty — exactly aggregate-over-empty.
-                val (ie, op, oe) = thetas.head
+                val (ie, op, oe) = c.thetas.head
                 val ukN = keyPairs.indices.map(j => s"__csq_${idx}_uk$j")
                 val valN = s"__csq_${idx}_val"; val mN = s"__csq_${idx}_m"
                 val argNs = aggs.indices.map(j => s"__csq_${idx}_w$j")
@@ -1964,77 +1895,21 @@ final class Translator(catalog: String => DataFrame,
                   (ukN.toList ::: argNs.toList ::: helperCols)
                 substituted // ≤1 group per outer row by construction:
                             // no >1-row guard needed
-            } else if (thetas.nonEmpty || gens.nonEmpty) {
-                // theta / general scalar: the aggregated set depends
-                // on the outer operand(s), so aggregate per DISTINCT
-                // outer (keys, operands) tuple — a join on the
-                // correlation keys carrying every theta comparison
-                // and (r5c) every general correlated predicate
-                // (correlation under OR/NOT, mixed-side comparisons)
-                // as residual condition — then join back on the
-                // tuple. One row per tuple, no outer-row
-                // multiplication; sound for ANY condition (it
-                // evaluates row-by-row inside the join).
-                val tNs = thetas.indices.map(j => s"__csq_${idx}_t$j")
-                val gNs = genDefs.map(_._1)
-                val okCols = keyPairs.zip(keyNames).map { case ((_, ok), n) =>
-                  exprToCol(ok, None).as(n) }
-                val tuples = from
-                  .select(okCols ++
-                    thetas.zip(tNs).map { case ((_, _, oe), n) =>
-                      exprToCol(oe, None).as(n) } ++
-                    genDefs.map { case (n, oe) =>
-                      exprToCol(oe, None).as(n) }: _*)
-                  .distinct()
-                val joinCond =
-                  (keyPairs.zip(keyNames).map { case ((ik, _), n) =>
-                    exprToCol(ik, None) === F.col(n) } ++
-                   thetas.zip(tNs).map { case ((ie, op, _), n) =>
-                    cmp(op, exprToCol(ie, None), F.col(n)) } ++
-                   gens.map(exprToCol(_, None))).reduce(_ && _)
-                // inner GROUP BY keys (r5b) extend the tuple grouping;
-                // HAVING filters groups BEFORE the join back, and more
-                // than one surviving group per tuple is the standard
-                // loud runtime error (window count + raise_error)
-                var grouped = tuples.join(inner, joinCond, "inner")
-                  .groupBy((keyNames ++ tNs ++ gNs).map(F.col) ++
-                    innerKeys.zip(gNames).map { case (g, n) =>
-                      exprToCol(g, None).as(n) }: _*)
-                  .agg(aggCols.head, aggCols.tail: _*)
-                havingSubst.foreach(h =>
-                  grouped = grouped.filter(exprToCol(h, None)))
-                val cntN = s"__csq_${idx}_c"
-                val guarded: Expr =
-                  if (innerKeys.isEmpty) substituted
-                  else {
-                    grouped = grouped.withColumn(cntN,
-                      F.count(F.lit(1)).over(
-                        Window.partitionBy(
-                          (keyNames ++ tNs ++ gNs).map(F.col): _*)))
-                    CaseWhen(Seq((Cmp(">", ColRef(None, cntN), NumLit("1")),
-                      FuncCall("raise_error", Seq(StrLit(
-                        "scalar subquery returned more than one row"))))),
-                      substituted)
-                  }
-                // general tuple columns join back NULL-SAFELY: unlike
-                // pure comparisons, a general predicate (IS NULL, OR
-                // arms) can select rows for a NULL operand tuple, and
-                // that tuple's aggregate must reach its outer rows
-                val backCond =
-                  (keyPairs.zip(keyNames).map { case ((_, ok), n) =>
-                    exprToCol(ok, None) === F.col(n) } ++
-                   thetas.zip(tNs).map { case ((_, _, oe), n) =>
-                    exprToCol(oe, None) === F.col(n) } ++
-                   genDefs.map { case (n, oe) =>
-                    exprToCol(oe, None) <=> F.col(n) }).reduce(_ && _)
-                from = from.join(grouped, backCond, "left_outer")
-                helperCols = aggs.map(_._1).toList ::: cntN ::
-                  (tNs.toList ::: gNs.toList ::: keyNames.toList :::
-                    gNames.toList ::: helperCols)
-                guarded
             } else {
-                var grouped = inner.groupBy(grpCols: _*)
-                  .agg(aggCols.head, aggCols.tail: _*)
+                // keys only: the aggregate per key value. Theta /
+                // general: the aggregated set depends on the outer
+                // operands, so aggregate per DISTINCT outer tuple over
+                // the tuple join (sound for ANY condition: it evaluates
+                // row by row inside the join). Inner GROUP BY keys
+                // extend the grouping; HAVING filters groups BEFORE
+                // the join back, and more than one surviving group per
+                // key / tuple is the standard loud runtime error
+                // (window count + raise_error)
+                var grouped =
+                  if (c.keyed) c.keySummary(aggCols, gCols)
+                  else c.tupleJoin(c.tuples(from))
+                    .groupBy(c.tupleCols() ++ gCols: _*)
+                    .agg(aggCols.head, aggCols.tail: _*)
                 havingSubst.foreach(h =>
                   grouped = grouped.filter(exprToCol(h, None)))
                 val cntN = s"__csq_${idx}_c"
@@ -2043,40 +1918,24 @@ final class Translator(catalog: String => DataFrame,
                   else {
                     grouped = grouped.withColumn(cntN,
                       F.count(F.lit(1)).over(
-                        Window.partitionBy(keyNames.map(F.col): _*)))
+                        Window.partitionBy(c.tupleCols(): _*)))
                     CaseWhen(Seq((Cmp(">", ColRef(None, cntN), NumLit("1")),
                       FuncCall("raise_error", Seq(StrLit(
                         "scalar subquery returned more than one row"))))),
                       substituted)
                   }
-                val cond = keyPairs.zip(keyNames).map { case ((_, ok), n) =>
-                  exprToCol(ok, None) === F.col(n)
-                }.reduce(_ && _)
-                from = from.join(grouped, cond, "left_outer")
+                from = from.join(grouped, c.backCond(nullSafe = false),
+                  "left_outer")
                 helperCols = aggs.map(_._1).toList ::: cntN ::
-                  (keyNames.toList ::: gNames.toList ::: helperCols)
+                  (c.tupleNames.toList ::: gNames.toList ::: helperCols)
                 guarded
             }
           case None =>
-            val subDf = translate(sub)
-            if (subDf.columns.length != 1)
-              fail("scalar subquery requires a single-column subquery")
             val n = s"__ssq_${helperCols.size}"
-            // collapse to exactly ONE row before the cross join: 0 rows
-            // must yield NULL (not eliminate every outer row) and >1
-            // rows must be a loud runtime error (not row multiplication)
-            // — the standard scalar-subquery contract. Rename
-            // positionally first: an unaliased expression item's
-            // generated name can contain dots, which F.col would
-            // parse as field access.
-            val one = subDf.toDF("__v0")
-              .agg(F.first(F.col("__v0")).as("__v"),
-                F.count(F.lit(1)).as("__c"))
-              .select(
-                F.when(F.col("__c") > 1, F.raise_error(F.lit(
-                  "scalar subquery returned more than one row")))
-                  .otherwise(F.col("__v")).as(n))
-            from = from.crossJoin(F.broadcast(one))
+            // exactly ONE row before the cross join: 0 rows must yield
+            // NULL (not eliminate every outer row) and >1 rows must be
+            // a loud runtime error (not row multiplication)
+            from = from.crossJoin(F.broadcast(scalarRow(translate(sub), n)))
             helperCols = n :: helperCols
             ColRef(None, n)
         }
@@ -2131,27 +1990,37 @@ final class Translator(catalog: String => DataFrame,
     lazy val lowerBoolFlags: Expr => Expr = {
       var flagIdx = helperCols.size
       def freshIdx(): Int = { val i = flagIdx; flagIdx += 1; i }
+      def applied(step: FlagStep, i: Int): Expr = {
+        from = step._1(from)
+        helperCols = step._2 ::: helperCols
+        ColRef(None, s"__sq_flag_$i")
+      }
+      val lower = exprToCol(_: Expr, None)
       (expr0: Expr) =>
         Ast.transformUp(expr0) {
           case InSubquery(e: RowTuple, sub0) =>
-            // r9: tuple IN in arbitrary boolean position (under OR,
-            // projected, NOT ...) — full 3VL as a flag. Lowering is
-            // the distinct-outer-tuple pattern: the DISTINCT probe
-            // tuples join the subquery on the "comparison not
+            // tuple IN in arbitrary boolean position (under OR,
+            // projected, NOT ...) — full 3VL as a flag. The DISTINCT
+            // probe tuples join the subquery on the "comparison not
             // strictly false" condition (every pair equal-or-either-
             // null), aggregate match/not-false marks per tuple, and
             // join back null-safely — no outer-row multiplication;
             // the tuple×sub join is the inherent cost of composite
-            // 3VL (null arms defeat hash keys). r10 closes the last
-            // 36bi wall: CORRELATED tuple IN routes through the same
-            // distinct-outer-tuple machinery, the tuple widened by
-            // the correlation operands (the 36n flag pattern with a
-            // composite probe).
+            // 3VL (null arms defeat hash keys). A correlated subquery
+            // widens the tuple by its correlation columns.
             val sub = degroupCorrSub(sub0, outerAliases, forExists = false)
             val ps = e.items.map(exprToCol(_, None))
+            val i = freshIdx()
+            val flagN = s"__sq_flag_$i"; val p = s"__sq_${i}_"
+            val markN = s"${p}mark"; val grpN = s"${p}grp"
+            val probes = ps.indices.map(j => ps(j) -> s"${p}probe$j")
+            val flag =
+              F.when(F.col(markN) <=> F.lit(true), F.lit(true))
+                .when(F.col(grpN).isNull, F.lit(false)) // incl. empty set
+                .otherwise(F.lit(null).cast(BooleanType))
             if (setExprRefers(sub, outerAliases)) {
-              // correlated composite probe (r10): the subquery must be
-              // a plain FROM/WHERE select of matching arity
+              // the correlated subquery must be a plain FROM/WHERE
+              // select of matching arity
               val q = sub match {
                 case Leaf(q0) if q0.sel.groupBy.isEmpty &&
                     q0.sel.having.isEmpty && q0.sel.qualify.isEmpty &&
@@ -2161,552 +2030,83 @@ final class Translator(catalog: String => DataFrame,
                 case _ => fail("correlated row-value IN supports plain " +
                   "FROM/WHERE subqueries of matching arity only")
               }
-              val outerRefs = outerAliases -- relationAliases(q.sel.from)
-              val i = freshIdx()
-              val flagN = s"__sq_flag_$i"
-              val markN = s"__sq_mark_$i"; val grpN = s"__sq_grp_$i"
-              val (keyPairs, thetas, gens, genDefs, local) =
-                corrSplitG(q, outerRefs, "IN", allowTheta = true,
-                  Some(s"__sq_ge_${i}_"))
-              var inner = drainGenHoists(translateRelation(q.sel.from))
-              local.reduceOption(And).foreach(p =>
-                inner = inner.filter(exprToCol(p, None)))
-              val probeNs = ps.indices.map(j => s"__sq_tp_${i}_$j")
-              val okN = keyPairs.indices.map(j => s"__sq_ok_${i}_$j")
-              val tNs = thetas.indices.map(j => s"__sq_tu_${i}_$j")
-              val gNs = genDefs.map(_._1)
-              val tuples = from.select(
-                (ps.zip(probeNs).map { case (p, n) => p.as(n) } ++
-                 keyPairs.zip(okN).map { case ((_, ok), n) =>
-                   exprToCol(ok, None).as(n) } ++
-                 thetas.zip(tNs).map { case ((_, _, oe), n) =>
-                   exprToCol(oe, None).as(n) } ++
-                 genDefs.map { case (n, oe) =>
-                   exprToCol(oe, None).as(n) }): _*).distinct()
-              val keyCs = q.sel.items.map(it => exprToCol(it.e, None))
-              // join admits correlation-group rows whose composite
+              val c = correlate(q, outerAliases -- relationAliases(q.sel.from),
+                "IN", p)
+              c.inner
+              val pk = probes.zip(q.sel.items.map(it => exprToCol(it.e, None)))
+              // the join admits correlation-group rows whose composite
               // comparison is NOT STRICTLY FALSE; strictly-false-only
               // and empty groups both land on the FALSE arm via the
               // missing group row — exactly the uncorrelated 3VL
-              val notFalse = ps.indices.map { j =>
-                keyCs(j) === F.col(probeNs(j)) ||
-                  keyCs(j).isNull || F.col(probeNs(j)).isNull
-              }.reduce(_ && _)
-              val joinCond =
-                (keyPairs.zip(okN).map { case ((ik, _), n) =>
-                   exprToCol(ik, None) === F.col(n) } ++
-                 thetas.zip(tNs).map { case ((ie, op, _), n) =>
-                   cmp(op, exprToCol(ie, None), F.col(n)) } ++
-                 gens.map(exprToCol(_, None)))
-                  .foldLeft(notFalse)(_ && _)
-              val grouped = tuples.join(inner, joinCond, "inner")
-                .groupBy((probeNs ++ okN ++ tNs ++ gNs).map(F.col): _*)
-                .agg(F.max(F.coalesce(
-                  ps.indices.map(j => keyCs(j) === F.col(probeNs(j)))
-                    .reduce(_ && _),
-                  F.lit(false))).as(markN))
+              val notFalse = pk.map { case ((_, n), k) =>
+                k === F.col(n) || k.isNull || F.col(n).isNull }.reduce(_ && _)
+              val grouped = c.tupleJoin(c.tuples(from, probes),
+                  lead = Seq(notFalse))
+                .groupBy(c.tupleCols(probes): _*)
+                .agg(F.max(F.coalesce(pk.map { case ((_, n), k) =>
+                  k === F.col(n) }.reduce(_ && _), F.lit(false))).as(markN))
                 .withColumn(grpN, F.lit(true))
-              val backCond =
-                (ps.zip(probeNs).map { case (p, n) => p <=> F.col(n) } ++
-                 keyPairs.zip(okN).map { case ((_, ok), n) =>
-                   exprToCol(ok, None) <=> F.col(n) } ++
-                 thetas.zip(tNs).map { case ((_, _, oe), n) =>
-                   exprToCol(oe, None) <=> F.col(n) } ++
-                 genDefs.map { case (n, oe) =>
-                   exprToCol(oe, None) <=> F.col(n) }).reduce(_ && _)
-              from = from.join(grouped, backCond, "left_outer")
-                .withColumn(flagN,
-                  F.when(F.col(markN) <=> F.lit(true), F.lit(true))
-                    .when(F.col(grpN).isNull, F.lit(false))
-                    .otherwise(F.lit(null).cast(BooleanType)))
+              from = from.join(grouped, c.backCond(nullSafe = true, probes),
+                  "left_outer")
+                .withColumn(flagN, flag)
               helperCols = flagN :: markN :: grpN ::
-                (probeNs.toList ::: okN.toList ::: tNs.toList :::
-                  gNs.toList ::: helperCols)
-              ColRef(None, flagN)
+                (probes.map(_._2) ++ c.tupleNames).toList ::: helperCols
             } else {
-            val subDf0 = translate(sub)
-            if (subDf0.columns.length != ps.length)
-              fail(s"IN (subquery) requires a ${ps.length}-column " +
-                s"subquery to match the probe, got " +
-                s"${subDf0.columns.length}")
-            val i = freshIdx()
-            val flagN = s"__sq_flag_$i"
-            val markN = s"__sq_mark_$i"; val nfN = s"__sq_nf_$i"
-            val probeNs = ps.indices.map(j => s"__sq_tp_${i}_$j")
-            val keyNs = ps.indices.map(j => s"__sq_tk_${i}_$j")
-            val keyed = subDf0.toDF(keyNs: _*)
-            val tuples = from.select(ps.zip(probeNs).map { case (p, n) =>
-              p.as(n) }: _*).distinct()
-            val grouped = tuples.join(keyed,
-                probeNs.zip(keyNs).map { case (n, k) =>
-                  F.col(n) === F.col(k) || F.col(n).isNull ||
-                    F.col(k).isNull }.reduce(_ && _), "inner")
-              .groupBy(probeNs.map(F.col): _*)
-              .agg(F.max(F.coalesce(
-                probeNs.zip(keyNs).map { case (n, k) =>
-                  F.col(n) === F.col(k) }.reduce(_ && _),
-                F.lit(false))).as(markN))
-              .withColumn(nfN, F.lit(true))
-            from = from.join(grouped,
-                ps.zip(probeNs).map { case (p, n) => p <=> F.col(n) }
-                  .reduce(_ && _), "left_outer")
-              .withColumn(flagN,
-                F.when(F.col(markN) <=> F.lit(true), F.lit(true))
-                  .when(F.col(nfN).isNull, F.lit(false)) // incl. empty set
-                  .otherwise(F.lit(null).cast(BooleanType)))
-            helperCols = flagN :: markN :: nfN ::
-              (probeNs.toList ::: helperCols)
-            ColRef(None, flagN)
+              val subDf = translate(sub)
+              if (subDf.columns.length != ps.length)
+                fail(s"IN (subquery) requires a ${ps.length}-column " +
+                  s"subquery to match the probe, got " +
+                  s"${subDf.columns.length}")
+              val pk = probes.map(_._2).zip(ps.indices.map(j => s"${p}key$j"))
+              val keyed = subDf.toDF(pk.map(_._2): _*)
+              val tuples = from.select(probes.map { case (c, n) => c.as(n) }: _*)
+                .distinct()
+              val grouped = tuples.join(keyed,
+                  pk.map { case (n, k) => F.col(n) === F.col(k) ||
+                    F.col(n).isNull || F.col(k).isNull }.reduce(_ && _), "inner")
+                .groupBy(pk.map(t => F.col(t._1)): _*)
+                .agg(F.max(F.coalesce(pk.map { case (n, k) =>
+                  F.col(n) === F.col(k) }.reduce(_ && _), F.lit(false))).as(markN))
+                .withColumn(grpN, F.lit(true))
+              from = from.join(grouped,
+                  probes.map { case (c, n) => c <=> F.col(n) }.reduce(_ && _),
+                  "left_outer")
+                .withColumn(flagN, flag)
+              helperCols = flagN :: markN :: grpN ::
+                (probes.map(_._2).toList ::: helperCols)
             }
+            ColRef(None, flagN)
           case InSubquery(e, sub0) =>
             val sub = degroupCorrSub(sub0, outerAliases, forExists = false)
             val probe = exprToCol(e, None)
             val i = freshIdx()
-            val flagN = s"__sq_flag_$i"
-            val corrForm = sub match {
-              case Leaf(q) if q.sel.groupBy.isEmpty && q.sel.having.isEmpty &&
-                  q.sel.qualify.isEmpty &&
-                  q.limit.isEmpty && q.offset.isEmpty &&
-                  q.sel.items.length == 1 &&
-                  q.sel.where.exists(w => splitConjuncts(w).exists(
-                    refersToAliases(_, outerAliases -- relationAliases(q.sel.from)))) =>
-                Some(q)
-              case _ => None
-            }
-            corrForm match {
-              case Some(q) =>
-                // correlated IN in arbitrary boolean position: per-
-                // correlation-group existence flag with full 3VL —
-                // TRUE on match; FALSE when the group is empty; NULL
-                // when the probe is null or the group has a null key.
-                // Two narrow key-shuffled left_outer joins (group
-                // summary + distinct match keys), no row multiplication.
-                //
-                // With a range (theta) conjunct, each arm carries the
-                // per-group min/max of the inner range expression
-                // (`∃ t < x ⟺ min(t) < x`): match iff the probe's key
-                // group has a theta-satisfying row, nonempty iff the
-                // correlation group does, null-key iff a null-keyed
-                // row does — the same 3VL table, evaluated against
-                // the outer side after the join.
-                val outerRefs = outerAliases -- relationAliases(q.sel.from)
-                val (keyPairs, thetas, gens, genDefs, local) =
-                  corrSplitG(q, outerRefs, "IN", allowTheta = true,
-                    Some(s"__sq_ge_${i}_"))
-                var inner = drainGenHoists(translateRelation(q.sel.from))
-                local.reduceOption(And).foreach(p =>
-                  inner = inner.filter(exprToCol(p, None)))
-                val keyN = s"__sq_key_$i"; val markN = s"__sq_mark_$i"
-                val grpN = s"__sq_grp_$i"; val nullN = s"__sq_null_$i"
-                if (gens.nonEmpty || thetas.length >= 2) {
-                  // JOINT theta condition, or a GENERAL correlated
-                  // predicate (r5c: correlation under OR/NOT, mixed-
-                  // side comparisons): per-group min/max cannot
-                  // decompose these, so switch to the distinct-outer-
-                  // tuple lowering — aggregate the 3VL arms per
-                  // DISTINCT (probe, keys, operands) tuple over a
-                  // join carrying the FULL condition, then join back
-                  // on the tuple. |tuples| ≤ |outer| rows ever
-                  // shuffle; no outer-row multiplication.
-                  val probeT = s"__sq_tp_$i"
-                  val okN = keyPairs.indices.map(j => s"__sq_ok_${i}_$j")
-                  val tNs = thetas.indices.map(j => s"__sq_tu_${i}_$j")
-                  val gNs = genDefs.map(_._1)
-                  val tuples = from.select(
-                    probe.as(probeT) +:
-                      (keyPairs.zip(okN).map { case ((_, ok), n) =>
-                        exprToCol(ok, None).as(n) } ++
-                       thetas.zip(tNs).map { case ((_, _, oe), n) =>
-                        exprToCol(oe, None).as(n) } ++
-                       genDefs.map { case (n, oe) =>
-                        exprToCol(oe, None).as(n) }): _*).distinct()
-                  val joinCond =
-                    (keyPairs.zip(okN).map { case ((ik, _), n) =>
-                      exprToCol(ik, None) === F.col(n) } ++
-                     thetas.zip(tNs).map { case ((ie, op, _), n) =>
-                      cmp(op, exprToCol(ie, None), F.col(n)) } ++
-                     gens.map(exprToCol(_, None))).reduce(_ && _)
-                  val keyC = exprToCol(q.sel.items.head.e, None)
-                  val grouped = tuples.join(inner, joinCond, "inner")
-                    .groupBy((probeT +: (okN ++ tNs ++ gNs)).map(F.col): _*)
-                    .agg(
-                      F.max(F.coalesce(keyC === F.col(probeT), F.lit(false)))
-                        .as(markN),
-                      F.max(keyC.isNull).as(nullN))
-                    .withColumn(grpN, F.lit(true))
-                  val backCond =
-                    ((probe <=> F.col(probeT)) +:
-                      (keyPairs.zip(okN).map { case ((_, ok), n) =>
-                        exprToCol(ok, None) <=> F.col(n) } ++
-                       thetas.zip(tNs).map { case ((_, _, oe), n) =>
-                        exprToCol(oe, None) <=> F.col(n) } ++
-                       genDefs.map { case (n, oe) =>
-                        exprToCol(oe, None) <=> F.col(n) })).reduce(_ && _)
-                  from = from.join(grouped, backCond, "left_outer")
-                    .withColumn(flagN,
-                      F.when(F.col(markN) <=> F.lit(true), F.lit(true))
-                        .when(F.col(grpN).isNull, F.lit(false))
-                        .when(probe.isNull || F.col(nullN),
-                          F.lit(null).cast(BooleanType))
-                        .otherwise(F.lit(false)))
-                  helperCols = flagN :: markN :: grpN :: nullN :: probeT ::
-                    (okN.toList ::: tNs.toList ::: gNs.toList ::: helperCols)
-                } else {
-                val theta = thetas.headOption
-                val ckS = keyPairs.indices.map(j => s"__sq_cs_${i}_$j")
-                val ckK = keyPairs.indices.map(j => s"__sq_ck_${i}_$j")
-                val thetaCols = theta.map { case (ie, _, _) =>
-                  exprToCol(ie, None) }.toSeq
-                val keyed = inner.select(
-                  exprToCol(q.sel.items.head.e, None).as(keyN) +:
-                    (keyPairs.zip(ckS).map { case ((ik, _), n) =>
-                      exprToCol(ik, None).as(n) } ++
-                     thetaCols.map(_.as(s"__sq_t_$i"))): _*)
-                val sumCond = keyPairs.zip(ckS).map { case ((_, ok), n) =>
-                  exprToCol(ok, None) === F.col(n) }
-                  .reduceOption(_ && _).getOrElse(F.lit(true))
-                val keyCond = keyPairs.zip(ckK).map { case ((_, ok), n) =>
-                  exprToCol(ok, None) === F.col(n)
-                }.foldLeft(probe === F.col(keyN))(_ && _)
-                theta match {
-                  case None =>
-                    val summary = keyed
-                      .groupBy(ckS.map(F.col): _*)
-                      .agg(F.coalesce(F.max(F.col(keyN).isNull), F.lit(false)).as(nullN))
-                      .withColumn(grpN, F.lit(true))
-                    val keys = keyed.filter(F.col(keyN).isNotNull).distinct()
-                      .withColumn(markN, F.lit(true))
-                      .select(F.col(keyN) +: F.col(markN) +:
-                        ckS.zip(ckK).map { case (s, k) => F.col(s).as(k) }: _*)
-                    from = from
-                      .join(summary, sumCond, "left_outer")
-                      .join(keys, keyCond, "left_outer")
-                      .withColumn(flagN,
-                        F.when(F.col(markN).isNotNull, F.lit(true))
-                          .when(F.col(grpN).isNull, F.lit(false))
-                          .when(probe.isNull || F.col(nullN),
-                            F.lit(null).cast(BooleanType))
-                          .otherwise(F.lit(false)))
-                    helperCols = flagN :: markN :: grpN :: nullN :: keyN ::
-                      (ckS.toList ::: ckK.toList ::: helperCols)
-                  case Some((_, op, oe)) =>
-                    val t = F.col(s"__sq_t_$i")
-                    val allDefs = thetaAggCols(t, op, s"__sq_tall_$i")
-                    val nulDefs = thetaAggCols(
-                      F.when(F.col(keyN).isNull, t), op, s"__sq_tnull_$i")
-                    val matDefs = thetaAggCols(t, op, s"__sq_tmatch_$i")
-                    val sumAggs = allDefs ++ nulDefs
-                    val summary = keyed
-                      .groupBy(ckS.map(F.col): _*)
-                      .agg(sumAggs.head._2.as(sumAggs.head._1),
-                        sumAggs.tail.map { case (n, c) => c.as(n) }: _*)
-                      .withColumn(grpN, F.lit(true))
-                    val keys = keyed.filter(F.col(keyN).isNotNull)
-                      .groupBy((F.col(keyN) +: ckS.map(F.col)): _*)
-                      .agg(matDefs.head._2.as(matDefs.head._1),
-                        matDefs.tail.map { case (n, c) => c.as(n) }: _*)
-                      .withColumn(markN, F.lit(true))
-                      .select(F.col(keyN) +: F.col(markN) +:
-                        (matDefs.map(d => F.col(d._1)) ++
-                          ckS.zip(ckK).map { case (s, k) =>
-                            F.col(s).as(k) }): _*)
-                    val outerC = exprToCol(oe, None)
-                    def tc(defs: Seq[(String, Column)]): Column =
-                      thetaCond(op, defs.map(d => F.col(d._1)), outerC)
-                    val matched =
-                      (F.col(markN).isNotNull && tc(matDefs)) <=> F.lit(true)
-                    val nonempty =
-                      (F.col(grpN).isNotNull && tc(allDefs)) <=> F.lit(true)
-                    from = from
-                      .join(summary, sumCond, "left_outer")
-                      .join(keys, keyCond, "left_outer")
-                      .withColumn(flagN,
-                        F.when(matched, F.lit(true))
-                          .when(!nonempty, F.lit(false))
-                          .when(probe.isNull ||
-                              (tc(nulDefs) <=> F.lit(true)),
-                            F.lit(null).cast(BooleanType))
-                          .otherwise(F.lit(false)))
-                    helperCols = flagN :: markN :: grpN :: keyN ::
-                      ((allDefs ++ nulDefs ++ matDefs).map(_._1).toList :::
-                        ckS.toList ::: ckK.toList ::: helperCols)
-                }
-                }
-              case None =>
-                // grouped + theta/general IN in FLAG position (r6 —
-                // the last correlation-matrix cell): membership over
-                // per-(distinct outer tuple, inner keys) surviving
-                // groups, materialized as the same full-3VL flag the
-                // conjunct NOT IN path uses, kept as a COLUMN here
-                val groupedTheta = sub match {
-                  case Leaf(q0) =>
-                    groupedThetaSurvivors(q0,
-                      outerAliases -- relationAliases(q0.sel.from),
-                      from, wantValue = true)
-                  case _ => None
-                }
-                groupedTheta match {
-                  case Some((survivors, _, Some(_))) =>
-                    val (joined, hs) = survivorMembershipFlag(
-                      from, probe, survivors, flagN)
-                    from = joined
-                    helperCols = hs ::: helperCols
-                  case _ =>
-                    val (step, hs, _) = inFlagStep(sub, probe, "__sq", i)
-                    from = step(from)
-                    helperCols = hs ::: helperCols
-                }
-            }
-            ColRef(None, flagN)
+            applied(inFlag(sub, outerAliases, probe, lower, having = false,
+              "__sq", i), i)
           case ExistsSubquery(sub0) =>
             // EXISTS in arbitrary boolean position (under OR, nested
             // NOT). EXISTS is two-valued, so the flag is never NULL.
             val sub = degroupCorrSub(sub0, outerAliases, forExists = true)
             val i = freshIdx()
-            val flagN = s"__sq_flag_$i"
-            existsCorrInfo(sub, outerAliases) match {
-              case Some((q, outerRefs, _, _))
-                  if q.sel.groupBy.nonEmpty || q.sel.having.nonEmpty ||
-                    q.sel.qualify.nonEmpty ||
-                    q.limit.nonEmpty || q.offset.nonEmpty =>
-                // grouped + theta/general EXISTS in FLAG position
-                // (r6): does any group of the tuple's theta-selected
-                // rows satisfy HAVING? — surviving tuples LEFT-join
-                // back as a presence mark; EXISTS stays two-valued
-                // (an absent tuple, incl. NULL keys/operands under
-                // pure comparisons, reads false; general tuple
-                // columns join null-safely)
-                groupedThetaExistsSurvivors(q, outerRefs, from) match {
-                  case Some((survivors, cond)) =>
-                    val parts = lastSurvivorParts.get
-                    val markN = s"__sq_mark_$i"
-                    from = from.join(
-                        survivors.withColumn(markN, F.lit(true)),
-                        cond, "left_outer")
-                      .withColumn(flagN, F.col(markN).isNotNull)
-                    helperCols = flagN :: markN ::
-                      (parts.tupleNames ::: helperCols)
-                  case None =>
-                    fail("correlated EXISTS subquery supports FROM/WHERE only")
-                }
-              case Some((q, outerRefs, _, _)) =>
-                // dedup the inner side on its correlation keys before a
-                // left_outer presence join — no row multiplication. A
-                // range (theta) conjunct rides as the per-group min/max
-                // of the inner range expression, compared against the
-                // outer side after the join (`∃ t < x ⟺ min(t) < x`);
-                // EXISTS is two-valued, so an UNKNOWN comparison (null
-                // range values, null outer) reads false.
-                val (keyPairs, thetas, gens, genDefs, local) =
-                  corrSplitG(q, outerRefs, "EXISTS", allowTheta = true,
-                    Some(s"__sq_ge_${i}_"))
-                var inner = drainGenHoists(translateRelation(q.sel.from))
-                local.reduceOption(And).foreach(p =>
-                  inner = inner.filter(exprToCol(p, None)))
-                val markN = s"__sq_mark_$i"
-                if (gens.nonEmpty || thetas.length >= 2) {
-                  // JOINT theta condition (e.g. a time-window pair
-                  // `e.ts < o.ts AND e.ts > o.ts - 1h`) or a GENERAL
-                  // correlated predicate (r5c: correlation under
-                  // OR/NOT, mixed-side comparisons): min/max cannot
-                  // decompose these, so semi-join the DISTINCT
-                  // (keys, operands) outer-tuple table against the
-                  // inner rows on the FULL condition, then join the
-                  // surviving tuples back. EXISTS is two-valued — an
-                  // absent tuple (incl. NULL operands) reads false.
-                  val okN = keyPairs.indices.map(j => s"__sq_ok_${i}_$j")
-                  val tNs = thetas.indices.map(j => s"__sq_tu_${i}_$j")
-                  val gNs = genDefs.map(_._1)
-                  val tuples = from.select(
-                    keyPairs.zip(okN).map { case ((_, ok), n) =>
-                      exprToCol(ok, None).as(n) } ++
-                    thetas.zip(tNs).map { case ((_, _, oe), n) =>
-                      exprToCol(oe, None).as(n) } ++
-                    genDefs.map { case (n, oe) =>
-                      exprToCol(oe, None).as(n) }: _*).distinct()
-                  val joinCond =
-                    (keyPairs.zip(okN).map { case ((ik, _), n) =>
-                      exprToCol(ik, None) === F.col(n) } ++
-                     thetas.zip(tNs).map { case ((ie, op, _), n) =>
-                      cmp(op, exprToCol(ie, None), F.col(n)) } ++
-                     gens.map(exprToCol(_, None))).reduce(_ && _)
-                  val matched = tuples.join(inner, joinCond, "left_semi")
-                    .withColumn(markN, F.lit(true))
-                  val backCond =
-                    (keyPairs.zip(okN).map { case ((_, ok), n) =>
-                      exprToCol(ok, None) <=> F.col(n) } ++
-                     thetas.zip(tNs).map { case ((_, _, oe), n) =>
-                      exprToCol(oe, None) <=> F.col(n) } ++
-                     genDefs.map { case (n, oe) =>
-                      exprToCol(oe, None) <=> F.col(n) }).reduce(_ && _)
-                  from = from.join(matched, backCond, "left_outer")
-                    .withColumn(flagN, F.col(markN).isNotNull)
-                  helperCols = flagN :: markN ::
-                    (okN.toList ::: tNs.toList ::: gNs.toList ::: helperCols)
-                } else {
-                val theta = thetas.headOption
-                val ckK = keyPairs.indices.map(j => s"__sq_ck_${i}_$j")
-                val cond = keyPairs.zip(ckK).map { case ((_, ok), n) =>
-                  exprToCol(ok, None) === F.col(n) }
-                  .reduceOption(_ && _).getOrElse(F.lit(true))
-                theta match {
-                  case None =>
-                    val keys = inner.select(keyPairs.zip(ckK).map {
-                        case ((ik, _), n) => exprToCol(ik, None).as(n) }: _*)
-                      .distinct().withColumn(markN, F.lit(true))
-                    from = from.join(keys, cond, "left_outer")
-                      .withColumn(flagN, F.col(markN).isNotNull)
-                    helperCols = flagN :: markN :: (ckK.toList ::: helperCols)
-                  case Some((ie, op, oe)) =>
-                    val aggDefs =
-                      thetaAggCols(exprToCol(ie, None), op, s"__sq_tagg_$i")
-                    val keys = inner
-                      .groupBy(keyPairs.zip(ckK).map { case ((ik, _), n) =>
-                        exprToCol(ik, None).as(n) }: _*)
-                      .agg(aggDefs.head._2.as(aggDefs.head._1),
-                        aggDefs.tail.map { case (n, c) => c.as(n) }: _*)
-                      .withColumn(markN, F.lit(true))
-                    from = from.join(keys, cond, "left_outer")
-                      .withColumn(flagN,
-                        (F.col(markN).isNotNull &&
-                          thetaCond(op, aggDefs.map(d => F.col(d._1)),
-                            exprToCol(oe, None))) <=> F.lit(true))
-                    helperCols = flagN :: markN ::
-                      (aggDefs.map(_._1).toList ::: ckK.toList ::: helperCols)
-                }
-                }
-              case None =>
-                // uncorrelated: broadcast 1-row COUNT(*) > 0 summary
-                // over the one-row nonempty probe
-                val summary =
-                  existsProbeSide(sub).agg((F.count(F.lit(1)) > 0).as(flagN))
-                from = from.crossJoin(F.broadcast(summary))
-                helperCols = flagN :: helperCols
-            }
-            ColRef(None, flagN)
+            applied(existsFlag(sub, outerAliases, lower, having = false,
+              "__sq", i), i)
           case QuantCmp(op, all, e, sub0) =>
-            // Quantified comparison `x op ANY/ALL (subquery)` in any
-            // boolean position: lower against a (count, has-null,
-            // min, max) summary of the subquery column — `x < ANY(S)
-            // ⟺ x < max(S)`, `x < ALL(S) ⟺ ¬(x >= min(S))`, `<> ANY`
-            // and `= ALL` through the min/max pair — with the
-            // standard 3VL arms (empty set, null probe, null-bearing
-            // set) decided by quantFlag. Correlated equality-key
-            // forms group the summary per key and left-join (narrow
-            // key shuffle, no row multiplication); uncorrelated
-            // forms broadcast the one-row summary. (`= ANY`/`<> ALL`
-            // never reach here — the parser canonicalizes them to
-            // [NOT] IN.)
+            // quantified comparison `x op ANY/ALL (subquery)` in any
+            // boolean position
             val sub = degroupCorrSub(sub0, outerAliases, forExists = false)
             val probe = exprToCol(e, None)
             val i = freshIdx()
-            val flagN = s"__sq_flag_$i"
-            val corrForm = sub match {
-              case Leaf(q) if q.sel.groupBy.isEmpty && q.sel.having.isEmpty &&
-                  q.sel.qualify.isEmpty &&
-                  q.limit.isEmpty && q.offset.isEmpty &&
-                  q.sel.items.length == 1 &&
-                  q.sel.where.exists(w => splitConjuncts(w).exists(
-                    refersToAliases(_, outerAliases -- relationAliases(q.sel.from)))) =>
-                Some(q)
-              case _ => None
-            }
-            corrForm match {
-              case Some(q) =>
-                val outerRefs = outerAliases -- relationAliases(q.sel.from)
-                val (keyPairs, thetas, gens, genDefs, local) =
-                  corrSplitG(q, outerRefs, "quantified comparison",
-                    allowTheta = true, Some(s"__sq_ge_${i}_"))
-                var inner = drainGenHoists(translateRelation(q.sel.from))
-                local.reduceOption(And).foreach(p =>
-                  inner = inner.filter(exprToCol(p, None)))
-                val cntN = s"__sq_qc_$i"; val nulN = s"__sq_qn_$i"
-                val minN = s"__sq_qmin_$i"; val maxN = s"__sq_qmax_$i"
-                val y = exprToCol(q.sel.items.head.e, None)
-                def summaryAggs = Seq(
-                  F.count(F.lit(1)).as(cntN),
-                  F.coalesce(F.max(y.isNull), F.lit(false)).as(nulN),
-                  F.min(y).as(minN), F.max(y).as(maxN))
-                if (thetas.nonEmpty || gens.nonEmpty) {
-                  // theta- or (r5c) generally-correlated quantifier:
-                  // the compared set depends on the outer operand(s),
-                  // so build the summary per DISTINCT (keys,
-                  // operands) tuple over a join carrying every theta
-                  // comparison and every general correlated predicate
-                  // (correlation under OR/NOT, mixed-side
-                  // comparisons) — the same distinct-outer-tuple
-                  // shape as theta scalars — then join back
-                  // null-safely. A tuple whose selection is empty
-                  // (incl. NULL operands under pure comparisons) has
-                  // no summary row; count coalesces to 0 and the
-                  // empty arms fire (ANY→FALSE, ALL→TRUE).
-                  val okN = keyPairs.indices.map(j => s"__sq_ok_${i}_$j")
-                  val tNs = thetas.indices.map(j => s"__sq_tu_${i}_$j")
-                  val gNs = genDefs.map(_._1)
-                  val tuples = from.select(
-                    keyPairs.zip(okN).map { case ((_, ok), n) =>
-                      exprToCol(ok, None).as(n) } ++
-                    thetas.zip(tNs).map { case ((_, _, oe), n) =>
-                      exprToCol(oe, None).as(n) } ++
-                    genDefs.map { case (n, oe) =>
-                      exprToCol(oe, None).as(n) }: _*).distinct()
-                  val joinCond =
-                    (keyPairs.zip(okN).map { case ((ik, _), n) =>
-                      exprToCol(ik, None) === F.col(n) } ++
-                     thetas.zip(tNs).map { case ((ie, top, _), n) =>
-                      cmp(top, exprToCol(ie, None), F.col(n)) } ++
-                     gens.map(exprToCol(_, None))).reduce(_ && _)
-                  val grouped = tuples.join(inner, joinCond, "inner")
-                    .groupBy((okN ++ tNs ++ gNs).map(F.col): _*)
-                    .agg(summaryAggs.head, summaryAggs.tail: _*)
-                  val backCond =
-                    (keyPairs.zip(okN).map { case ((_, ok), n) =>
-                      exprToCol(ok, None) <=> F.col(n) } ++
-                     thetas.zip(tNs).map { case ((_, _, oe), n) =>
-                      exprToCol(oe, None) <=> F.col(n) } ++
-                     genDefs.map { case (n, oe) =>
-                      exprToCol(oe, None) <=> F.col(n) }).reduce(_ && _)
-                  from = from.join(grouped, backCond, "left_outer")
-                    .withColumn(flagN, quantFlag(op, all, probe,
-                      F.coalesce(F.col(cntN), F.lit(0L)),
-                      F.coalesce(F.col(nulN), F.lit(false)),
-                      F.col(minN), F.col(maxN)))
-                  helperCols = flagN :: cntN :: nulN :: minN :: maxN ::
-                    (okN.toList ::: tNs.toList ::: gNs.toList ::: helperCols)
-                } else {
-                val ckS = keyPairs.indices.map(j => s"__sq_cs_${i}_$j")
-                val summary = inner
-                  .groupBy(keyPairs.zip(ckS).map { case ((ik, _), n) =>
-                    exprToCol(ik, None).as(n) }: _*)
-                  .agg(summaryAggs.head, summaryAggs.tail: _*)
-                val cond = keyPairs.zip(ckS).map { case ((_, ok), n) =>
-                  exprToCol(ok, None) === F.col(n) }
-                  .reduceOption(_ && _).getOrElse(F.lit(true))
-                // an absent group (no summary row) is the EMPTY set:
-                // coalesce count to 0 so the empty arms fire
-                from = from.join(summary, cond, "left_outer")
-                  .withColumn(flagN, quantFlag(op, all, probe,
-                    F.coalesce(F.col(cntN), F.lit(0L)),
-                    F.coalesce(F.col(nulN), F.lit(false)),
-                    F.col(minN), F.col(maxN)))
-                helperCols = flagN :: cntN :: nulN :: minN :: maxN ::
-                  (ckS.toList ::: helperCols)
-                }
-              case None =>
-                val (step, hs, _) = quantFlagStep(sub, probe, op, all, "__sq", i)
-                from = step(from)
-                helperCols = hs ::: helperCols
-            }
-            ColRef(None, flagN)
+            applied(quantFlagStep(sub, outerAliases, op, all, probe, lower,
+              having = false, "__sq", i), i)
         }
     }
 
     val whereResidual: Option[Expr] = selScalars.where.map { w =>
       val (subqueries, residual0) = extractInSubqueries(w)
+      var cjIdx = 0
       subqueries.foreach {
         case (InSubquery(e, sub0), negated) =>
           val sub = degroupCorrSub(sub0, outerAliases, forExists = false)
-          // r9: a RowTuple probe fans out to component probes — the
+          // a RowTuple probe fans out to component probes — the
           // semi/anti lowering generalizes element-wise (positive:
           // ALL pairs equal; negated anti-condition: every pair equal
           // OR either side null = "comparison not strictly false")
@@ -2715,93 +2115,56 @@ final class Translator(catalog: String => DataFrame,
             case _               => Seq(exprToCol(e, None))
           }
           val arity = probes.length
-          // r13 (guide §3.1): the negated null arms are spelled
-          // `isnull(p = k)` — semantically identical to
-          // `p.isNull || k.isNull` (`=` is NULL iff either side is) —
-          // because Spark's ExtractSingleColumnNullAwareAntiJoin only
-          // pattern-matches `Or(EqualTo(l, r), IsNull(EqualTo(l, r)))`.
-          // The old spelling planned every uncorrelated single-column
-          // NOT IN as an O(|outer|·|set|) BroadcastNestedLoopJoin;
-          // this one plans the hash-based null-aware anti join over
-          // the same broadcast (q_tpch_q16 0.99→0.57 s matched-mode;
-          // same broadcast either way, so strictly better at any
-          // scale). Multi-column and correlated forms keep their
-          // BNLJ/residual shape (Spark has no multi-column NAAJ).
+          // the negated null arms are spelled `isnull(p = k)` —
+          // semantically identical to `p.isNull || k.isNull` (`=` is
+          // NULL iff either side is) — because Spark's
+          // ExtractSingleColumnNullAwareAntiJoin only pattern-matches
+          // `Or(EqualTo(l, r), IsNull(EqualTo(l, r)))`: an uncorrelated
+          // single-column NOT IN then plans the hash-based null-aware
+          // anti join over the broadcast instead of an
+          // O(|outer|·|set|) BroadcastNestedLoopJoin. Multi-column and
+          // correlated forms keep their BNLJ/residual shape (Spark has
+          // no multi-column NAAJ).
           def pairCond(keyCols: Seq[Column], neg: Boolean): Column =
             probes.zip(keyCols).map { case (p, k) =>
               if (neg) p === k || (p === k).isNull else p === k
             }.reduce(_ && _)
-          // Correlated IN (sub's WHERE references an outer alias):
-          // split like EXISTS — correlated conjuncts join, local
-          // conjuncts filter — and key on the sub's select expression.
-          // Known limitation: if the probe/key column NAME exists on
-          // both sides, Spark raises AMBIGUOUS_REFERENCE (a loud
-          // failure, not a wrong result) — qualify or alias to avoid.
-          // inner relations shadow same-named outer ones (standard
-          // SQL scoping) — only non-shadowed qualifiers are outer refs
-          val corrForm = sub match {
-            case Leaf(q) if q.sel.groupBy.isEmpty && q.sel.having.isEmpty &&
-                q.sel.qualify.isEmpty &&
-                q.limit.isEmpty && q.offset.isEmpty &&
-                q.sel.items.length == arity &&
-                q.sel.where.exists(w =>
-                  splitConjuncts(w).exists(refersToAliases(_,
-                    outerAliases -- relationAliases(q.sel.from)))) =>
-              Some(q)
-            case _ => None
-          }
-          corrForm match {
-            case Some(q) =>
-              val outerRefs = outerAliases -- relationAliases(q.sel.from)
-              var inner = drainGenHoists(translateRelation(q.sel.from))
-              val (corr, local) = q.sel.where
-                .map(splitConjuncts).getOrElse(Nil)
-                .partition(refersToAliases(_, outerRefs))
-              local.reduceOption(And).foreach(p =>
-                inner = inner.filter(exprToCol(p, None)))
-              val keyCols = q.sel.items.map(i => exprToCol(i.e, None))
+          correlatedLeaf(sub, outerAliases, items = arity) match {
+            case Some((q, outerRefs)) =>
+              // correlated IN: correlated conjuncts join, local
+              // conjuncts filter, keyed on the sub's select items.
               // NOT IN needs the null arms for three-valued logic: a
               // null probe or a null key inside a NONEMPTY correlation
               // group yields UNKNOWN (row dropped), while an empty
               // group never satisfies the corr conjuncts, so the anti
-              // join keeps the row — TRUE, as SQL requires.
-              val matchCond = pairCond(keyCols, negated)
-              // r8: nested uncorrelated scalars in the correlated
-              // conjuncts hoist onto the inner frame (see
-              // correlatedExistsSide)
-              val corrH = corr.map(hoistNestedScalars(_,
-                outerRefs ++ relationAliases(q.sel.from), "IN"))
-              inner = drainGenHoists(inner)
-              val cond = corrH.map(exprToCol(_, None))
-                .foldLeft(matchCond)(_ && _)
-              from = from.join(inner, cond,
-                if (negated) "left_anti" else "left_semi")
+              // join keeps the row — TRUE, as SQL requires. Known
+              // limitation: if the probe/key column NAME exists on
+              // both sides, Spark raises AMBIGUOUS_REFERENCE (a loud
+              // failure, not a wrong result) — qualify or alias.
+              val c = conjunctCorrelation(q, outerRefs, "IN", s"__cj_${cjIdx}_")
+              cjIdx += 1
+              c.inner
+              val keyCols = q.sel.items.map(i => exprToCol(i.e, None))
+              from = c.semiJoin(from, negated, Seq(pairCond(keyCols, negated)))
             case None =>
-              // grouped + theta IN conjuncts (r5b): membership =
-              // surviving (tuple, value) match; NOT IN via the full
-              // 3VL flag (per-tuple presence/has-null summary +
-              // distinct non-null matches — UNKNOWN filters, a
-              // tuple's empty set keeps the row)
-              val groupedTheta = sub match {
+              // grouped + theta IN conjuncts: membership = surviving
+              // (tuple, value) match; NOT IN via the full 3VL flag
+              // (UNKNOWN filters, a tuple's empty set keeps the row)
+              val survivors = sub match {
                 case Leaf(q0) if arity == 1 =>
                   groupedThetaSurvivors(q0,
-                    outerAliases -- relationAliases(q0.sel.from),
-                    from, wantValue = true)
+                    outerAliases -- relationAliases(q0.sel.from), wantValue = true)
                 case _ => None
               }
-              groupedTheta match {
-                case Some((survivors, cond0, Some(v))) if !negated =>
-                  from = from.join(survivors, cond0 && probes.head === v,
-                    "left_semi")
-                case Some((survivors, _, Some(_))) =>
-                  // full 3VL via the shared flag builder (r6):
-                  // strictly-FALSE membership survives NOT IN
-                  val fi = gteIdx
-                  val (joined, hs) = survivorMembershipFlag(
-                    from, probes.head, survivors, s"__gte_${fi}_nif")
-                  from = joined.filter(!F.col(s"__gte_${fi}_nif"))
-                    .drop(hs: _*)
-                case _ =>
+              survivors match {
+                case Some(s) if !negated =>
+                  from = from.join(s.rows(from),
+                    s.cond && probes.head === s.valueCol, "left_semi")
+                case Some(s) =>
+                  val flagN = s"${s.c.p}nif"
+                  val (step, hs) = s.membership(probes.head, flagN)
+                  from = step(from).filter(!F.col(flagN)).drop(hs: _*)
+                case None =>
                   val subDf = translate(sub)
                   if (subDf.columns.length != arity)
                     fail(s"IN (subquery) requires a $arity-column " +
@@ -2819,31 +2182,30 @@ final class Translator(catalog: String => DataFrame,
           }
         case (ExistsSubquery(sub0), negated) =>
           val sub = degroupCorrSub(sub0, outerAliases, forExists = true)
-          // [NOT] EXISTS: semi/anti join. A CORRELATED subquery's
-          // WHERE splits ONCE (existsCorrInfo) into local conjuncts
-          // (filter the inner relation) and correlated conjuncts
-          // (the join condition; outer refs must be alias-qualified),
-          // restricted to FROM/WHERE shape. An UNCORRELATED subquery
+          // [NOT] EXISTS: semi/anti join. A CORRELATED subquery
+          // (existsCorrInfo) joins on its correlated conjuncts, its
+          // local conjuncts filtering the inner relation — FROM/WHERE
+          // shapes directly, grouped + HAVING with theta correlation
+          // through its surviving tuples. An UNCORRELATED subquery
           // may be ANY query — aggregates, GROUP BY, LIMIT, set ops —
           // reduced to a one-row nonempty probe (existsProbeSide).
+          val how = if (negated) "left_anti" else "left_semi"
           existsCorrInfo(sub, outerAliases) match {
-            case Some((q, outerRefs, corr, local)) =>
-              // grouped + HAVING with THETA correlation (r5b): does
-              // any group over the theta-selected rows satisfy h? —
-              // per-distinct-outer-tuple survivors, semi/anti-joined
-              groupedThetaExistsSurvivors(q, outerRefs, from) match {
-                case Some((survivors, cond)) =>
-                  from = from.join(survivors, cond,
-                    if (negated) "left_anti" else "left_semi")
+            case Some((q, outerRefs)) =>
+              groupedThetaSurvivors(q, outerRefs, wantValue = false) match {
+                case Some(s) => from = from.join(s.rows(from), s.cond, how)
                 case None =>
-                  val (inner, cond) =
-                    correlatedExistsSide(q, corr, local, outerRefs)
-                  from = from.join(inner, cond,
-                    if (negated) "left_anti" else "left_semi")
+                  if (q.sel.groupBy.nonEmpty || q.sel.having.nonEmpty ||
+                      q.sel.qualify.nonEmpty || q.limit.nonEmpty ||
+                      q.offset.nonEmpty)
+                    fail("correlated EXISTS subquery supports FROM/WHERE only")
+                  val c = conjunctCorrelation(q, outerRefs, "EXISTS",
+                    s"__cj_${cjIdx}_")
+                  cjIdx += 1
+                  from = c.semiJoin(from, negated)
               }
             case None =>
-              from = from.join(existsProbeSide(sub), F.lit(true),
-                if (negated) "left_anti" else "left_semi")
+              from = from.join(existsProbeSide(sub), F.lit(true), how)
           }
         case (other, _) => fail(s"unexpected hoisted subquery $other")
       }
@@ -3270,181 +2632,34 @@ final class Translator(catalog: String => DataFrame,
     // having_expr → bool_expression:112-119 → subquery_in:130) lower
     // as existence flags joined onto the AGGREGATED result — the
     // probe may itself be an aggregate, so the pre-agg semi-join
-    // machinery cannot apply. Uncorrelated subqueries only; a
-    // correlated one fails loudly at analysis (unresolved outer ref).
-    // `lowerProbe` abstracts probe lowering: `post` in the aggregate
-    // path, plain exprToCol in the distinct (no-aggregate) path.
+    // machinery cannot apply. They are the WHERE / SELECT flag
+    // builders applied as deferred steps; a correlated subquery
+    // correlates by equality with group-key expressions (anything
+    // else has no post-aggregation value). `lowerProbe` lowers the
+    // probe and the outer keys: `post` in the aggregate path, plain
+    // exprToCol in the distinct (no-aggregate) path.
     def lowerHavingSubqueries(h: Expr, lowerProbe: Expr => Column)
         : (Expr, List[DataFrame => DataFrame], List[String]) = {
       var joins = List.empty[DataFrame => DataFrame]
       var helpers = List.empty[String]
       var idx = 0
+      val outer = relationAliases(sel.from)
+      def deferred(flag: Int => FlagStep): Expr = {
+        val i = idx; idx += 1
+        val (step, hs) = flag(i)
+        joins ::= step
+        helpers = hs ::: helpers
+        ColRef(None, s"__hq_flag_$i")
+      }
       val rewritten = Ast.transformUp(h) {
         case InSubquery(probe, sub) =>
-          val i = idx; idx += 1
-          // correlated IN in HAVING (r5b): group-key equality
-          // correlation — per correlation key a presence/has-null
-          // summary plus distinct non-null (key, value) match rows,
-          // two left joins onto the aggregated frame; the flag
-          // replays the standard 3VL table with "empty" = no inner
-          // rows for this key
-          val corrInfo = sub match {
-            case Leaf(q) if q.sel.groupBy.isEmpty &&
-                q.sel.having.isEmpty && q.sel.qualify.isEmpty &&
-                q.limit.isEmpty && q.offset.isEmpty &&
-                q.sel.items.length == 1 &&
-                q.sel.where.exists(w => splitConjuncts(w).exists(
-                  refersToAliases(_,
-                    relationAliases(sel.from) -- relationAliases(q.sel.from))))
-              => Some((q,
-                relationAliases(sel.from) -- relationAliases(q.sel.from)))
-            case _ => None
-          }
-          corrInfo match {
-            case Some((q, outerRefs)) =>
-              val (keyPairs, local) = corrKeyPairs(q, outerRefs, "HAVING IN")
-              var inner = drainGenHoists(translateRelation(q.sel.from))
-              local.reduceOption(And).foreach(p =>
-                inner = inner.filter(exprToCol(p, None)))
-              val vN = s"__hq_v_$i"
-              val sNs = keyPairs.indices.map(j => s"__hq_sk_${i}_$j")
-              val mNs = keyPairs.indices.map(j => s"__hq_mk_${i}_$j")
-              val presentN = s"__hq_present_$i"; val nullN = s"__hq_null_$i"
-              val markN = s"__hq_mark_$i"; val flagN = s"__hq_flag_$i"
-              val base = inner.select(keyPairs.zip(sNs).map {
-                  case ((ik, _), n) => exprToCol(ik, None).as(n) } :+
-                exprToCol(q.sel.items.head.e, None).as(vN): _*)
-              val summary = base.groupBy(sNs.map(F.col): _*)
-                .agg(F.lit(true).as(presentN),
-                  F.coalesce(F.max(F.col(vN).isNull), F.lit(false)).as(nullN))
-              val matches = base.filter(F.col(vN).isNotNull)
-                .select(sNs.zip(mNs).map { case (s0, m) =>
-                  F.col(s0).as(m) } :+ F.col(vN): _*)
-                .distinct().withColumn(markN, F.lit(true))
-              val probeCol = lowerProbe(probe)
-              joins ::= { (df: DataFrame) =>
-                val sCond = keyPairs.zip(sNs).map { case ((_, oe), n) =>
-                  lowerProbe(oe) === F.col(n) }.reduce(_ && _)
-                val mCond = (keyPairs.zip(mNs).map { case ((_, oe), n) =>
-                  lowerProbe(oe) === F.col(n) } :+
-                  (probeCol === F.col(vN))).reduce(_ && _)
-                df.join(summary, sCond, "left_outer")
-                  .join(matches, mCond, "left_outer")
-                  .withColumn(flagN,
-                    F.when(F.col(markN).isNotNull, F.lit(true))
-                      .when(F.col(presentN).isNull, F.lit(false))
-                      .when(probeCol.isNull || F.col(nullN),
-                        F.lit(null).cast(org.apache.spark.sql.types.BooleanType))
-                      .otherwise(F.lit(false)))
-                  .drop((sNs ++ mNs): _*).drop(vN)
-              }
-              helpers = flagN :: markN :: presentN :: nullN :: helpers
-              ColRef(None, flagN)
-            case None =>
-              val (step, hs, flagN) =
-                inFlagStep(sub, lowerProbe(probe), "__hq", i)
-              joins ::= step
-              helpers = hs ::: helpers
-              ColRef(None, flagN)
-          }
+          deferred(inFlag(sub, outer, lowerProbe(probe), lowerProbe,
+            having = true, "__hq", _))
         case ExistsSubquery(sub) =>
-          val i = idx; idx += 1
-          val flagN = s"__hq_flag_$i"
-          // correlated EXISTS in HAVING (r5b): the correlation's outer
-          // side must be a GROUP KEY expression (anything else has no
-          // post-aggregation value — standard SQL agrees); the flag
-          // left-joins the inner side's DISTINCT keys onto the
-          // aggregated frame. Equality correlation only.
-          existsCorrInfo(sub, relationAliases(sel.from)) match {
-            case Some((q, outerRefs, _, _)) =>
-              if (q.sel.groupBy.nonEmpty || q.sel.having.nonEmpty ||
-                  q.sel.qualify.nonEmpty)
-                fail("correlated EXISTS in HAVING supports FROM/WHERE only")
-              val (keyPairs, local) =
-                corrKeyPairs(q, outerRefs, "HAVING EXISTS")
-              var inner = drainGenHoists(translateRelation(q.sel.from))
-              local.reduceOption(And).foreach(p =>
-                inner = inner.filter(exprToCol(p, None)))
-              val kNs = keyPairs.indices.map(j => s"__hq_k_${i}_$j")
-              val rhs = inner.select(keyPairs.zip(kNs).map {
-                  case ((ik, _), n) => exprToCol(ik, None).as(n) }: _*)
-                .distinct().withColumn(flagN, F.lit(true))
-              joins ::= { (df: DataFrame) =>
-                val cond = keyPairs.zip(kNs).map { case ((_, oe), n) =>
-                  lowerProbe(oe) === F.col(n) }.reduce(_ && _)
-                df.join(rhs, cond, "left_outer")
-                  .withColumn(flagN, F.coalesce(F.col(flagN), F.lit(false)))
-                  .drop(kNs: _*)
-              }
-              helpers = flagN :: helpers
-              ColRef(None, flagN)
-            case None =>
-              val summary =
-                existsProbeSide(sub).agg((F.count(F.lit(1)) > 0).as(flagN))
-              joins ::= { (df: DataFrame) =>
-                df.crossJoin(F.broadcast(summary)) }
-              helpers = flagN :: helpers
-              ColRef(None, flagN)
-          }
+          deferred(existsFlag(sub, outer, lowerProbe, having = true, "__hq", _))
         case QuantCmp(op, all, probe, sub) =>
-          val i = idx; idx += 1
-          // correlated quantified comparison in HAVING (r5b): the
-          // (count, has-null, min, max) summary computes PER
-          // correlation key and left-joins on the group keys; a
-          // missing key row is the empty set (count 0)
-          val corrInfo = sub match {
-            case Leaf(q) if q.sel.groupBy.isEmpty &&
-                q.sel.having.isEmpty && q.sel.qualify.isEmpty &&
-                q.limit.isEmpty && q.offset.isEmpty &&
-                q.sel.items.length == 1 &&
-                q.sel.where.exists(w => splitConjuncts(w).exists(
-                  refersToAliases(_,
-                    relationAliases(sel.from) -- relationAliases(q.sel.from))))
-              => Some((q,
-                relationAliases(sel.from) -- relationAliases(q.sel.from)))
-            case _ => None
-          }
-          corrInfo match {
-            case Some((q, outerRefs)) =>
-              val (keyPairs, local) =
-                corrKeyPairs(q, outerRefs, "HAVING quantified comparison")
-              var inner = drainGenHoists(translateRelation(q.sel.from))
-              local.reduceOption(And).foreach(p =>
-                inner = inner.filter(exprToCol(p, None)))
-              val kNs = keyPairs.indices.map(j => s"__hq_qk_${i}_$j")
-              val cntN = s"__hq_qc_$i"; val nulN = s"__hq_qn_$i"
-              val minN = s"__hq_qmin_$i"; val maxN = s"__hq_qmax_$i"
-              val flagN = s"__hq_flag_$i"
-              val y = exprToCol(q.sel.items.head.e, None)
-              val summary = inner
-                .select(keyPairs.zip(kNs).map { case ((ik, _), n) =>
-                  exprToCol(ik, None).as(n) } :+ y.as("__hq_y"): _*)
-                .groupBy(kNs.map(F.col): _*)
-                .agg(F.count(F.lit(1)).as(cntN),
-                  F.coalesce(F.max(F.col("__hq_y").isNull), F.lit(false))
-                    .as(nulN),
-                  F.min(F.col("__hq_y")).as(minN),
-                  F.max(F.col("__hq_y")).as(maxN))
-              val probeCol = lowerProbe(probe)
-              joins ::= { (df: DataFrame) =>
-                val cond = keyPairs.zip(kNs).map { case ((_, oe), n) =>
-                  lowerProbe(oe) === F.col(n) }.reduce(_ && _)
-                df.join(summary, cond, "left_outer")
-                  .withColumn(flagN, quantFlag(op, all, probeCol,
-                    F.coalesce(F.col(cntN), F.lit(0L)),
-                    F.coalesce(F.col(nulN), F.lit(false)),
-                    F.col(minN), F.col(maxN)))
-                  .drop(kNs: _*)
-              }
-              helpers = flagN :: cntN :: nulN :: minN :: maxN :: helpers
-              ColRef(None, flagN)
-            case None =>
-              val (step, hs, flagN) =
-                quantFlagStep(sub, lowerProbe(probe), op, all, "__hq", i)
-              joins ::= step
-              helpers = hs ::: helpers
-              ColRef(None, flagN)
-          }
+          deferred(quantFlagStep(sub, outer, op, all, lowerProbe(probe),
+            lowerProbe, having = true, "__hq", _))
       }
       (rewritten, joins.reverse, helpers)
     }
@@ -3577,62 +2792,302 @@ final class Translator(catalog: String => DataFrame,
     case other => Ast.children(other).exists(refersToAliases(_, aliases))
   }
 
-  /** Uncorrelated IN existence-flag machinery for one probe: a
-    * broadcast 1-row (empty?, has-null?) summary plus the distinct
-    * non-null key set, composed into a join-and-flag step. Returns
-    * (applyStep, helperColumns, flagName). The ONE home for the IN
-    * three-valued truth table — shared by the WHERE-residual and
-    * HAVING lowerings (TRUE on match; FALSE against an empty set;
-    * NULL when the probe is null or the set has nulls). */
-  private def inFlagStep(sub: SetExpr, probe: Column, prefix: String, i: Int)
-      : (DataFrame => DataFrame, List[String], String) = {
-    val subDf = translate(sub)
-    if (subDf.columns.length != 1)
-      fail("IN (subquery) requires a single-column subquery")
-    val keyN = s"${prefix}_key_$i"; val markN = s"${prefix}_mark_$i"
-    val emptyN = s"${prefix}_empty_$i"; val nullN = s"${prefix}_null_$i"
-    val flagN = s"${prefix}_flag_$i"
-    val keyed = subDf.select(F.col(subDf.columns.head).as(keyN))
-    val summary = keyed.agg(
-      (F.count(F.lit(1)) === 0).as(emptyN),
-      F.coalesce(F.max(F.col(keyN).isNull), F.lit(false)).as(nullN))
-    val keys = keyed.filter(F.col(keyN).isNotNull).distinct()
-      .withColumn(markN, F.lit(true))
-    val step = (df: DataFrame) =>
-      df.crossJoin(F.broadcast(summary))
-        .join(keys, probe === F.col(keyN), "left_outer")
+  /** A flag lowering: the step joins the flag column (and helper
+    * columns, listed to drop later) onto the frame it is applied to.
+    * WHERE / SELECT positions apply it to the FROM frame at once;
+    * HAVING defers it to the aggregated frame. */
+  private type FlagStep = (DataFrame => DataFrame, List[String])
+
+  /** The split a flag lowering uses: HAVING correlates by equality
+    * only (its outer side must be a group key); WHERE / SELECT
+    * positions take thetas and general predicates too. */
+  private def flagCorrelation(q: Query, outerRefs: Set[String], what: String,
+                              p: String, having: Boolean): Correlation =
+    if (having)
+      correlate(q, outerRefs, s"HAVING $what", p, allowTheta = false,
+        general = false)
+    else correlate(q, outerRefs, what, p)
+
+  /** The IN three-valued membership flag over a set frame of
+    * (`keyNames`..., value `v`) rows: a per-key summary (present,
+    * has-null) plus the DISTINCT non-null (keys, value) matches, both
+    * left-joined on `conds` (outer side against the given key column
+    * names) — TRUE on a match; FALSE against an empty set (no summary
+    * row); NULL when the probe is null or the set has nulls. Without
+    * keys the summary is one broadcast row that also counts the set.
+    * `set` may read the frame the step is applied to. */
+  private def membershipFlag(set: DataFrame => DataFrame,
+      keyNames: Seq[String], v: String, conds: Seq[String] => Seq[Column],
+      probe: Column, flagN: String, p: String): FlagStep = {
+    val markN = s"${p}mark"; val nullN = s"${p}null"
+    val presentN = s"${p}present"; val emptyN = s"${p}empty"
+    val mNs = keyNames.map(_ + "_m")
+    val step = (df: DataFrame) => {
+      val s = set(df)
+      val hasNull = F.coalesce(F.max(F.col(v).isNull), F.lit(false)).as(nullN)
+      val matches = s.filter(F.col(v).isNotNull)
+        .select(keyNames.zip(mNs).map { case (k, m) => F.col(k).as(m) } :+
+          F.col(v): _*)
+        .distinct().withColumn(markN, F.lit(true))
+      val matchCond = (conds(mNs) :+ (probe === F.col(v))).reduce(_ && _)
+      val (withSummary, empty) =
+        if (keyNames.isEmpty)
+          (df.crossJoin(F.broadcast(
+            s.agg((F.count(F.lit(1)) === 0).as(emptyN), hasNull))),
+            F.col(emptyN))
+        else
+          (df.join(s.groupBy(keyNames.map(F.col): _*)
+              .agg(F.lit(true).as(presentN), hasNull),
+            conds(keyNames).reduce(_ && _), "left_outer"),
+            F.col(presentN).isNull)
+      withSummary.join(matches, matchCond, "left_outer")
         .withColumn(flagN,
           F.when(F.col(markN).isNotNull, F.lit(true))
-            .when(F.col(emptyN), F.lit(false))
-            .when(probe.isNull || F.col(nullN),
-              F.lit(null).cast(BooleanType))
+            .when(empty, F.lit(false))
+            .when(probe.isNull || F.col(nullN), F.lit(null).cast(BooleanType))
             .otherwise(F.lit(false)))
-    (step, List(flagN, markN, emptyN, nullN, keyN), flagN)
+    }
+    (step, List(flagN, markN, presentN, emptyN, nullN, v) ++ keyNames ++ mNs)
   }
 
-  /** Uncorrelated quantified-comparison machinery for one probe: a
-    * broadcast 1-row (count, has-null, min, max) summary of the
-    * subquery column composed into a join-and-flag step — shared by
-    * the boolean-position and HAVING lowerings. */
-  private def quantFlagStep(sub: SetExpr, probe: Column, op: String,
-                            all: Boolean, prefix: String, i: Int)
-      : (DataFrame => DataFrame, List[String], String) = {
-    val subDf = translate(sub)
-    if (subDf.columns.length != 1)
-      fail("quantified comparison requires a single-column subquery")
-    val y = F.col(subDf.columns.head)
-    val cntN = s"${prefix}_qc_$i"; val nulN = s"${prefix}_qn_$i"
-    val minN = s"${prefix}_qmin_$i"; val maxN = s"${prefix}_qmax_$i"
-    val flagN = s"${prefix}_flag_$i"
-    val summary = subDf.agg(
+  /** A presence flag: TRUE where the frame has a row in `rows` under
+    * `cond`, else FALSE (EXISTS is two-valued). */
+  private def presenceFlag(rows: DataFrame => DataFrame, cond: Column,
+                           flagN: String, p: String): FlagStep = {
+    val markN = s"${p}mark"
+    ((df: DataFrame) =>
+      df.join(rows(df).withColumn(markN, F.lit(true)), cond, "left_outer")
+        .withColumn(flagN, F.col(markN).isNotNull),
+      List(flagN, markN))
+  }
+
+  /** `probe IN (sub)` as a full-3VL flag column `<prefix>_flag_<i>`.
+    * Correlated forms: equality keys take [[membershipFlag]] over the
+    * per-key set; a single theta rides per-key min/max summaries of
+    * the theta expression (`∃ t < x ⟺ min(t) < x`), evaluated against
+    * the outer side after the join; a joint theta condition or a
+    * general predicate aggregates the 3VL arms per DISTINCT (probe,
+    * tuple) over the tuple join. Grouped theta/general subqueries
+    * (WHERE / SELECT) take membership over their surviving groups;
+    * uncorrelated ones a broadcast summary. `lower` lowers outer
+    * expressions. */
+  private def inFlag(sub: SetExpr, outerAliases: Set[String], probe: Column,
+                     lower: Expr => Column, having: Boolean,
+                     prefix: String, i: Int): FlagStep = {
+    val flagN = s"${prefix}_flag_$i"; val p = s"${prefix}_${i}_"
+    correlatedLeaf(sub, outerAliases) match {
+      case Some((q, outerRefs)) =>
+        val c = flagCorrelation(q, outerRefs, "IN", p, having)
+        val inner = c.inner
+        val item = exprToCol(q.sel.items.head.e, None)
+        val markN = s"${p}mark"; val grpN = s"${p}grp"; val nullN = s"${p}null"
+        if (c.needsTuples) {
+          val probes = Seq(probe -> s"${p}probe")
+          ((df: DataFrame) => {
+            val grouped = c.tupleJoin(c.tuples(df, probes))
+              .groupBy(c.tupleCols(probes): _*)
+              .agg(
+                F.max(F.coalesce(item === F.col(probes.head._2), F.lit(false)))
+                  .as(markN),
+                F.max(item.isNull).as(nullN))
+              .withColumn(grpN, F.lit(true))
+            df.join(grouped, c.backCond(nullSafe = true, probes), "left_outer")
+              .withColumn(flagN,
+                F.when(F.col(markN) <=> F.lit(true), F.lit(true))
+                  .when(F.col(grpN).isNull, F.lit(false))
+                  .when(probe.isNull || F.col(nullN),
+                    F.lit(null).cast(BooleanType))
+                  .otherwise(F.lit(false)))
+          }, List(flagN, markN, grpN, nullN, probes.head._2) ++ c.tupleNames)
+        } else if (c.thetas.nonEmpty) {
+          // per-key summary (all rows, null-keyed rows) plus per-(key,
+          // value) matches, each carrying the theta aggregates; the
+          // 3VL arms compare them against the outer operand
+          val (_, op, oe) = c.thetas.head
+          val keyN = s"${p}v"; val tN = s"${p}tv"
+          val ckK = c.keyNames.map(_ + "_m")
+          val keyedSet = inner.select(item.as(keyN) +:
+            (c.innerKeys() :+ exprToCol(c.thetas.head._1, None).as(tN)): _*)
+          val t = F.col(tN)
+          val allDefs = thetaAggCols(t, op, s"${p}tall")
+          val nulDefs = thetaAggCols(F.when(F.col(keyN).isNull, t), op, s"${p}tnull")
+          val matDefs = thetaAggCols(t, op, s"${p}tmatch")
+          val sumAggs = allDefs ++ nulDefs
+          val summary = keyedSet
+            .groupBy(c.keyNames.map(F.col): _*)
+            .agg(sumAggs.head._2.as(sumAggs.head._1),
+              sumAggs.tail.map { case (n, col) => col.as(n) }: _*)
+            .withColumn(grpN, F.lit(true))
+          val keys = keyedSet.filter(F.col(keyN).isNotNull)
+            .groupBy((F.col(keyN) +: c.keyNames.map(F.col)): _*)
+            .agg(matDefs.head._2.as(matDefs.head._1),
+              matDefs.tail.map { case (n, col) => col.as(n) }: _*)
+            .withColumn(markN, F.lit(true))
+            .select(F.col(keyN) +: F.col(markN) +:
+              (matDefs.map(d => F.col(d._1)) ++
+                c.keyNames.zip(ckK).map { case (s, k) => F.col(s).as(k) }): _*)
+          val outerC = lower(oe)
+          def tc(defs: Seq[(String, Column)]): Column =
+            thetaCond(op, defs.map(d => F.col(d._1)), outerC)
+          val matched =
+            (F.col(markN).isNotNull && tc(matDefs)) <=> F.lit(true)
+          val nonempty =
+            (F.col(grpN).isNotNull && tc(allDefs)) <=> F.lit(true)
+          val keyCond =
+            ((probe === F.col(keyN)) +: c.keyConds(lower, ckK)).reduce(_ && _)
+          ((df: DataFrame) => df
+            .join(summary, c.keyCond(lower), "left_outer")
+            .join(keys, keyCond, "left_outer")
+            .withColumn(flagN,
+              F.when(matched, F.lit(true))
+                .when(!nonempty, F.lit(false))
+                .when(probe.isNull || (tc(nulDefs) <=> F.lit(true)),
+                  F.lit(null).cast(BooleanType))
+                .otherwise(F.lit(false))),
+            List(flagN, markN, grpN, keyN) ++
+              (allDefs ++ nulDefs ++ matDefs).map(_._1) ++ c.keyNames ++ ckK)
+        } else {
+          val v = s"${p}v"
+          val set = inner.select(c.innerKeys() :+ item.as(v): _*)
+          membershipFlag(_ => set, c.keyNames, v,
+            c.keyConds(lower, _),
+            probe, flagN, p)
+        }
+      case None =>
+        val survivors =
+          if (having) None
+          else sub match {
+            case Leaf(q0) => groupedThetaSurvivors(q0,
+              outerAliases -- relationAliases(q0.sel.from), wantValue = true)
+            case _ => None
+          }
+        survivors match {
+          case Some(s) => s.membership(probe, flagN)
+          case None =>
+            val subDf = translate(sub)
+            if (subDf.columns.length != 1)
+              fail("IN (subquery) requires a single-column subquery")
+            val v = s"${p}v"
+            val set = subDf.select(F.col(subDf.columns.head).as(v))
+            membershipFlag(_ => set, Nil, v, _ => Nil, probe, flagN, p)
+        }
+    }
+  }
+
+  /** `EXISTS (sub)` as a two-valued flag column `<prefix>_flag_<i>`.
+    * Correlated forms: equality keys join the DISTINCT inner keys; a
+    * single theta rides the per-key min/max of the theta expression;
+    * a joint theta condition or a general predicate semi-joins the
+    * DISTINCT outer tuples against the inner rows; grouped theta /
+    * general subqueries (WHERE / SELECT) join their surviving tuples.
+    * An absent tuple — NULL keys or operands under pure comparisons
+    * included — reads false. Uncorrelated: a broadcast one-row
+    * nonempty test. `lower` lowers outer expressions. */
+  private def existsFlag(sub: SetExpr, outerAliases: Set[String],
+                         lower: Expr => Column, having: Boolean,
+                         prefix: String, i: Int): FlagStep = {
+    val flagN = s"${prefix}_flag_$i"; val p = s"${prefix}_${i}_"
+    existsCorrInfo(sub, outerAliases) match {
+      case Some((q, outerRefs)) if q.sel.groupBy.nonEmpty ||
+          q.sel.having.nonEmpty || q.sel.qualify.nonEmpty ||
+          (!having && (q.limit.nonEmpty || q.offset.nonEmpty)) =>
+        if (having) fail("correlated EXISTS in HAVING supports FROM/WHERE only")
+        groupedThetaSurvivors(q, outerRefs, wantValue = false) match {
+          case Some(s) =>
+            val (step, hs) =
+              presenceFlag(s.rows, s.c.backCond(nullSafe = false), flagN, p)
+            (step, hs ++ s.c.tupleNames)
+          case None => fail("correlated EXISTS subquery supports FROM/WHERE only")
+        }
+      case Some((q, outerRefs)) =>
+        val c = flagCorrelation(q, outerRefs, "EXISTS", p, having)
+        val inner = c.inner
+        if (c.needsTuples) {
+          val (step, hs) = presenceFlag(
+            df => c.tupleJoin(c.tuples(df), how = "left_semi"),
+            c.backCond(nullSafe = true), flagN, p)
+          (step, hs ++ c.tupleNames)
+        } else if (c.thetas.nonEmpty) {
+          val (ie, op, oe) = c.thetas.head
+          val markN = s"${p}mark"
+          val aggDefs = thetaAggCols(exprToCol(ie, None), op, s"${p}tagg")
+          val keys = c.keySummary(aggDefs.map { case (n, col) => col.as(n) })
+            .withColumn(markN, F.lit(true))
+          ((df: DataFrame) => df.join(keys, c.keyCond(lower), "left_outer")
+            .withColumn(flagN,
+              (F.col(markN).isNotNull &&
+                thetaCond(op, aggDefs.map(d => F.col(d._1)), lower(oe))) <=>
+                F.lit(true)),
+            List(flagN, markN) ++ aggDefs.map(_._1) ++ c.keyNames)
+        } else {
+          val (step, hs) = presenceFlag(_ => c.keySummary(Nil),
+            c.keyCond(lower), flagN, p)
+          (step, hs ++ c.keyNames)
+        }
+      case None =>
+        val summary =
+          existsProbeSide(sub).agg((F.count(F.lit(1)) > 0).as(flagN))
+        ((df: DataFrame) => df.crossJoin(F.broadcast(summary)), List(flagN))
+    }
+  }
+
+  /** `probe op ANY/ALL (sub)` as a flag column `<prefix>_flag_<i>`,
+    * against a (count, has-null, min, max) summary of the subquery
+    * column — `x < ANY(S) ⟺ x < max(S)`, `x < ALL(S) ⟺ ¬(x >=
+    * min(S))`, `<> ANY` and `= ALL` through the min/max pair — with
+    * the 3VL arms decided by [[quantFlag]]. Correlated: the summary
+    * per key value, or (a theta or general predicate: the compared set
+    * depends on the outer operands) per DISTINCT outer tuple; an
+    * absent summary row is the EMPTY set (count 0). Uncorrelated: one
+    * broadcast row. (`= ANY` / `<> ALL` never reach here — the parser
+    * canonicalizes them to [NOT] IN.) `lower` lowers outer
+    * expressions. */
+  private def quantFlagStep(sub: SetExpr, outerAliases: Set[String],
+      op: String, all: Boolean, probe: Column, lower: Expr => Column,
+      having: Boolean, prefix: String, i: Int): FlagStep = {
+    val flagN = s"${prefix}_flag_$i"; val p = s"${prefix}_${i}_"
+    val cntN = s"${p}qc"; val nulN = s"${p}qn"
+    val minN = s"${p}qmin"; val maxN = s"${p}qmax"
+    def summaryAggs(y: Column) = Seq(
       F.count(F.lit(1)).as(cntN),
       F.coalesce(F.max(y.isNull), F.lit(false)).as(nulN),
       F.min(y).as(minN), F.max(y).as(maxN))
-    val step = (df: DataFrame) =>
-      df.crossJoin(F.broadcast(summary))
-        .withColumn(flagN, quantFlag(op, all, probe,
-          F.col(cntN), F.col(nulN), F.col(minN), F.col(maxN)))
-    (step, List(flagN, cntN, nulN, minN, maxN), flagN)
+    val helpers = List(flagN, cntN, nulN, minN, maxN)
+    // a correlated summary misses the keys/tuples with an empty set
+    def flag(missable: Boolean): Column =
+      if (!missable)
+        quantFlag(op, all, probe, F.col(cntN), F.col(nulN),
+          F.col(minN), F.col(maxN))
+      else
+        quantFlag(op, all, probe, F.coalesce(F.col(cntN), F.lit(0L)),
+          F.coalesce(F.col(nulN), F.lit(false)), F.col(minN), F.col(maxN))
+    correlatedLeaf(sub, outerAliases) match {
+      case Some((q, outerRefs)) =>
+        val c = flagCorrelation(q, outerRefs, "quantified comparison", p, having)
+        val inner = c.inner
+        val y = exprToCol(q.sel.items.head.e, None)
+        if (c.keyed) {
+          val summary = c.keySummary(summaryAggs(y))
+          ((df: DataFrame) => df.join(summary, c.keyCond(lower), "left_outer")
+            .withColumn(flagN, flag(missable = true)),
+            helpers ++ c.keyNames)
+        } else
+          ((df: DataFrame) => {
+            val grouped = c.tupleJoin(c.tuples(df))
+              .groupBy(c.tupleCols(): _*)
+              .agg(summaryAggs(y).head, summaryAggs(y).tail: _*)
+            df.join(grouped, c.backCond(nullSafe = true), "left_outer")
+              .withColumn(flagN, flag(missable = true))
+          }, helpers ++ c.tupleNames)
+      case None =>
+        val subDf = translate(sub)
+        if (subDf.columns.length != 1)
+          fail("quantified comparison requires a single-column subquery")
+        val summary = subDf.agg(summaryAggs(F.col(subDf.columns.head)).head,
+          summaryAggs(F.col(subDf.columns.head)).tail: _*)
+        ((df: DataFrame) => df.crossJoin(F.broadcast(summary))
+          .withColumn(flagN, flag(missable = false)), helpers)
+    }
   }
 
   /** The quantified-comparison truth table over a (count, has-null,
@@ -3680,17 +3135,16 @@ final class Translator(catalog: String => DataFrame,
     }
   }
 
-  /** The ONE EXISTS correlation classifier (the conjunct and residual
-    * lowerings previously each re-derived it). For a Leaf subquery,
-    * splits its WHERE once into correlated and local conjuncts
-    * against the non-shadowed outer aliases; returns None when
-    * uncorrelated. Correlation outside WHERE has no decorrelated
-    * lowering: outer refs in the select items are LEGAL and ignored
-    * (EXISTS discards its projection — see [[existsProbeSide]]), but
-    * outer refs in HAVING or GROUP BY fail with a graft message here
-    * rather than a deep analyzer error later. */
+  /** The EXISTS correlation classifier. For a Leaf subquery whose
+    * WHERE has a conjunct referencing the non-shadowed outer aliases,
+    * returns the query and those aliases; None when uncorrelated.
+    * Correlation outside WHERE has no decorrelated lowering: outer
+    * refs in the select items are LEGAL and ignored (EXISTS discards
+    * its projection — see [[existsProbeSide]]), but outer refs in
+    * HAVING or GROUP BY fail with a graft message here rather than a
+    * deep analyzer error later. */
   private def existsCorrInfo(sub: SetExpr, outerAliases: Set[String])
-      : Option[(Query, Set[String], Seq[Expr], Seq[Expr])] = sub match {
+      : Option[(Query, Set[String])] = sub match {
     case Leaf(q0) =>
       // LIMIT k >= 1 cannot change existence — strip it so the common
       // hand-written `EXISTS (SELECT 1 ... LIMIT 1)` lowers; LIMIT 0
@@ -3698,9 +3152,7 @@ final class Translator(catalog: String => DataFrame,
       val q = if (q0.limit.exists(_ >= 1) && q0.offset.isEmpty)
         q0.copy(limit = None) else q0
       val outerRefs = outerAliases -- relationAliases(q.sel.from)
-      val (corr, local) = q.sel.where.map(splitConjuncts).getOrElse(Nil)
-        .partition(refersToAliases(_, outerRefs))
-      if (corr.nonEmpty) Some((q, outerRefs, corr, local))
+      if (splitWhere(q, outerRefs)._1.nonEmpty) Some((q, outerRefs))
       else if ((q.sel.having.toSeq ++ q.sel.groupBy)
                  .exists(refersToAliases(_, outerRefs)))
         fail("correlated EXISTS supports correlation in WHERE only")
@@ -3737,8 +3189,7 @@ final class Translator(catalog: String => DataFrame,
           q0.limit.forall(_ >= 1) =>
         val q = q0.copy(limit = None)
         val outerRefs = outerAliases -- relationAliases(q.sel.from)
-        val (corr, local) = q.sel.where.map(splitConjuncts).getOrElse(Nil)
-          .partition(refersToAliases(_, outerRefs))
+        val (corr, _) = splitWhere(q, outerRefs)
         val eqOnly = corr.nonEmpty && corr.forall {
           case Cmp("=", l, r) =>
             refersToAliases(l, outerRefs) ^ refersToAliases(r, outerRefs)
@@ -3751,7 +3202,7 @@ final class Translator(catalog: String => DataFrame,
           case ColRef(None, n) if aliasMap.contains(n.toLowerCase) =>
             aliasMap(n.toLowerCase)
         }
-        // theta correlation (r5b): a GROUP-BY-less HAVING aggregate
+        // theta correlation: a GROUP-BY-less HAVING aggregate
         // row exists ALWAYS (one row even over empty input), so
         // EXISTS equals the HAVING evaluated on the aggregates — and
         // each aggregate over the theta-selected set IS the matching
@@ -3809,10 +3260,9 @@ final class Translator(catalog: String => DataFrame,
           q0.sel.qualify.isEmpty && q0.offset.isEmpty &&
           q0.limit.isEmpty && q0.sel.items.length == 1 && {
             val outerRefs = outerAliases -- relationAliases(q0.sel.from)
-            val corr = q0.sel.where.map(splitConjuncts).getOrElse(Nil)
-              .filter(refersToAliases(_, outerRefs))
+            val (corr, _) = splitWhere(q0, outerRefs)
             corr.nonEmpty && corr.forall {
-              // theta conjuncts admitted r5b: both the nonempty test
+              // theta conjuncts: both the nonempty test
               // (having-only EXISTS) and the value (scalar WITH the
               // HAVING) handle them
               case Cmp("=" | "<" | "<=" | ">" | ">=" | "<>", l, r) =>
@@ -3848,7 +3298,7 @@ final class Translator(catalog: String => DataFrame,
     * lowerings or loud errors. */
   private def degroupCorrSub(sub: SetExpr, outerAliases: Set[String],
                              forExists: Boolean): SetExpr = sub match {
-    // EXISTS over GROUP BY without HAVING (r5b): grouping cannot
+    // EXISTS over GROUP BY without HAVING: grouping cannot
     // change existence — drop it. This also admits THETA correlation
     // (the derived-table rewrite below is equality-only): the plain
     // correlated-EXISTS lowerings then apply, and the plan loses an
@@ -3866,8 +3316,7 @@ final class Translator(catalog: String => DataFrame,
         q.sel.groupSets.isEmpty && q.sel.qualify.isEmpty &&
         q.limit.isEmpty && q.offset.isEmpty =>
       val outerRefs = outerAliases -- relationAliases(q.sel.from)
-      val (corr, local) = q.sel.where.map(splitConjuncts).getOrElse(Nil)
-        .partition(refersToAliases(_, outerRefs))
+      val (corr, local) = splitWhere(q, outerRefs)
       val pairs: Seq[Option[(Expr, Expr)]] = corr.map {
         case Cmp("=", l, r) if refersToAliases(r, outerRefs) &&
             !refersToAliases(l, outerRefs) => Some((l, r))
@@ -3920,36 +3369,39 @@ final class Translator(catalog: String => DataFrame,
 
   private var gteIdx = 0
 
-  /** Grouped + HAVING EXISTS with THETA correlation, conjunct
-    * position (r5b): `EXISTS (SELECT 1 FROM t WHERE t.k = o.k AND
-    * t.x < o.y GROUP BY g HAVING h)` — does ANY group of the
-    * theta-selected rows satisfy h? The theta comparison makes the
-    * group content outer-row-dependent, so the inner side joins the
-    * DISTINCT outer (key, theta-operand) tuple table on keys + theta
-    * first, groups by (tuple, inner keys), filters by h, and the
-    * surviving tuples semi/anti-join back — one aggregation per
-    * tuple, never per outer row. Returns None when the shape doesn't
-    * apply (equality-only and simpler shapes keep their existing
-    * lowerings). */
-  private def groupedThetaExistsSurvivors(
-      q: Query, outerRefs: Set[String], outer: DataFrame)
-      : Option[(DataFrame, Column)] =
-    groupedThetaSurvivors(q, outerRefs, outer, wantValue = false)
-      .map { case (s, c, _) => (s, c) }
+  /** The groups of a grouped theta/general subquery that survive
+    * HAVING, per DISTINCT outer tuple: `rows(outer)` holds the
+    * surviving tuples of `outer` (and, for IN, the select item's
+    * value `value` per surviving group). */
+  private final class Survivors(val c: Correlation,
+                                val rows: DataFrame => DataFrame,
+                                value: Option[String]) {
+    /** Tuples with NULL keys/operands never joined an inner row under
+      * pure comparisons, so `=` on keys and operands; general columns
+      * null-safely (see [[Correlation.backConds]]). */
+    def cond: Column = c.backCond(nullSafe = false)
+    def valueCol: Column = F.col(value.get)
+    /** Full-3VL membership of `probe` among the surviving values. */
+    def membership(probe: Column, flagN: String): FlagStep =
+      membershipFlag(rows, c.tupleNames, value.get,
+        names => c.backConds(nullSafe = false, names = names),
+        probe, flagN, c.p)
+  }
 
-  /** Shared grouped-theta survivor machinery (r5b): the DISTINCT
-    * outer (key, theta-operand) tuple table joins the inner relation
-    * on keys + theta, groups by (tuple, inner keys), filters by the
-    * substituted HAVING. `wantValue = false` (EXISTS) returns the
-    * surviving tuples; `wantValue = true` (IN) additionally carries
-    * the single select item's value per surviving group, so
-    * membership is `tuple match AND probe = value`. Returns None when
-    * the shape doesn't apply — equality-only (degroup handles it),
-    * outer refs in HAVING/keys/item, windows, no theta. */
-  private def groupedThetaSurvivors(
-      q: Query, outerRefs: Set[String], outer: DataFrame,
-      wantValue: Boolean)
-      : Option[(DataFrame, Column, Option[Column])] = {
+  /** Grouped + theta/general correlation: `EXISTS (SELECT 1 FROM t
+    * WHERE t.k = o.k AND t.x < o.y GROUP BY g HAVING h)` asks whether
+    * ANY group of the theta-selected rows satisfies h; the IN form
+    * (`wantValue`) whether the probe equals a surviving group's single
+    * select item. The theta comparison makes the group content
+    * outer-row-dependent, so the DISTINCT outer-tuple table joins the
+    * inner relation on the full condition, groups by (tuple, inner
+    * keys) and filters by the substituted HAVING — one aggregation
+    * per tuple, never per outer row. None when the shape does not
+    * apply: equality-only (the degroup rewrite handles it), outer refs
+    * in HAVING / keys / item, windows, an EXISTS without aggregates in
+    * HAVING. */
+  private def groupedThetaSurvivors(q: Query, outerRefs: Set[String],
+                                    wantValue: Boolean): Option[Survivors] = {
     if (q.sel.groupBy.isEmpty ||
         (!wantValue && q.sel.having.isEmpty) ||
         (wantValue && q.sel.items.length != 1) ||
@@ -3969,36 +3421,16 @@ final class Translator(catalog: String => DataFrame,
         q.sel.groupBy.exists(refersToAliases(_, outerRefs)))
       return None
     val i = gteIdx; gteIdx += 1
-    val (keyPairs, thetas, gens, genDefs, local) =
-      corrSplitG(q, outerRefs, "subquery", allowTheta = true,
-        Some(s"__gte_${i}_ge"))
-    // equality-only: the degroup derived-table rewrite handles it
-    if (thetas.isEmpty && gens.isEmpty) return None
-    val keyNames = keyPairs.indices.map(j => s"__gte_${i}_k$j")
-    val tNames = thetas.indices.map(j => s"__gte_${i}_t$j")
-    val gNames = q.sel.groupBy.indices.map(j => s"__gte_${i}_g$j")
-    val geNames = genDefs.map(_._1)
-    var inner = drainGenHoists(translateRelation(q.sel.from))
-    local.reduceOption(And).foreach(p =>
-      inner = inner.filter(exprToCol(p, None)))
-    val tuples = outer.select(
-      keyPairs.zip(keyNames).map { case ((_, oe), n) =>
-        exprToCol(oe, None).as(n) } ++
-      thetas.zip(tNames).map { case ((_, _, oe), n) =>
-        exprToCol(oe, None).as(n) } ++
-      genDefs.map { case (n, oe) =>
-        exprToCol(oe, None).as(n) }: _*).distinct()
-    val joinCond =
-      (keyPairs.zip(keyNames).map { case ((ik, _), n) =>
-        exprToCol(ik, None) === F.col(n) } ++
-       thetas.zip(tNames).map { case ((ie, op, _), n) =>
-        cmp(op, exprToCol(ie, None), F.col(n)) } ++
-       gens.map(exprToCol(_, None))).reduce(_ && _)
+    val p = s"__gte_${i}_"
+    val c = correlate(q, outerRefs, "subquery", p)
+    if (c.keyed) return None
+    val inner = c.inner
+    val gNames = q.sel.groupBy.indices.map(j => s"${p}g$j")
     var aggs = Vector.empty[(String, AggExpr)]
     def subst(e: Expr): Expr = Ast.transformUp(e) {
       case a: AggExpr if a.window.isEmpty =>
         val n = aggs.find(_._2 == a).map(_._1).getOrElse {
-          val nn = s"__gte_${i}_a${aggs.size}"
+          val nn = s"${p}a${aggs.size}"
           aggs :+= (nn -> a); nn
         }
         ColRef(None, n)
@@ -4011,127 +3443,20 @@ final class Translator(catalog: String => DataFrame,
     if (aggs.isEmpty && !wantValue)
       return None // EXISTS form needs aggregates in h
     val aggCols =
-      if (aggs.isEmpty) Seq(F.count(F.lit(1)).as(s"__gte_${i}_n"))
+      if (aggs.isEmpty) Seq(F.count(F.lit(1)).as(s"${p}n"))
       else aggs.map { case (n, a) => aggColumn(a).as(n) }
-    var grouped = tuples.join(inner, joinCond, "inner")
-      .groupBy((keyNames ++ tNames ++ geNames).map(F.col) ++
-        q.sel.groupBy.zip(gNames).map { case (g, n) =>
-          exprToCol(g, None).as(n) }: _*)
-      .agg(aggCols.head, aggCols.tail: _*)
-    hSub.foreach(h => grouped = grouped.filter(exprToCol(h, None)))
-    val vName = s"__gte_${i}_v"
-    val tupleCols = (keyNames ++ tNames ++ geNames).map(F.col)
-    val survivors = valSub match {
-      case Some(v) =>
-        grouped.select(tupleCols :+ exprToCol(v, None).as(vName): _*)
-          .distinct()
-      case None =>
-        grouped.select(tupleCols: _*).distinct()
+    val vName = s"${p}v"
+    val rows = (outer: DataFrame) => {
+      var grouped = c.tupleJoin(c.tuples(outer))
+        .groupBy(c.tupleCols() ++
+          q.sel.groupBy.zip(gNames).map { case (g, n) =>
+            exprToCol(g, None).as(n) }: _*)
+        .agg(aggCols.head, aggCols.tail: _*)
+      hSub.foreach(h => grouped = grouped.filter(exprToCol(h, None)))
+      grouped.select(c.tupleCols() ++
+        valSub.map(v => exprToCol(v, None).as(vName)): _*).distinct()
     }
-    // two-valued in conjunct position: tuples with NULL keys/operands
-    // never joined any inner row under pure comparisons, are absent
-    // from survivors, and the === back-join reads false (anti reads
-    // true). GENERAL tuple columns (r5c) join back NULL-SAFELY: an
-    // IS NULL arm can select rows for a NULL-operand tuple, and that
-    // surviving tuple must reach its outer rows.
-    val cond =
-      (keyPairs.zip(keyNames).map { case ((_, oe), n) =>
-        exprToCol(oe, None) === F.col(n) } ++
-       thetas.zip(tNames).map { case ((_, _, oe), n) =>
-        exprToCol(oe, None) === F.col(n) } ++
-       genDefs.map { case (n, oe) =>
-        exprToCol(oe, None) <=> F.col(n) }).reduce(_ && _)
-    lastSurvivorParts = Some(SurvivorParts(
-      (keyNames ++ tNames ++ geNames).toList,
-      keyPairs.map(_._2) ++ thetas.map(_._3) ++ genDefs.map(_._2),
-      if (valSub.isDefined) Some(vName) else None,
-      nullSafe = List.fill(keyNames.length + tNames.length)(false) :::
-        List.fill(geNames.length)(true)))
-    Some((survivors, cond, valSub.map(_ => F.col(vName))))
-  }
-
-  /** Structured view of the last [[groupedThetaSurvivors]] result for
-    * callers needing more than a semi-join (the NOT IN flag wiring):
-    * tuple column names, the matching outer expressions, and the
-    * value column name. */
-  private final case class SurvivorParts(tupleNames: List[String],
-                                         outerExprs: Seq[Expr],
-                                         valueName: Option[String],
-                                         nullSafe: List[Boolean])
-  private var lastSurvivorParts: Option[SurvivorParts] = None
-
-  /** Full 3VL membership flag from grouped-theta/general survivors
-    * (r6, extracted from the r5b conjunct NOT-IN wiring so FLAG
-    * positions can ride the same machinery): per-tuple summary
-    * (present, any-null surviving value) plus distinct non-null
-    * (tuple, value) matches, both LEFT-joined onto `from0` — flag
-    * TRUE on a value match, FALSE for a tuple with no surviving
-    * groups, NULL when the probe is null or a surviving value is
-    * null without a match. General tuple columns join null-safely
-    * (IS NULL arms legitimately select rows for NULL-operand
-    * tuples). Returns the joined frame and every helper column it
-    * added (including `flagN` itself). */
-  private def survivorMembershipFlag(from0: DataFrame, probe: Column,
-      survivors: DataFrame, flagN: String): (DataFrame, List[String]) = {
-    val parts = lastSurvivorParts.get
-    val vn = parts.valueName.get
-    val i2 = gteIdx; gteIdx += 1
-    val presentN = s"__gte_${i2}_present"
-    val nullN = s"__gte_${i2}_nul"
-    val markN = s"__gte_${i2}_mark"
-    val summary = survivors
-      .groupBy(parts.tupleNames.map(F.col): _*)
-      .agg(F.lit(true).as(presentN),
-        F.coalesce(F.max(F.col(vn).isNull), F.lit(false)).as(nullN))
-    val mNs = parts.tupleNames.map(_ + "_m")
-    val matches = survivors.filter(F.col(vn).isNotNull)
-      .select(parts.tupleNames.zip(mNs).map { case (a, b) =>
-        F.col(a).as(b) } :+ F.col(vn): _*)
-      .distinct().withColumn(markN, F.lit(true))
-    def tCmp(oe: Expr, n: String, ns: Boolean): Column =
-      if (ns) exprToCol(oe, None) <=> F.col(n)
-      else exprToCol(oe, None) === F.col(n)
-    val sCond = parts.outerExprs.zip(parts.tupleNames)
-      .zip(parts.nullSafe)
-      .map { case ((oe, n), ns) => tCmp(oe, n, ns) }
-      .reduce(_ && _)
-    val mCond = (parts.outerExprs.zip(mNs)
-      .zip(parts.nullSafe).map {
-        case ((oe, n), ns) => tCmp(oe, n, ns) } :+
-      (probe === F.col(vn))).reduce(_ && _)
-    val flag =
-      F.when(F.col(markN).isNotNull, F.lit(true))
-        .when(F.col(presentN).isNull, F.lit(false))
-        .when(probe.isNull || F.col(nullN),
-          F.lit(null).cast(BooleanType))
-        .otherwise(F.lit(false))
-    val out = from0.join(summary, sCond, "left_outer")
-      .join(matches, mCond, "left_outer")
-      .withColumn(flagN, flag)
-    (out, flagN :: markN :: presentN :: nullN :: vn ::
-      (parts.tupleNames ::: mNs))
-  }
-
-  /** Inner side + join condition for a correlated EXISTS in conjunct
-    * position: local conjuncts filter the inner relation, correlated
-    * conjuncts become the semi/anti join condition. */
-  private def correlatedExistsSide(q: Query, corr: Seq[Expr], local: Seq[Expr],
-                                   outerRefs: Set[String])
-      : (DataFrame, Column) = {
-    if (q.sel.groupBy.nonEmpty || q.sel.having.nonEmpty ||
-        q.sel.qualify.nonEmpty || q.limit.nonEmpty || q.offset.nonEmpty)
-      fail("correlated EXISTS subquery supports FROM/WHERE only")
-    var inner = drainGenHoists(translateRelation(q.sel.from))
-    local.reduceOption(And).foreach(p =>
-      inner = inner.filter(exprToCol(p, None)))
-    // r8: nested uncorrelated scalars inside the join condition hoist
-    // onto the inner frame (the condition joins outer vs inner, so a
-    // cross-joined inner column resolves naturally)
-    val corr2 = corr.map(hoistNestedScalars(_,
-      outerRefs ++ relationAliases(q.sel.from), "EXISTS"))
-    inner = drainGenHoists(inner)
-    (inner,
-      corr2.reduceOption(And).map(exprToCol(_, None)).getOrElse(F.lit(true)))
+    Some(new Survivors(c, rows, valSub.map(_ => vName)))
   }
 
   /** One-row nonempty probe for an uncorrelated EXISTS. Existence
@@ -4155,57 +3480,293 @@ final class Translator(catalog: String => DataFrame,
     translate(stripped).select(F.lit(1).as("__exists_probe")).limit(1)
   }
 
-  /** Splits a correlated subquery's WHERE for the decorrelated
-    * lowerings: equality conjuncts become `(innerExpr, outerExpr)`
-    * group/join key pairs; when `allowTheta`, range conjuncts
-    * (<, <=, >, >=, <>) between an inner-only and an outer-only
-    * expression are returned normalized as `(innerExpr, op,
-    * outerExpr)` in source order. A SINGLE theta decorrelates through
-    * a per-group min/max (`∃ t: t < x  ⟺  min(t) < x`); several are a
-    * JOINT condition min/max cannot decompose, and the callers switch
-    * to the distinct-outer-tuple lowering instead.
-    *
-    * r5c: with `genPrefix` set, conjuncts the classifier cannot
-    * reduce to key/theta pairs — correlation under OR or NOT,
-    * mixed-side comparisons (`i.a - o.a < 5`), BETWEEN / LIKE /
-    * IS NULL / CASE over outer refs — are returned as GENERAL
-    * predicates with every outer column reference substituted by a
-    * reserved tuple-column name, plus the (name → outer ColRef)
-    * definitions. The callers' distinct-outer-tuple lowerings
-    * evaluate them row-by-row inside the tuple join: each embedded
-    * equality stays a top-level comparison after substitution, so
-    * Catalyst still extracts hash-join keys when the condition has
-    * any; a pure-OR correlation is a nested-loop join against the
-    * DISTINCT tuple table — the irreducible cost of the semantics,
-    * bounded by |distinct outer tuples| × |inner|, never
-    * |outer| × |inner|. Conjuncts nesting subqueries, aggregates, or
-    * window functions stay loud (not evaluable in a join condition),
-    * as does everything general when `genPrefix` is None. */
-  /** Uncorrelated scalar subqueries hoisted out of general correlated
-    * conjuncts (36ax, r8): reserved name → guarded broadcast 1-row
-    * frame. The corrSplitG caller MUST drain these onto its inner
-    * frame (drainGenHoists) before evaluating the gen conjuncts in a
-    * join condition; an unconsumed hoist surfaces as a loud
-    * unresolved-column error, never a wrong result. */
-  private val genHoists =
-    scala.collection.mutable.ListBuffer.empty[(String, DataFrame)]
+  // ---- decorrelation core -------------------------------------------
 
-  private def drainGenHoists(inner: DataFrame): DataFrame = {
-    val out = genHoists.foldLeft(inner) { case (df, (_, one)) =>
-      df.crossJoin(F.broadcast(one))
+  /** A correlated subquery's WHERE, split once ([[correlate]],
+    * [[conjunctCorrelation]]), with the building blocks every
+    * decorrelated lowering composes. After Neumann & Kemper,
+    * "Unnesting Arbitrary Queries" (BTW 2015): the subquery is
+    * evaluated once per DISTINCT outer tuple — correlation keys, theta
+    * operands and general-predicate columns — never once per outer
+    * row, and its result joins back onto the outer rows on that tuple.
+    *
+    *  - `keys`: (inner, outer) equality pairs;
+    *  - `thetas`: range comparisons normalized to (inner, op, outer);
+    *  - `gens`: general predicates (correlation under OR / NOT,
+    *    mixed-side comparisons, BETWEEN / LIKE / IS NULL / CASE over
+    *    outer columns), each outer column replaced by a tuple column
+    *    that `genDefs` maps back to it. They evaluate row by row inside
+    *    the tuple join; an embedded equality stays a top-level
+    *    comparison, so Catalyst still extracts hash-join keys, and a
+    *    pure-OR correlation is a nested-loop join bounded by
+    *    |distinct outer tuples| × |inner|;
+    *  - `conds`: the correlated conjuncts as written, for a semi/anti
+    *    join that sees both sides (set by [[conjunctCorrelation]]);
+    *  - `local`: the uncorrelated conjuncts, which filter the inner side;
+    *  - `hoists`: uncorrelated scalar subqueries nested in correlated
+    *    conjuncts, as guarded one-row frames cross-joined onto the
+    *    inner side, so the columns that replaced them resolve inside
+    *    the join condition.
+    * Helper columns are named under the prefix `p`. */
+  private final class Correlation(val p: String,
+      val keys: Seq[(Expr, Expr)], val thetas: Seq[(Expr, String, Expr)],
+      val gens: Seq[Expr], genDefs: Seq[(String, Expr)],
+      conds: Seq[Expr], from: Relation, local: Seq[Expr],
+      hoists: Seq[DataFrame]) {
+    val keyNames: Seq[String] = keys.indices.map(j => s"${p}k$j")
+    private val thetaNames = thetas.indices.map(j => s"${p}t$j")
+    /** The outer-tuple columns, in table order. */
+    val tupleNames: Seq[String] = keyNames ++ thetaNames ++ genDefs.map(_._1)
+    private val outerExprs: Seq[Expr] =
+      keys.map(_._2) ++ thetas.map(_._3) ++ genDefs.map(_._2)
+
+    /** Equality keys only: the subquery decorrelates per key value,
+      * with no outer-tuple table. */
+    def keyed: Boolean = thetas.isEmpty && gens.isEmpty
+
+    /** A JOINT theta condition or a general predicate: per-key min/max
+      * summaries cannot decompose it, so it takes the tuple join. */
+    def needsTuples: Boolean = gens.nonEmpty || thetas.length >= 2
+
+    /** The inner relation, hoisted scalars cross-joined and local
+      * conjuncts applied. Built on first use; callers touch it before
+      * lowering inner expressions (the relation registers its
+      * aliases when it translates). */
+    lazy val inner: DataFrame = {
+      val base = hoists.foldLeft(translateRelation(from))(
+        (df, one) => df.crossJoin(F.broadcast(one)))
+      local.reduceOption(And).fold(base)(l => base.filter(exprToCol(l, None)))
     }
-    genHoists.clear()
-    out
+
+    /** The inner key expressions, projected under `names`. */
+    def innerKeys(names: Seq[String] = keyNames): Seq[Column] =
+      keys.zip(names).map { case ((ik, _), n) => exprToCol(ik, None).as(n) }
+
+    /** The per-key summary: `inner` grouped by its keys (plus `extra`
+      * grouping columns) into `aggs`, or its DISTINCT keys when there
+      * are no aggregates. */
+    def keySummary(aggs: Seq[Column], extra: Seq[Column] = Nil): DataFrame = {
+      val by = innerKeys() ++ extra
+      if (aggs.isEmpty) inner.select(by: _*).distinct()
+      else inner.groupBy(by: _*).agg(aggs.head, aggs.tail: _*)
+    }
+
+    /** Outer keys equal the key-summary columns `names`. */
+    def keyConds(lower: Expr => Column, names: Seq[String] = keyNames): Seq[Column] =
+      keys.zip(names).map { case ((_, ok), n) => lower(ok) === F.col(n) }
+    def keyCond(lower: Expr => Column, names: Seq[String] = keyNames): Column =
+      keyConds(lower, names).reduceOption(_ && _).getOrElse(F.lit(true))
+
+    /** The DISTINCT outer-tuple table of `outer`, `probes` (column,
+      * name) first. */
+    def tuples(outer: DataFrame, probes: Seq[(Column, String)] = Nil): DataFrame =
+      outer.select(probes.map { case (c, n) => c.as(n) } ++
+        outerExprs.zip(tupleNames).map { case (oe, n) =>
+          exprToCol(oe, None).as(n) }: _*).distinct()
+
+    /** The tuple columns, probe columns first — the per-tuple grouping. */
+    def tupleCols(probes: Seq[(Column, String)] = Nil): Seq[Column] =
+      (probes.map(_._2) ++ tupleNames).map(F.col)
+
+    /** `tuples` joined to `inner` on the full correlation condition,
+      * `lead` conjuncts first. */
+    def tupleJoin(tuples: DataFrame, lead: Seq[Column] = Nil,
+                  how: String = "inner"): DataFrame = {
+      val in = inner
+      val cond = lead ++
+        keys.zip(keyNames).map { case ((ik, _), n) =>
+          exprToCol(ik, None) === F.col(n) } ++
+        thetas.zip(thetaNames).map { case ((ie, op, _), n) =>
+          cmp(op, exprToCol(ie, None), F.col(n)) } ++
+        gens.map(exprToCol(_, None))
+      tuples.join(in, cond.reduce(_ && _), how)
+    }
+
+    /** Outer rows meet their tuple's columns `names` (read by `col`):
+      * general columns always null-safely — an IS NULL arm can select
+      * rows for a NULL operand, and that tuple's result must reach its
+      * outer rows — keys and theta operands null-safely when
+      * `nullSafe`. Under `=`, a NULL key or operand (which joined no
+      * inner row under pure comparisons) reads as absent. */
+    def backConds(nullSafe: Boolean, lower: Expr => Column = exprToCol(_, None),
+                  names: Seq[String] = tupleNames,
+                  col: String => Column = F.col): Seq[Column] =
+      outerExprs.zip(names).zipWithIndex.map { case ((oe, n), j) =>
+        if (nullSafe || j >= keys.length + thetas.length) lower(oe) <=> col(n)
+        else lower(oe) === col(n)
+      }
+
+    /** The back-join condition: each probe null-safely, then
+      * [[backConds]]. */
+    def backCond(nullSafe: Boolean, probes: Seq[(Column, String)] = Nil,
+                 col: String => Column = F.col): Column =
+      (probes.map { case (c, n) => c <=> col(n) } ++
+        backConds(nullSafe, col = col)).reduce(_ && _)
+
+    /** Semi (anti when `negated`) join of `outer` against `inner` on
+      * `lead` and the correlated conjuncts as written. */
+    def semiJoin(outer: DataFrame, negated: Boolean,
+                 lead: Seq[Column] = Nil): DataFrame = {
+      val in = inner
+      val cond = (lead ++ conds.map(exprToCol(_, None)))
+        .reduceOption(_ && _).getOrElse(F.lit(true))
+      outer.join(in, cond, if (negated) "left_anti" else "left_semi")
+    }
   }
 
-  /** r8 (36ax closing): replaces UNCORRELATED nested scalar
-    * subqueries inside a correlated predicate with guarded broadcast
-    * 1-row columns — recorded in genHoists for the caller to
-    * cross-join onto its inner frame (drainGenHoists) so the
-    * reserved name resolves inside the join condition. The guard is
-    * the standard scalar contract (0 rows → NULL, >1 rows → loud
-    * runtime error). A nested scalar referencing the outer or inner
-    * scope stays a loud wall. */
+  /** Splits a correlated subquery's WHERE for the decorrelated
+    * lowerings: equality conjuncts between an inner-only and an
+    * outer-only side become key pairs; when `allowTheta`, range
+    * conjuncts (<, <=, >, >=, <>) of the same form become thetas, in
+    * source order. A SINGLE theta decorrelates through a per-key
+    * min/max (`∃ t: t < x ⟺ min(t) < x`); several are a JOINT
+    * condition min/max cannot decompose, and the callers take the
+    * tuple join instead. When `general`, every other correlated
+    * conjunct becomes a general predicate (see [[Correlation]]);
+    * those nesting subqueries, aggregates or window functions stay
+    * loud (not evaluable in a join condition), as does everything
+    * general when `general` is false. */
+  private def correlate(q: Query, outerRefs: Set[String], what: String,
+                        p: String, allowTheta: Boolean = true,
+                        general: Boolean = true): Correlation = {
+    val (corr, local) = splitWhere(q, outerRefs)
+    def flip(op: String): String = op match {
+      case "<" => ">"
+      case "<=" => ">="
+      case ">" => "<"
+      case ">=" => "<="
+      case "<>" => "<>"
+    }
+    val eq = Seq.newBuilder[(Expr, Expr)]
+    var theta = List.empty[(Expr, String, Expr)]
+    val gen = Seq.newBuilder[Expr]
+    val genDefs = scala.collection.mutable.LinkedHashMap
+      .empty[(String, String), (String, Expr)]
+    val hoists = scala.collection.mutable.ListBuffer.empty[DataFrame]
+    // a key/theta pair's OUTER side must not reference the subquery's
+    // own aliases: a mixed-side expression like `i.a + o.b` has no
+    // side split and takes the general lowering
+    val innerAliases = relationAliases(q.sel.from)
+    def checkEvaluable(e: Expr): Unit = e match {
+      case _: ScalarSubquery => // hoisted by substitute, or loud there
+      case _: InSubquery | _: ExistsSubquery | _: QuantCmp =>
+        fail(s"correlated $what predicates may not nest subqueries " +
+          "inside a non-conjunct correlation")
+      case _: AggExpr | _: WinFunc | _: RankExpr =>
+        fail(s"correlated $what predicates may not contain aggregates " +
+          "or window functions")
+      case other => Ast.children(other).foreach(checkEvaluable)
+    }
+    def substitute(e: Expr): Expr = e match {
+      case s: ScalarSubquery =>
+        hoistScalarsIn(s, outerRefs ++ innerAliases, what, p, hoists)
+      case c @ ColRef(Some(qual), n) if outerRefs.contains(qual.toLowerCase) =>
+        val key = (qual.toLowerCase, n.toLowerCase)
+        val nm = genDefs.getOrElseUpdate(key, (s"${p}ge${genDefs.size}", c))._1
+        ColRef(None, nm)
+      case other => Ast.mapChildren(other, substitute)
+    }
+    def outerSide(e: Expr): Boolean =
+      refersToAliases(e, outerRefs) && !refersToAliases(e, innerAliases)
+    corr.foreach {
+      case Cmp("=", l, r) if outerSide(r) &&
+          !refersToAliases(l, outerRefs) => eq += ((l, r))
+      case Cmp("=", l, r) if outerSide(l) &&
+          !refersToAliases(r, outerRefs) => eq += ((r, l))
+      case Cmp(op @ ("<" | "<=" | ">" | ">=" | "<>"), l, r)
+          if allowTheta && outerSide(r) &&
+            !refersToAliases(l, outerRefs) => theta ::= ((l, op, r))
+      case Cmp(op @ ("<" | "<=" | ">" | ">=" | "<>"), l, r)
+          if allowTheta && outerSide(l) &&
+            !refersToAliases(r, outerRefs) => theta ::= ((r, flip(op), l))
+      case other if general =>
+        checkEvaluable(other)
+        gen += substitute(other)
+      case other =>
+        val accepted = if (allowTheta)
+          "equalities or a <, <=, >, >=, <> comparison" else "equalities"
+        fail(s"correlated $what predicates in this position must be " +
+          s"$accepted, got $other")
+    }
+    new Correlation(p, eq.result(), theta.reverse, gen.result(),
+      genDefs.values.toSeq, Nil, q.sel.from, local, hoists.toList)
+  }
+
+  /** The split for a semi/anti join in conjunct position, where the
+    * join condition sees both sides: the correlated conjuncts stay as
+    * written, nested uncorrelated scalars hoisted. */
+  private def conjunctCorrelation(q: Query, outerRefs: Set[String],
+                                  what: String, p: String): Correlation = {
+    val (corr, local) = splitWhere(q, outerRefs)
+    val hoists = scala.collection.mutable.ListBuffer.empty[DataFrame]
+    val taboo = outerRefs ++ relationAliases(q.sel.from)
+    val conds = corr.map(hoistScalarsIn(_, taboo, what, p, hoists))
+    new Correlation(p, Nil, Nil, Nil, Nil, conds, q.sel.from, local,
+      hoists.toList)
+  }
+
+  /** A subquery's WHERE conjuncts, (correlated, local) against the
+    * outer aliases `outerRefs`. */
+  private def splitWhere(q: Query, outerRefs: Set[String])
+      : (Seq[Expr], Seq[Expr]) =
+    q.sel.where.map(splitConjuncts).getOrElse(Nil)
+      .partition(refersToAliases(_, outerRefs))
+
+  /** The correlated single-SELECT shape the flag and scalar lowerings
+    * take: `items` select items, no QUALIFY / LIMIT / OFFSET, and a
+    * WHERE conjunct referencing an outer alias its FROM does not
+    * shadow (standard SQL scoping). With `aggregate`, the scalar form:
+    * one aggregating item, plain GROUP BY / HAVING allowed; otherwise
+    * no GROUP BY / HAVING. Returns the query and its outer aliases. */
+  private def correlatedLeaf(sub: SetExpr, outerAliases: Set[String],
+                             items: Int = 1, aggregate: Boolean = false)
+      : Option[(Query, Set[String])] = sub match {
+    case Leaf(q) if q.sel.qualify.isEmpty && q.limit.isEmpty &&
+        q.offset.isEmpty && q.sel.items.length == items &&
+        (if (aggregate)
+           q.sel.groupMode == "plain" && q.sel.groupSets.isEmpty &&
+             (!q.sel.distinct || q.sel.groupBy.isEmpty) &&
+             containsAgg(q.sel.items.head.e)
+         else q.sel.groupBy.isEmpty && q.sel.having.isEmpty) =>
+      val outerRefs = outerAliases -- relationAliases(q.sel.from)
+      if (splitWhere(q, outerRefs)._1.nonEmpty) Some((q, outerRefs)) else None
+    case _ => None
+  }
+
+  /** Replaces the uncorrelated scalar subqueries nested in a
+    * correlated predicate with columns of guarded one-row frames,
+    * appended to `out` for the inner side to cross-join. One that
+    * references `taboo` (the outer or inner scope) stays loud. */
+  private def hoistScalarsIn(e: Expr, taboo: Set[String], what: String,
+      p: String, out: scala.collection.mutable.ListBuffer[DataFrame]): Expr =
+    e match {
+      case ScalarSubquery(sub) =>
+        if (setExprRefers(sub, taboo))
+          fail(s"correlated $what predicates may not nest CORRELATED " +
+            "subqueries inside a non-conjunct correlation")
+        val nm = s"${p}nsc${out.size}"
+        out += scalarRow(translate(sub), nm)
+        ColRef(None, nm)
+      case other => Ast.mapChildren(other, hoistScalarsIn(_, taboo, what, p, out))
+    }
+
+  /** A scalar subquery's result as a one-row frame of column `name`:
+    * zero rows read NULL, more than one is a loud runtime error (the
+    * standard scalar-subquery contract). */
+  private def scalarRow(subDf: DataFrame, name: String): DataFrame = {
+    if (subDf.columns.length != 1)
+      fail("scalar subquery requires a single-column subquery")
+    // positional rename first: an unaliased expression item's
+    // generated name can contain dots, which F.col would parse as
+    // field access
+    subDf.toDF("__v0")
+      .agg(F.first(F.col("__v0")).as("__v"), F.count(F.lit(1)).as("__c"))
+      .select(
+        F.when(F.col("__c") > 1, F.raise_error(F.lit(
+          "scalar subquery returned more than one row")))
+          .otherwise(F.col("__v")).as(name))
+  }
+
   /** Does any expression INSIDE `se` (its selects/wheres/havings and
     * nested subqueries, at any depth) reference one of `aliases`,
     * honoring standard shadowing (a relation re-introducing the alias
@@ -4238,132 +3799,6 @@ final class Translator(catalog: String => DataFrame,
         setRefers(body, as) || ob.exists(o => exprRefers(o.e, as))
     }
     setRefers(se, aliases)
-  }
-
-  private def hoistNestedScalars(e: Expr, taboo: Set[String],
-                                 what: String): Expr = e match {
-    case s @ ScalarSubquery(sub) =>
-      if (setExprRefers(sub, taboo))
-        fail(s"correlated $what predicates may not nest CORRELATED " +
-          "subqueries inside a non-conjunct correlation")
-      // translate(sub) may recursively enter corrSplitG, whose entry
-      // hygiene clears genHoists — save/restore so a pending sibling
-      // hoist survives the nested translation (r8 ADVICE)
-      val savedHoists = genHoists.toList
-      val subDf =
-        try translate(sub)
-        finally { genHoists.clear(); genHoists ++= savedHoists }
-      if (subDf.columns.length != 1)
-        fail("scalar subquery requires a single-column subquery")
-      val nm = s"__nsc_${genHoists.size}"
-      // positional rename: dotted generated names break F.col (see
-      // the uncorrelated lowering's note)
-      val one = subDf.toDF("__v0")
-        .agg(F.first(F.col("__v0")).as("__v"), F.count(F.lit(1)).as("__c"))
-        .select(
-          F.when(F.col("__c") > 1, F.raise_error(F.lit(
-            "scalar subquery returned more than one row")))
-            .otherwise(F.col("__v")).as(nm))
-      genHoists += ((nm, one))
-      ColRef(None, nm)
-    case other => Ast.mapChildren(other, hoistNestedScalars(_, taboo, what))
-  }
-
-  private def corrSplitG(q: Query, outerRefs: Set[String], what: String,
-                         allowTheta: Boolean, genPrefix: Option[String])
-      : (Seq[(Expr, Expr)], Seq[(Expr, String, Expr)],
-         Seq[Expr], Seq[(String, Expr)], Seq[Expr]) = {
-    genHoists.clear() // hygiene: a failed earlier lowering must not leak
-    val (corr, local) = q.sel.where.map(splitConjuncts).getOrElse(Nil)
-      .partition(refersToAliases(_, outerRefs))
-    def flip(op: String): String = op match {
-      case "<" => ">"
-      case "<=" => ">="
-      case ">" => "<"
-      case ">=" => "<="
-      case "<>" => "<>"
-    }
-    val eq = Seq.newBuilder[(Expr, Expr)]
-    var theta = List.empty[(Expr, String, Expr)]
-    val gen = Seq.newBuilder[Expr]
-    val genDefs = scala.collection.mutable.LinkedHashMap
-      .empty[(String, String), (String, Expr)]
-    // a key/theta pair's OUTER side must not reference the subquery's
-    // own aliases (a MIXED-side expression like `i.a + o.b` has no
-    // side split — r5c routes it to the general lowering; previously
-    // it misclassified and died in the analyzer)
-    val innerAliases = relationAliases(q.sel.from)
-    def checkEvaluable(e: Expr): Unit = e match {
-      case s: ScalarSubquery =>
-        // r8 (36ax closing): an UNCORRELATED nested scalar is a
-        // query-wide constant — hoistable to a guarded broadcast
-        // 1-row column on the inner frame (see substitute below).
-        // One referencing the outer or inner scope stays loud.
-        if (setExprRefers(s.sub, outerRefs ++ innerAliases))
-          fail(s"correlated $what predicates may not nest CORRELATED " +
-            "subqueries inside a non-conjunct correlation")
-      case _: InSubquery | _: ExistsSubquery | _: QuantCmp =>
-        fail(s"correlated $what predicates may not nest subqueries " +
-          "inside a non-conjunct correlation")
-      case _: AggExpr | _: WinFunc | _: RankExpr =>
-        fail(s"correlated $what predicates may not contain aggregates " +
-          "or window functions")
-      case other => Ast.children(other).foreach(checkEvaluable)
-    }
-    def substitute(e: Expr): Expr = e match {
-      case s: ScalarSubquery =>
-        // checkEvaluable verified it is uncorrelated: the shared
-        // hoist lowers it once; the caller's drainGenHoists puts the
-        // column on the inner frame of the tuple join
-        hoistNestedScalars(s, outerRefs ++ innerAliases, what)
-      case c @ ColRef(Some(qual), n) if outerRefs.contains(qual.toLowerCase) =>
-        val key = (qual.toLowerCase, n.toLowerCase)
-        val nm = genDefs.getOrElseUpdate(key,
-          (s"${genPrefix.get}${genDefs.size}", c))._1
-        ColRef(None, nm)
-      case other => Ast.mapChildren(other, substitute)
-    }
-    def outerSide(e: Expr): Boolean =
-      refersToAliases(e, outerRefs) && !refersToAliases(e, innerAliases)
-    corr.foreach {
-      case Cmp("=", l, r) if outerSide(r) &&
-          !refersToAliases(l, outerRefs) => eq += ((l, r))
-      case Cmp("=", l, r) if outerSide(l) &&
-          !refersToAliases(r, outerRefs) => eq += ((r, l))
-      case Cmp(op @ ("<" | "<=" | ">" | ">=" | "<>"), l, r)
-          if allowTheta && outerSide(r) &&
-            !refersToAliases(l, outerRefs) => theta ::= ((l, op, r))
-      case Cmp(op @ ("<" | "<=" | ">" | ">=" | "<>"), l, r)
-          if allowTheta && outerSide(l) &&
-            !refersToAliases(r, outerRefs) => theta ::= ((r, flip(op), l))
-      case other if genPrefix.isDefined =>
-        checkEvaluable(other)
-        gen += substitute(other)
-      case other =>
-        val accepted = if (allowTheta)
-          "equalities or a <, <=, >, >=, <> comparison" else "equalities"
-        fail(s"correlated $what predicates in this position must be " +
-          s"$accepted, got $other")
-    }
-    (eq.result(), theta.reverse, gen.result(),
-      genDefs.values.toSeq, local)
-  }
-
-  /** [[corrSplitG]] without the general-predicate lowering (positions
-    * where only key/theta decorrelations exist). */
-  private def corrSplit(q: Query, outerRefs: Set[String], what: String,
-                        allowTheta: Boolean)
-      : (Seq[(Expr, Expr)], Seq[(Expr, String, Expr)], Seq[Expr]) = {
-    val (eq, theta, _, _, local) =
-      corrSplitG(q, outerRefs, what, allowTheta, None)
-    (eq, theta, local)
-  }
-
-  /** Equality-only corrSplit (positions with no theta lowering). */
-  private def corrKeyPairs(q: Query, outerRefs: Set[String], what: String)
-      : (Seq[(Expr, Expr)], Seq[Expr]) = {
-    val (pairs, _, local) = corrSplit(q, outerRefs, what, allowTheta = false)
-    (pairs, local)
   }
 
   /** The decorrelating aggregates for a theta conjunct: per-group min
@@ -5814,4 +5249,9 @@ final class Translator(catalog: String => DataFrame,
       case _ => F.call_function(name, cols: _*)
     }
   }
+}
+
+object Translator {
+  /** A query the translator cannot lower. */
+  final case class TranslateException(msg: String) extends RuntimeException(msg)
 }

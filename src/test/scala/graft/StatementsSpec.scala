@@ -545,6 +545,23 @@ class StatementsSpec extends SparkTestBase {
     intercept[Exception](g.query("truncate table ghost"))
   }
 
+  test("ALTER TABLE ADD COLUMN IF NOT EXISTS / DROP COLUMN IF EXISTS") {
+    val g = fresh
+    g.query("create table a0 as select * from (values " +
+      "(1, 'a'), (2, 'b')) t(k, v)")
+    val before = g.query("select * from a0").schema
+    // the clause applies: nothing changes and nothing is raised
+    g.query("alter table a0 add column if not exists k double")
+    g.query("alter table a0 drop column if exists nope")
+    assert(g.query("select * from a0").schema == before)
+    // the clause does not apply: the plain forms run
+    g.query("alter table a0 add column if not exists score double")
+    g.query("alter table a0 drop column if exists v")
+    assert(g.query("select * from a0").columns.toSeq == Seq("k", "score"))
+    assert(g.query("select count(*) as c from a0 where score is null")
+      .collect()(0).getLong(0) == 2L)
+  }
+
   test("MERGE BY-SOURCE-only + ON residuals permits multi-match (r10)") {
     val g = fresh
     g.query("create view t0 as select * from (values " +

@@ -10,8 +10,25 @@ class ErrorsSpec extends SparkTestBase {
 
   test("unknown table raises TableNotFoundException") {
     val g = Graft(spark)
-    val e = intercept[RuntimeException](g.query("select * from missing_table"))
-    assert(e.getMessage.contains("missing_table"))
+    val e = intercept[Graft.TableNotFoundException](
+      g.query("select * from missing_table"))
+    assert(e.name == "missing_table" && e.getMessage.contains("missing_table"))
+  }
+
+  test("a query the translator cannot lower raises TranslateException") {
+    val e = intercept[Translator.TranslateException](graftSession.query(
+      """select n_name, x.r_name from nation n cross join lateral
+         (select r_name from region r
+          where r.r_regionkey = n.n_regionkey) x"""))
+    assert(e.getMessage.contains("require ORDER BY"), e.getMessage)
+  }
+
+  test("a macro called with too many arguments raises MacroException") {
+    val g = Graft(spark)
+    g.query("create macro add_one(a) as a + 1")
+    val e = intercept[Macros.MacroException](g.query(
+      "select add_one(a, 2) as b from (values (1)) t(a)"))
+    assert(e.getMessage.contains("takes 1 argument"), e.getMessage)
   }
 
   test("syntactically invalid queries raise a parse error") {

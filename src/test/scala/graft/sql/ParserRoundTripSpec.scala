@@ -152,7 +152,11 @@ class ParserRoundTripSpec extends AnyFunSuite {
       for { n <- genTable; ie <- Gen.oneOf(true, false) } yield Drop(n, ie),
       genTable.map(Truncate),
       for { n <- genTable
-            a <- Gen.oneOf(genColumnDef.map(AddColumn), genName.map(DropColumn),
+            a <- Gen.oneOf(
+              for { c <- genColumnDef; ie <- Gen.oneOf(true, false) }
+                yield AddColumn(c, ie),
+              for { c <- genName; ie <- Gen.oneOf(true, false) }
+                yield DropColumn(c, ie),
               for { f <- genName; t <- genName } yield RenameColumn(f, t),
               genTable.map(RenameTable)) }
         yield Alter(n, a),
@@ -246,8 +250,9 @@ class ParserRoundTripSpec extends AnyFunSuite {
       case Drop(n, ie) => s"drop table ${ifExists(ie)}${id(n)}"
       case Truncate(n) => s"truncate table ${id(n)}"
       case Alter(n, a) => s"alter table ${id(n)} " + (a match {
-        case AddColumn(c)       => s"add column ${id(c.name)} ${c.typeName}"
-        case DropColumn(c)      => s"drop column ${id(c)}"
+        case AddColumn(c, ine)  =>
+          s"add column ${if (ine) "if not exists " else ""}${id(c.name)} ${c.typeName}"
+        case DropColumn(c, ie)  => s"drop column ${ifExists(ie)}${id(c)}"
         case RenameColumn(f, t) => s"rename column ${id(f)} to ${id(t)}"
         case RenameTable(t)     => s"rename to ${id(t)}"
       })

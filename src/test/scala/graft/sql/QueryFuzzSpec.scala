@@ -876,6 +876,49 @@ class QueryFuzzSpec extends SparkTestBase {
     }
   }
 
+  // correlated `op ANY/ALL (subquery)` in HAVING (group-key equality):
+  // the set holds NULLs (every k-th customer), the probe can be NULL,
+  // and a high balance threshold leaves correlation groups empty.
+  // Oracle = the EXISTS rewrite over the aggregated derived table:
+  // ANY holds iff some comparison is TRUE; ALL iff none is FALSE or
+  // UNKNOWN (so an empty set passes ALL and fails ANY)
+  private val genHavingQuantPair: Gen[(String, String)] = for {
+    bal <- Gen.choose(-1000, 9800)
+    nullEvery <- Gen.choose(2, 6)
+    all <- Gen.oneOf(false, true)
+    op <- if (all) Gen.oneOf("<", "<=", ">", ">=", "=")
+          else Gen.oneOf("<", "<=", ">", ">=", "<>")
+    nullAt <- Gen.option(Gen.choose(3, 13))
+  } yield {
+    def v(a: String) =
+      s"case when $a.c_custkey % $nullEvery = 0 then null else $a.c_custkey % 15 end"
+    val probe = nullAt.map(k => s"case when count(*) = $k then null else count(*) end")
+      .getOrElse("count(*)")
+    val corr = s"c2.c_nationkey = c.c_nationkey and c2.c_acctbal > $bal"
+    val oCorr = s"c2.c_nationkey = t.c_nationkey and c2.c_acctbal > $bal"
+    val oracleCond =
+      if (all) s"not exists (select 1 from customer c2 where $oCorr " +
+        s"and not coalesce(t.p $op ${v("c2")}, false))"
+      else s"exists (select 1 from customer c2 where $oCorr and t.p $op ${v("c2")})"
+    (s"""select c.c_nationkey, count(*) as n from customer c
+         group by c.c_nationkey
+         having $probe $op ${if (all) "all" else "any"}
+           (select ${v("c2")} from customer c2 where $corr)""",
+     s"""select c_nationkey, n from (
+           select c_nationkey, count(*) as n, $probe as p from customer
+           group by c_nationkey) t where $oracleCond""")
+  }
+
+  test("16 random correlated HAVING quantified comparisons match their EXISTS rewrites") {
+    val pairs = Gen.listOfN(16, genHavingQuantPair)
+      .pureApply(Gen.Parameters.default, Seed(149L))
+    pairs.distinct.foreach { case (g, o) =>
+      withClue(s"\nquery: $g\n") {
+        assertSameRows(graftSession.query(g), spark.sql(o))
+      }
+    }
+  }
+
   test("12 random grouped-theta EXISTS match their decorrelated form") {
     val pairs = Gen.listOfN(12, genGroupedThetaExistsPair)
       .pureApply(Gen.Parameters.default, Seed(137L))
