@@ -3027,13 +3027,18 @@ object SparkEntry {
                 round(quantile_cont(n_chars, 0.9), 4) as p90_chars,
                 min(n_chars) as min_chars, max(n_chars) as max_chars
               from documents group by lang""")),
-    // custom bitmap Aggregator vs plain COUNT(DISTINCT) oracle —
-    // exact by construction, so the oracle is the plain form
+    // bitmap distinct count through Spark's bitmap_* built-ins vs
+    // the plain COUNT(DISTINCT) oracle: every bigint has exactly one
+    // (bucket, bit position), so per-(key, bucket) bitmap counts sum
+    // to the exact distinct count; NULL keys set no bit
     ("q_bitmap_distinct",
       (s: SparkSession, dir: String) =>
-        tbl(s, dir, "events").groupBy("event_type")
-          .agg(graft.functions.BitsetDistinct
-            .distinctCount(F.col("user_id"), 1 << 20).as("n_users")),
+        tbl(s, dir, "events")
+          .groupBy(F.col("event_type"),
+            F.bitmap_bucket_number(F.col("user_id")).as("bucket"))
+          .agg(F.bitmap_count(F.bitmap_construct_agg(
+            F.bitmap_bit_position(F.col("user_id")))).as("n"))
+          .groupBy("event_type").agg(F.sum("n").as("n_users")),
       Some("""select event_type, count(distinct user_id) as n_users
               from events group by event_type""")),
     // JSON column extraction ≡ DuckDB json_extract_string. Schema'd

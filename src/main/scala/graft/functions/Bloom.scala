@@ -13,9 +13,8 @@ import org.apache.spark.sql.types._
   * Build side: a typed Aggregator whose per-partition state is the
   * m-bit word array; partials merge with bitwise OR, so the build is
   * one pass + one fixed-size-per-partition shuffle regardless of
-  * corpus size (the same state contract as BitsetDistinct). The
-  * finished filter is an ordinary ARRAY<BIGINT> value in a 1-row
-  * DataFrame — broadcast it, never collect it.
+  * corpus size. The finished filter is an ordinary ARRAY<BIGINT>
+  * value in a 1-row DataFrame — broadcast it, never collect it.
   *
   * Probe side: `graft_bloom_contains(words, hash, k)` — a codegen'd
   * expression (static-helper call, stays inside whole-stage codegen).

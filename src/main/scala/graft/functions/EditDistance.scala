@@ -10,14 +10,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * returns the distance when ≤ k, else -1 (the same contract as
   * Spark's `levenshtein(l, r, threshold)`).
   *
-  * Spark's built-in computes full O(n·m) rows with per-call code-point
-  * decoding; the edit-distance join verifies MILLIONS of candidate
-  * pairs, so this walks only the O((n)·(2k+1)) band with an early
-  * exit when a whole band row exceeds k — ~50× fewer cells at k=2 on
-  * typical short strings — over the raw ASCII bytes when both sides
+  * The edit-distance join verifies MILLIONS of candidate pairs, so
+  * this walks only the O(n·(2k+1)) band with an early exit when a
+  * whole band row exceeds k, over the raw ASCII bytes when both sides
   * are ASCII (one branch), code points otherwise (matching the
   * built-in's code-point semantics). Codegen is a static call so the
-  * verify stage stays inside whole-stage codegen.
+  * verify stage stays inside whole-stage codegen. Against Spark
+  * 4.1.2's built-in on q_edit_pairs (sf0.1, 4 cores, 5 alternating
+  * runs per side): 1.77 s median here, 2.61 s with `levenshtein`.
   */
 case class BandedLevenshtein(left: Expression, right: Expression, k: Int)
     extends BinaryExpression {

@@ -430,8 +430,7 @@ object Curation {
       // twice (dangling-mass aggregate + contribution join), so
       // without the cache k lazy rounds would re-run the edge join
       // 2^k times — the InMemoryRelation evaluates it once
-      val bcast = n <= edges.sparkSession.conf
-        .get("spark.graft.pagerank.broadcastRankRows", "4000000").toLong
+      val bcast = Materialize.fitsBroadcast(ranks, n)
       var cached: List[DataFrame] = Nil
       for (i <- 1 to iterations) {
         val r = pageRankRound(nodes, e, outDeg, ranks, n, damping, bcast)
@@ -466,10 +465,10 @@ object Curation {
     val dangling = rd.filter(F.col("outdeg").isNull)
       .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).as("__dm"))
     // broadcast-rank regime (r7): when the rank vector fits a
-    // broadcast (node count below the dial), ship IT to the edges —
-    // the edge table, the big side at web scale, never shuffles; the
+    // broadcast ([[Materialize.fitsBroadcast]]), ship IT to the edges
+    // — the edge table, the big side at web scale, never shuffles; the
     // only per-round exchange is the n-sized contribution partials.
-    // Past the dial the planner keys both sides as before.
+    // Past the bound the planner keys both sides as before.
     val live = rd.filter(F.col("outdeg").isNotNull).alias("c")
     val contrib = (if (broadcastRanks) e.alias("e")
         .join(F.broadcast(live), F.col("c.node") === F.col("e.src"))

@@ -309,12 +309,11 @@ object Dedup {
     }
   }
 
-  /** Whether the materialized edge table fits the broadcast bound:
-    * rows × estimated row size ≤ autoBroadcastJoinThreshold, where a
-    * threshold ≤ 0 disables the driver finish as it disables broadcast
-    * joins. The row count is the `numOutputRows` metric the checkpoint
-    * job left on the root operator of `canon`'s plan, so sizing costs
-    * no job; a root that keeps no count stays on the loop. */
+  /** Whether the materialized edge table fits the broadcast bound
+    * ([[Materialize.fitsBroadcast]]). The row count is the
+    * `numOutputRows` metric the checkpoint job left on the root
+    * operator of `canon`'s plan, so sizing costs no job; a root that
+    * keeps no count stays on the loop. */
   private def broadcastSized(canon: DataFrame): Boolean = {
     import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -324,12 +323,9 @@ object Dedup {
       case w: WholeStageCodegenExec => rows(w.child)
       case _ => p.metrics.get("numOutputRows").map(_.value)
     }
-    val threshold = canon.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    val rowBytes = org.apache.spark.sql.catalyst.plans.logical.statsEstimation
-      .EstimationUtils.getSizePerRow(canon.queryExecution.analyzed.output)
     // every edge's two endpoints must fit one driver array
-    threshold > 0 && rows(canon.queryExecution.executedPlan).exists(n =>
-      n <= Int.MaxValue / 2 && rowBytes * n <= threshold)
+    rows(canon.queryExecution.executedPlan).exists(n =>
+      n <= Int.MaxValue / 2 && Materialize.fitsBroadcast(canon, n))
   }
 
   /** Ids the driver finish carries as primitive longs: how to read one
@@ -932,10 +928,9 @@ object Dedup {
     * cross-tier pairs are found by tier 2 (both sides of such a pair
     * exceed fastssMaxLen−k by the length bound); the final distinct
     * merges double-covered pairs. Verification is the native banded
-    * levenshtein (2k+1 byte diagonal, early exit — Spark's built-in
-    * thresholded levenshtein decodes code points and fills full
-    * O(n·m) rows, ~10× slower). Long-text near-dup belongs to the
-    * shingle family. */
+    * levenshtein (2k+1 byte diagonal, early exit; measured faster than
+    * Spark's thresholded `levenshtein`, see [[graft.functions.BandedLevenshtein]]).
+    * Long-text near-dup belongs to the shingle family. */
   def editDistancePairs(df: DataFrame, idCol: String, strCol: String,
                         maxDist: Int = 2, fastssMaxLen: Int = 24): DataFrame = {
     require(maxDist >= 1, "maxDist must be >= 1")

@@ -31,4 +31,17 @@ private[graft] object Materialize {
         finally prior.foreach(sc.setCheckpointDir)
       case None => df.localCheckpoint(true)
     }
+
+  /** Whether `rows` rows of `df`'s output fit the broadcast bound:
+    * rows × Spark's estimated row size ≤ autoBroadcastJoinThreshold,
+    * where a threshold ≤ 0 fits nothing, as it disables broadcast
+    * joins. The one size rule of the driver-side and broadcast tiers
+    * (connected components' driver finish, PageRank's broadcast
+    * ranks). */
+  def fitsBroadcast(df: DataFrame, rows: Long): Boolean = {
+    val threshold = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val rowBytes = org.apache.spark.sql.catalyst.plans.logical.statsEstimation
+      .EstimationUtils.getSizePerRow(df.queryExecution.analyzed.output)
+    threshold > 0 && rowBytes * rows <= threshold
+  }
 }

@@ -2522,19 +2522,7 @@ final class Translator(catalog: String => DataFrame,
       case a: AggExpr if a.window.isDefined =>
         if (a.func == "string_agg" || a.func == "array_agg")
           orderedSetWindowed(a, post)
-        else {
-          // DISTINCT sum/avg typed fold: resolve the arg against the
-          // PRE-AGG frame (group keys keep their type through the
-          // aggregate; post-agg-only refs fall back to the double fold)
-          val at = (a.arg, resolveFrame) match {
-            case _ if !((a.distinct && (a.func == "sum" || a.func == "avg")) ||
-              a.window.exists(_.exclude != "no others")) => None
-            case (Star(_), _) | (_, None) => None
-            case (e, Some(df)) =>
-              scala.util.Try(df.select(exprToCol(e, None)).schema.head.dataType).toOption
-          }
-          windowedAgg(a, post, at)
-        }
+        else windowedAgg(a, post)
       case RankExpr(dense, w) =>
         (if (dense) F.dense_rank() else F.rank()).over(windowSpec(w, post))
       case WinFunc(nm, args, w, ign) =>
@@ -3962,18 +3950,7 @@ final class Translator(catalog: String => DataFrame,
     case a: AggExpr if a.window.isDefined =>
       if (a.func == "string_agg" || a.func == "array_agg")
         orderedSetWindowed(a, exprToCol(_, None))
-      else {
-        // static arg type for the DISTINCT sum/avg typed fold —
-        // analysis-only (df.select(...).schema runs no job)
-        val at = (a.arg, resolveFrame) match {
-          case _ if !((a.distinct && (a.func == "sum" || a.func == "avg")) ||
-              a.window.exists(_.exclude != "no others")) => None
-          case (Star(_), _) | (_, None) => None
-          case (e, Some(df)) =>
-            scala.util.Try(df.select(exprToCol(e, None)).schema.head.dataType).toOption
-        }
-        windowedAgg(a, exprToCol(_, None), at)
-      }
+      else windowedAgg(a, exprToCol(_, None))
     case a: AggExpr => aggColumn(a)
     case RankExpr(dense, w) =>
       (if (dense) F.dense_rank() else F.rank()).over(windowSpec(w))
@@ -4414,21 +4391,7 @@ final class Translator(catalog: String => DataFrame,
     // comparator-sort projection runs on the survivors. Same single
     // window exchange/sort as the plain collect.
     val mode = w.exclude
-    val f = w.frame.get // the parser ties EXCLUDE to a frame extent
-    val startOk = f.start match {
-      case UnboundedPreceding | CurrentRow => true
-      case Preceding(n) => n >= 0
-      case Following(_) => false
-    }
-    val endOk = f.end match {
-      case UnboundedFollowing | CurrentRow => true
-      case Following(n) => n >= 0
-      case Preceding(_) => false
-    }
-    if (!startOk || !endOk)
-      fail("EXCLUDE requires a frame that contains the current row")
-    if ((mode == "group" || mode == "ties") && w.orderBy.isEmpty)
-      fail("EXCLUDE GROUP/TIES requires ORDER BY (peers are order ties)")
+    excludeFrame(w)
     val (fields, sep) = orderedSetParts(a, arg, lower)
     val elemVal = F.struct(fields: _*)
     val okCols = w.orderBy.map(oi => lower(oi.e))
@@ -4480,28 +4443,22 @@ final class Translator(catalog: String => DataFrame,
     * the excluded current row (see inline) — sound for ROWS frames
     * with EXCLUDE CURRENT ROW. Other window functions have no
     * decomposition and fail loudly (see [[windowSpec]]). */
-  private def windowedAgg(a: AggExpr, lower: Expr => Column,
-                          argType: Option[org.apache.spark.sql.types.DataType] = None): Column = {
+  private def windowedAgg(a: AggExpr, lower: Expr => Column): Column = {
     val w = a.window.get
     // DISTINCT window aggregates (r7b; Spark rejects the native form
     // "Distinct window functions are not supported"): the frame's
     // distinct non-null values are exactly collect_set over the same
-    // window — count = its size, sum/avg fold it (a single HOF over
-    // the per-row set, the fine kind), min/max are distinct-invariant
-    // and drop the flag. Same window exchange/sort as the plain
-    // aggregate; per-row state is the distinct set (bounded by the
-    // frame's distinct values, the inherent cost of the semantics —
-    // DuckDB's native evaluator pays the same). Sum/avg fold in the
-    // ARGUMENT'S own widened type when it resolves statically (r8,
-    // r7 ADVICE): integral → long accumulator (Spark's native
-    // sum(integral) result type — exact, no silent double past 2^53),
-    // decimal(p,s) → decimal(38,s); float/double and statically
-    // unresolvable args (the post-GROUP-BY lowering path carries no
-    // frame to resolve against) keep the double fold. avg divides
-    // the typed sum by the set size — integral/double → double,
-    // decimal → decimal division, the same coercions the native avg
-    // applies. Empty sets read NULL like the native aggregates.
-    // EXCLUDE stays loud above.
+    // window — count = its size, sum/avg fold it natively
+    // ([[graft.functions.FrameFold]], the EXCLUDE fold's code), min/max
+    // are distinct-invariant and drop the flag. Same window
+    // exchange/sort as the plain aggregate; per-row state is the
+    // distinct set (bounded by the frame's distinct values, the
+    // inherent cost of the semantics — DuckDB's native evaluator pays
+    // the same). The sum's type is the engine's SUM type for the
+    // element type resolved at analysis (integral → bigint,
+    // decimal(p,s) → decimal(38,s), else double); avg divides it by
+    // the set size with the engine's division typing. Empty sets read
+    // NULL like the native aggregates.
     if (a.distinct && w.exclude == "no others" &&
         Set("count", "sum", "avg", "min", "max").contains(a.func)) {
       val arg = a.arg match {
@@ -4514,20 +4471,8 @@ final class Translator(catalog: String => DataFrame,
       val cs = F.collect_set(arg).over(windowSpec(w, lower))
       return a.func match {
         case "count" => F.size(cs).cast("long")
-        case "sum" | "avg" =>
-          import org.apache.spark.sql.types._
-          val sum = argType match {
-            case Some(ByteType | ShortType | IntegerType | LongType) =>
-              F.aggregate(cs, F.lit(0L), (acc, x) => acc + x.cast("long"))
-            case Some(d: DecimalType) =>
-              val to = DecimalType(38, d.scale)
-              F.aggregate(cs, F.lit(java.math.BigDecimal.ZERO).cast(to),
-                (acc, x) => acc + x.cast(to))
-            case _ =>
-              F.aggregate(cs, F.lit(0.0), (acc, x) => acc + x.cast("double"))
-          }
-          val guarded = F.when(F.size(cs) > 0, sum)
-          if (a.func == "sum") guarded else guarded / F.size(cs)
+        case "sum"   => org.apache.spark.sql.GraftFn.frameFold(cs, "sum")
+        case "avg"   => org.apache.spark.sql.GraftFn.frameFold(cs, "sum") / F.size(cs)
       }
     }
     if (w.exclude == "no others")
@@ -4537,35 +4482,21 @@ final class Translator(catalog: String => DataFrame,
       fail("EXCLUDE applies to sum/count/avg/min/max window aggregates " +
         "only (no decomposition exists for other window functions)")
     val mode = w.exclude
-    val f = w.frame.get // the parser ties EXCLUDE to a frame extent
-    val startOk = f.start match {
-      case UnboundedPreceding | CurrentRow => true
-      case Preceding(n) => n >= 0
-      case Following(_) => false
-    }
-    val endOk = f.end match {
-      case UnboundedFollowing | CurrentRow => true
-      case Following(n) => n >= 0
-      case Preceding(_) => false
-    }
-    if (!startOk || !endOk)
-      fail("EXCLUDE requires a frame that contains the current row")
-    if ((mode == "group" || mode == "ties") && w.orderBy.isEmpty)
-      fail("EXCLUDE GROUP/TIES requires ORDER BY (peers are order ties)")
-    // Generic collect-over-frame fallback (r8, closing the r6/r7b
-    // walls): DISTINCT + EXCLUDE, and min/max EXCLUDE beyond
-    // ROWS/CURRENT ROW (RANGE frames cannot address "one row away";
-    // GROUP/TIES need per-row split points — no decomposition
-    // exists). The frame materializes per row as an array of
-    // (order-key tuple, row id, value); the excluded rows filter
-    // ELEMENT-WISE — one occurrence of the current row's id for
+    val f = excludeFrame(w)
+    // Generic collect-over-frame fold (r8, closing the r6/r7b walls):
+    // DISTINCT + EXCLUDE, and min/max EXCLUDE beyond ROWS/CURRENT ROW
+    // (RANGE frames cannot address "one row away"; GROUP/TIES need
+    // per-row split points — no decomposition exists). The frame
+    // materializes per row as an array of (order-key tuple, row id,
+    // value) and [[graft.functions.ExcludeAgg]] drops the excluded
+    // rows ELEMENT-WISE — one occurrence of the current row's id for
     // CURRENT ROW (identical rows are interchangeable under any
     // aggregate, and distinct rows colliding in xxhash64 is a 2^-64
-    // event), all null-safe order-key peers for GROUP, peers minus
-    // one current copy for TIES — then the survivors fold. Per-row
-    // state is the frame itself: the inherent cost of semantics no
-    // subtraction rewrite covers, same exchange/sort as the plain
-    // window.
+    // event), all null-safe order-key peers for GROUP, peers minus one
+    // current copy for TIES — then folds the survivors in the engine's
+    // result type for the element type. Per-row state is the frame
+    // itself: the inherent cost of semantics no subtraction rewrite
+    // covers, same exchange/sort as the plain window.
     val needGeneric = a.distinct ||
       ((a.func == "min" || a.func == "max") &&
         !(mode == "current row" && f.isRows))
@@ -4589,94 +4520,15 @@ final class Translator(catalog: String => DataFrame,
       // analysis on some sources.)
       val rid = F.xxhash64(okS, argE)
       val elem = F.struct(okS.as("__xok"), rid.as("__xrid"), argE.as("__xv"))
-      val frameW = windowSpec(w.copy(exclude = "no others"), lower)
-      val lst = F.collect_list(elem).over(frameW)
-      // native one-pass fold (r8 perf): when the argument's type
-      // resolved statically and the func supports it, ExcludeAgg
-      // replaces the whole filter→transform→distinct→fold HOF chain
-      // — per-ROW interpreted dispatch instead of per-element
-      // (6 HOF columns over lineitem measured 5.4 s; native ~3×
-      // less). Unresolved or exotic types keep the HOF chain below.
-      import org.apache.spark.sql.types._
-      val hashable: DataType => Boolean = {
-        case StringType | BooleanType | DateType | TimestampType |
-             TimestampNTZType | ByteType | ShortType | IntegerType |
-             LongType | FloatType | DoubleType | _: DecimalType => true
-        case _ => false
-      }
-      val numericT: DataType => Boolean = {
-        case ByteType | ShortType | IntegerType | LongType |
-             FloatType | DoubleType | _: DecimalType => true
-        case _ => false
-      }
-      val nativeOk = argType.exists { dt =>
-        a.func match {
-          case "count"       => !a.distinct || hashable(dt)
-          case "min" | "max" =>
-            scala.util.Try(
-              org.apache.spark.sql.catalyst.util.TypeUtils
-                .getInterpretedOrdering(dt)).isSuccess &&
-              (!a.distinct || hashable(dt))
-          case _             => numericT(dt) // sum / avg
-        }
-      } && !a.arg.isInstanceOf[Star]
-      if (nativeOk) {
-        import org.apache.spark.sql.GraftFn
-        return a.func match {
-          case "count" =>
-            GraftFn.excludeAgg(lst, elem, mode, "count", a.distinct)
-          case "min" | "max" =>
-            GraftFn.excludeAgg(lst, elem, mode, a.func, a.distinct)
-          case "sum" =>
-            GraftFn.excludeAgg(lst, elem, mode, "sum", a.distinct)
-          case "avg" =>
-            // the same division typing as the HOF chain (long/int →
-            // double, decimal/int → decimal)
-            GraftFn.excludeAgg(lst, elem, mode, "sum", a.distinct) /
-              GraftFn.excludeAgg(lst, elem, mode, "count", a.distinct)
-                .cast("int")
-        }
-      }
-      val kept: Column = mode match {
-        case "current row" =>
-          // remove the FIRST element carrying the current row's id —
-          // via slice/concat, NOT a lambda: a lambda body capturing a
-          // window-derived value fails window resolution (analysis
-          // falls through to lateral-column-alias and errors)
-          val idx = F.array_position(
-            F.transform(lst, x => x.getField("__xrid")), rid).cast("int")
-          F.concat(
-            F.slice(lst, F.lit(1), idx - 1),
-            F.slice(lst, idx + 1, F.size(lst) - idx))
-        case "group" =>
-          F.filter(lst, x => !(x.getField("__xok") <=> okS))
-        case "ties" =>
-          // drop every peer, put ONE copy of the current row back
-          F.concat(
-            F.filter(lst, x => !(x.getField("__xok") <=> okS)),
-            F.array(elem))
-      }
-      val vals0 = F.filter(
-        F.transform(kept, x => x.getField("__xv")), v => v.isNotNull)
-      val vals = if (a.distinct) F.array_distinct(vals0) else vals0
-      import org.apache.spark.sql.types._
+      val lst = F.collect_list(elem).over(
+        windowSpec(w.copy(exclude = "no others"), lower))
+      def fold(func: String) =
+        org.apache.spark.sql.GraftFn.excludeAgg(lst, elem, mode, func, a.distinct)
       return a.func match {
-        case "count" => F.size(vals).cast("long")
-        case "min"   => F.array_min(vals)
-        case "max"   => F.array_max(vals)
-        case "sum" | "avg" =>
-          val sum = argType match {
-            case Some(ByteType | ShortType | IntegerType | LongType) =>
-              F.aggregate(vals, F.lit(0L), (acc, x) => acc + x.cast("long"))
-            case Some(d: DecimalType) =>
-              val to = DecimalType(38, d.scale)
-              F.aggregate(vals, F.lit(java.math.BigDecimal.ZERO).cast(to),
-                (acc, x) => acc + x.cast(to))
-            case _ =>
-              F.aggregate(vals, F.lit(0.0), (acc, x) => acc + x.cast("double"))
-          }
-          val guarded = F.when(F.size(vals) > 0, sum)
-          if (a.func == "sum") guarded else guarded / F.size(vals)
+        // the engine's division typing (bigint/int → double,
+        // decimal/int → decimal)
+        case "avg" => fold("sum") / fold("count").cast("int")
+        case func  => fold(func)
       }
     }
     // min/max (r6): no subtraction decomposition exists for extrema —
@@ -4702,16 +4554,9 @@ final class Translator(catalog: String => DataFrame,
       }
       val base = windowSpec(
         WindowSpec(w.partitionBy, w.orderBy, None), lower)
-      def rowBound(b: FrameBound): Long = b match {
-        case UnboundedPreceding => Window.unboundedPreceding
-        case UnboundedFollowing => Window.unboundedFollowing
-        case CurrentRow         => 0L
-        case Preceding(n)       => -n
-        case Following(n)       => n
-      }
       val aggF: Column => Column =
         if (a.func == "min") F.min else F.max
-      val lo = rowBound(f.start); val hi = rowBound(f.end)
+      val lo = frameOffset(f.start); val hi = frameOffset(f.end)
       val parts = Seq(
         if (lo <= -1) Some(aggF(arg).over(base.rowsBetween(lo, -1L)))
         else None,
@@ -4724,8 +4569,6 @@ final class Translator(catalog: String => DataFrame,
           if (a.func == "min") F.least(p, q) else F.greatest(p, q)
       }
     }
-    if ((mode == "group" || mode == "ties") && w.orderBy.isEmpty)
-      fail("EXCLUDE GROUP/TIES requires ORDER BY (peers are order ties)")
     // GROUP/TIES with a ROWS frame (r7, closing the r6 loud wall): a
     // ROWS frame may CUT the peer group, so the excluded set is
     // (peer group ∩ frame). Peers are CONTIGUOUS in the partition
@@ -4745,15 +4588,8 @@ final class Translator(catalog: String => DataFrame,
     val rowsGroupTies = (mode == "group" || mode == "ties") && f.isRows
     val (frameSpec, peersSpec) =
       if (rowsGroupTies) {
-        def rowBound(b: FrameBound): Long = b match {
-          case UnboundedPreceding => Window.unboundedPreceding
-          case UnboundedFollowing => Window.unboundedFollowing
-          case CurrentRow         => 0L
-          case Preceding(n)       => -n
-          case Following(n)       => n
-        }
         val tb = F.expr("xxhash64(struct(*))")
-        val lo = rowBound(f.start); val hi = rowBound(f.end)
+        val lo = frameOffset(f.start); val hi = frameOffset(f.end)
         val pCols = w.partitionBy.map(lower)
         val fs = Window.partitionBy(pCols: _*)
           .orderBy(w.orderBy.map(oi => orderedCol(lower(oi.e), oi)) :+
@@ -4890,23 +4726,47 @@ final class Translator(catalog: String => DataFrame,
         orderedCol(c, oi)
       }: _*)
     w.frame.foreach { f =>
-      def bound(b: FrameBound): Long = b match {
-        case UnboundedPreceding => Window.unboundedPreceding
-        case UnboundedFollowing => Window.unboundedFollowing
-        case CurrentRow         => Window.currentRow
-        case Preceding(n)       => -n
-        case Following(n)       => n
-      }
       spec =
-        if (f.isRows) spec.rowsBetween(bound(f.start), bound(f.end))
-        else spec.rangeBetween(bound(f.start), bound(f.end))
+        if (f.isRows) spec.rowsBetween(frameOffset(f.start), frameOffset(f.end))
+        else spec.rangeBetween(frameOffset(f.start), frameOffset(f.end))
     }
     spec
   }
 
+  /** A frame bound as Spark's row/range offset. */
+  private def frameOffset(b: FrameBound): Long = b match {
+    case UnboundedPreceding => Window.unboundedPreceding
+    case UnboundedFollowing => Window.unboundedFollowing
+    case CurrentRow         => Window.currentRow
+    case Preceding(n)       => -n
+    case Following(n)       => n
+  }
+
+  /** The frame of an EXCLUDE window, checked for what every EXCLUDE
+    * lowering assumes: the frame contains the current row, and
+    * GROUP/TIES have an ORDER BY to define peers. */
+  private def excludeFrame(w: WindowSpec): Frame = {
+    val f = w.frame.get // the parser ties EXCLUDE to a frame extent
+    val startOk = f.start match {
+      case UnboundedPreceding | CurrentRow => true
+      case Preceding(n) => n >= 0
+      case _ => false
+    }
+    val endOk = f.end match {
+      case UnboundedFollowing | CurrentRow => true
+      case Following(n) => n >= 0
+      case _ => false
+    }
+    if (!startOk || !endOk)
+      fail("EXCLUDE requires a frame that contains the current row")
+    if ((w.exclude == "group" || w.exclude == "ties") && w.orderBy.isEmpty)
+      fail("EXCLUDE GROUP/TIES requires ORDER BY (peers are order ties)")
+    f
+  }
+
   /** CAST / TRY_CAST (r7b): try_cast returns NULL on conversion
     * failure — same semantics as DuckDB's TRY_CAST, lowered through
-    * [[graft.functions.SafeCast]] so failure-heavy string→number
+    * [[graft.functions.SafeCast]] so failure-heavy string→integral
     * columns skip Spark's per-row caught exception (regex pre-guard;
     * measured 1.45 s → ~0.1 s on q_try_cast). */
   private def castCol(c: Column, t: String, safe: Boolean): Column =

@@ -24,7 +24,7 @@ object GraftFn {
 
   /** TRY_CAST through [[graft.functions.SafeCast]] — the
     * regex-pre-guarded lowering that skips Spark's per-failing-row
-    * caught exception on string→number casts. */
+    * caught exception on string→integral casts. */
   def safeCast(c: Column, t: org.apache.spark.sql.types.DataType): Column =
     classic.ExpressionUtils.column(
       graft.functions.SafeCast(classic.ExpressionUtils.expression(c), t))
@@ -38,13 +38,18 @@ object GraftFn {
       classic.ExpressionUtils.expression(arr), ascs, nullsFirsts))
 
   /** Frame-EXCLUDE fold through [[graft.functions.ExcludeAgg]] — one
-    * native pass over the collected frame instead of the interpreted
-    * per-element HOF chain. */
+    * native pass over the collected frame. */
   def excludeAgg(lst: Column, cur: Column, mode: String, func: String,
                  distinct: Boolean): Column =
     classic.ExpressionUtils.column(graft.functions.ExcludeAgg(
       classic.ExpressionUtils.expression(lst),
       classic.ExpressionUtils.expression(cur), mode, func, distinct))
+
+  /** `func` over an array's non-null elements through
+    * [[graft.functions.FrameFold]] (the windowed DISTINCT fold). */
+  def frameFold(arr: Column, func: String): Column =
+    classic.ExpressionUtils.column(graft.functions.FrameFold(
+      classic.ExpressionUtils.expression(arr), func))
 
   /** A DataFrame over already-built internal rows whose row count is
     * known, carrying that count as its statistics (rows × Spark's

@@ -2592,4 +2592,22 @@ class OpsSpec extends SparkTestBase {
     assert(math.abs(out2("en") - 6.0) < 1e-12 &&
       math.abs(out2("xx") - 1.0) < 1e-12)
   }
+
+  test("q_bitmap_distinct counts every bigint key, negative and wide ones too") {
+    import spark.implicits._
+    // keys outside [0, 2^20]: a dense-bitmap count must not drop them
+    val keys: Seq[java.lang.Long] =
+      Seq(-5L, 0L, 1L, (1L << 20) + 3, -5L, 1L).map(Long.box) :+ null
+    val dir = java.nio.file.Files.createTempDirectory("graft_bitmap").toString
+    keys.flatMap(k => Seq(("click", k), ("view", k))).toDF("event_type", "user_id")
+      .union(Seq(("view", 7L: java.lang.Long)).toDF("event_type", "user_id"))
+      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+    val got = graft.SparkEntry.queries("q_bitmap_distinct")(spark, dir)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val want = spark.read.parquet(s"$dir/events.parquet")
+      .groupBy("event_type").agg(F.countDistinct("user_id"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(want == Map("click" -> 4L, "view" -> 5L))
+    assert(got == want)
+  }
 }

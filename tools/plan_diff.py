@@ -12,10 +12,17 @@ compares:
 
   - counts.json exactly;
   - the plan text after masking what differs between identical runs:
-    expression ids (`#123`), `plan_id=`, object hashes (`@1a2b3c`)
+    expression ids (`#123`), `plan_id=`, object hashes (`@1a2b3c`),
+    RDD ids (`RDD[12]`), source line numbers (`Dedup.scala:399`)
     and lambda class ids (`$Lambda$12/0x7f..`), digits inside /tmp
     paths, and graft's `__`-prefixed helper column names (renumbered in order of first appearance, so a renamed helper
     matches but a different use of helpers does not);
+  - in a plan with an Expand, every bracketed list and hash
+    partitioning compared as a multiset (items sorted, recursively)
+    and the Expand's group ids masked: Spark orders an Expand's
+    projections (and so their group ids and the lists downstream of
+    it) by expression ids, which shift with the expressions earlier
+    entries of the same JVM allocated;
   - when the masked text differs, the operator skeleton (the node names
     of the formatted plan's tree) is compared and reported too.
 
@@ -36,6 +43,10 @@ LAMBDA = re.compile(r"\$Lambda\$\d+/0x[0-9a-f]+")
 TMP_PATH = re.compile(r"/tmp/[^\s,\]\)]*")
 HELPER = re.compile(r"\b__[A-Za-z0-9_]*[A-Za-z0-9]")
 NODE_ID = re.compile(r"\s*\(\d+\)\s*$")
+RDD_ID = re.compile(r"RDD\[\d+\]")
+SRC_LINE = re.compile(r"\.scala:\d+")
+HASHPART = re.compile(r"hashpartitioning\(([^()]*), (\d+)\)")
+GID = re.compile(r"\b(gid#N|spark_grouping_id#N) = \d+")
 
 
 def entries(d):
@@ -55,10 +66,70 @@ def masked(text):
     text = PLAN_ID.sub("plan_id=N", text)
     text = HASH.sub("@H", text)
     text = LAMBDA.sub("$Lambda$N", text)
+    text = RDD_ID.sub("RDD[N]", text)
+    text = SRC_LINE.sub(".scala:N", text)
     text = TMP_PATH.sub(lambda m: re.sub(r"\d+", "N", m.group(0)), text)
     names = {}
     text = HELPER.sub(lambda m: names.setdefault(m.group(0), f"__h{len(names)}"), text)
     return text.splitlines()
+
+
+def sorted_lists(line, mask_ints=False):
+    """`line` with the items of every [...] list sorted, inner lists
+    first; commas inside (...) do not split. With mask_ints, bare
+    integer items read G. A line with unbalanced brackets is kept."""
+    def parse(i):  # line[i] == "["; returns (text, index after "]")
+        items, cur, depth = [], "", 0
+        i += 1
+        while i < len(line):
+            c = line[i]
+            if c == "[":
+                sub, i = parse(i)
+                if sub is None:
+                    return None, i
+                cur += sub
+                continue
+            if c == "]" and depth == 0:
+                items.append(cur.strip())
+                if mask_ints:
+                    items = ["G" if t.isdigit() else t for t in items]
+                return "[" + ", ".join(sorted(items)) + "]", i + 1
+            if c == "," and depth == 0:
+                items.append(cur.strip())
+                cur = ""
+            else:
+                depth += (c == "(") - (c == ")")
+                cur += c
+            i += 1
+        return None, i
+
+    out, i = "", 0
+    while i < len(line):
+        if line[i] == "[":
+            sub, j = parse(i)
+            if sub is None:
+                return line
+            out, i = out + sub, j
+        else:
+            out, i = out + line[i], i + 1
+    return out
+
+
+def expand_canonical(lines):
+    """Masked plan lines of a plan with an Expand, order-insensitive in
+    its lists and blind to the Expand's group-id literals."""
+    out, in_expand = [], False
+    for line in lines:
+        is_args = in_expand and line.startswith("Arguments:")
+        if re.match(r"\(\d+\) Expand", line):
+            in_expand = True
+        elif not line.startswith("Input"):
+            in_expand = False
+        line = HASHPART.sub(lambda m: "hashpartitioning(" + ", ".join(
+            sorted(m.group(1).split(", "))) + ", " + m.group(2) + ")", line)
+        out.append(sorted_lists(GID.sub(r"\1 = G", line),
+                                mask_ints=is_args or "Expand [" in line))
+    return out
 
 
 def skeleton(text):
@@ -97,6 +168,8 @@ def main():
             problems.append(f"counts {read(ca).strip()} vs {read(cb).strip()}")
         ta, tb = read(pa), read(pb)
         ma, mb = masked(ta), masked(tb)
+        if ma != mb and "Expand" in ta and "Expand" in tb:
+            ma, mb = expand_canonical(ma), expand_canonical(mb)
         if ma != mb:
             text_diff += 1
             if skeleton(ta) == skeleton(tb):
