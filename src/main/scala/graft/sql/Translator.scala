@@ -143,10 +143,6 @@ final class Translator(catalog: String => DataFrame,
     val sess = base0.sparkSession
     val keyedThreshold = sess.conf
       .get("spark.graft.recursive.keyedDedupRows", "4000000").toLong
-    val tinyRows = sess.conf
-      .get("spark.graft.recursive.tinyCoalesceRows", "100000").toLong
-    val unrollK = sess.conf
-      .get("spark.graft.recursive.unrollRounds", "6").toInt.max(1)
     def withKey(df: DataFrame): DataFrame =
       df.withColumn(RK, F.xxhash64(outCols.map(F.col): _*))
     // EXPLICIT partition count: an expression-only repartition lets
@@ -206,7 +202,7 @@ final class Translator(catalog: String => DataFrame,
       if (iter >= maxIters)
         fail(s"WITH RECURSIVE '$name' exceeded $maxIters iterations " +
           "without converging")
-      if (!keyed && seenRows < tinyRows) {
+      if (!keyed && seenRows < Translator.TinyCoalesceRows) {
         // TINY closures (graph-toy tier, r7): the per-round cost at
         // this size is DRIVER work, not data — each round pays
         // analysis + optimization + physical planning + an action
@@ -217,7 +213,7 @@ final class Translator(catalog: String => DataFrame,
         // already-seen rows re-walk within the block and collapse at
         // the block-end dedup; each r_i is referenced once by
         // r_{i+1} and once by the block tail, so redundancy is
-        // O(k²) per block, fine at ≤tinyRows). One compile + one
+        // O(k²) per block, fine at ≤TinyCoalesceRows). One compile + one
         // single-task shuffle-free job per block instead of k.
         // Block-end dedup tags seen 0 / fresh 1 and keeps min-tag=1
         // groups (grouping and EXCEPT both treat NULLs as equal);
@@ -225,7 +221,7 @@ final class Translator(catalog: String => DataFrame,
         // per-block Aggregate compile, and "total unchanged" is the
         // convergence test. Measured: q_recursive_union 1.35 s →
         // 0.7 s (11 rounds, sf0.1 bench settings).
-        val k = math.min(unrollK.toLong, maxIters.toLong - iter).toInt.max(1)
+        val k = math.min(Translator.UnrollRounds, maxIters - iter).max(1)
         var frontier = working
         var rs = Vector.empty[DataFrame]
         for (_ <- 1 to k) {
@@ -611,7 +607,7 @@ final class Translator(catalog: String => DataFrame,
           if (i < 1 || i > sel.items.length)
             fail(s"DISTINCT ON position $i out of range (1..${sel.items.length})")
           F.col(df.columns(i - 1))
-        case other => exprToCol(other, None)
+        case other => exprToCol(other)
       }
     }
     val part = sel.distinctOn.zipWithIndex.map { case (e, i) =>
@@ -720,13 +716,13 @@ final class Translator(catalog: String => DataFrame,
         oi.e match {
           case ColRef(None, n) =>
             df.columns.find(_.equalsIgnoreCase(n))
-              .map(F.col).getOrElse(exprToCol(oi.e, None))
+              .map(F.col).getOrElse(exprToCol(oi.e))
           case NumLit(t) if t.matches("[0-9]+") =>
             val i = t.toInt
             if (i < 1 || i > df.columns.length)
               fail(s"ORDER BY position $i out of range (1..${df.columns.length})")
             F.col(df.columns(i - 1))
-          case other => exprToCol(other, None)
+          case other => exprToCol(other)
         }
       }
       val cols = expanded.zip(raw).map { case (oi, c) => orderedCol(c, oi) }
@@ -836,7 +832,7 @@ final class Translator(catalog: String => DataFrame,
         fail(s"VALUES column list has ${names.length} names for $w columns")
       val one = session.range(1)
       val df = rows.map(r => one.select(r.zip(names).map { case (e, n) =>
-        exprToCol(e, None).as(n) }: _*)).reduce(_.union(_))
+        exprToCol(e).as(n) }: _*)).reduce(_.union(_))
       alias.map(a => df.alias(a.toLowerCase)).getOrElse(df)
     case AliasedRel(rel, alias) =>
       translateRelation(rel).alias(alias.toLowerCase)
@@ -896,7 +892,7 @@ final class Translator(catalog: String => DataFrame,
       // spelling keeps empty/NULL-array rows via explode_outer.
       alias.foreach(a => flatAliases += a.toLowerCase)
       val valName = cols.headOption.orElse(alias).getOrElse("unnest")
-      val arrCol = exprToCol(arr, None)
+      val arrCol = exprToCol(arr)
       if (ord) {
         val ordName = cols.lift(1).getOrElse("ordinality")
         val g = (if (kind == "left") F.posexplode_outer(arrCol)
@@ -929,12 +925,19 @@ final class Translator(catalog: String => DataFrame,
       val df = translateRelation(rel)
       val forActual = df.columns.find(_.equalsIgnoreCase(forCol)).getOrElse(
         fail(s"PIVOT column '$forCol' not found"))
-      var used = Set.empty[String]
-      def collectRefs(e: Expr): Unit = e match {
-        case ColRef(_, n) => used += n.toLowerCase
-        case other => Ast.children(other).foreach(collectRefs)
+      // a cell is an expression over plain aggregates: a column or a
+      // window outside them has no value per (group, FOR value) cell
+      def outsideAgg(e: Expr): Boolean = e match {
+        case a: AggExpr => a.window.isDefined
+        case _: ColRef | _: RankExpr | _: WinFunc => true
+        case other => Ast.children(other).exists(outsideAgg)
       }
-      aggsList.foreach { case (agg, _) => collectRefs(agg) }
+      aggsList.foreach { case (agg, _) =>
+        if (outsideAgg(agg))
+          fail(s"PIVOT expressions may read columns only inside a " +
+            s"plain aggregate, got $agg")
+      }
+      val used = aggsList.flatMap(a => colRefs(a._1)).map(_.name.toLowerCase).toSet
       val groupCols = df.columns.filterNot(c =>
         used.contains(c.toLowerCase) || c.equalsIgnoreCase(forActual))
       if (!values0.forall(v => isLiteral(v._1)))
@@ -989,7 +992,7 @@ final class Translator(catalog: String => DataFrame,
             case Some(al) => s"${cellBase}_$al" // aliased agg names the cell
             case None     => cellBase           // lone unaliased aggregate
           }
-          lowerPivotAgg(wrapped).as(cellName)
+          exprToCol(wrapped).as(cellName)
         }
       }
       df.groupBy(groupCols.map(F.col).toSeq: _*)
@@ -1018,7 +1021,7 @@ final class Translator(catalog: String => DataFrame,
         case t =>
           on match {
             case Some(cond) =>
-              lf.join(rf, exprToCol(cond, None), sparkJoinType(t))
+              lf.join(rf, exprToCol(cond), sparkJoinType(t))
             case None => fail(s"$t JOIN requires ON condition")
           }
       }
@@ -1222,8 +1225,8 @@ final class Translator(catalog: String => DataFrame,
     val kNs = eqs.indices.map(i => s"__asof_k$i")
     val tN = "__asof_t"; val sN = "__asof_side"; val mN = "__asof_m"
     var r2 = rf.select(eqs.map(_._2).zip(kNs).map { case (e, n) =>
-        exprToCol(e, None).as(n) } ++ Seq(
-        exprToCol(rt, None).as(tN),
+        exprToCol(e).as(n) } ++ Seq(
+        exprToCol(rt).as(tN),
         F.struct(rf.columns.map(F.col): _*).as(mN)): _*)
       .filter(F.col(tN).isNotNull)
     if (kNs.nonEmpty)
@@ -1232,8 +1235,8 @@ final class Translator(catalog: String => DataFrame,
     val leftCols = lf.columns.toSeq
     val l3 = lf.select(leftCols.map(F.col) ++
       eqs.map(_._1).zip(kNs).map { case (e, n) =>
-        exprToCol(e, None).as(n) } ++ Seq(
-      exprToCol(lt, None).as(tN), F.lit(1).as(sN),
+        exprToCol(e).as(n) } ++ Seq(
+      exprToCol(lt).as(tN), F.lit(1).as(sN),
       F.lit(null).cast(mType).as(mN)): _*)
     val r3 = r2.select(lf.schema.fields.toSeq.map(f =>
         F.lit(null).cast(f.dataType).as(f.name)) ++
@@ -1274,7 +1277,7 @@ final class Translator(catalog: String => DataFrame,
             !lColsLc.contains(n.toLowerCase) =>
           ColRef(None, s"$matchN.$n")
       }
-      val ok = exprToCol(b1, None)
+      val ok = exprToCol(b1)
       matched = matched.withColumn(matchN,
         F.when(F.col(matchN).isNotNull && ok, F.col(matchN)))
     }
@@ -1352,52 +1355,32 @@ final class Translator(catalog: String => DataFrame,
     // aggregate form).
     val grpNames = innerKeys.indices.map(i => s"__lat_g$i")
     val fillMissing = innerKeys.isEmpty && q.sel.having.isEmpty
-    var aggs = Vector.empty[(String, AggExpr)]
-    def aggRef(a: AggExpr): String =
-      aggs.find(_._2 == a).map(_._1).getOrElse {
-        val nn = s"__lat_a${aggs.size}"
-        aggs :+= (nn -> a); nn
-      }
-    // TOP-DOWN: an aggregate must be captured WHOLE (its args are
-    // inner-frame expressions the aggregation evaluates) — a
-    // bottom-up pass would rewrite a group-key ref inside an agg arg
-    // to a post-grouping helper name the inner frame doesn't have
-    def substGroupKeys(e: Expr): Expr = e match {
-      case a: AggExpr if a.window.isEmpty =>
-        val n = aggRef(a)
-        if (a.func == "count" && fillMissing)
-          Coalesce(Seq(ColRef(None, n), NumLit("0")))
-        else ColRef(None, n)
-      case c if innerKeys.exists(k => sameExpr(k, c)) =>
-        ColRef(None,
-          innerKeys.zip(grpNames).find(t => sameExpr(t._1, c)).get._2)
-      case other => Ast.mapChildren(other, substGroupKeys)
-    }
+    val scope = new AggScope("__lat_a", innerKeys.zip(grpNames), fillMissing)
     val innerAliasSet = relationAliases(q.sel.from)
     val items = q.sel.items.map { item =>
-      val rewritten = substGroupKeys(item.e)
+      val rewritten = scope.rewrite(item.e)
       if (refersToAliases(rewritten, innerAliasSet))
         fail("LATERAL aggregate select items must be aggregates or " +
           s"GROUP BY keys, got ${item.e}")
       val name = item.alias.getOrElse(defaultName(item.e, inner))
       (rewritten, name)
     }
-    val havingSubst: Option[Expr] = q.sel.having.map(substGroupKeys)
-    if (aggs.isEmpty)
+    val havingSubst: Option[Expr] = q.sel.having.map(scope.rewrite)
+    val aggCols = scope.columns
+    if (aggCols.isEmpty)
       fail("LATERAL aggregate subqueries need at least one aggregate " +
         "(use the top-n form for plain correlated selection)")
-    val aggCols = aggs.map { case (n, a) => aggColumn(a).as(n) }
     val grpCols = innerKeys.zip(grpNames).map { case (g, n) =>
-      exprToCol(g, None).as(n) }
+      exprToCol(g).as(n) }
     if (c.keys.isEmpty && c.keyed) {
       // uncorrelated: a global aggregate is ONE row (or one per
       // group) — broadcast it
       var grouped =
         if (innerKeys.isEmpty) inner.agg(aggCols.head, aggCols.tail: _*)
         else inner.groupBy(grpCols: _*).agg(aggCols.head, aggCols.tail: _*)
-      havingSubst.foreach(h => grouped = grouped.filter(exprToCol(h, None)))
+      havingSubst.foreach(h => grouped = grouped.filter(exprToCol(h)))
       val lat = grouped.select(items.map { case (e, n) =>
-        exprToCol(e, None).as(n) }: _*).alias(alias.toLowerCase)
+        exprToCol(e).as(n) }: _*).alias(alias.toLowerCase)
       if (kind == "left") lf.join(F.broadcast(lat), F.lit(true), "left_outer")
       else lf.crossJoin(F.broadcast(lat))
     } else {
@@ -1414,7 +1397,7 @@ final class Translator(catalog: String => DataFrame,
         if (c.keyed) c.keySummary(aggCols, grpCols)
         else c.tupleJoin(tuples).groupBy(c.tupleCols() ++ grpCols: _*)
           .agg(aggCols.head, aggCols.tail: _*)
-      havingSubst.foreach(h => grouped = grouped.filter(exprToCol(h, None)))
+      havingSubst.foreach(h => grouped = grouped.filter(exprToCol(h)))
       // a general predicate (IS NULL, OR arms) can select rows for a
       // NULL-operand tuple, so the fill join must be NULL-SAFE on the
       // general tuple columns (Spark's name-based join is not).
@@ -1435,7 +1418,7 @@ final class Translator(catalog: String => DataFrame,
         }
       val a = alias.toLowerCase
       val lat = filled.select((tupleNames.map(F.col) ++ items.map {
-        case (e, n) => exprToCol(e, None).as(n) }): _*)
+        case (e, n) => exprToCol(e).as(n) }): _*)
         .alias(a)
       val joinType =
         if (kind == "left" && !fillMissing) "left_outer" else "inner"
@@ -1496,7 +1479,7 @@ final class Translator(catalog: String => DataFrame,
       case other => other
     }
     val sortCols = q.orderBy.map(oi =>
-      orderedCol(exprToCol(resolveSort(oi.e), None), oi))
+      orderedCol(exprToCol(resolveSort(oi.e)), oi))
     // items project under the lateral alias; a bare * expands to the
     // inner relation's columns (qualified stars: alias-qualify refs)
     val items: Seq[(Expr, String)] = q.sel.items.flatMap { item =>
@@ -1516,12 +1499,12 @@ final class Translator(catalog: String => DataFrame,
       if (off > 0) lat0 = lat0.offset(off.toInt)
       q.limit.foreach(n => lat0 = lat0.limit(n.toInt))
       val lat = lat0.select(items.map { case (e, n) =>
-        exprToCol(e, None).as(n) }: _*).alias(alias.toLowerCase)
+        exprToCol(e).as(n) }: _*).alias(alias.toLowerCase)
       if (kind == "left") lf.join(F.broadcast(lat), F.lit(true), "left_outer")
       else lf.crossJoin(F.broadcast(lat))
     } else {
       val w = Window
-        .partitionBy(c.keys.map(kp => exprToCol(kp._1, None)): _*)
+        .partitionBy(c.keys.map(kp => exprToCol(kp._1)): _*)
         .orderBy(sortCols: _*)
       val rn = (if (q.fetchTies) F.rank() else F.row_number()).over(w)
       // filter on the MATERIALIZED rank column — filtering on the
@@ -1532,7 +1515,7 @@ final class Translator(catalog: String => DataFrame,
       val a = alias.toLowerCase
       val lat = inner
         .select((c.innerKeys() ++
-          items.map { case (e, n) => exprToCol(e, None).as(n) } :+
+          items.map { case (e, n) => exprToCol(e).as(n) } :+
           rn.as("__lat_rn")): _*)
         .filter(keep).drop("__lat_rn")
         .alias(a)
@@ -1540,24 +1523,6 @@ final class Translator(catalog: String => DataFrame,
       lf.join(lat, cond, if (kind == "left") "left_outer" else "inner")
         .drop(c.keyNames: _*)
     }
-  }
-
-  /** Lowers a PIVOT aggregate expression — an expression tree over
-    * one or more plain aggregates (`round(avg(x), 4)`) — in aggregate
-    * context: AggExpr nodes become aggregate Columns, scalar wrappers
-    * compose around them. */
-  private def lowerPivotAgg(e: Expr): Column = e match {
-    case a: AggExpr if a.window.isEmpty => aggColumn(a)
-    case FuncCall(n, args) => scalarFunc(n, args.map(lowerPivotAgg), args)
-    case Arith(op, l, r) => arith(op, lowerPivotAgg(l), lowerPivotAgg(r))
-    case Neg(x) => -lowerPivotAgg(x)
-    case Cast(x, t, sf) => castCol(lowerPivotAgg(x), t, sf)
-    case Coalesce(args) => F.coalesce(args.map(lowerPivotAgg): _*)
-    case Subscript(x, i) => subscriptCol(x, i, lowerPivotAgg)
-    case ArraySlice(x, lo, hi) => sliceCol(x, lo, hi, lowerPivotAgg)
-    case FieldAccess(x, f0) => lowerPivotAgg(x).getField(f0)
-    case NumLit(_) | StrLit(_) | BoolLit(_) | NullLit() => exprToCol(e, None)
-    case other => fail(s"unsupported expression in PIVOT aggregate: $other")
   }
 
   /** graft join-type → Spark join-type string. SEMI/ANTI (r5) filter
@@ -1708,45 +1673,23 @@ final class Translator(catalog: String => DataFrame,
             val keyNames = c.keyNames
             val innerKeys = q.sel.groupBy
             val gNames = innerKeys.indices.map(j => s"__csq_${idx}_g$j")
-            // every aggregate node in the item (and the subquery's
-            // HAVING) becomes one agg column; the item expression is
-            // rebuilt over the post-join refs, HAVING filters the
-            // grouped frame BEFORE the join (so filtered-out groups
+            // the item and HAVING read the aggregates and the
+            // correlation / inner GROUP BY keys as grouped columns; the
+            // item is evaluated over the post-join refs, HAVING filters
+            // the grouped frame BEFORE the join (so filtered-out groups
             // read NULL — zero subquery rows — even for COUNT)
-            var aggs = Vector.empty[(String, AggExpr)]
-            def aggRef(a: AggExpr): String =
-              aggs.find(_._2 == a).map(_._1).getOrElse {
-                val nn = s"__csq_${idx}_a${aggs.size}"
-                aggs :+= (nn -> a); nn
-              }
-            val substituted = Ast.transformUp(q.sel.items.head.e) {
-              case a: AggExpr if a.window.isEmpty =>
-                val n = aggRef(a)
-                if (a.func == "count" && innerKeys.isEmpty &&
-                    q.sel.having.isEmpty)
-                  Coalesce(Seq(ColRef(None, n), NumLit("0")))
-                else ColRef(None, n)
-            }
-            // HAVING: aggregates map to agg columns; bare refs that
-            // structurally match a group key read its grouped column
-            val havingSubst: Option[Expr] = q.sel.having.map { h =>
-              Ast.transformUp(h) {
-                case a: AggExpr if a.window.isEmpty =>
-                  ColRef(None, aggRef(a))
-                case c: ColRef
-                    if (keyPairs.map(_._1) ++ innerKeys)
-                      .exists(k => sameExpr(k, c)) =>
-                  val all = keyPairs.map(_._1).zip(keyNames) ++
-                    innerKeys.zip(gNames)
-                  ColRef(None, all.find(t => sameExpr(t._1, c)).get._2)
-              }
-            }
+            val scope = new AggScope(s"__csq_${idx}_a",
+              keyPairs.map(_._1).zip(keyNames) ++ innerKeys.zip(gNames),
+              countZero = innerKeys.isEmpty && q.sel.having.isEmpty)
+            val substituted = scope.rewrite(q.sel.items.head.e)
+            val havingSubst: Option[Expr] = q.sel.having.map(scope.rewrite)
+            val aggs = scope.aggs
             if (aggs.isEmpty)
               fail("correlated scalar subquery needs at least one aggregate")
             val gCols = innerKeys.zip(gNames).map { case (g, n) =>
-              exprToCol(g, None).as(n)
+              exprToCol(g).as(n)
             }
-            val aggCols = aggs.map { case (n, a) => aggColumn(a).as(n) }
+            val aggCols = scope.columns
             // the window fusion below takes the plain shape and the two
             // next-simplest ones, both provably single-group per outer
             // row:
@@ -1761,15 +1704,17 @@ final class Translator(catalog: String => DataFrame,
             // fuzz suites (seeds 113/89) differential-pin the results.
             val innerKeysFusable = innerKeys.isEmpty ||
               innerKeys.forall(g => keyPairs.exists(kp => sameExpr(kp._1, g)))
-            val havingAggOnly = q.sel.having.forall { h =>
-              var bare = false
-              Ast.transformUp(Ast.transformUp(h) {
-                case a: AggExpr if a.window.isEmpty => NumLit("0")
-              }) { case c: ColRef => bare = true; c }
-              !bare
-            }
+            // the fused frame holds the aggregates but no key columns:
+            // HAVING reads aggregates only, the item no key
+            val aggNames = aggs.map(_._1).toSet
+            val keyCols = (keyNames ++ gNames).toSet
+            val refsFusable =
+              havingSubst.forall(colRefs(_).forall(r =>
+                r.qualifier.isEmpty && aggNames(r.name))) &&
+              !colRefs(substituted).exists(r =>
+                r.qualifier.isEmpty && keyCols(r.name))
             val fusable = c.thetas.length == 1 && c.gens.isEmpty &&
-              innerKeysFusable && havingAggOnly &&
+              innerKeysFusable && refsFusable &&
               keyPairs.nonEmpty &&
               Set("<", "<=", ">", ">=").contains(c.thetas.head._2) &&
               aggs.forall { case (_, a) =>
@@ -1805,12 +1750,12 @@ final class Translator(catalog: String => DataFrame,
                 val argNs = aggs.indices.map(j => s"__csq_${idx}_w$j")
                 val iProj0 = inner.select(
                   keyPairs.zip(ukN).map { case ((ik, _), n) =>
-                    exprToCol(ik, None).as(n) } ++
-                  Seq(exprToCol(ie, None).as(valN)) ++
+                    exprToCol(ik).as(n) } ++
+                  Seq(exprToCol(ie).as(valN)) ++
                   aggs.zip(argNs).map { case ((_, a), n) =>
                     (a.arg match {
                       case Star(_) => F.lit(1L) // count(*): inner markers
-                      case e2      => exprToCol(e2, None)
+                      case e2      => exprToCol(e2)
                     }).as(n) }: _*)
                 val iProj = (F.col(valN).isNotNull +: ukN.map(n =>
                   F.col(n).isNotNull)).reduce(_ && _) match {
@@ -1821,8 +1766,8 @@ final class Translator(catalog: String => DataFrame,
                 val oSide = from.select(
                   from.columns.toSeq.map(F.col) ++
                   keyPairs.zip(ukN).map { case ((_, ok), n) =>
-                    exprToCol(ok, None).as(n) } ++
-                  Seq(exprToCol(oe, None).as(valN), F.lit(0).as(mN)) ++
+                    exprToCol(ok).as(n) } ++
+                  Seq(exprToCol(oe).as(valN), F.lit(0).as(mN)) ++
                   argNs.map(n => F.lit(null).cast(iTypes(n)).as(n)): _*)
                 val iSide = iProj.select(
                   from.schema.fields.toSeq.map(f =>
@@ -1879,7 +1824,7 @@ final class Translator(catalog: String => DataFrame,
                     case c @ ColRef(None, n) =>
                       val i = aggs.indexWhere(_._1 == n)
                       if (i >= 0) ColRef(None, rawNs(i)) else c
-                  }, None)
+                  })
                 }
                 val finalAggCols = aggs.map(_._1).zip(rawNs).map {
                   case (n0, rn) =>
@@ -1911,7 +1856,7 @@ final class Translator(catalog: String => DataFrame,
                     .groupBy(c.tupleCols() ++ gCols: _*)
                     .agg(aggCols.head, aggCols.tail: _*)
                 havingSubst.foreach(h =>
-                  grouped = grouped.filter(exprToCol(h, None)))
+                  grouped = grouped.filter(exprToCol(h)))
                 val cntN = s"__csq_${idx}_c"
                 val guarded: Expr =
                   if (innerKeys.isEmpty) substituted
@@ -1995,7 +1940,6 @@ final class Translator(catalog: String => DataFrame,
         helperCols = step._2 ::: helperCols
         ColRef(None, s"__sq_flag_$i")
       }
-      val lower = exprToCol(_: Expr, None)
       (expr0: Expr) =>
         Ast.transformUp(expr0) {
           case InSubquery(e: RowTuple, sub0) =>
@@ -2009,7 +1953,7 @@ final class Translator(catalog: String => DataFrame,
             // 3VL (null arms defeat hash keys). A correlated subquery
             // widens the tuple by its correlation columns.
             val sub = degroupCorrSub(sub0, outerAliases, forExists = false)
-            val ps = e.items.map(exprToCol(_, None))
+            val ps = e.items.map(exprToCol)
             val i = freshIdx()
             val flagN = s"__sq_flag_$i"; val p = s"__sq_${i}_"
             val markN = s"${p}mark"; val grpN = s"${p}grp"
@@ -2033,7 +1977,7 @@ final class Translator(catalog: String => DataFrame,
               val c = correlate(q, outerAliases -- relationAliases(q.sel.from),
                 "IN", p)
               c.inner
-              val pk = probes.zip(q.sel.items.map(it => exprToCol(it.e, None)))
+              val pk = probes.zip(q.sel.items.map(it => exprToCol(it.e)))
               // the join admits correlation-group rows whose composite
               // comparison is NOT STRICTLY FALSE; strictly-false-only
               // and empty groups both land on the FALSE arm via the
@@ -2078,24 +2022,24 @@ final class Translator(catalog: String => DataFrame,
             ColRef(None, flagN)
           case InSubquery(e, sub0) =>
             val sub = degroupCorrSub(sub0, outerAliases, forExists = false)
-            val probe = exprToCol(e, None)
+            val probe = exprToCol(e)
             val i = freshIdx()
-            applied(inFlag(sub, outerAliases, probe, lower, having = false,
+            applied(inFlag(sub, outerAliases, probe, exprToCol, having = false,
               "__sq", i), i)
           case ExistsSubquery(sub0) =>
             // EXISTS in arbitrary boolean position (under OR, nested
             // NOT). EXISTS is two-valued, so the flag is never NULL.
             val sub = degroupCorrSub(sub0, outerAliases, forExists = true)
             val i = freshIdx()
-            applied(existsFlag(sub, outerAliases, lower, having = false,
+            applied(existsFlag(sub, outerAliases, exprToCol, having = false,
               "__sq", i), i)
           case QuantCmp(op, all, e, sub0) =>
             // quantified comparison `x op ANY/ALL (subquery)` in any
             // boolean position
             val sub = degroupCorrSub(sub0, outerAliases, forExists = false)
-            val probe = exprToCol(e, None)
+            val probe = exprToCol(e)
             val i = freshIdx()
-            applied(quantFlagStep(sub, outerAliases, op, all, probe, lower,
+            applied(quantFlagStep(sub, outerAliases, op, all, probe, exprToCol,
               having = false, "__sq", i), i)
         }
     }
@@ -2111,8 +2055,8 @@ final class Translator(catalog: String => DataFrame,
           // ALL pairs equal; negated anti-condition: every pair equal
           // OR either side null = "comparison not strictly false")
           val probes: Seq[Column] = e match {
-            case RowTuple(items) => items.map(exprToCol(_, None))
-            case _               => Seq(exprToCol(e, None))
+            case RowTuple(items) => items.map(exprToCol)
+            case _               => Seq(exprToCol(e))
           }
           val arity = probes.length
           // the negated null arms are spelled `isnull(p = k)` —
@@ -2144,7 +2088,7 @@ final class Translator(catalog: String => DataFrame,
               val c = conjunctCorrelation(q, outerRefs, "IN", s"__cj_${cjIdx}_")
               cjIdx += 1
               c.inner
-              val keyCols = q.sel.items.map(i => exprToCol(i.e, None))
+              val keyCols = q.sel.items.map(i => exprToCol(i.e))
               from = c.semiJoin(from, negated, Seq(pairCond(keyCols, negated)))
             case None =>
               // grouped + theta IN conjuncts: membership = surviving
@@ -2220,7 +2164,7 @@ final class Translator(catalog: String => DataFrame,
       selScalars.items.map(i => i.copy(e = lowerBoolFlags(i.e))))
 
     val filtered0 = whereResidual match {
-      case Some(w) => from.filter(exprToCol(w, None))
+      case Some(w) => from.filter(exprToCol(w))
       case None    => from
     }
     val hasAgg = selItems.items.exists(i => containsAgg(i.e)) ||
@@ -2285,7 +2229,7 @@ final class Translator(catalog: String => DataFrame,
     // projected rows carry duplicate ordinals.
     val (plainFrom, selPlain) =
       if (!hasAgg && selAgg.items.exists(i => containsGroupsFrame(i.e))) {
-        val rw = new GroupsFrameRewriter(exprToCol(_, None))
+        val rw = new GroupsFrameRewriter
         val items2 = selAgg.items.map(i => i.copy(e = rw.rewrite(i.e)))
         val d = rw.pending.foldLeft(filtered0) {
           case (df, (n, c)) => df.withColumn(n, c)
@@ -2297,7 +2241,7 @@ final class Translator(catalog: String => DataFrame,
     val projected: DataFrame =
       if (!hasAgg) {
         val base = selPlain.having match { // HAVING w/o aggregates = WHERE
-          case Some(h) => plainFrom.filter(exprToCol(h, None))
+          case Some(h) => plainFrom.filter(exprToCol(h))
           case None    => plainFrom
         }
         // UNNEST (r5, DuckDB select-position form): lowered to explode
@@ -2340,9 +2284,9 @@ final class Translator(catalog: String => DataFrame,
             }
           }
           val pre = base.select(infos.map {
-            case (jj, hn, Some(arr), _) => exprToCol(arr, None).as(hn)
+            case (jj, hn, Some(arr), _) => exprToCol(arr).as(hn)
             case (jj, hn, None, _) =>
-              exprToCol(selPlain.items(jj).e, None).as(hn)
+              exprToCol(selPlain.items(jj).e).as(hn)
           }: _*)
           val maxLen = F.greatest(infos.collect { case (_, hn, Some(_), _) =>
             F.coalesce(F.when(F.col(hn).isNotNull, F.size(F.col(hn))),
@@ -2361,7 +2305,7 @@ final class Translator(catalog: String => DataFrame,
 
     val qualified = qualifyExpr match {
       case Some(qe) =>
-        val f = projected.filter(exprToCol(qe, None))
+        val f = projected.filter(exprToCol(qe))
         if (qualifyHidden.isEmpty) f else f.drop(qualifyHidden: _*)
       case None => projected
     }
@@ -2485,89 +2429,18 @@ final class Translator(catalog: String => DataFrame,
     // the source columns no longer exist)
     val groupNamed: Seq[(Expr, Column, Option[String])] =
       groupExprs.zipWithIndex.map {
-        case (g @ ColRef(_, _), _) => (g, exprToCol(g, None), None)
+        case (g @ ColRef(_, _), _) => (g, exprToCol(g), None)
         case (g, i) =>
           val n = s"__gk_$i"
-          (g, exprToCol(g, None).as(n), Some(n))
+          (g, exprToCol(g).as(n), Some(n))
       }
     val groupCols = groupNamed.map(_._2)
 
-    // every aggregate node appearing in SELECT or HAVING, deduped by
-    // its rendered column text PLUS the distinct flag — the internal
-    // node behind Column.fn(name, isDistinct = true) renders WITHOUT
-    // the DISTINCT marker, so text alone would silently unify
-    // stddev(x) with stddev(DISTINCT x)
-    var aggMap = Vector.empty[(String, String, Column)] // name, key, col
-    def aggName(a: AggExpr): String = {
-      val c = aggColumn(a)
-      val key = s"${a.func}|${a.distinct}|$c"
-      aggMap.find(_._2 == key) match {
-        case Some((n, _, _)) => n
-        case None =>
-          val n = s"__agg_${aggMap.size}"
-          aggMap :+= ((n, key, c))
-          n
-      }
-    }
-
-    // rewrite an expression: aggregate nodes → post-agg column refs,
-    // group-by expressions → their post-agg values
-    def post(e: Expr): Column = e match {
-      case a @ AggExpr(_, _, _, None, _, _) =>
-        F.col(aggName(a))
-      // window functions over the AGGREGATED result (standard SQL:
-      // windows evaluate after GROUP BY/HAVING) — partition/order keys
-      // and arguments lower through post, so aggregates and group keys
-      // inside the window spec resolve to their post-agg columns
-      case a: AggExpr if a.window.isDefined =>
-        if (a.func == "string_agg" || a.func == "array_agg")
-          orderedSetWindowed(a, post)
-        else windowedAgg(a, post)
-      case RankExpr(dense, w) =>
-        (if (dense) F.dense_rank() else F.rank()).over(windowSpec(w, post))
-      case WinFunc(nm, args, w, ign) =>
-        winFunc(nm, args, post, ign).over(windowSpec(w, post))
-      case _ if groupNamed.exists(t => sameExpr(t._1, e)) =>
-        groupNamed.find(t => sameExpr(t._1, e)).get match {
-          case (_, _, Some(n)) => F.col(n) // named expression key
-          case _               => exprToCol(e, None) // bare column key
-        }
-      case ColRef(_, _) => exprToCol(e, None)
-      case NumLit(_) | NullLit() | StrLit(_) | BoolLit(_) | NowLit() |
-           TodayLit() | TimestampLit(_, _) | DateLit(_) => exprToCol(e, None)
-      case Arith(op @ ("+" | "-"), l, i: IntervalLit) =>
-        shiftByInterval(post(l), i, negate = op == "-")
-      case Arith("+", i: IntervalLit, r) =>
-        shiftByInterval(post(r), i, negate = false)
-      case Arith(op, l, r)  => arith(op, post(l), post(r))
-      case Neg(x)           => -post(x)
-      case CaseWhen(bs, o) =>
-        bs.tail.foldLeft(F.when(post(bs.head._1), post(bs.head._2))) {
-          case (acc, (c, v)) => acc.when(post(c), post(v))
-        }.otherwise(post(o))
-      case Cast(x, t, sf) => castCol(post(x), t, sf)
-      case Coalesce(args) => F.coalesce(args.map(post): _*)
-      case And(l, r)      => post(l) && post(r)
-      case Or(l, r)       => post(l) || post(r)
-      case Not(x)         => !post(x)
-      case Cmp(op, l, r)  => cmp(op, post(l), post(r))
-      case Between(x, lo, hi) => post(x).between(post(lo), post(hi))
-      case InList(x, vs, neg) =>
-        val c = inListCol(post(x), vs, v => post(v))
-        if (neg) !c else c
-      case IsNull(x, neg) => if (neg) post(x).isNotNull else post(x).isNull
-      case Like(x, p, esc) => likeCol(post(x), p, esc, ci = false)
-      case ILike(x, p, esc) => likeCol(post(x), p, esc, ci = true)
-      case FuncCall(nm, args) if args.exists(_.isInstanceOf[Lambda]) =>
-        hofCall(nm, args, post)
-      case FuncCall(nm, args) => scalarFunc(nm, args.map(post), args)
-      // r11 subscript/field sugar composes over aggregates and group
-      // keys too (`collect_list(x)[1]`, `s.f` on a grouped struct)
-      case Subscript(x, i)    => subscriptCol(x, i, post)
-      case ArraySlice(x, lo, hi) => sliceCol(x, lo, hi, post)
-      case FieldAccess(x, f0) => post(x).getField(f0)
-      case other => fail(s"unsupported expression in aggregate context: $other")
-    }
+    // aggregates and named expression keys read their post-agg columns
+    // (bare column keys are themselves post-agg columns)
+    val scope = new AggScope("__agg_",
+      groupNamed.collect { case (g, _, Some(n)) => g -> n })
+    def lower(e: Expr): Column = exprToCol(scope.rewrite(e))
 
     // group-by keys must appear in output when selected; compute the
     // post-agg projection for each select item
@@ -2588,12 +2461,12 @@ final class Translator(catalog: String => DataFrame,
           // references resolve by name, so the set entry and the
           // grouping column are the same attribute).
           val preIn = groupNamed.foldLeft(in) {
-            case (d, (g, _, Some(n))) => d.withColumn(n, exprToCol(g, None))
+            case (d, (g, _, Some(n))) => d.withColumn(n, exprToCol(g))
             case (d, _) => d
           }
           def plainKey(t: (Expr, Column, Option[String])): Column = t match {
             case (_, _, Some(n)) => F.col(n)
-            case (g, _, None)    => exprToCol(g, None)
+            case (g, _, None)    => exprToCol(g)
           }
           val sets = sel.groupSets.map(_.map(resolveGroupKey).map { g =>
             groupNamed.find(t => sameExpr(t._1, g)) match {
@@ -2623,33 +2496,28 @@ final class Translator(catalog: String => DataFrame,
     // machinery cannot apply. They are the WHERE / SELECT flag
     // builders applied as deferred steps; a correlated subquery
     // correlates by equality with group-key expressions (anything
-    // else has no post-aggregation value). `lowerProbe` lowers the
-    // probe and the outer keys: `post` in the aggregate path, plain
-    // exprToCol in the distinct (no-aggregate) path.
-    def lowerHavingSubqueries(h: Expr, lowerProbe: Expr => Column)
-        : (Expr, List[DataFrame => DataFrame], List[String]) = {
+    // else has no post-aggregation value). The probe and the outer
+    // keys lower in aggregate context.
+    def lowerHavingSubqueries(h: Expr): (Expr, List[DataFrame => DataFrame]) = {
       var joins = List.empty[DataFrame => DataFrame]
-      var helpers = List.empty[String]
       var idx = 0
       val outer = relationAliases(sel.from)
       def deferred(flag: Int => FlagStep): Expr = {
         val i = idx; idx += 1
-        val (step, hs) = flag(i)
-        joins ::= step
-        helpers = hs ::: helpers
+        joins ::= flag(i)._1
         ColRef(None, s"__hq_flag_$i")
       }
       val rewritten = Ast.transformUp(h) {
         case InSubquery(probe, sub) =>
-          deferred(inFlag(sub, outer, lowerProbe(probe), lowerProbe,
+          deferred(inFlag(sub, outer, lower(probe), lower,
             having = true, "__hq", _))
         case ExistsSubquery(sub) =>
-          deferred(existsFlag(sub, outer, lowerProbe, having = true, "__hq", _))
+          deferred(existsFlag(sub, outer, lower, having = true, "__hq", _))
         case QuantCmp(op, all, probe, sub) =>
-          deferred(quantFlagStep(sub, outer, op, all, lowerProbe(probe),
-            lowerProbe, having = true, "__hq", _))
+          deferred(quantFlagStep(sub, outer, op, all, lower(probe),
+            lower, having = true, "__hq", _))
       }
-      (rewritten, joins.reverse, helpers)
+      (rewritten, joins.reverse)
     }
 
     // GROUP BY with no aggregates (reference: test_group_by,
@@ -2657,48 +2525,41 @@ final class Translator(catalog: String => DataFrame,
     // as everything else, with a dummy aggregate standing in (dropped
     // below): one row per full key tuple — even for keys the SELECT
     // list drops — rollup/cube/sets super-groups included, windows
-    // and HAVING evaluated over the grouped frame via `post`. A
-    // separate distinct() shortcut used to live here; it silently
-    // collapsed groups on unprojected keys, evaluated window items
-    // over pre-group rows, and dropped rollup super-group rows.
-
-    // GROUPS frame pre-pass (r7b, aggregate path): windows over the
-    // AGGREGATED frame may carry GROUPS frames too — rewrite items
-    // against `post` lowering (partition/order keys resolve to their
-    // post-agg columns); the hidden ordinals materialize on the
-    // aggregated frame after HAVING (standard evaluation order) and
-    // never reach the output (the final select projects named items).
-    val grw = new GroupsFrameRewriter(post)
-    val selGItems: Seq[SelectItem] =
-      if (sel.items.exists(i => containsGroupsFrame(i.e)))
-        sel.items.map(i => i.copy(e = grw.rewrite(i.e)))
-      else sel.items
-
-    // force materialization of agg map: walk select + having
-    val selectPost: Seq[(Expr, Option[String], Column)] = selGItems.map {
+    // and HAVING evaluated over the grouped frame. A separate
+    // distinct() shortcut used to live here; it silently collapsed
+    // groups on unprojected keys, evaluated window items over
+    // pre-group rows, and dropped rollup super-group rows.
+    //
+    // Windows over the AGGREGATED frame (standard SQL: windows
+    // evaluate after GROUP BY/HAVING) lower like any other item: the
+    // rewrite reaches their arguments and partition/order keys. Their
+    // GROUPS frames (r7b) materialize hidden ordinals on the
+    // aggregated frame after HAVING; the final select never projects
+    // them.
+    val grw = new GroupsFrameRewriter
+    val selectPost: Seq[(Expr, Option[String], Column)] = sel.items.map {
       case SelectItem(Star(_) | StarMod(_, _, _), _) =>
         fail("SELECT * with aggregation requires explicit columns")
       // hidden QUALIFY items: select aliases resolve inside the window
       // spec (DuckDB QUALIFY scoping) — the aliased expression is the
       // only form that still exists post-aggregation
-      case SelectItem(e, alias) if alias.exists(_.startsWith("__qw_")) =>
-        val e2 = resolveAliases(e)
-        (e2, alias, post(e2))
-      case SelectItem(e, alias) => (e, alias, post(e))
+      case SelectItem(e, alias) =>
+        val e2 = if (alias.exists(_.startsWith("__qw_"))) resolveAliases(e) else e
+        (e, alias, exprToCol(grw.rewrite(scope.rewrite(e2))))
     }
     val (havingExpr, havingJoins) = sel.having match {
       case Some(h) =>
-        val (e2, js, _) = lowerHavingSubqueries(resolveAliases(h), post)
+        val (e2, js) = lowerHavingSubqueries(resolveAliases(h))
         (Some(e2), js)
       case None => (None, Nil)
     }
-    val havingPost: Option[Column] = havingExpr.map(post)
+    val havingPost: Option[Column] = havingExpr.map(lower)
 
     // GROUP BY with no aggregates anywhere: a dummy aggregate carries
     // the grouping (RelationalGroupedDataset.agg needs one), dropped
     // right after — semantically one row per group, same cost as a
     // distinct() over the keys
-    val aggExprs: Seq[Column] = aggMap.map { case (n, _, c) => c.as(n) } match {
+    val aggExprs: Seq[Column] = scope.columns match {
       case Seq() => Seq(F.first(F.lit(1)).as("__gb_dummy"))
       case es => es
     }
@@ -2714,6 +2575,55 @@ final class Translator(catalog: String => DataFrame,
       c.as(alias.getOrElse(defaultName(e, in)))
     }
     agged.select(out: _*)
+  }
+
+  /** Aggregate context, as a rewrite in front of [[exprToCol]]: the
+    * items and HAVING of a grouped select, a correlated scalar or
+    * LATERAL aggregate subquery, or a grouped theta subquery, all read
+    * the output of ONE aggregation. [[rewrite]] walks top-down:
+    *  - a plain (unwindowed) aggregate is captured WHOLE as a helper
+    *    column named `prefix` + index, and read back by name. Its
+    *    arguments are input-frame expressions the aggregation itself
+    *    evaluates, so they are never rewritten (a key inside
+    *    `sum(k)` stays the input column);
+    *  - an expression structurally equal ([[sameExpr]]) to a key — a
+    *    group key or a correlation key — reads that key's column;
+    *  - everything else, windows included, is rebuilt around its
+    *    rewritten children.
+    * A repeated aggregate reuses its column. Aggregates dedup on their
+    * lowered text PLUS the distinct flag: `Column.fn(name, isDistinct =
+    * true)` renders WITHOUT the DISTINCT marker, so text alone would
+    * unify stddev(x) with stddev(DISTINCT x). With `countZero` (the
+    * ungrouped scalar and LATERAL forms, where a missing group is an
+    * empty set) COUNT reads 0 rather than NULL. */
+  private final class AggScope(prefix: String, keys: Seq[(Expr, String)],
+                               countZero: Boolean = false) {
+    private var captured = Vector.empty[(String, String, AggExpr, Column)]
+
+    /** The captured (name, aggregate) pairs, in capture order. */
+    def aggs: Seq[(String, AggExpr)] = captured.map(c => (c._1, c._3))
+
+    /** The captured aggregates as named columns, for `.agg`. */
+    def columns: Seq[Column] = captured.map(c => c._4.as(c._1))
+
+    def rewrite(e: Expr): Expr = e match {
+      case a: AggExpr if a.window.isEmpty =>
+        val c = aggColumn(a)
+        val key = s"${a.func}|${a.distinct}|$c"
+        val n = captured.find(_._2 == key).map(_._1).getOrElse {
+          val n = s"$prefix${captured.size}"
+          captured :+= ((n, key, a, c))
+          n
+        }
+        if (countZero && a.func == "count")
+          Coalesce(Seq(ColRef(None, n), NumLit("0")))
+        else ColRef(None, n)
+      case _ =>
+        keys.find(k => sameExpr(k._1, e)) match {
+          case Some((_, n)) => ColRef(None, n)
+          case None         => Ast.mapChildren(e, rewrite)
+        }
+    }
   }
 
   /** Structural equality for group-key matching: ColRef names compare
@@ -2771,6 +2681,12 @@ final class Translator(catalog: String => DataFrame,
   private def splitConjuncts(e: Expr): Seq[Expr] = e match {
     case And(l, r) => splitConjuncts(l) ++ splitConjuncts(r)
     case other => Seq(other)
+  }
+
+  /** Every column reference in the expression. */
+  private def colRefs(e: Expr): Seq[ColRef] = e match {
+    case c: ColRef => Seq(c)
+    case other => Ast.children(other).flatMap(colRefs)
   }
 
   /** True if the expression references a column qualified with one of
@@ -2867,7 +2783,7 @@ final class Translator(catalog: String => DataFrame,
       case Some((q, outerRefs)) =>
         val c = flagCorrelation(q, outerRefs, "IN", p, having)
         val inner = c.inner
-        val item = exprToCol(q.sel.items.head.e, None)
+        val item = exprToCol(q.sel.items.head.e)
         val markN = s"${p}mark"; val grpN = s"${p}grp"; val nullN = s"${p}null"
         if (c.needsTuples) {
           val probes = Seq(probe -> s"${p}probe")
@@ -2895,7 +2811,7 @@ final class Translator(catalog: String => DataFrame,
           val keyN = s"${p}v"; val tN = s"${p}tv"
           val ckK = c.keyNames.map(_ + "_m")
           val keyedSet = inner.select(item.as(keyN) +:
-            (c.innerKeys() :+ exprToCol(c.thetas.head._1, None).as(tN)): _*)
+            (c.innerKeys() :+ exprToCol(c.thetas.head._1).as(tN)): _*)
           val t = F.col(tN)
           val allDefs = thetaAggCols(t, op, s"${p}tall")
           val nulDefs = thetaAggCols(F.when(F.col(keyN).isNull, t), op, s"${p}tnull")
@@ -2998,7 +2914,7 @@ final class Translator(catalog: String => DataFrame,
         } else if (c.thetas.nonEmpty) {
           val (ie, op, oe) = c.thetas.head
           val markN = s"${p}mark"
-          val aggDefs = thetaAggCols(exprToCol(ie, None), op, s"${p}tagg")
+          val aggDefs = thetaAggCols(exprToCol(ie), op, s"${p}tagg")
           val keys = c.keySummary(aggDefs.map { case (n, col) => col.as(n) })
             .withColumn(markN, F.lit(true))
           ((df: DataFrame) => df.join(keys, c.keyCond(lower), "left_outer")
@@ -3053,7 +2969,7 @@ final class Translator(catalog: String => DataFrame,
       case Some((q, outerRefs)) =>
         val c = flagCorrelation(q, outerRefs, "quantified comparison", p, having)
         val inner = c.inner
-        val y = exprToCol(q.sel.items.head.e, None)
+        val y = exprToCol(q.sel.items.head.e)
         if (c.keyed) {
           val summary = c.keySummary(summaryAggs(y))
           ((df: DataFrame) => df.join(summary, c.keyCond(lower), "left_outer")
@@ -3414,35 +3330,24 @@ final class Translator(catalog: String => DataFrame,
     if (c.keyed) return None
     val inner = c.inner
     val gNames = q.sel.groupBy.indices.map(j => s"${p}g$j")
-    var aggs = Vector.empty[(String, AggExpr)]
-    def subst(e: Expr): Expr = Ast.transformUp(e) {
-      case a: AggExpr if a.window.isEmpty =>
-        val n = aggs.find(_._2 == a).map(_._1).getOrElse {
-          val nn = s"${p}a${aggs.size}"
-          aggs :+= (nn -> a); nn
-        }
-        ColRef(None, n)
-      case c: ColRef if q.sel.groupBy.exists(k => sameExpr(k, c)) =>
-        ColRef(None,
-          gNames(q.sel.groupBy.indexWhere(k => sameExpr(k, c))))
-    }
-    val hSub = h0.map(subst)
-    val valSub = item0.map(subst)
-    if (aggs.isEmpty && !wantValue)
+    val scope = new AggScope(s"${p}a", q.sel.groupBy.zip(gNames))
+    val hSub = h0.map(scope.rewrite)
+    val valSub = item0.map(scope.rewrite)
+    if (scope.aggs.isEmpty && !wantValue)
       return None // EXISTS form needs aggregates in h
     val aggCols =
-      if (aggs.isEmpty) Seq(F.count(F.lit(1)).as(s"${p}n"))
-      else aggs.map { case (n, a) => aggColumn(a).as(n) }
+      if (scope.aggs.isEmpty) Seq(F.count(F.lit(1)).as(s"${p}n"))
+      else scope.columns
     val vName = s"${p}v"
     val rows = (outer: DataFrame) => {
       var grouped = c.tupleJoin(c.tuples(outer))
         .groupBy(c.tupleCols() ++
           q.sel.groupBy.zip(gNames).map { case (g, n) =>
-            exprToCol(g, None).as(n) }: _*)
+            exprToCol(g).as(n) }: _*)
         .agg(aggCols.head, aggCols.tail: _*)
-      hSub.foreach(h => grouped = grouped.filter(exprToCol(h, None)))
+      hSub.foreach(h => grouped = grouped.filter(exprToCol(h)))
       grouped.select(c.tupleCols() ++
-        valSub.map(v => exprToCol(v, None).as(vName)): _*).distinct()
+        valSub.map(v => exprToCol(v).as(vName)): _*).distinct()
     }
     Some(new Survivors(c, rows, valSub.map(_ => vName)))
   }
@@ -3523,12 +3428,12 @@ final class Translator(catalog: String => DataFrame,
     lazy val inner: DataFrame = {
       val base = hoists.foldLeft(translateRelation(from))(
         (df, one) => df.crossJoin(F.broadcast(one)))
-      local.reduceOption(And).fold(base)(l => base.filter(exprToCol(l, None)))
+      local.reduceOption(And).fold(base)(l => base.filter(exprToCol(l)))
     }
 
     /** The inner key expressions, projected under `names`. */
     def innerKeys(names: Seq[String] = keyNames): Seq[Column] =
-      keys.zip(names).map { case ((ik, _), n) => exprToCol(ik, None).as(n) }
+      keys.zip(names).map { case ((ik, _), n) => exprToCol(ik).as(n) }
 
     /** The per-key summary: `inner` grouped by its keys (plus `extra`
       * grouping columns) into `aggs`, or its DISTINCT keys when there
@@ -3550,7 +3455,7 @@ final class Translator(catalog: String => DataFrame,
     def tuples(outer: DataFrame, probes: Seq[(Column, String)] = Nil): DataFrame =
       outer.select(probes.map { case (c, n) => c.as(n) } ++
         outerExprs.zip(tupleNames).map { case (oe, n) =>
-          exprToCol(oe, None).as(n) }: _*).distinct()
+          exprToCol(oe).as(n) }: _*).distinct()
 
     /** The tuple columns, probe columns first — the per-tuple grouping. */
     def tupleCols(probes: Seq[(Column, String)] = Nil): Seq[Column] =
@@ -3563,10 +3468,10 @@ final class Translator(catalog: String => DataFrame,
       val in = inner
       val cond = lead ++
         keys.zip(keyNames).map { case ((ik, _), n) =>
-          exprToCol(ik, None) === F.col(n) } ++
+          exprToCol(ik) === F.col(n) } ++
         thetas.zip(thetaNames).map { case ((ie, op, _), n) =>
-          cmp(op, exprToCol(ie, None), F.col(n)) } ++
-        gens.map(exprToCol(_, None))
+          cmp(op, exprToCol(ie), F.col(n)) } ++
+        gens.map(exprToCol)
       tuples.join(in, cond.reduce(_ && _), how)
     }
 
@@ -3576,12 +3481,12 @@ final class Translator(catalog: String => DataFrame,
       * outer rows — keys and theta operands null-safely when
       * `nullSafe`. Under `=`, a NULL key or operand (which joined no
       * inner row under pure comparisons) reads as absent. */
-    def backConds(nullSafe: Boolean, lower: Expr => Column = exprToCol(_, None),
+    def backConds(nullSafe: Boolean,
                   names: Seq[String] = tupleNames,
                   col: String => Column = F.col): Seq[Column] =
       outerExprs.zip(names).zipWithIndex.map { case ((oe, n), j) =>
-        if (nullSafe || j >= keys.length + thetas.length) lower(oe) <=> col(n)
-        else lower(oe) === col(n)
+        if (nullSafe || j >= keys.length + thetas.length) exprToCol(oe) <=> col(n)
+        else exprToCol(oe) === col(n)
       }
 
     /** The back-join condition: each probe null-safely, then
@@ -3596,7 +3501,7 @@ final class Translator(catalog: String => DataFrame,
     def semiJoin(outer: DataFrame, negated: Boolean,
                  lead: Seq[Column] = Nil): DataFrame = {
       val in = inner
-      val cond = (lead ++ conds.map(exprToCol(_, None)))
+      val cond = (lead ++ conds.map(exprToCol))
         .reduceOption(_ && _).getOrElse(F.lit(true))
       outer.join(in, cond, if (negated) "left_anti" else "left_semi")
     }
@@ -3861,7 +3766,7 @@ final class Translator(catalog: String => DataFrame,
           resolve(n, "REPLACE") -> e }.toMap
         base.filterNot(excluded).map { n =>
           replaced.get(n) match {
-            case Some(e) => exprToCol(e, None).as(n)
+            case Some(e) => exprToCol(e).as(n)
             case None    => q.map(t => F.col(s"${t.toLowerCase}.$n"))
                               .getOrElse(F.col(n))
           }
@@ -3871,9 +3776,9 @@ final class Translator(catalog: String => DataFrame,
         // inline the array expression INSIDE explode — exploding a
         // pre-materialized array column makes Generate copy the
         // backing array per emitted element (~13× slower, measured r3)
-        Seq(F.explode(exprToCol(args.head, None)).as(alias.getOrElse("unnest")))
+        Seq(F.explode(exprToCol(args.head)).as(alias.getOrElse("unnest")))
       case SelectItem(e, alias) =>
-        Seq(exprToCol(e, None).as(alias.getOrElse(defaultName(e, in))))
+        Seq(exprToCol(e).as(alias.getOrElse(defaultName(e, in))))
     }
 
   /** Output name for an unaliased select item: the schema-cased column
@@ -3911,7 +3816,7 @@ final class Translator(catalog: String => DataFrame,
 
   // ---- expression lowering ------------------------------------------
 
-  def exprToCol(e: Expr, in: Option[DataFrame]): Column = e match {
+  def exprToCol(e: Expr): Column = e match {
     case ColRef(Some(q), n) if flatAliases.contains(q.toLowerCase) =>
       F.col(n)
     case ColRef(Some(q), n) => F.col(s"${q.toLowerCase}.$n")
@@ -3931,67 +3836,67 @@ final class Translator(catalog: String => DataFrame,
     case TimestampLit(d, t) => F.to_timestamp(F.lit(s"$d $t"))
     case DateLit(v) => F.to_date(F.lit(v))
     case Arith(op @ ("+" | "-"), l, i: IntervalLit) =>
-      shiftByInterval(exprToCol(l, in), i, negate = op == "-")
+      shiftByInterval(exprToCol(l), i, negate = op == "-")
     case Arith("+", i: IntervalLit, r) =>
-      shiftByInterval(exprToCol(r, in), i, negate = false)
+      shiftByInterval(exprToCol(r), i, negate = false)
     case Arith("-", _: IntervalLit, _) =>
       fail("cannot subtract a date/timestamp from an INTERVAL")
     case _: IntervalLit =>
       fail("INTERVAL literal is only valid as a +/- operand of a date/timestamp")
-    case Arith(op, l, r) => arith(op, exprToCol(l, in), exprToCol(r, in))
-    case Neg(x) => -exprToCol(x, in)
+    case Arith(op, l, r) => arith(op, exprToCol(l), exprToCol(r))
+    case Neg(x) => -exprToCol(x)
     case CaseWhen(bs, o) =>
       bs.tail.foldLeft(
-        F.when(exprToCol(bs.head._1, in), exprToCol(bs.head._2, in))) {
-        case (acc, (c, v)) => acc.when(exprToCol(c, in), exprToCol(v, in))
-      }.otherwise(exprToCol(o, in))
-    case Cast(x, t, sf) => castCol(exprToCol(x, in), t, sf)
-    case Coalesce(args) => F.coalesce(args.map(exprToCol(_, in)): _*)
+        F.when(exprToCol(bs.head._1), exprToCol(bs.head._2))) {
+        case (acc, (c, v)) => acc.when(exprToCol(c), exprToCol(v))
+      }.otherwise(exprToCol(o))
+    case Cast(x, t, sf) => castCol(exprToCol(x), t, sf)
+    case Coalesce(args) => F.coalesce(args.map(exprToCol): _*)
     case a: AggExpr if a.window.isDefined =>
       if (a.func == "string_agg" || a.func == "array_agg")
-        orderedSetWindowed(a, exprToCol(_, None))
-      else windowedAgg(a, exprToCol(_, None))
+        orderedSetWindowed(a)
+      else windowedAgg(a)
     case a: AggExpr => aggColumn(a)
     case RankExpr(dense, w) =>
       (if (dense) F.dense_rank() else F.rank()).over(windowSpec(w))
     case WinFunc(name, args, w, ign) =>
-      winFunc(name, args, exprToCol(_, in), ign).over(windowSpec(w))
-    case And(l, r) => exprToCol(l, in) && exprToCol(r, in)
-    case Or(l, r)  => exprToCol(l, in) || exprToCol(r, in)
-    case Not(x)    => !exprToCol(x, in)
+      winFunc(name, args, ign).over(windowSpec(w))
+    case And(l, r) => exprToCol(l) && exprToCol(r)
+    case Or(l, r)  => exprToCol(l) || exprToCol(r)
+    case Not(x)    => !exprToCol(x)
     // row-value comparisons (r9): desugar to the standard's
     // element-wise form — `=` is the AND chain (3VL exact), `<` is
     // lexicographic — then translate the scalar expression
-    case Cmp(op, l: RowTuple, r) => exprToCol(rowCmpExpr(op, l, r), in)
-    case Cmp(op, l, r: RowTuple) => exprToCol(rowCmpExpr(op, l, r), in)
-    case Cmp(op, l, r) => cmp(op, exprToCol(l, in), exprToCol(r, in))
+    case Cmp(op, l: RowTuple, r) => exprToCol(rowCmpExpr(op, l, r))
+    case Cmp(op, l, r: RowTuple) => exprToCol(rowCmpExpr(op, l, r))
+    case Cmp(op, l, r) => cmp(op, exprToCol(l), exprToCol(r))
     case Between(x, lo, hi) =>
-      exprToCol(x, in).between(exprToCol(lo, in), exprToCol(hi, in))
+      exprToCol(x).between(exprToCol(lo), exprToCol(hi))
     case InList(x: RowTuple, vs, neg) =>
       // `(a,b) IN ((1,2),(3,4))` → OR of row equalities; NOT IN via
       // the negation (3VL rides the And/Or/Not lowering)
       val m = vs.map(v => rowCmpExpr("=", x, v)).reduce(Or)
-      exprToCol(if (neg) Not(m) else m, in)
+      exprToCol(if (neg) Not(m) else m)
     case InList(x, vs, neg) =>
-      val c = inListCol(exprToCol(x, in), vs, v => exprToCol(v, in))
+      val c = inListCol(exprToCol(x), vs)
       if (neg) !c else c
     case IsNull(x, neg) =>
-      if (neg) exprToCol(x, in).isNotNull else exprToCol(x, in).isNull
-    case Like(x, p, esc) => likeCol(exprToCol(x, in), p, esc, ci = false)
-    case ILike(x, p, esc) => likeCol(exprToCol(x, in), p, esc, ci = true)
+      if (neg) exprToCol(x).isNotNull else exprToCol(x).isNull
+    case Like(x, p, esc) => likeCol(exprToCol(x), p, esc, ci = false)
+    case ILike(x, p, esc) => likeCol(exprToCol(x), p, esc, ci = true)
     // `e[i]` subscript (r11): try_element_at — 1-based like DuckDB's
     // list subscript, NULL (not an ANSI error) when out of range,
     // and the same call works on maps (absent key reads NULL)
-    case Subscript(x, i) => subscriptCol(x, i, exprToCol(_, in))
+    case Subscript(x, i) => subscriptCol(x, i)
     // `e[lo:hi]` list slice (r11b) — DuckDB slicing semantics
-    case ArraySlice(x, lo, hi) => sliceCol(x, lo, hi, exprToCol(_, in))
+    case ArraySlice(x, lo, hi) => sliceCol(x, lo, hi)
     // chained struct-field access (r11): the base resolves first
     // (alias-qualified ColRef for `a.b`), then fields extract off it
-    case FieldAccess(x, f0) => exprToCol(x, in).getField(f0)
+    case FieldAccess(x, f0) => exprToCol(x).getField(f0)
     case FuncCall(name, args) if args.exists(_.isInstanceOf[Lambda]) =>
-      hofCall(name, args, exprToCol(_, in))
+      hofCall(name, args)
     case FuncCall(name, args) =>
-      scalarFunc(name, args.map(exprToCol(_, in)), args)
+      scalarFunc(name, args.map(exprToCol), args)
     case _: Lambda =>
       fail("a lambda is only valid as a direct argument of " +
         "transform/filter/aggregate (and their list_* spellings)")
@@ -4022,23 +3927,22 @@ final class Translator(catalog: String => DataFrame,
     * forced it NULL); an array subscripted with a 0-reaching index
     * in those narrow contexts throws the ANSI error instead of the
     * NULL (documented trade — the guard needs the container type). */
-  private def subscriptCol(x: Expr, i: Expr,
-                           lower: Expr => Column): Column = {
+  private def subscriptCol(x: Expr, i: Expr): Column = {
     import org.apache.spark.sql.types._
-    val base = lower(x)
+    val base = exprToCol(x)
     val containerT = resolveFrame.flatMap(df =>
       scala.util.Try(df.select(base).schema.head.dataType).toOption)
     containerT match {
       case Some(MapType(kt, _, _)) =>
-        F.try_element_at(base, lower(i).cast(kt))
+        F.try_element_at(base, exprToCol(i).cast(kt))
       case Some(_: ArrayType) =>
-        val idx = lower(i).cast("int")
+        val idx = exprToCol(i).cast("int")
         F.when(idx === 0, F.lit(null))
           .otherwise(F.try_element_at(base, idx))
       case _ =>
         i match {
-          case StrLit(_) => F.try_element_at(base, lower(i))
-          case _ => F.try_element_at(base, lower(i).cast("int"))
+          case StrLit(_) => F.try_element_at(base, exprToCol(i))
+          case _ => F.try_element_at(base, exprToCol(i).cast("int"))
         }
     }
   }
@@ -4050,12 +3954,11 @@ final class Translator(catalog: String => DataFrame,
     * list or NULL bound reads NULL. Clamps are explicit WHENs, not
     * greatest/least — those SKIP nulls and would turn a NULL bound
     * into a real range. */
-  private def sliceCol(x: Expr, lo: Option[Expr], hi: Option[Expr],
-                       lower: Expr => Column): Column = {
-    val arr = lower(x)
+  private def sliceCol(x: Expr, lo: Option[Expr], hi: Option[Expr]): Column = {
+    val arr = exprToCol(x)
     val len = F.size(arr)
     def norm(b: Expr): Column = {
-      val c = lower(b).cast("int")
+      val c = exprToCol(b).cast("int")
       F.when(c < 0, len + c + F.lit(1)).otherwise(c)
     }
     val nlo = lo.map { b =>
@@ -4187,25 +4090,21 @@ final class Translator(catalog: String => DataFrame,
     * computed elements (reference sql.lark:129 allows any
     * expression_math) lower to an OR chain of equalities, which has
     * identical three-valued semantics. */
-  private def inListCol(x: Column, vs: Seq[Expr], lower: Expr => Column): Column =
+  private def inListCol(x: Column, vs: Seq[Expr]): Column =
     if (vs.forall(isLiteral)) x.isin(vs.map(litValue): _*)
-    else vs.map(v => x === lower(v)).reduce(_ || _)
+    else vs.map(v => x === exprToCol(v)).reduce(_ || _)
 
   /** Aggregate → Spark Column (without window). */
-  private def aggColumn(a: AggExpr): Column = aggColumnBase(a)
-
-  private def aggColumnBase(a: AggExpr,
-                            lower: Expr => Column =
-                              exprToCol(_, None)): Column = {
+  private def aggColumn(a: AggExpr): Column = {
     val arg: Column = a.arg match {
       case Star(_) => F.lit(1)
-      case e       => lower(e)
+      case e       => exprToCol(e)
     }
     a.func match {
       case "count" if a.distinct =>
         a.arg match {
           case Star(_) => fail("COUNT(DISTINCT *) unsupported")
-          case e       => F.countDistinct(lower(e))
+          case e       => F.countDistinct(exprToCol(e))
         }
       // DISTINCT variants: sum has a native form; avg/stddev/variance
       // DISTINCT lower through the native aggregates (GraftFn bridges
@@ -4245,9 +4144,9 @@ final class Translator(catalog: String => DataFrame,
         if (a.extraArgs.length != 1)
           fail(s"$f takes exactly two arguments")
         if (a.distinct) fail(s"DISTINCT $f is not supported")
-        F.call_function(f, arg, lower(a.extraArgs.head))
+        F.call_function(f, arg, exprToCol(a.extraArgs.head))
       case f @ ("string_agg" | "array_agg") =>
-        orderedSetAgg(a, arg, lower)
+        orderedSetAgg(a, arg)
       // WITHIN GROUP percentiles (r5): arg is the ORDER BY column,
       // extraArgs.head the fraction. percentile_cont ≡ Spark's exact
       // interpolating `percentile` (≡ DuckDB quantile_cont, already
@@ -4259,7 +4158,7 @@ final class Translator(catalog: String => DataFrame,
             a.aggOrder.head.nullsFirst.isDefined)
           fail(s"$f supports WITHIN GROUP (ORDER BY x) with a single " +
             "ascending key only")
-        val frac = lower(a.extraArgs.head)
+        val frac = exprToCol(a.extraArgs.head)
         if (f == "percentile_cont") F.call_function("percentile", arg, frac)
         else org.apache.spark.sql.GraftFn.percentileDisc(arg, frac)
       case other      => fail(s"unknown aggregate $other")
@@ -4279,8 +4178,7 @@ final class Translator(catalog: String => DataFrame,
     * the result), never the corpus. */
   /** Shared head of the ordered-set collects: validations, the
     * (__k0.., __v) struct fields, and the string_agg separator. */
-  private def orderedSetParts(a: AggExpr, value: Column,
-                              lower: Expr => Column)
+  private def orderedSetParts(a: AggExpr, value: Column)
       : (Seq[Column], Option[String]) = {
     val f = a.func
     // DISTINCT ordered-set (r5b, PostgreSQL rule): legal only when
@@ -4308,19 +4206,18 @@ final class Translator(catalog: String => DataFrame,
         if (a.extraArgs.nonEmpty) fail(s"$f takes one argument")
         None
     }
-    val keys = a.aggOrder.map(oi => lower(oi.e))
+    val keys = a.aggOrder.map(oi => exprToCol(oi.e))
     val fields = keys.zipWithIndex.map { case (k, i) => k.as(s"__k$i") } :+
       value.as("__v")
     (fields, sep)
   }
 
   private def orderedSetAgg(a: AggExpr, value: Column,
-                            lower: Expr => Column,
                             over: Option[SparkWindow] = None): Column = {
     if (a.window.isDefined && over.isEmpty)
       fail(s"${a.func} OVER a window takes PARTITION BY only " +
         "(element order comes from the ORDER BY inside the call)")
-    val (fields, sep) = orderedSetParts(a, value, lower)
+    val (fields, sep) = orderedSetParts(a, value)
     // windowed form (r5b): the collect is the ONLY aggregate part —
     // it runs over the (whole-partition) window; the sort/project
     // post-processing wraps the windowed array per row
@@ -4374,15 +4271,14 @@ final class Translator(catalog: String => DataFrame,
     * (peers included) matches DuckDB's windowed-aggregate default.
     * Same single window exchange either way — the sort/projection
     * post-processing wraps each row's collected array. */
-  private def orderedSetWindowed(a: AggExpr,
-                                 lower: Expr => Column): Column = {
+  private def orderedSetWindowed(a: AggExpr): Column = {
     val w = a.window.get
     val arg = a.arg match {
       case Star(_) => fail(s"${a.func} takes a value argument")
-      case e       => lower(e)
+      case e       => exprToCol(e)
     }
     if (w.exclude == "no others")
-      return orderedSetAgg(a, arg, lower, Some(windowSpec(w, lower)))
+      return orderedSetAgg(a, arg, Some(windowSpec(w)))
     // EXCLUDE on windowed ordered-set collects (r9, 36ar's last
     // wall): ExcludeAgg's array-returning mode filters the collected
     // frame — same element identity rules as the scalar folds
@@ -4392,16 +4288,16 @@ final class Translator(catalog: String => DataFrame,
     // window exchange/sort as the plain collect.
     val mode = w.exclude
     excludeFrame(w)
-    val (fields, sep) = orderedSetParts(a, arg, lower)
+    val (fields, sep) = orderedSetParts(a, arg)
     val elemVal = F.struct(fields: _*)
-    val okCols = w.orderBy.map(oi => lower(oi.e))
+    val okCols = w.orderBy.map(oi => exprToCol(oi.e))
     val okS = if (okCols.isEmpty) F.lit(0) else F.struct(okCols: _*)
     // element identity hashes (over-order keys, element struct):
     // rows equal in both are interchangeable under the collect
     val rid = F.xxhash64(okS, elemVal)
     val elem = F.struct(okS.as("__xok"), rid.as("__xrid"),
       elemVal.as("__xv"))
-    val frameW = windowSpec(w.copy(exclude = "no others"), lower)
+    val frameW = windowSpec(w.copy(exclude = "no others"))
     val lst = F.collect_list(elem).over(frameW)
     val included = org.apache.spark.sql.GraftFn.excludeAgg(
       lst, elem, mode, "collect", distinct = false)
@@ -4443,7 +4339,7 @@ final class Translator(catalog: String => DataFrame,
     * the excluded current row (see inline) — sound for ROWS frames
     * with EXCLUDE CURRENT ROW. Other window functions have no
     * decomposition and fail loudly (see [[windowSpec]]). */
-  private def windowedAgg(a: AggExpr, lower: Expr => Column): Column = {
+  private def windowedAgg(a: AggExpr): Column = {
     val w = a.window.get
     // DISTINCT window aggregates (r7b; Spark rejects the native form
     // "Distinct window functions are not supported"): the frame's
@@ -4463,12 +4359,12 @@ final class Translator(catalog: String => DataFrame,
         Set("count", "sum", "avg", "min", "max").contains(a.func)) {
       val arg = a.arg match {
         case Star(_) => fail(s"${a.func}(DISTINCT *) is not meaningful")
-        case e       => lower(e)
+        case e       => exprToCol(e)
       }
       if (a.func == "min" || a.func == "max")
-        return aggColumnBase(a.copy(distinct = false), lower)
-          .over(windowSpec(w, lower))
-      val cs = F.collect_set(arg).over(windowSpec(w, lower))
+        return aggColumn(a.copy(distinct = false))
+          .over(windowSpec(w))
+      val cs = F.collect_set(arg).over(windowSpec(w))
       return a.func match {
         case "count" => F.size(cs).cast("long")
         case "sum"   => org.apache.spark.sql.GraftFn.frameFold(cs, "sum")
@@ -4476,7 +4372,7 @@ final class Translator(catalog: String => DataFrame,
       }
     }
     if (w.exclude == "no others")
-      return aggColumnBase(a, lower).over(windowSpec(w, lower))
+      return aggColumn(a).over(windowSpec(w))
     if (a.func != "sum" && a.func != "count" && a.func != "avg" &&
         a.func != "min" && a.func != "max")
       fail("EXCLUDE applies to sum/count/avg/min/max window aggregates " +
@@ -4505,12 +4401,12 @@ final class Translator(catalog: String => DataFrame,
         case Star(_) if a.func == "count" && !a.distinct => F.lit(1)
         case Star(_) => fail(s"${a.func}(${if (a.distinct) "DISTINCT " else ""}*) " +
           "is not meaningful")
-        case e => lower(e)
+        case e => exprToCol(e)
       }
       // reserved struct-field names: a field aliased like an input
       // column trips Spark's lateral-column-alias resolution inside
       // window expressions
-      val okCols = w.orderBy.map(oi => lower(oi.e))
+      val okCols = w.orderBy.map(oi => exprToCol(oi.e))
       val okS = if (okCols.isEmpty) F.lit(0) else F.struct(okCols: _*)
       // the removal id hashes (order keys, value) only: rows equal in
       // both are interchangeable under any aggregate, so removing the
@@ -4521,7 +4417,7 @@ final class Translator(catalog: String => DataFrame,
       val rid = F.xxhash64(okS, argE)
       val elem = F.struct(okS.as("__xok"), rid.as("__xrid"), argE.as("__xv"))
       val lst = F.collect_list(elem).over(
-        windowSpec(w.copy(exclude = "no others"), lower))
+        windowSpec(w.copy(exclude = "no others")))
       def fold(func: String) =
         org.apache.spark.sql.GraftFn.excludeAgg(lst, elem, mode, func, a.distinct)
       return a.func match {
@@ -4550,10 +4446,10 @@ final class Translator(catalog: String => DataFrame,
           "subtraction decomposition for range/group exclusion)")
       val arg = a.arg match {
         case Star(_) => fail(s"${a.func} takes a value argument")
-        case e       => lower(e)
+        case e       => exprToCol(e)
       }
       val base = windowSpec(
-        WindowSpec(w.partitionBy, w.orderBy, None), lower)
+        WindowSpec(w.partitionBy, w.orderBy, None))
       val aggF: Column => Column =
         if (a.func == "min") F.min else F.max
       val lo = frameOffset(f.start); val hi = frameOffset(f.end)
@@ -4590,24 +4486,24 @@ final class Translator(catalog: String => DataFrame,
       if (rowsGroupTies) {
         val tb = F.expr("xxhash64(struct(*))")
         val lo = frameOffset(f.start); val hi = frameOffset(f.end)
-        val pCols = w.partitionBy.map(lower)
+        val pCols = w.partitionBy.map(exprToCol)
         val fs = Window.partitionBy(pCols: _*)
-          .orderBy(w.orderBy.map(oi => orderedCol(lower(oi.e), oi)) :+
+          .orderBy(w.orderBy.map(oi => orderedCol(exprToCol(oi.e), oi)) :+
             tb.asc: _*)
           .rowsBetween(lo, hi)
         val ps = Window
-          .partitionBy(pCols ++ w.orderBy.map(oi => lower(oi.e)): _*)
+          .partitionBy(pCols ++ w.orderBy.map(oi => exprToCol(oi.e)): _*)
           .orderBy(tb.asc)
           .rowsBetween(lo, hi)
         (fs, ps)
       } else
-        (windowSpec(w.copy(exclude = "no others"), lower),
+        (windowSpec(w.copy(exclude = "no others")),
          windowSpec(
-           WindowSpec(w.partitionBy ++ w.orderBy.map(_.e), Nil, None), lower))
+           WindowSpec(w.partitionBy ++ w.orderBy.map(_.e), Nil, None)))
     val isStar = a.arg match { case Star(_) => true; case _ => false }
     val arg: Column = a.arg match {
       case Star(_) => F.lit(1)
-      case e       => lower(e)
+      case e       => exprToCol(e)
     }
     val curNN: Column =
       if (isStar) F.lit(1L)
@@ -4662,7 +4558,7 @@ final class Translator(catalog: String => DataFrame,
     * first_value/last_value/nth_value read frame order, which the
     * ordinal sort does not preserve among peers — loud; ordered-set
     * aggregates must carry their own internal ORDER BY. */
-  private final class GroupsFrameRewriter(lower: Expr => Column) {
+  private final class GroupsFrameRewriter {
     /** hidden ordinal columns to materialize, in creation order */
     val pending = scala.collection.mutable.LinkedHashMap.empty[String, Column]
     private val cache = scala.collection.mutable.Map.empty[String, String]
@@ -4673,9 +4569,9 @@ final class Translator(catalog: String => DataFrame,
         val n = s"__grps_${cache.size}"
         var s: SparkWindow =
           if (w.partitionBy.nonEmpty)
-            Window.partitionBy(w.partitionBy.map(lower): _*)
+            Window.partitionBy(w.partitionBy.map(exprToCol): _*)
           else Window.partitionBy()
-        s = s.orderBy(w.orderBy.map(oi => orderedCol(lower(oi.e), oi)): _*)
+        s = s.orderBy(w.orderBy.map(oi => orderedCol(exprToCol(oi.e), oi)): _*)
         pending(n) = F.dense_rank().over(s).cast("long")
         n
       })
@@ -4704,9 +4600,7 @@ final class Translator(catalog: String => DataFrame,
     }
   }
 
-  private def windowSpec(w: WindowSpec,
-                         lower: Expr => Column =
-                           exprToCol(_, None)): SparkWindow = {
+  private def windowSpec(w: WindowSpec): SparkWindow = {
     if (w.frame.exists(_.isGroups))
       fail("GROUPS frames are supported on windowed aggregates in the " +
         "SELECT list (including QUALIFY/ORDER BY hoisted items) only")
@@ -4718,11 +4612,11 @@ final class Translator(catalog: String => DataFrame,
         "only (no decomposition exists for other window functions)")
     var spec: SparkWindow =
       if (w.partitionBy.nonEmpty)
-        Window.partitionBy(w.partitionBy.map(lower): _*)
+        Window.partitionBy(w.partitionBy.map(exprToCol): _*)
       else Window.partitionBy()
     if (w.orderBy.nonEmpty)
       spec = spec.orderBy(w.orderBy.map { oi =>
-        val c = lower(oi.e)
+        val c = exprToCol(oi.e)
         orderedCol(c, oi)
       }: _*)
     w.frame.foreach { f =>
@@ -4802,9 +4696,8 @@ final class Translator(catalog: String => DataFrame,
     * lead/lag (with optional offset and default), first_value /
     * last_value, row_number, ntile. */
   private def winFunc(name: String, args: Seq[Expr],
-                      lower: Expr => Column,
                       ignoreNulls: Boolean = false): Column = {
-    def c(i: Int): Column = lower(args(i))
+    def c(i: Int): Column = exprToCol(args(i))
     def n(i: Int): Int = args(i) match {
       case NumLit(t)      => t.toDouble.toInt
       case Neg(NumLit(t)) => -t.toDouble.toInt
@@ -4856,15 +4749,14 @@ final class Translator(catalog: String => DataFrame,
     * save/restore nests correctly). Spark's HOF expressions are
     * interpreted (CodegenFallback) — fine per-element on short
     * arrays, the documented HOF rule. */
-  private def hofCall(name: String, args: Seq[Expr],
-                      lower: Expr => Column): Column = {
+  private def hofCall(name: String, args: Seq[Expr]): Column = {
     def body(l: Lambda, bound: Seq[Column]): Column = {
       if (l.params.length != bound.length)
         fail(s"$name lambda takes ${bound.length} parameter(s), " +
           s"got ${l.params.length}")
       val saved = lambdaEnv
       lambdaEnv = lambdaEnv ++ l.params.map(_.toLowerCase).zip(bound)
-      try lower(l.body) finally lambdaEnv = saved
+      try exprToCol(l.body) finally lambdaEnv = saved
     }
     def lam(e: Expr): Lambda = e match {
       case l: Lambda => l
@@ -4873,20 +4765,20 @@ final class Translator(catalog: String => DataFrame,
     name.toLowerCase match {
       case "transform" | "list_transform" | "array_transform" =>
         if (args.length != 2) fail(s"$name takes (array, lambda)")
-        val arr = lower(args.head); val l = lam(args(1))
+        val arr = exprToCol(args.head); val l = lam(args(1))
         if (l.params.length == 2)
           F.transform(arr, (x, i) => body(l, Seq(x, i)))
         else F.transform(arr, x => body(l, Seq(x)))
       case "filter" | "list_filter" | "array_filter" =>
         if (args.length != 2) fail(s"$name takes (array, lambda)")
-        val arr = lower(args.head); val l = lam(args(1))
+        val arr = exprToCol(args.head); val l = lam(args(1))
         if (l.params.length == 2)
           F.filter(arr, (x, i) => body(l, Seq(x, i)))
         else F.filter(arr, x => body(l, Seq(x)))
       case "aggregate" | "reduce" =>
         if (args.length != 3 && args.length != 4)
           fail(s"$name takes (array, init, mergeLambda[, finishLambda])")
-        val arr = lower(args.head); val init = lower(args(1))
+        val arr = exprToCol(args.head); val init = exprToCol(args(1))
         val merge = lam(args(2))
         args.lift(3) match {
           case Some(fin) =>
@@ -5112,6 +5004,11 @@ final class Translator(catalog: String => DataFrame,
 }
 
 object Translator {
+  /** Recursive CTE tiny tier: closures below this many seen rows run
+    * [[UnrollRounds]] rounds per lazily-composed plan and job. */
+  private val TinyCoalesceRows = 100000L
+  private val UnrollRounds = 6
+
   /** A query the translator cannot lower. */
   final case class TranslateException(msg: String) extends RuntimeException(msg)
 }

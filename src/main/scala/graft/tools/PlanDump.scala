@@ -18,7 +18,8 @@ import graft.{Bench, SparkEntry}
   * actions (query executions plus RDD jobs outside any), jobs, stages,
   * shuffles (shuffle-map stages run) and broadcasts (broadcast
   * exchanges in the executed plans).
-  * Usage: PlanDump <sfDir> <outDir> <tag> <query...>
+  * Usage: PlanDump <sfDir> <outDir> <tag> [query...] — with no query
+  * names, every SparkEntry.queries entry in sorted order.
   */
 object PlanDump {
   /** What ran while it was attached. */
@@ -56,7 +57,9 @@ object PlanDump {
     val spark = Bench.session(Bench.cpus)
     val sc = spark.sparkContext
     Files.createDirectories(Paths.get(outDir))
-    args.drop(3).foreach { n =>
+    val names = if (args.length > 3) args.drop(3).toSeq
+      else SparkEntry.queries.keys.toSeq.sorted
+    names.foreach { n =>
       val qe = SparkEntry.queries(n)(spark, sfDir).queryExecution
       val out = Paths.get(outDir, s"${n}_$tag.txt")
       Files.writeString(out,

@@ -23,6 +23,13 @@ class ErrorsSpec extends SparkTestBase {
     assert(e.getMessage.contains("require ORDER BY"), e.getMessage)
   }
 
+  test("a PIVOT expression reading a column outside its aggregate raises TranslateException") {
+    val e = intercept[Translator.TranslateException](graftSession.query(
+      """select * from (values (1, 10, 'a'), (2, 5, 'b')) t1(k, v, s)
+         pivot (sum(v) + k for s in ('a', 'b'))"""))
+    assert(e.getMessage.contains("inside a plain aggregate"), e.getMessage)
+  }
+
   test("a macro called with too many arguments raises MacroException") {
     val g = Graft(spark)
     g.query("create macro add_one(a) as a + 1")

@@ -13,6 +13,16 @@ class PivotSpec extends SparkTestBase {
            sum(case when l_linestatus = 'O' then l_quantity end) as qty_o,
            sum(case when l_linestatus = 'F' then l_quantity end) as qty_f
          from lineitem group by l_returnflag""")
+    // any expression over the aggregates applies per cell; an empty
+    // cell's sum is NULL, so its CASE reads 0
+    val cased = graftSession.query(
+      """select * from (values (1, 10, 'a'), (1, 20, 'b'), (2, 5, 'a'),
+           (3, 7, 'b')) t1(k, v, s)
+         pivot (case when sum(v) > 10 then 1 else 0 end
+                for s in ('a' as va, 'b' as vb))""")
+    assert(cased.columns.toSeq == Seq("k", "va", "vb"), cased.columns.toSeq)
+    assert(cased.collect().map(_.toSeq.mkString(",")).toSeq.sorted ==
+      Seq("1,0,1", "2,0,0", "3,0,0"))
   }
 
   test("pivot without value aliases names columns by the literal") {

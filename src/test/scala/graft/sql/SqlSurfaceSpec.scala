@@ -125,10 +125,36 @@ class SqlSurfaceSpec extends SparkTestBase {
       "select l_returnflag, l_linestatus from lineitem group by l_returnflag, l_linestatus")
   }
 
+  /** A session over the small tables of the aggregate-context cases
+    * below; their expected rows are DuckDB 1.0's answers. */
+  private lazy val aggCtx: graft.Graft = {
+    import spark.implicits._
+    val g = graft.Graft(spark)
+    g.registerTable("t1", Seq((1L, 10L, "a"), (1L, 20L, "b"), (2L, 5L, "a"),
+      (3L, 7L, "b")).toDF("k", "v", "s"))
+    g.registerTable("t", Seq((1L, 10L), (2L, 5L), (3L, 7L)).toDF("k", "v"))
+    g.registerTable("u", Seq((1L, 3L, 2L), (1L, 4L, 9L), (2L, 1L, 1L),
+      (3L, 8L, 8L)).toDF("k", "w", "g"))
+    g
+  }
+
+  /** `sql`'s rows on [[aggCtx]], as sorted comma-joined strings. */
+  private def aggCtxRows(sql: String): Seq[String] =
+    aggCtx.query(sql).collect().map(_.toSeq.map(String.valueOf).mkString(","))
+      .toSeq.sorted
+
   test("having with group by") {
     checkAgainstSparkSql(
       """select l_returnflag, count(*) as n from lineitem
          group by l_returnflag having count(*) > 1000""")
+    // row values over aggregates and group keys, in HAVING and in a
+    // grouped SELECT list
+    assert(aggCtxRows("""select k, count(*) c from t1 group by k
+        having (count(*), sum(v)) > (1, 0)""") == Seq("1,2", "2,1", "3,1"))
+    assert(aggCtxRows("""select k, (k, count(*)) = (1, 2) as f
+        from t1 group by k""") == Seq("1,true", "2,false", "3,false"))
+    assert(aggCtxRows("""select k from t1 group by k
+        having (k, count(*)) in ((1, 2), (3, 1))""") == Seq("1", "3"))
   }
 
   test("having without group by") {
@@ -487,6 +513,26 @@ class SqlSurfaceSpec extends SparkTestBase {
       (2L, 1L: java.lang.Long, 2L: java.lang.Long, 3L: java.lang.Long),
       (3L, 1L: java.lang.Long, 2L: java.lang.Long, 6L: java.lang.Long)),
       r.mkString(","))
+    // -0.0 and 0.0 are one value to windowed DISTINCT, with and without
+    // EXCLUDE, from literals and from parquet (DuckDB 1.0 answers)
+    import spark.implicits._
+    val zDir = java.nio.file.Files.createTempDirectory("graft_z").resolve("z").toString
+    Seq((1L, -0.0), (2L, 0.0), (3L, 1.0)).toDF("id", "x").write.parquet(zDir)
+    for (z <- Seq(
+        """(values (1, cast('-0.0' as double)), (2, cast('0.0' as double)),
+           (3, cast('1.0' as double))) z(id, x)""",
+        s"read_parquet('$zDir') z")) {
+      val got = graftSession.query(
+        s"""select id,
+             count(distinct x) over (order by id
+               rows between 1 preceding and current row) as c,
+             count(distinct x) over (order by x
+               rows between unbounded preceding and unbounded following
+               exclude current row) as ce
+           from $z""")
+        .collect().map(_.toSeq.map(String.valueOf).mkString(",")).toSeq.sorted
+      assert(got == Seq("1,1,2", "2,1,2", "3,2,1"), s"$z: $got")
+    }
   }
 
   test("GROUPS frames compose with min/max/sum EXCLUDE (r10, last 36ba cell)") {
@@ -1797,6 +1843,17 @@ class SqlSurfaceSpec extends SparkTestBase {
             group by customer.c_nationkey
             having count(*) > 30) as big_sum
          from nation order by n_name""")
+    // a correlation / group key inside a HAVING aggregate stays the
+    // inner column the aggregation reads
+    assert(aggCtxRows("""select t.k, (select count(*) from u
+        where u.k = t.k having sum(u.k) > 1) c from t""") ==
+      Seq("1,2", "2,1", "3,1"))
+    assert(aggCtxRows("""select t.k, (select sum(u.w) from u
+        where u.k = t.k group by u.k having max(u.k) > 1) c from t""") ==
+      Seq("1,null", "2,1", "3,8"))
+    assert(aggCtxRows("""select t.k, (select u.k * 10 + count(*) from u
+        where u.k = t.k group by u.k) c from t""") ==
+      Seq("1,12", "2,21", "3,31"))
   }
 
   test("named WINDOW definitions referenced from OVER") {
@@ -1977,6 +2034,10 @@ class SqlSurfaceSpec extends SparkTestBase {
                         and o.o_totalprice < c.c_acctbal * 100
            group by c.c_custkey, c.c_acctbal, o.o_orderdate
            having count(*) >= 2)""")
+    // the group key inside the HAVING aggregate stays the inner column
+    assert(aggCtxRows("""select t.k from t where exists (select 1 from u
+        where u.w < t.v group by u.g having sum(u.g) > 5)""") ==
+      Seq("1", "2", "3"))
   }
 
   test("correlated EXISTS in HAVING joins flags onto group keys (r5b)") {
